@@ -372,9 +372,12 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
   /** Force the next read to revalidate against disk. The in-memory store is
     * kept so revalidation stays proportional to what actually changed.
     */
-  def invalidateCache(): Unit =
-    // MinValue/2, not MinValue: `now - ts` must not overflow back into "fresh"
+  def invalidateCache(): Unit = cacheGuard.synchronized {
+    // MinValue/2, not MinValue: `now - ts` must not overflow back into "fresh".
+    // Under cacheGuard: an unguarded read-modify-write racing offerCached
+    // could put back the older store it read.
     cached = cached.map { case (_, st) => (Long.MinValue / 2, st) }
+  }
 
   // --- internals -----------------------------------------------------------
 
@@ -464,7 +467,10 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
           if (active.isEmpty) return
           if (tryCommit(s0, evaluated.map(_._2).toSeq)) {
             evaluated.foreach { case (op, plan) =>
-              if (op.cat ne this) op.cat.cached = this.cached
+              // version-guarded: a plain assignment could race a follower
+              // reader's offerCached and leave its pre-commit store behind
+              if (op.cat ne this)
+                this.cached.foreach { case (ts, st) => op.cat.offerCached(ts, st) }
               op.result = plan.result
               op.done.countDown()
             }

@@ -15,9 +15,13 @@ import graft.schema.MetricSchema
   *  3. REGISTER — the pruned chunk set becomes the `metrics` temp view
   *     (mergeSchema=true mirrors DataFusion's multi-path schema inference); empty
   *     store ⇒ empty DataFrame with the default schema (engine.rs:97-101,189-205).
+  *     A set whose catalog sizes sum to ≤ `oneTaskMaxBytes` (1 MiB by
+  *     default) is registered coalesced to one partition (see [[register]]).
   *  4. EXECUTE — spark.sql: Catalyst does analyze/optimize/physical; the vectorized
   *     Parquet reader re-prunes row groups from footer stats (two-tier pruning like
-  *     the reference: metadata prune then Parquet prune).
+  *     the reference: metadata prune then Parquet prune). Over a coalesced view
+  *     the whole query (aggregate, ORDER BY) is one job of one task with no
+  *     exchange — the reference's small-scan shape; larger sets run partitioned.
   *  5. DEDUP — when a shard split is active, first-wins dedup on
   *     (timestamp, metric_name) ONLY — labels intentionally ignored, faithful to
   *     src/query/dedup.rs:27.
@@ -383,6 +387,14 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** True iff the most recent sql() was re-planned by TopKRouting. */
   @volatile var lastTopKRouted: Boolean = false
 
+  /** Cut-off of the one-task rule ([[register]]): a pruned chunk set whose
+    * catalog sizes sum to at most this many bytes is read as one partition.
+    * Not a serving option: tests and `graft.OneTaskProbe` move it to put a
+    * small set on either side. Read at registration, so a change applies
+    * from the next new path set; 0 turns the rule off.
+    */
+  @volatile private[graft] var oneTaskMaxBytes: Long = QueryEngine.OneTaskMaxBytes
+
   /** Query-pattern stats feeding index recommendations — populated per query like
     * the reference's adaptive-index hooks (engine.rs:259-300).
     */
@@ -409,6 +421,16 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
           e: java.util.Map.Entry[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
         : Boolean = size() > 256
     }
+
+  /** True iff `query`'s range and predicates are memoized as coming from
+    * literals: extraction gave the same result at two values of nowNs, and
+    * the range is neither the default window nor the full range. Such a
+    * query's answer depends only on the data the manifest version names,
+    * not on when it runs. A query not yet seen, seen as now-relative, or
+    * dropped when the memo was cleared, is false.
+    */
+  def isTimeFixed(query: String): Boolean =
+    Option(analyzeMemo.get(query)).exists(_.isDefined)
 
   private def parsedPlan(query: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     parsedPlans.synchronized {
@@ -796,6 +818,17 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** Step 3: (re)register the `metrics` view over exactly the pruned chunk set; cached
     * when the path set is unchanged AND the live view is still ours
     * (engine.rs:133-187).
+    *
+    * One-task rule: when every path has catalog metadata and their summed
+    * `sizeBytes` is at most [[oneTaskMaxBytes]], the view is the scan
+    * coalesced to one partition. The plan then reports SinglePartition, so
+    * neither an aggregate nor an ORDER BY needs an exchange: a dashboard-sized
+    * read is one job, one stage, one task instead of a shuffle stage, a
+    * range-sampling job, a range shuffle and a result stage. Filters and
+    * column pruning still reach the Parquet scan (Repartition is
+    * push-through). Larger pruned sets keep the partitioned scan: past the
+    * measured cut-off ([[QueryEngine.OneTaskMaxBytes]]) one task decoding
+    * the whole set is slower than the exchanges it saves.
     */
   def register(paths: Seq[String]): Unit = synchronized {
     if (lastRegisteredPaths == paths && lastRegisteredView != null &&
@@ -809,11 +842,13 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         // parquet-footer inference job; mergeSchema only as fallback for
         // chunks registered without a stored schema.
         val metas = paths.flatMap(catalog.state.chunks.get)
-        graft.catalog.ChunkCatalog.mergedSchema(metas) match {
-          case Some(schema) if metas.size == paths.size =>
-            spark.read.schema(schema).parquet(paths: _*)
+        val allKnown = metas.size == paths.size
+        val scan = graft.catalog.ChunkCatalog.mergedSchema(metas) match {
+          case Some(schema) if allKnown => spark.read.schema(schema).parquet(paths: _*)
           case _ => spark.read.option("mergeSchema", "true").parquet(paths: _*)
         }
+        if (allKnown && metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes) scan.coalesce(1)
+        else scan
       }
     df.createOrReplaceTempView("metrics")
     lastRegisteredPaths = paths
@@ -880,6 +915,17 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 }
 
 object QueryEngine {
+
+  /** Default [[QueryEngine.oneTaskMaxBytes]]: 1 MiB, below the largest
+    * selected set measured to win. `graft.OneTaskProbe` (4 vCPU, cold
+    * dashboard reads selecting 2 chunks, 40-48 interleaved pairs per size)
+    * gave one-task vs partitioned medians of 273 vs 349 ms at 0.8 MB (won
+    * 45/48), 291 vs 343 ms at 1.2 MB (36/48), 291 vs 325 ms at 1.3 MB
+    * (42/48), a tie near 2 MB (30/48, 21/40, 38/48), then losses: 574 vs
+    * 469 ms at 4.4 MB (9/40) and 805 vs 584 ms at 9 MB (0/40). One core
+    * decoding the whole set stops paying for the exchanges it saves.
+    */
+  val OneTaskMaxBytes: Long = 1L << 20
 
   /** Reference QueryNode defaults: 100 concurrent queries, 300 s statement
     * timeout (src/query/mod.rs:50-60). Cache bounds are ours: the reference's L1

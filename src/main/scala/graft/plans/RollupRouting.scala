@@ -228,6 +228,8 @@ object RollupRouting {
         (splitConjuncts(cond) ++ cs, ok)
       case SubqueryAlias(_, child) => stripToRelation(child, expectedPaths)
       case v: View => stripToRelation(v.child, expectedPaths)
+      // the engine's one-task view over a small chunk set (QueryEngine.register)
+      case Repartition(1, false, child) => stripToRelation(child, expectedPaths)
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>

@@ -107,19 +107,25 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   // bytes (src/query/cached_store.rs). Key = route + canonical request +
   // tenant/as-of scope + the catalog MANIFEST VERSION, so any committed
   // write/compaction/gc changes the key and a stale structural hit is
-  // impossible; the short TTL additionally bounds staleness for now-relative
-  // queries (whose text doesn't change between repeats) to the same order as
-  // the catalog's own metadata TTL. Entries are LRU, per-entry ≤ 256 KB
-  // (dashboard payloads), ≤ 256 entries. Embedded stats (elapsed_ms) are the
+  // impossible.
+  //
+  // TTL rule: the TTL bounds staleness only where the answer depends on
+  // "now" — `/api/v1/query` without `time`, and SQL the engine has not
+  // memoized as time-independent ([[QueryEngine.isTimeFixed]]); their text
+  // does not change between repeats while "now" moves. Every other route
+  // (query_range, query with `time`, bounded SQL, labels, label values,
+  // series) is a function of its key alone and is served until the key
+  // changes. Entries are LRU, per-entry ≤ 256 KB (dashboard payloads), ≤ 256
+  // entries; TTL 0 disables the tier. Embedded stats (elapsed_ms) are the
   // ORIGINAL compute's — documented cached-response semantics.
 
-  /** TTL for byte-cache hits; 0 disables the tier. */
+  /** TTL for byte-cache hits of now-relative requests; 0 disables the tier. */
   @volatile var responseByteCacheTtlMs: Long = 2000L
   private val byteCacheMaxEntryBytes = 262144
   private val byteCache =
-    new java.util.LinkedHashMap[String, (Long, Array[Byte], String)](64, 0.75f, true) {
+    new java.util.LinkedHashMap[String, HttpApi.CachedResponse](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Array[Byte], String)]): Boolean = size() > 256
+          e: java.util.Map.Entry[String, HttpApi.CachedResponse]): Boolean = size() > 256
     }
 
   private def byteCacheKey(ex: HttpExchange, route: String, canonical: String): String = {
@@ -128,30 +134,32 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     s"$route|v${engine.catalog.state.version}|t$tenant|a$asOf|$canonical"
   }
 
-  /** Serve `key` from the byte cache if fresh; else compute the payload via
-    * `mk`, respond, and store it. NON-200 paths never enter the cache (mk
-    * throws → the standard handler guard responds).
+  /** Serve `key` from the byte cache if still valid; else compute the payload
+    * via `mk`, respond, and store it. `timeFixed` is evaluated after `mk`
+    * (the engine memoizes a query's time-independence while computing it):
+    * true exempts the entry from the TTL. NON-200 paths never enter the cache
+    * (mk throws → the standard handler guard responds).
     */
-  private def respondCached(ex: HttpExchange, key: String, contentType: String)
-                           (mk: => Array[Byte]): Unit = {
+  private def respondCached(ex: HttpExchange, key: String, contentType: String,
+                            timeFixed: => Boolean)(mk: => Array[Byte]): Unit = {
     val ttl = responseByteCacheTtlMs
     if (ttl > 0) {
-      val now = System.currentTimeMillis()
       val hit = byteCache.synchronized(Option(byteCache.get(key)))
       hit match {
-        case Some((ts, bytes, ct)) if now - ts <= ttl =>
+        case Some(c) if c.timeFixed || System.currentTimeMillis() - c.storedMs <= ttl =>
           graft.engine.Telemetry.httpByteCacheHits.increment()
-          respond(ex, 200, bytes, ct)
+          respond(ex, 200, c.bytes, c.contentType)
           return
         case Some(_) => byteCache.synchronized { byteCache.remove(key); () }
         case None => ()
       }
     }
     val bytes = mk
-    if (ttl > 0 && bytes.length <= byteCacheMaxEntryBytes)
-      byteCache.synchronized {
-        byteCache.put(key, (System.currentTimeMillis(), bytes, contentType)); ()
-      }
+    if (ttl > 0 && bytes.length <= byteCacheMaxEntryBytes) {
+      val entry = HttpApi.CachedResponse(System.currentTimeMillis(), bytes, contentType,
+        timeFixed)
+      byteCache.synchronized { byteCache.put(key, entry); () }
+    }
     respond(ex, 200, bytes, contentType)
   }
 
@@ -338,7 +346,8 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
       case "json" =>
         // byte-cached (repeat dashboard shape): stats carry the ORIGINAL
         // compute's elapsed_ms — cached-response semantics, documented above
-        respondCached(ex, byteCacheKey(ex, "sql", query), "application/json") {
+        respondCached(ex, byteCacheKey(ex, "sql", query), "application/json",
+          engine.isTimeFixed(query)) {
           engine.execute(query, tenant = tenantScope, asOfVersion = asOf)(df =>
             ResultFormat.toJson(df,
               (System.nanoTime() - t0) / 1000000L, HttpApi.MaxResultRows).getBytes("UTF-8"))
@@ -365,7 +374,8 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
       .getOrElse(throw new IllegalArgumentException(s"missing $k param"))
     val (q, start, end, step) = (req("query"), req("start"), req("end"), req("step"))
     respondCached(ex,
-      byteCacheKey(ex, "query_range", s"$q|$start|$end|$step"), "application/json") {
+      byteCacheKey(ex, "query_range", s"$q|$start|$end|$step"), "application/json",
+      timeFixed = true) {
       val sql = PromQL.transpileRange(q, secToNs(start), secToNs(end), step.toLong)
       // same explicit-header tenant scoping as the SQL route
       engine.execute(sql, tenant = Option(ex.getRequestHeaders.getFirst("X-Graft-Tenant")))(
@@ -379,7 +389,8 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
       .getOrElse(throw new IllegalArgumentException("missing query param"))
     val time = p.get("time").flatMap(_.headOption)
     respondCached(ex,
-      byteCacheKey(ex, "query", s"$q|${time.getOrElse("")}"), "application/json") {
+      byteCacheKey(ex, "query", s"$q|${time.getOrElse("")}"), "application/json",
+      timeFixed = time.isDefined) {
       engine.execute(PromQL.transpileInstant(q, time.map(secToNs)),
         tenant = Option(ex.getRequestHeaders.getFirst("X-Graft-Tenant")))(
         df => ResultFormat.toPromVector(df).getBytes("UTF-8"))
@@ -391,7 +402,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   // dropdowns on every dashboard load, and the canonical request (raw query
   // string) + manifest version + tenant keys the previous bytes exactly.
   server.createContext("/api/v1/labels", handler { ex =>
-    respondCached(ex, byteCacheKey(ex, "labels", ""), "application/json") {
+    respondCached(ex, byteCacheKey(ex, "labels", ""), "application/json", timeFixed = true) {
       promListPayload(engine.labels()).getBytes("UTF-8")
     }
   })
@@ -406,7 +417,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
       val canonical = path(3) + "|" +
         Option(ex.getRequestURI.getRawQuery).getOrElse("")
       respondCached(ex, byteCacheKey(ex, "label_values", canonical),
-          "application/json") {
+          "application/json", timeFixed = true) {
         val p = params(ex)
         val matchers = p.getOrElse("match[]", Nil).flatMap(PromQL.parseMatchers)
         val startNs = p.get("start").flatMap(_.headOption).map(secToNs)
@@ -576,7 +587,8 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
 
   server.createContext("/api/v1/series", handler { ex =>
     val canonical = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-    respondCached(ex, byteCacheKey(ex, "series", canonical), "application/json") {
+    respondCached(ex, byteCacheKey(ex, "series", canonical), "application/json",
+        timeFixed = true) {
       val matchers = params(ex).getOrElse("match[]", Nil).flatMap(PromQL.parseMatchers)
       val df = engine.series(matchers)
       val rows = df.collect()
@@ -611,6 +623,10 @@ object HttpApi {
     * responses flag the clip via stats.truncated.
     */
   val MaxResultRows: Int = 100000
+
+  /** One byte-cache entry; `timeFixed` entries ignore the TTL. */
+  private final case class CachedResponse(storedMs: Long, bytes: Array[Byte],
+                                          contentType: String, timeFixed: Boolean)
 
   /** Thrown by routes to produce a specific HTTP status (e.g. 413). */
   final case class HttpError(code: Int, msg: String) extends RuntimeException(msg)

@@ -343,6 +343,52 @@ class CatalogSpec extends AnyFunSuite {
     assert(new ChunkCatalog(dir, cacheTtlMs = 0L).state.chunks.contains("post-group"))
   }
 
+  test("group commit, two instances on one root: after a write returns, the " +
+    "writing instance's state.version is at least its commit's version") {
+    // A pin, not a reproducer: it passes on the older plain-assignment
+    // handoff too, because the race window sits inside offerCached.
+    // A follower's op is committed by the OTHER instance's leader, which hands
+    // the committed store to the follower's cache through the version guard,
+    // so neither a racing reload on the follower (readers below keep reloading
+    // both instances) nor an invalidation may leave the follower serving its
+    // pre-commit state. The long TTL makes `state` a pure cache read, so any
+    // pre-commit store left behind would show.
+    val dir = Files.createTempDirectory("graft_cat_follow_")
+    val cats = Seq.fill(2)(new ChunkCatalog(dir, cacheTtlMs = 3600000L))
+    val rounds = 20
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reloaders = cats.map(cat => new Thread(() =>
+      while (!stop.get()) { cat.invalidateCache(); cat.state; Thread.`yield`() }))
+    val barrier = new java.util.concurrent.CyclicBarrier(4)
+    val writers = (0 until 4).map { w =>
+      val cat = cats(w % 2)
+      new Thread(() => {
+        try (0 until rounds).foreach { j =>
+          barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          val before = cat.state.version
+          val c = chunk(s"follow-$w-$j", (w * rounds + j).toLong, (w * rounds + j).toLong)
+          cat.register(c)
+          // the commit is at a version > before; the chunk is in it and in
+          // every later version (nothing removes it)
+          val st = cat.state
+          if (st.version < before + 1 || !st.chunks.contains(c.path))
+            errors.add(s"writer $w round $j: read version ${st.version} (before $before) " +
+              s"without its own commit")
+        } catch { case e: Throwable => errors.add(s"writer $w: $e") }
+      })
+    }
+    (reloaders ++ writers).foreach(_.start())
+    writers.foreach(_.join(120000))
+    stop.set(true)
+    reloaders.foreach(_.join(10000))
+    assert(errors.isEmpty, errors.toString)
+    val fresh = new ChunkCatalog(dir, cacheTtlMs = 0L)
+    assert(fresh.allChunks.count(_.path.startsWith("follow-")) == 4 * rounds)
+    cats.foreach(_.invalidateCache())
+    assert(cats.forall(_.state.version == fresh.state.version))
+  }
+
   test("replaceChunks flags a rollup stale when a rewrite crosses its age boundary") {
     import graft.catalog.RollupMeta
     val cat = freshCatalog()

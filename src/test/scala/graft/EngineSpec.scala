@@ -402,4 +402,79 @@ class EngineSpec extends AnyFunSuite {
     assert(eng.sql(s"SELECT count(*) AS c FROM metrics WHERE $range")
       .collect()(0).getLong(0) == 17)
   }
+
+  /** Run `q` through [[QueryEngine.execute]] and count, with a SparkListener
+    * on the job group execute tags the call with, the jobs and tasks it ran.
+    */
+  private def jobsAndTasks[T](eng: QueryEngine, q: String)
+                             (f: org.apache.spark.sql.DataFrame => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = eng.spark.sparkContext
+    val jobsOf = new java.util.concurrent.ConcurrentHashMap[Int, (String, Seq[Int])]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasksOf = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobsOf.put(js.jobId, (g, js.stageIds)))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = { ended.add(je.jobId); () }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        tasksOf.merge(te.stageId, 1, (a, b) => a + b); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      var group: String = null
+      val out = eng.execute(q) { df => group = sc.getLocalProperty("spark.jobGroup.id"); f(df) }
+      import scala.jdk.CollectionConverters._
+      def ours = jobsOf.asScala.filter(_._2._1 == group)
+      // every event is posted before the action returns; wait for delivery
+      val deadline = System.currentTimeMillis() + 30000L
+      while ((ours.isEmpty || !ours.keys.forall(ended.contains)) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val tasks = ours.values.flatMap(_._2).map(st => Option(tasksOf.get(st)).fold(0)(_.toInt)).sum
+      (out, ours.size, tasks)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val twoHourAgg =
+    s"""SELECT metric_name, host, COUNT(*) AS cnt, MIN(value_f64) AS lo,
+       |MAX(value_f64) AS hi FROM metrics
+       |WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}
+       |GROUP BY metric_name, host ORDER BY metric_name, host""".stripMargin
+
+  /** The same aggregate over an unpruned, uncoalesced spark.read.parquet scan. */
+  private def referenceRows(cat: ChunkCatalog): Seq[Seq[Any]] =
+    spark.read.parquet(cat.allChunks.map(_.path): _*)
+      .where(col("timestamp_ns") >= t0 && col("timestamp_ns") < t0 + 2 * hourNs)
+      .groupBy("metric_name", "host")
+      .agg(count(lit(1)).as("cnt"), min("value_f64").as("lo"), max("value_f64").as("hi"))
+      .orderBy("metric_name", "host")
+      .collect().map(_.toSeq).toSeq
+
+  test("one-task reads: a small pruned set runs as one job of one task, rows " +
+    "equal an uncoalesced reference") {
+    val (eng, cat) = freshEngine()
+    val (rows, jobs, tasks) = jobsAndTasks(eng, twoHourAgg)(_.collect().map(_.toSeq).toSeq)
+    val selected = eng.lastPrunedPaths
+    assert(selected.size == 2, s"premise: the window prunes to 2 of 3 chunks: $selected")
+    val bytes = selected.flatMap(cat.state.chunks.get).map(_.sizeBytes).sum
+    assert(bytes <= eng.oneTaskMaxBytes,
+      s"premise: $bytes selected bytes are under the one-task cut-off")
+    assert(jobs == 1 && tasks == 1, s"expected 1 job / 1 task, got $jobs / $tasks")
+    assert(rows == referenceRows(cat) && rows.size == 4)
+  }
+
+  test("one-task reads: above the one-task cut-off the read keeps " +
+    "its multi-task plan") {
+    val (_, cat) = freshEngine()
+    val selected = cat.chunksInRange(t0, t0 + 2 * hourNs - 1)
+    val bytes = selected.map(_.sizeBytes).sum
+    assert(selected.size == 2)
+    val eng = new QueryEngine(spark, cat)
+    eng.oneTaskMaxBytes = bytes - 1
+    val (rows, jobs, tasks) = jobsAndTasks(eng, twoHourAgg)(_.collect().map(_.toSeq).toSeq)
+    assert(tasks > 1, s"a set above the cut-off must stay partitioned: $jobs jobs / $tasks tasks")
+    assert(rows == referenceRows(cat))
+  }
 }

@@ -143,6 +143,58 @@ class HttpApiSpec extends AnyFunSuite {
     } finally a.stop()
   }
 
+  test("response-byte cache TTL applies only to now-relative requests: " +
+    "time-fixed repeats hit past the TTL; a commit changes the key; TTL 0 disables") {
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bttl_"), cacheTtlMs = 0L)
+    val pts0 = for (host <- Seq("server1", "server2"); i <- 0 until 6)
+      yield MetricPoint(t0 + i * 600L * 1000000000L, "mem_usage",
+        i / 10.0, Map("host" -> host))
+    new ChunkWriter(cat).write(Converters.pointsToDf(spark, pts0))
+    val a = new HttpApi(new QueryEngine(spark, cat), port = 0).start()
+    a.responseByteCacheTtlMs = 50L
+    def getA(path: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${a.boundPort}$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+    def hits: Long = graft.engine.Telemetry.httpByteCacheHits.sum()
+    /** Compute once, wait past the TTL, repeat: (served as a hit, bodies equal). */
+    def repeatPastTtl(path: String): (Boolean, Boolean) = {
+      val first = getA(path)
+      assert(first.statusCode() == 200, s"$path: ${first.body()}")
+      Thread.sleep(150L)
+      val h0 = hits
+      val second = getA(path)
+      assert(second.statusCode() == 200, path)
+      (hits > h0, second.body() == first.body())
+    }
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    try {
+      val startS = t0 / 1000000000L
+      val promql = enc("sum by (host) (mem_usage)")
+      val range = s"/api/v1/query_range?query=$promql&start=$startS&end=${startS + 3600L}&step=600"
+      val bounded = "/api/v1/sql?query=" + enc("SELECT host, COUNT(*) AS c FROM metrics " +
+        s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs} GROUP BY host ORDER BY host")
+      Seq(range, s"/api/v1/query?query=$promql&time=${startS + 3000L}", bounded).foreach { p =>
+        assert(repeatPastTtl(p) == ((true, true)), s"time-fixed request must stay a hit: $p")
+      }
+      // "now" moves between repeats of these: the TTL still applies
+      val unbounded = "/api/v1/sql?query=" + enc("SELECT COUNT(*) AS c FROM metrics")
+      Seq(s"/api/v1/query?query=$promql", unbounded).foreach { p =>
+        assert(!repeatPastTtl(p)._1, s"now-relative request must recompute past the TTL: $p")
+      }
+      // a committed write bumps the manifest version → new key → recompute
+      new ChunkWriter(cat).write(Converters.pointsToDf(spark,
+        Seq(MetricPoint(t0 + 50L, "mem_usage", 42.0, Map("host" -> "server3")))))
+      val h1 = hits
+      val after = getA(bounded)
+      assert(hits == h1 && after.body().contains("server3"),
+        s"post-commit repeat must recompute: ${after.body()}")
+      a.responseByteCacheTtlMs = 0L
+      getA(range); getA(range)
+      assert(hits == h1, "TTL 0 must disable byte-cache serving")
+    } finally a.stop()
+  }
+
   test("r12 response-byte cache covers labels/label-values/series: repeats " +
     "serve identical bytes and count as hits") {
     val paths = Seq("/api/v1/labels", "/api/v1/label/host/values",

@@ -48,6 +48,11 @@ class RollupRoutingSpec extends AnyFunSuite {
     // the raw answer first (no rollup registered yet)
     val raw = eng.sql(bucketedSql).collect().map(_.toSeq).toSeq
     assert(!eng.lastServedFromRollup && raw.size == 8) // 2 buckets × 2 metrics × 2 hosts
+    // premise: this chunk set is small, so the engine registered its one-task
+    // view — routing below must see through the Repartition(1) wrapper
+    assert(eng.spark.table("metrics").queryExecution.analyzed.collectFirst {
+      case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
+    }.isDefined)
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
       labelCols = Seq("host"))
     val routedDf = eng.sql(bucketedSql)

@@ -18,7 +18,9 @@ class TopKRoutingSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L
 
   /** 2 metrics × 3 hosts × 40 points, values a total order within a metric. */
-  private def freshEngine(): QueryEngine = {
+  private def freshEngine(): QueryEngine = new QueryEngine(spark, freshCatalog())
+
+  private def freshCatalog(): ChunkCatalog = {
     val cat = new ChunkCatalog(Files.createTempDirectory("graft_topk_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val points = for {
@@ -29,7 +31,7 @@ class TopKRoutingSpec extends AnyFunSuite {
       (i * 3 + host.last.toInt * 7 + m.length) % 97,
       Map("host" -> host))
     writer.write(Converters.pointsToDf(spark, points))
-    new QueryEngine(spark, cat)
+    cat
   }
 
   private val naiveSql =
@@ -107,5 +109,23 @@ class TopKRoutingSpec extends AnyFunSuite {
     // and the routable shape still routes afterwards
     eng.sql(naiveSql).collect()
     assert(eng.lastTopKRouted)
+  }
+
+  test("routes over the one-task coalesced view and over the partitioned scan alike") {
+    val cat = freshCatalog()
+    def coalesced(eng: QueryEngine): Boolean =
+      eng.spark.table("metrics").queryExecution.analyzed.collectFirst {
+        case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
+      }.isDefined
+    val small = new QueryEngine(spark, cat)
+    val smallRows = small.sql(naiveSql).collect().map(_.toSeq).toSeq
+    assert(small.lastTopKRouted && coalesced(small),
+      "a dashboard-sized chunk set registers as the one-task view and still routes")
+    // cut-off 0: no chunk set is small enough, the view stays a plain scan
+    val large = new QueryEngine(spark, cat)
+    large.oneTaskMaxBytes = 0L
+    val largeRows = large.sql(naiveSql).collect().map(_.toSeq).toSeq
+    assert(large.lastTopKRouted && !coalesced(large))
+    assert(smallRows == largeRows && smallRows.size == 10)
   }
 }
