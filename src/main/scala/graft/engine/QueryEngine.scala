@@ -1,7 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 import graft.catalog.ChunkCatalog
 import graft.prune.{ColumnPredicate, PredicateExtraction, TimeRange}
 import graft.schema.MetricSchema
@@ -12,14 +15,20 @@ import graft.schema.MetricSchema
   *     (default: last 1 hour) + column predicates (engine.rs:368-487, 493-650).
   *  2. METADATA PRUNE — hour-bucket time-index range scan + zone-map filter over the
   *     catalog (s3.rs:1075-1136). This is the layer Spark doesn't give us for free.
-  *  3. REGISTER — the pruned chunk set becomes the `metrics` temp view
-  *     (mergeSchema=true mirrors DataFusion's multi-path schema inference); empty
-  *     store ⇒ empty DataFrame with the default schema (engine.rs:97-101,189-205).
-  *     A set whose catalog sizes sum to ≤ `oneTaskMaxBytes` (1 MiB by
-  *     default) is registered coalesced to one partition (see [[register]]).
+  *  3. BIND — the pruned chunk set becomes this query's own `metrics`
+  *     relation: every `metrics` reference in the parsed statement, CTE
+  *     bodies and subqueries included, is bound to a scan of exactly those
+  *     paths (mergeSchema=true mirrors DataFusion's multi-path schema
+  *     inference); empty store ⇒ empty DataFrame with the default schema
+  *     (engine.rs:97-101,189-205). Unlike the reference's re-registration
+  *     (engine.rs:127-187) nothing session-global is replaced, so concurrent
+  *     queries plan without a lock and results cached over other path sets
+  *     stay cached. A set whose catalog sizes sum to ≤ `oneTaskMaxBytes`
+  *     (1 MiB by default) is read coalesced to one partition (see
+  *     [[relationOf]]).
   *  4. EXECUTE — spark.sql: Catalyst does analyze/optimize/physical; the vectorized
   *     Parquet reader re-prunes row groups from footer stats (two-tier pruning like
-  *     the reference: metadata prune then Parquet prune). Over a coalesced view
+  *     the reference: metadata prune then Parquet prune). Over a coalesced relation
   *     the whole query (aggregate, ORDER BY) is one job of one task with no
   *     exchange — the reference's small-scan shape; larger sets run partitioned.
   *  5. DEDUP — when a shard split is active, first-wins dedup on
@@ -32,6 +41,7 @@ import graft.schema.MetricSchema
   */
 final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
                         val limits: QueryEngine.QueryLimits = QueryEngine.QueryLimits()) {
+  import QueryEngine._
 
   /** Fair semaphore = the reference's 100-permit query gate
     * (src/query/mod.rs:50-60); excess queries queue FIFO.
@@ -78,82 +88,35 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     }
   }
 
-  @volatile private var lastRegisteredPaths: Seq[String] = null
   /** Paths selected by the most recent sql() — observability for tests/telemetry. */
   @volatile var lastPrunedPaths: Seq[String] = Nil
 
-  /** PLANNING lock: every register-view → resolve-plan pair must be atomic.
-    * The engine plans each query against the single shared `metrics` temp view
-    * (the reference's per-engine registration mutex, engine.rs:127-187); without
-    * this lock two concurrent sql() calls with different pruned chunk sets race —
-    * one query's spark.sql() can resolve against the OTHER query's registered
-    * paths and silently return rows from the wrong chunk set. Planning serializes
-    * (cheap, driver-side); EXECUTION of the resolved DataFrames stays fully
-    * concurrent — the analyzed plan captures its own file listing.
-    */
-  private val planLock = new Object
-
-  /** Plan cache: (query, pruned path set, split-active) → analyzed DataFrame.
+  /** Plan cache: (query, pruned path set, split-active) → one [[QueryEngine.Entry]].
     * Re-running a repeated dashboard query skips Catalyst analysis/optimization —
     * the dominant cost of a warm pruned query (~100 ms). Size mirrors the
     * reference's 100-concurrent-queries default (src/query/mod.rs:50-60).
     * Eviction is by entry count AND by total persisted-result bytes (see
-    * `cachedBytes`): evicted entries are unpersisted.
+    * [[QueryEngine.Persisted]]): evicted entries are unpersisted.
     */
   private val planCache =
-    new java.util.LinkedHashMap[(String, Seq[String], Boolean), DataFrame](128, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String], Boolean), DataFrame]): Boolean = {
+    new java.util.LinkedHashMap[Key, Entry](128, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]): Boolean = {
         val evict = size() > 100
         if (evict) dropEntry(e.getKey, e.getValue)
         evict
       }
     }
 
-  /** Estimated persisted bytes per planCache entry (0 for plan-only entries). */
-  private val cachedBytes =
-    scala.collection.mutable.HashMap.empty[(String, Seq[String], Boolean), Long]
-
-  /** Keys whose cached entry was swapped to a driver-local LocalRelation. */
-  private val localizedKeys =
-    scala.collection.mutable.HashSet.empty[(String, Seq[String], Boolean)]
-
-  /** The collected rows behind each localized entry (guarded by planCache's
-    * lock) — the zero-row-work serve tier [[sqlRows]] hands straight back.
-    */
-  private val localRowsStore =
-    scala.collection.mutable.HashMap.empty[(String, Seq[String], Boolean),
-      Array[org.apache.spark.sql.Row]]
-
-  /** Keys whose cached entry is a rollup-routed plan (lastServedFromRollup
-    * stays truthful on cache hits).
-    */
-  private val rollupKeys =
-    scala.collection.mutable.HashSet.empty[(String, Seq[String], Boolean)]
-
-  /** Keys whose cached entry is a topK-rewritten plan (lastTopKRouted stays
-    * truthful on cache hits).
-    */
-  private val topKKeys =
-    scala.collection.mutable.HashSet.empty[(String, Seq[String], Boolean)]
-
-  private def dropEntry(key: (String, Seq[String], Boolean), df: DataFrame): Unit = {
+  private def dropEntry(key: Key, entry: Entry): Unit =
     // MATERIALIZED entries (persisted result blocks or a driver-local
     // LocalRelation) demote to the L2 disk tier instead of vanishing; the
     // demote task unpersists after the file is written. Plan-only entries
     // (including rollup/top-k routed plans, which are never persisted) have
     // nothing materialized worth writing — recomputing the plan is cheap.
-    val materialized = cachedBytes.contains(key) || localizedKeys(key)
-    if (!(l2Enabled && materialized && demoteToL2(key, df))) {
-      try df.unpersist(blocking = false)
+    if (!(l2Enabled && !entry.isInstanceOf[Planned] && demoteToL2(key, entry.df))) {
+      try entry.df.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    cachedBytes.remove(key)
-    localizedKeys.remove(key)
-    localRowsStore.remove(key)
-    rollupKeys.remove(key)
-    topKKeys.remove(key)
-  }
 
   // ---------------------------------------------------------------------------
   // L2 disk result-cache tier — the Spark analog of the reference's foyer NVMe
@@ -185,12 +148,10 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   }
 
   /** key → (parquet dir, bytes on disk); access-ordered for LRU eviction. */
-  private val l2Entries =
-    new java.util.LinkedHashMap[(String, Seq[String], Boolean), (String, Long)](32, 0.75f, true)
+  private val l2Entries = new java.util.LinkedHashMap[Key, (String, Long)](32, 0.75f, true)
 
   /** Keys with a demote write in flight (skip duplicate demotes). */
-  private val l2Pending =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[String], Boolean)]()
+  private val l2Pending = java.util.concurrent.ConcurrentHashMap.newKeySet[Key]()
 
   /** Single demote worker: L2 writes are tiny (results are ≤
     * `maxCachedResultBytes` by construction) and strictly background —
@@ -201,7 +162,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   })
 
   /** Enqueue a demote; returns true iff the task now owns the unpersist. */
-  private def demoteToL2(key: (String, Seq[String], Boolean), df: DataFrame): Boolean = {
+  private def demoteToL2(key: Key, df: DataFrame): Boolean = {
     val already = l2Entries.synchronized(l2Entries.containsKey(key))
     if (already || !l2Pending.add(key)) return false // file already valid / in flight
     l2Demoter.submit(new Runnable {
@@ -273,7 +234,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * the entry and falls through to a plain recompute — the tier can serve
     * wrong-shaped bytes to nobody.
     */
-  private def promoteFromL2(key: (String, Seq[String], Boolean)): Option[DataFrame] = {
+  private def promoteFromL2(key: Key): Option[DataFrame] = {
     if (!l2Enabled) return None
     val ent = l2Entries.synchronized(l2Entries.get(key)) // touches LRU order
     if (ent == null) return None
@@ -307,8 +268,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     }
   }
 
-  private def promoteRows(key: (String, Seq[String], Boolean), dir: String, bytes: Long,
-                          rows: Array[org.apache.spark.sql.Row],
+  private def promoteRows(key: Key, dir: String, bytes: Long, rows: Array[Row],
                           schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
     if (rows.length > maxLocalRows) {
       val df = spark.read.parquet(dir)
@@ -320,15 +280,13 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         None
       } else {
         Telemetry.l2Hits.increment()
-        planCache.synchronized { planCache.put(key, df); cachedBytes(key) = bytes }
+        planCache.synchronized { planCache.put(key, Persisted(df, bytes, localizeTried = false)) }
         Some(df)
       }
     } else {
       Telemetry.l2Hits.increment()
       val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      planCache.synchronized {
-        planCache.put(key, local); localizedKeys += key; localRowsStore(key) = rows
-      }
+      planCache.synchronized { planCache.put(key, Localized(local, rows)) }
       Some(local)
     }
   }
@@ -346,9 +304,15 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * cache evicts LRU entries once the summed estimates exceed
     * `limits.maxRetainedCacheBytes`. Oversized results still get PLAN caching
     * (analysis skipped on re-run) — just not storage.
+    *
+    * The default comes from the session conf `spark.graft.resultCache.enabled`
+    * (default true) — session-scoped, not a process-wide static, so one
+    * harness (e.g. the bench, which turns caching off while timing 70+
+    * queries) can't silently change engines built later on OTHER sessions in
+    * the same JVM.
     */
-  @volatile var resultCacheEnabled: Boolean = limits.resultCacheEnabled.getOrElse(
-    spark.conf.get("spark.graft.resultCache.enabled", "true").toBoolean)
+  @volatile var resultCacheEnabled: Boolean =
+    spark.conf.get("spark.graft.resultCache.enabled", "true").toBoolean
 
   /** When false, warm repeat hits stay on the persisted DISTRIBUTED result
     * (never swapped to a driver-local LocalRelation) — the shape a first
@@ -378,7 +342,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   val lastServeMode: ThreadLocal[String] = ThreadLocal.withInitial(() => "")
 
   /** Naive-top-k rewrite (graft.plans.TopKRouting): `row_number() ≤ k` over
-    * the registered scan re-planned as the two-phase Operators.topKPerGroup.
+    * the bound `metrics` scan re-planned as the two-phase Operators.topKPerGroup.
     * On by default — the naive form's window sort parallelism is the group
     * count, the one deliberate scale outlier in the bench record.
     */
@@ -387,11 +351,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** True iff the most recent sql() was re-planned by TopKRouting. */
   @volatile var lastTopKRouted: Boolean = false
 
-  /** Cut-off of the one-task rule ([[register]]): a pruned chunk set whose
+  /** Cut-off of the one-task rule ([[relationOf]]): a pruned chunk set whose
     * catalog sizes sum to at most this many bytes is read as one partition.
     * Not a serving option: tests and `graft.OneTaskProbe` move it to put a
-    * small set on either side. Read at registration, so a change applies
-    * from the next new path set; 0 turns the rule off.
+    * small set on either side. Read when a path set's relation is built, so
+    * a change applies from the next new path set; 0 turns the rule off.
     */
   @volatile private[graft] var oneTaskMaxBytes: Long = QueryEngine.OneTaskMaxBytes
 
@@ -411,8 +375,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     new java.util.concurrent.ConcurrentHashMap[String, Option[(TimeRange, Seq[ColumnPredicate])]]()
 
   /** Parsed-plan cache: one ANTLR parse per query TEXT, shared by predicate
-    * extraction and execution (analysis resolves a fresh copy per call, so
-    * reusing the unresolved tree across registered view states is safe).
+    * extraction and execution (each call binds and analyzes its own copy, so
+    * reusing the unresolved tree across path sets is safe).
     */
   private val parsedPlans =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](
@@ -447,7 +411,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * the default window or the full range, the WHERE may still carry foldable
     * time expressions (now() - interval, literal arithmetic). Mirror the
     * reference's two-phase trick (bootstrap-register then analyze the RESOLVED
-    * plan, mod.rs:163-184): register everything, let the optimizer
+    * plan, mod.rs:163-184): bind every chunk, let the optimizer
     * constant-fold, and re-extract from the optimized plan.
     */
   private def withOptimizedFallback(parsed: (TimeRange, Seq[ColumnPredicate]),
@@ -551,17 +515,16 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       if (hit != null) {
         Telemetry.cacheHits.increment()
         lastServeMode.set("l1")
-        lastServedFromRollup = rollupKeys(key)
-        lastTopKRouted = topKKeys(key)
-        // persisted-but-not-yet-localized entry on a REPEAT hit → localize it
-        if (!localizeWarmHits || localizedKeys(key) || !cachedBytes.contains(key)) {
+        lastServedFromRollup = hit.route == Rollup
+        lastTopKRouted = hit.route == TopK
+        hit match {
+          // persisted-but-not-yet-localized entry on a REPEAT hit → localize it
+          case Persisted(df, _, false) if localizeWarmHits => toLocalize = df
           // localized hit: expose the stored rows so sqlRows() can serve them
           // with ZERO plan execution (the reference's L1-serves-bytes shape)
-          if (localizedKeys(key))
-            localRowsStore.get(key).foreach(lastHitRows.set)
-          return hit
+          case Localized(df, rows) => lastHitRows.set(rows); return df
+          case _ => return hit.df
         }
-        toLocalize = hit
       }
     }
     if (toLocalize != null) return localizeHit(key, toLocalize)
@@ -574,16 +537,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       lastServeMode.set("l2")
       return df
     }
-    val raw = planLock.synchronized {
-      register(paths)
-      // Reuse the cached PARSED tree — analysis resolves a fresh copy against
-      // the just-registered view, but the ANTLR parse is paid once per text.
-      val df = org.apache.spark.sql.GraftBridge.ofRows(spark, parsedPlan(query))
-      // Force resolution while we still hold the lock: the view lookup (and the
-      // scan's file listing) must bind to THIS query's registered path set.
-      df.queryExecution.assertAnalyzed()
-      df
-    }
+    // Reuse the cached PARSED tree — the ANTLR parse is paid once per text —
+    // bound to THIS query's path set; ofRows analyzes it eagerly.
+    val raw = GraftBridge.ofRows(spark, withMetrics(parsedPlan(query), relationOf(paths)))
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
     // aggregate the registered rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
@@ -598,11 +554,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     lastTopKRouted = false // may be overwritten below; must not stay stale
     routed.foreach { r =>
       Telemetry.rollupRouted.increment()
-      planCache.synchronized { planCache.put(key, r); rollupKeys += key }
+      planCache.synchronized { planCache.put(key, Planned(r, Rollup)) }
       return r
     }
     // Two-phase top-k rewrite (graft.plans.TopKRouting): the naive
-    // row_number-filter window shape over the registered scan re-plans as
+    // row_number-filter window shape over the bound `metrics` scan re-plans as
     // Operators.topKPerGroup — same rows, parallelism no longer bounded by
     // the group count. Skipped during an active split (the raw path applies
     // split dedup); a failed match routes to raw.
@@ -613,7 +569,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         catch { case scala.util.control.NonFatal(_) => None }
     lastTopKRouted = topk.isDefined
     topk.foreach { r =>
-      planCache.synchronized { planCache.put(key, r); topKKeys += key }
+      planCache.synchronized { planCache.put(key, Planned(r, TopK)) }
       return r
     }
     try adaptiveStats.recordFromPlan(raw.queryExecution.analyzed)
@@ -639,19 +595,21 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     if (persisted)
       result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     planCache.synchronized {
-      planCache.put(key, result)
-      if (persisted) {
-        cachedBytes(key) = estBytes.toLong
+      if (!persisted) planCache.put(key, Planned(result, Raw))
+      else {
+        planCache.put(key, Persisted(result, estBytes.toLong, localizeTried = false))
         // Evict LRU persisted entries until the summed estimates fit the budget
         // (never the entry just added — it is MRU by definition).
-        var retained = cachedBytes.values.sum
+        var retained = planCache.values.asScala.collect { case p: Persisted => p.bytes }.sum
         val it = planCache.entrySet().iterator()
         while (retained > limits.maxRetainedCacheBytes && it.hasNext) {
           val e = it.next()
-          if (e.getKey != key && cachedBytes.contains(e.getKey)) {
-            retained -= cachedBytes(e.getKey)
-            dropEntry(e.getKey, e.getValue)
-            it.remove()
+          e.getValue match {
+            case p: Persisted if e.getKey != key =>
+              retained -= p.bytes
+              dropEntry(e.getKey, p)
+              it.remove()
+            case _ =>
           }
         }
       }
@@ -663,8 +621,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * result-cache tier (observability for tests/telemetry).
     */
   def isResultCached(query: String): Boolean = planCache.synchronized {
-    cachedBytes.keysIterator.exists(_._1 == query) ||
-      localizedKeys.exists(_._1 == query)
+    planCache.asScala.exists { case (k, e) => k._1 == query && !e.isInstanceOf[Planned] }
   }
 
   /** Probe/test hook: evict a query's L1 entries through the normal dropEntry
@@ -700,21 +657,25 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       thunk: () => Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] =
     try thunk() catch { case scala.util.control.NonFatal(_) => null }
 
-  private def localizeHit(key: (String, Seq[String], Boolean), df: DataFrame): DataFrame = {
+  private def localizeHit(key: Key, df: DataFrame): DataFrame = {
     val rows = collectForLocalize(() => df.collect())
     planCache.synchronized {
-      if (localizedKeys(key)) return planCache.getOrDefault(key, df)
-      localizedKeys += key // even on failure/oversize: don't re-collect every hit
-      if (rows == null || rows.length > maxLocalRows) df
-      else {
-        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-        try df.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () }
-        // the executor-storage copy is gone — stop charging it to the
-        // retained-bytes budget (localizedKeys keeps isResultCached true)
-        cachedBytes.remove(key)
-        planCache.put(key, local)
-        localRowsStore(key) = rows
-        local
+      planCache.get(key) match {
+        case p: Persisted if (p.df eq df) && !p.localizeTried =>
+          if (rows == null || rows.length > maxLocalRows) {
+            // even on failure/oversize: don't re-collect every hit
+            planCache.put(key, p.copy(localizeTried = true))
+            df
+          } else {
+            val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+            try df.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () }
+            // the executor-storage copy is gone, and with it its charge to the
+            // retained-bytes budget
+            planCache.put(key, Localized(local, rows))
+            local
+          }
+        case null => df // evicted meanwhile
+        case other => other.df // another hit got there first
       }
     }
   }
@@ -763,14 +724,14 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     sqlRows(query, nowNs).clone()
 
   private def analyzeOptimized(query: String, nowNs: Long): Option[(TimeRange, Seq[ColumnPredicate])] =
-    try planLock.synchronized {
-      register(catalog.allChunks.map(_.path))
+    try {
       // Optimize the ANALYZED plan directly — queryExecution.optimizedPlan
       // first substitutes any cached (persisted) result as an
       // InMemoryRelation, which erases the Filter nodes: a repeat of a
       // result-cached query would re-extract NO bounds, fall to the default
       // window, and prune to the wrong chunk set.
-      val analyzed = org.apache.spark.sql.GraftBridge.ofRows(spark, parsedPlan(query))
+      val analyzed = GraftBridge.ofRows(spark,
+        withMetrics(parsedPlan(query), relationOf(catalog.allChunks.map(_.path))))
         .queryExecution.analyzed
       val optimized = spark.sessionState.optimizer.execute(analyzed)
       val extracted = PredicateExtraction.extract(optimized, nowNs)
@@ -803,24 +764,16 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       .filter(c => preds.forall(_.keepChunk(c)))
       .map(_.path)
 
-  /** The temp-view object this engine last registered as `metrics` — identity
-    * is checked on every register() so the path-set short-circuit can never
-    * trust a view some OTHER code on the same session replaced (e.g. a
-    * transpiler helper calling createOrReplaceTempView("metrics")): resolving
-    * against a foreign view would silently answer from the wrong relation.
-    */
-  @volatile private var lastRegisteredView: AnyRef = null
+  /** The last (path set → relation) pair [[relationOf]] built. */
+  private val lastRelation =
+    new java.util.concurrent.atomic.AtomicReference[(Seq[String], LogicalPlan)]()
 
-  private def currentMetricsView(): AnyRef =
-    try spark.sessionState.catalog.getTempView("metrics").orNull
-    catch { case scala.util.control.NonFatal(_) => null }
-
-  /** Step 3: (re)register the `metrics` view over exactly the pruned chunk set; cached
-    * when the path set is unchanged AND the live view is still ours
-    * (engine.rs:133-187).
+  /** Step 3: the `metrics` relation over exactly the pruned chunk set, as an
+    * analyzed plan a query binds on its own ([[withMetrics]]); the last one
+    * built is reused while the path set repeats (engine.rs:133-187).
     *
     * One-task rule: when every path has catalog metadata and their summed
-    * `sizeBytes` is at most [[oneTaskMaxBytes]], the view is the scan
+    * `sizeBytes` is at most [[oneTaskMaxBytes]], the relation is the scan
     * coalesced to one partition. The plan then reports SinglePartition, so
     * neither an aggregate nor an ORDER BY needs an exchange: a dashboard-sized
     * read is one job, one stage, one task instead of a shuffle stage, a
@@ -830,12 +783,12 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * measured cut-off ([[QueryEngine.OneTaskMaxBytes]]) one task decoding
     * the whole set is slower than the exchanges it saves.
     */
-  def register(paths: Seq[String]): Unit = synchronized {
-    if (lastRegisteredPaths == paths && lastRegisteredView != null &&
-      (lastRegisteredView eq currentMetricsView())) return
+  private def relationOf(paths: Seq[String]): LogicalPlan = {
+    val last = lastRelation.get()
+    if (last != null && last._1 == paths) return last._2
     val df =
       if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
           MetricSchema.default)
       else {
         // Catalog-held union schema → the scan skips the distributed
@@ -850,18 +803,33 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         if (allKnown && metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes) scan.coalesce(1)
         else scan
       }
-    df.createOrReplaceTempView("metrics")
-    lastRegisteredPaths = paths
-    lastRegisteredView = currentMetricsView()
+    val rel = df.queryExecution.analyzed
+    lastRelation.set((paths, rel))
+    rel
   }
+
+  /** Bind every `metrics` reference of a parsed statement — in subqueries and
+    * in the CTE bodies of a WITH too, which PromQL emits — to `rel`. Each
+    * query resolves against its own relation, so no lock orders planning and
+    * a `metrics` view other code registers on the session is never read.
+    */
+  private def withMetrics(plan: LogicalPlan, rel: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case u: UnresolvedRelation if u.multipartIdentifier.size == 1 &&
+          u.multipartIdentifier.head.equalsIgnoreCase("metrics") =>
+        SubqueryAlias("metrics", rel)
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { r =>
+          r.copy(_2 = r._2.copy(child = withMetrics(r._2.child, rel)))
+        })
+    }
 
   /** information_schema-equivalent label discovery
     * (reference src/api/query/prometheus_api.rs:289-291): all string columns of the
-    * current `metrics` view minus internal columns, plus `__name__`.
+    * `metrics` relation over every chunk minus internal columns, plus `__name__`.
     */
-  def labels(): Seq[String] = planLock.synchronized {
-    register(catalog.allChunks.map(_.path))
-    val cols = spark.table("metrics").schema.fieldNames.toSeq
+  def labels(): Seq[String] = {
+    val cols = relationOf(catalog.allChunks.map(_.path)).schema.fieldNames.toSeq
     ("__name__" +: cols.filterNot(MetricSchema.internalColumns.contains)).distinct.sorted
   }
 
@@ -879,10 +847,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       s"invalid label identifier: $label")
     val c = if (label == "__name__") MetricSchema.MetricNameCol else label
     if (matchers.isEmpty && startNs.isEmpty && endNs.isEmpty)
-      planLock.synchronized {
-        register(catalog.allChunks.map(_.path))
-        spark.table("metrics").select(col(c)).where(col(c).isNotNull).distinct()
-      }
+      GraftBridge.ofRows(spark, relationOf(catalog.allChunks.map(_.path)))
+        .select(col(c)).where(col(c).isNotNull).distinct()
     else {
       val base = graft.plans.ZoneMapFileIndex.table(spark, catalog)
       val timed = (startNs, endNs) match {
@@ -933,12 +899,6 @@ object QueryEngine {
     * per-result estimate cap plus a total retained budget instead, because Spark
     * persists whole result sets, not chunks.
     */
-  /** `resultCacheEnabled = None` defers to the session conf
-    * `spark.graft.resultCache.enabled` (default true) — session-scoped, not a
-    * process-wide static, so one harness (e.g. the bench, which turns caching
-    * off while timing 70+ queries) can't silently change engines built later
-    * on OTHER sessions in the same JVM.
-    */
   /** `l2CacheDir = Some(dir)` enables the L2 disk result-cache tier (the
     * reference's foyer NVMe layer, cached_store.rs:49-181) rooted at `dir`;
     * `maxL2CacheBytes` bounds its on-disk footprint (foyer's fixed-capacity
@@ -949,10 +909,38 @@ object QueryEngine {
   final case class QueryLimits(maxConcurrent: Int = 100, timeoutMs: Long = 300000L,
                                maxCachedResultBytes: Long = 64L << 20,
                                maxRetainedCacheBytes: Long = 1L << 30,
-                               resultCacheEnabled: Option[Boolean] = None,
                                l2CacheDir: Option[String] = None,
                                maxL2CacheBytes: Long = 256L << 20,
                                l2DeleteGraceMs: Long = 300000L)
+
+  /** Plan-cache key: (query text, pruned paths + rollup ids + markers, split active). */
+  private type Key = (String, Seq[String], Boolean)
+
+  /** Which plan a plan-only entry holds, so route flags stay truthful on hits. */
+  private sealed trait Route
+  private case object Raw extends Route
+  private case object Rollup extends Route
+  private case object TopK extends Route
+
+  /** The one plan-cache value per key. */
+  private sealed trait Entry {
+    def df: DataFrame
+    def route: Route = Raw
+  }
+
+  /** Plan only: analysis is skipped on re-run, nothing is materialized. */
+  private final case class Planned(df: DataFrame, override val route: Route) extends Entry
+
+  /** Result persisted in executor storage, charged `bytes` against the
+    * retained budget; `localizeTried` once a repeat hit tried to collect it.
+    */
+  private final case class Persisted(df: DataFrame, bytes: Long, localizeTried: Boolean)
+    extends Entry
+
+  /** Result collected to the driver: `df` scans `rows`, which [[sqlRows]]
+    * hands back directly.
+    */
+  private final case class Localized(df: DataFrame, rows: Array[Row]) extends Entry
 
   final class QueryTimeoutException(timeoutMs: Long, cause: Throwable)
     extends RuntimeException(s"query exceeded ${timeoutMs} ms timeout and was cancelled", cause)

@@ -20,8 +20,8 @@ import graft.schema.MetricSchema
   * because every stored component is associative (sum/min/max/count merge;
   * avg derives last as Σsum/Σvalue_count).
   *
-  * The match runs on the ANALYZED plan of the user's SQL over the registered
-  * `metrics` view, so routing is transparent: same SQL text answers from raw
+  * The match runs on the ANALYZED plan of the user's SQL over the engine's
+  * `metrics` relation, so routing is transparent: same SQL text answers from raw
   * chunks when no rollup qualifies. Anything the matcher does not fully
   * understand routes to raw — the rewrite is never allowed to be lossy.
   *
@@ -213,8 +213,8 @@ object RollupRouting {
   }
 
   /** Descend through view/alias wrappers, collecting Filter conjuncts; true
-    * iff the leaf IS the registered metrics view's backing scan — a file
-    * relation over exactly the engine's registered chunk paths. A file
+    * iff the leaf IS the engine's `metrics` scan — a file relation over
+    * exactly the engine's pruned chunk paths. A file
     * relation over anything else (a user's own parquet table with the same
     * column names) must NOT be rewritten. The only accepted non-file leaf is
     * the engine's empty-warehouse placeholder, and only when the engine has
@@ -228,7 +228,7 @@ object RollupRouting {
         (splitConjuncts(cond) ++ cs, ok)
       case SubqueryAlias(_, child) => stripToRelation(child, expectedPaths)
       case v: View => stripToRelation(v.child, expectedPaths)
-      // the engine's one-task view over a small chunk set (QueryEngine.register)
+      // the engine's one-task scan of a small chunk set (QueryEngine.relationOf)
       case Repartition(1, false, child) => stripToRelation(child, expectedPaths)
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {

@@ -29,22 +29,12 @@ object Checkpoints {
   val ReliableKey = "spark.graft.checkpoint.reliable"
   val DirKey = "spark.graft.checkpoint.dir"
 
-  /** PLAN-AUDIT ONLY: `spark.graft.checkpoint.elide=true` makes cutLineage
-    * the identity, so `.explain` on an operator's returned frame shows the
-    * full computation plan instead of a LogicalRDD checkpoint stub (the
-    * plans/r13 evidence was captured this way). Never enable for real runs:
-    * multi-consumer operators would recompute their expensive subtrees per
-    * consumer and iterative lineages would grow unboundedly.
-    */
-  val ElideKey = "spark.graft.checkpoint.elide"
-
   def cut(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
     def flag(key: String) =
       try spark.conf.get(key, "false").toBoolean
       catch { case _: IllegalArgumentException => false }
-    if (flag(ElideKey)) df
-    else if (!flag(ReliableKey)) df.localCheckpoint(eager)
+    if (!flag(ReliableKey)) df.localCheckpoint(eager)
     else {
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(

@@ -290,18 +290,12 @@ class CatalogSpec extends AnyFunSuite {
     "mutation's effect and result survive, caches stay coherent") {
     // r10 (VERDICT "Next round #7"): 8 threads × 25 registrations through
     // DIFFERENT instances on one root — the fan-in of one ingester node's
-    // flush threads. The per-root GroupCommitter must (a) lose nothing,
-    // (b) visibly coalesce. Coalescing is made DETERMINISTIC with a barrier:
-    // all 8 threads release together each round, so ops enqueue while the
-    // round's first leader is inside its commit — and since enqueue happens
-    // BEFORE the leadership attempt, the second leader must drain every
-    // remaining op of the round in one batch. Each round of 8 simultaneous
-    // mutations therefore lands in at most ~3 commits (first leader takes
-    // ≥1, the next takes the queued rest), never 8 — an un-coalesced
-    // implementation would advance the version 8× per round. (Without the
-    // barrier the assertion is load-dependent: on a quiet host sub-ms
-    // commits drain the queue faster than threads re-enter — measured 187
-    // singletons/200 on one run, 13 on another.)
+    // flush threads. The per-root GroupCommitter must lose nothing and keep
+    // every participant's cache coherent. How far a barrier-released round
+    // coalesces depends on thread wake-up timing (130-176 commits for 200
+    // mutations were read under load), so the amount of coalescing is pinned
+    // in graft.catalog.GroupCommitSpec instead, which holds the first leader
+    // until the round's other ops are queued: exactly 2 commits per round.
     val dir = Files.createTempDirectory("graft_cat_group_")
     val seed = new ChunkCatalog(dir, cacheTtlMs = 0L)
     seed.register(chunk("seed", 0, 0))
@@ -328,10 +322,6 @@ class CatalogSpec extends AnyFunSuite {
     val commits = fresh.state.version - v0
     assert(commits >= rounds && commits <= n.toLong * rounds,
       s"version must advance once per GROUP: $commits")
-    // 8 barrier-released ops per round in ≤ 5 commits (generous over the
-    // ~2-3 structural bound) ⇒ coalescing is real, not incidental
-    assert(commits <= 5L * rounds,
-      s"no coalescing observed ($commits commits for ${n * rounds} mutations)")
     // every participant's cache already reflects a committed store that
     // contains its own writes (no stale read-your-writes)
     (0 until n).foreach { i =>

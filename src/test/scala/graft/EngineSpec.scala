@@ -274,7 +274,7 @@ class EngineSpec extends AnyFunSuite {
     // conf isolation: the serving profile must not leak into the parent session
     assert(interactive.spark.conf.get("spark.sql.codegen.wholeStage") == "false")
     assert(spark.conf.get("spark.sql.codegen.wholeStage", "true") == "true")
-    // view isolation: each engine registers `metrics` in its own catalog
+    // session isolation: the serving profile runs on its own child session
     assert(interactive.spark ne spark)
   }
 
@@ -352,7 +352,8 @@ class EngineSpec extends AnyFunSuite {
     // Regression: prune→register→spark.sql used to be non-atomic, so two
     // concurrent sql() calls could resolve the shared `metrics` view against
     // each other's registered path set — a query silently reading the WRONG
-    // chunks. Planning now serializes under a lock; execution stays concurrent.
+    // chunks. Each query now binds its own `metrics` relation, so planning
+    // and execution both run concurrently with no lock.
     val (eng, _) = freshEngine()
     eng.resultCacheEnabled = false
     val iters = 25
@@ -401,6 +402,67 @@ class EngineSpec extends AnyFunSuite {
     // live query again (cache scoping didn't leak the historical path set)
     assert(eng.sql(s"SELECT count(*) AS c FROM metrics WHERE $range")
       .collect()(0).getLong(0) == 17)
+  }
+
+  private def hourCounts(h: Int): String =
+    s"SELECT metric_name, COUNT(*) AS c FROM metrics WHERE timestamp_ns >= ${t0 + h * hourNs} " +
+      s"AND timestamp_ns < ${t0 + (h + 1) * hourNs} GROUP BY metric_name ORDER BY metric_name"
+
+  test("a persisted result stays cached after another query plans a different path set") {
+    // Replacing a session temp view un-caches every cached plan built over the
+    // old view, so re-registering `metrics` per path set silently dropped the
+    // engine's persisted results while isResultCached still reported them.
+    val (eng, _) = freshEngine()
+    val q1 = eng.sql(hourCounts(0))
+    val want = q1.collect().map(_.toSeq).toSeq
+    assert(eng.isResultCached(hourCounts(0)) &&
+      q1.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "premise: the first result is persisted")
+    val paths0 = eng.lastPrunedPaths
+    eng.sql(hourCounts(1)).collect()
+    assert(eng.lastPrunedPaths != paths0, "premise: the second query selects other chunks")
+    assert(q1.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "planning another path set must not un-cache a persisted result")
+    assert(eng.isResultCached(hourCounts(0)))
+    assert(eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq == want)
+    assert(eng.lastServeMode.get() == "l1")
+  }
+
+  test("metrics inside a CTE body and an IN subquery binds to the pruned scan, " +
+    "rows equal a spark.read.parquet reference") {
+    val (eng, cat) = freshEngine()
+    val range = s"timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}"
+    val q =
+      s"""WITH peak AS (SELECT host, MAX(value_f64) AS mx FROM metrics WHERE $range GROUP BY host)
+         |SELECT m.metric_name, m.host, COUNT(*) AS cnt, MAX(peak.mx) AS mx
+         |FROM metrics m JOIN peak ON m.host = peak.host
+         |WHERE m.timestamp_ns >= $t0 AND m.timestamp_ns < ${t0 + 2 * hourNs} AND m.metric_name IN
+         |  (SELECT metric_name FROM metrics WHERE $range AND metric_name LIKE 'cpu%')
+         |GROUP BY m.metric_name, m.host ORDER BY m.metric_name, m.host""".stripMargin
+    val got = eng.sql(q).collect().map(_.toSeq).toSeq
+    assert(eng.lastPrunedPaths.size == 2, s"premise: prunes to 2 of 3 chunks: ${eng.lastPrunedPaths}")
+    val ref = spark.newSession()
+    ref.read.parquet(cat.allChunks.map(_.path): _*).createOrReplaceTempView("metrics")
+    val want = ref.sql(q).collect().map(_.toSeq).toSeq
+    assert(got == want && got.size == 2, s"$got vs $want")
+  }
+
+  test("a foreign `metrics` temp view on the engine's session leaves engine answers unchanged") {
+    val (_, cat) = freshEngine()
+    val eng = QueryEngine.interactive(spark, cat)
+    val first = eng.sql(hourCounts(0))
+    val want0 = first.collect().map(_.toSeq).toSeq
+    val labels = eng.labels()
+    eng.spark.range(1).selectExpr("'foreign' AS metric_name", "'server9' AS host",
+      s"$t0 AS timestamp_ns", "999.0D AS value_f64").createOrReplaceTempView("metrics")
+    // a new text plans after the foreign view exists; a repeat hits the cache
+    val got1 = eng.sql(hourCounts(1)).collect().map(_.toSeq).toSeq
+    assert(got1 == Seq(Seq("cpu_usage", 12L), Seq("mem_usage", 12L)), got1.toString)
+    assert(first.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq == want0)
+    assert(eng.labels() == labels)
+    assert(eng.labelValues("__name__").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("cpu_usage", "mem_usage"))
   }
 
   /** Run `q` through [[QueryEngine.execute]] and count, with a SparkListener

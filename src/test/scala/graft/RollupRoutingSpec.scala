@@ -46,11 +46,12 @@ class RollupRoutingSpec extends AnyFunSuite {
   test("bucketed aggregate routes to the rollup, reads no raw chunk, equals the raw answer") {
     val (eng, cat, _) = freshEngine()
     // the raw answer first (no rollup registered yet)
-    val raw = eng.sql(bucketedSql).collect().map(_.toSeq).toSeq
+    val rawDf = eng.sql(bucketedSql)
+    val raw = rawDf.collect().map(_.toSeq).toSeq
     assert(!eng.lastServedFromRollup && raw.size == 8) // 2 buckets × 2 metrics × 2 hosts
-    // premise: this chunk set is small, so the engine registered its one-task
-    // view — routing below must see through the Repartition(1) wrapper
-    assert(eng.spark.table("metrics").queryExecution.analyzed.collectFirst {
+    // premise: this chunk set is small, so the engine bound its one-task
+    // relation — routing below must see through the Repartition(1) wrapper
+    assert(rawDf.queryExecution.analyzed.collectFirst {
       case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
     }.isDefined)
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,

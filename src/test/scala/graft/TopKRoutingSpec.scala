@@ -7,7 +7,7 @@ import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import java.nio.file.Files
 
 /** Engine-integrated naive-top-k rewrite (graft.plans.TopKRouting): the SAME
-  * SQL text — row_number() ≤ k over the registered metrics view — re-plans as
+  * SQL text — row_number() ≤ k over the engine's `metrics` relation — re-plans as
   * the two-phase Operators.topKPerGroup with identical rows; anything the
   * matcher does not fully understand routes to the raw window plan.
   */
@@ -113,19 +113,21 @@ class TopKRoutingSpec extends AnyFunSuite {
 
   test("routes over the one-task coalesced view and over the partitioned scan alike") {
     val cat = freshCatalog()
-    def coalesced(eng: QueryEngine): Boolean =
-      eng.spark.table("metrics").queryExecution.analyzed.collectFirst {
+    def coalesced(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst {
         case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
       }.isDefined
     val small = new QueryEngine(spark, cat)
-    val smallRows = small.sql(naiveSql).collect().map(_.toSeq).toSeq
-    assert(small.lastTopKRouted && coalesced(small),
-      "a dashboard-sized chunk set registers as the one-task view and still routes")
-    // cut-off 0: no chunk set is small enough, the view stays a plain scan
+    val smallDf = small.sql(naiveSql)
+    val smallRows = smallDf.collect().map(_.toSeq).toSeq
+    assert(small.lastTopKRouted && coalesced(smallDf),
+      "a dashboard-sized chunk set binds as the one-task relation and still routes")
+    // cut-off 0: no chunk set is small enough, the relation stays a plain scan
     val large = new QueryEngine(spark, cat)
     large.oneTaskMaxBytes = 0L
-    val largeRows = large.sql(naiveSql).collect().map(_.toSeq).toSeq
-    assert(large.lastTopKRouted && !coalesced(large))
+    val largeDf = large.sql(naiveSql)
+    val largeRows = largeDf.collect().map(_.toSeq).toSeq
+    assert(large.lastTopKRouted && !coalesced(largeDf))
     assert(smallRows == largeRows && smallRows.size == 10)
   }
 }
