@@ -6,7 +6,8 @@ Usage: python3 scripts/check_correctness.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir tables, and
 compares (columns sorted by name, rows sorted by all columns, exact equality;
-reports max float deviation on mismatch).
+reports max float deviation on mismatch). A query with an oracle but no dump
+fails as "no spark output".
 """
 import sys, json, glob, os
 import duckdb
@@ -29,10 +30,12 @@ def main():
         con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_ok = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    # every oracle'd query must have a dump: Verify logs a failed query and
+    # goes on, so walking only the dump directories would never count it
+    dumped = {n for n in os.listdir(out_dir)
+              if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(dumped | set(oracles)):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
         files = glob.glob(os.path.join(d, "*.parquet"))
         if not files:
             print(f"FAIL {name}: no spark output")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark. Three segments, in measurement-cleanliness order:
   *
   *   1. ingest throughput (generator → sorted hour-partitioned ZSTD chunks,
@@ -39,24 +37,9 @@ object Bench {
     // SPARK_GRAFT_MASTER=local-cluster[4,8,8192] runs the same sweep across 4
     // separate executor JVMs — real BlockManager shuffle transfers, broadcast
     // over the wire, serialized task closures — the closest a single host gets
-    // to multi-node evidence. Executors are fresh JVMs, so they need this
-    // process's classpath (sbt's forked-run classpath carries graft classes).
+    // to multi-node evidence.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", shuffleDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "7g"))
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(master, cpus, Some(shuffleDir))
 
     // Queries run through engines constructed inside SparkEntry — reach them
     // via the SESSION conf (engines read it at construction; segment 2
@@ -107,8 +90,9 @@ object Bench {
     // tmpfs for the same reason as the shuffle dir: the axis is the ENGINE's
     // sort+partition+ZSTD-encode+zone-map throughput (the reference's ingester
     // writes to RAM buffers with async S3 upload — local-disk bandwidth is not
-    // part of its samples/sec axis either). The durable-disk write path is
-    // covered by ScaleProbe (518 M rows → real disk, 1.9-4.2 M samples/s).
+    // part of its samples/sec axis either). The durable-disk write path was
+    // measured by a since-deleted scale probe (518 M rows → real disk,
+    // 1.9-4.2 M samples/s; ROUND_NOTES_r3.md).
     val warehouse = graft.util.ShmDirs.tempDir("graft_bench_ingest_")
     val catalog = new graft.catalog.ChunkCatalog(warehouse)
     val writer = new graft.ingest.ChunkWriter(catalog)

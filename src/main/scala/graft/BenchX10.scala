@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dedicated-JVM 10× bench leg (r10, closes r9 VERDICT "What's wrong #4" /
   * "Next round #1"): the x10 cohort was promoted by r8 to be THE
   * round-over-round perf signal, but r9 recorded it with 1-2 runs per query
@@ -35,17 +33,7 @@ object BenchX10 {
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val shuffleDir = graft.util.ShmDirs.shuffleDir("graft_benchx10_shuffle")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", shuffleDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(s"local[$cpus]", cpus, Some(shuffleDir))
     spark.conf.set("spark.graft.resultCache.enabled", "false")
 
     def time(f: => Unit): Double = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated per-query timer (r8 directive #1: round-over-round comparisons
   * must come from a JVM that runs ONLY the queries under study — the shared
   * Bench JVM accumulates heap/GC pressure from 100+ queries and its sf0.1
@@ -21,17 +19,7 @@ object QueryTimer {
       if (args.length == 3 && args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(2).toSeq
     val shuffleDir = graft.util.ShmDirs.shuffleDir("graft_bench_shuffle")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", shuffleDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(s"local[$cpus]", cpus, Some(shuffleDir))
     spark.conf.set("spark.graft.resultCache.enabled", "false")
 
     // same warmup as Bench: JIT + codegen + shuffle machinery exercised once

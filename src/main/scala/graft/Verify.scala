@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,7 @@ object Verify {
     // separate executor JVMs (real shuffle serde) — multi-JVM correctness
     // evidence, not just multi-JVM timing. Same wiring as Bench.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.ts is TIMESTAMP(NANOS) parquet → read as raw ns LongType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      builder
-        .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "7g"))
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(master, cpus, None)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERIES=a,b,c re-dumps a subset into an existing outDir
     // (incremental refresh after a targeted query change); oracle_sql.json is

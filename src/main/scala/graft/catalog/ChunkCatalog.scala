@@ -151,7 +151,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     // back-to-back commits; the version bumps once per GROUP (numbers stay
     // dense — the SpentVersions floor requires that). Cross-process writers
     // still contend through the raw CAS — set false to measure that floor
-    // (CatalogScale's nogroup leg).
+    // (`concurrent_commits_per_sec_nogroup` in CATALOG_SCALE.json).
     val groupCommit: Boolean = true) {
 
   import ChunkCatalog._
@@ -390,7 +390,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     * evaluated against the previous one's PROJECTED state — identical
     * semantics to back-to-back commits) and land as ONE manifest version /
     * ONE CAS link. With groupCommit = false the old per-instance loop runs —
-    * the cross-process contention floor CatalogScale measures.
+    * the cross-process contention floor CATALOG_SCALE.json records.
     */
   private def mutate[A](delta: Store => Plan[A]): A =
     if (groupCommit)

@@ -107,9 +107,10 @@ object Dedup {
     * might-contain slice. `maxFilterBytes` refuses a filter too big to ship —
     * fall back to [[incrementalExactDedup]]'s plain anti-join beyond it.
     *
-    * Regime (measured, DocScaleProbe 500 k docs): building the filter costs
-    * two extra corpus-fingerprint passes, so at broadcast-able corpus sizes
-    * the plain anti-join WINS (3.3 s vs 6.9 s). The bloom pays off when the
+    * Regime (measured by a since-deleted 500 k-doc scale probe,
+    * ROUND_NOTES_r6.md): building the filter costs two extra
+    * corpus-fingerprint passes, so at broadcast-able corpus sizes the plain
+    * anti-join WINS (3.3 s vs 6.9 s). The bloom pays off when the
     * fingerprint set exceeds the broadcast budget but the filter doesn't, or
     * when the filter is reused across daily batches — pass
     * `corpusFingerprints` from the persisted fingerprint table so the build

@@ -38,7 +38,7 @@ object Checkpoints {
     else {
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(
-        spark.conf.get(DirKey,
+        spark.conf.getOption(DirKey).getOrElse(
           java.nio.file.Files.createTempDirectory("graft_reliable_ckpt_").toString))
       df.checkpoint(eager)
     }

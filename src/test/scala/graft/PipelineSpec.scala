@@ -330,6 +330,15 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(p => (p._1, p._2)).toSeq
     val (localC, localN) = (classify(), neardup())
+    // with the dir conf set, no fallback temp dir may be created beside it
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def fallbackDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith("graft_reliable_ckpt_")).toSet
+      finally ls.close()
+    }
+    val fallbackBefore = fallbackDirs()
     val dir = java.nio.file.Files.createTempDirectory("graft_test_rckpt_")
     spark.conf.set(graft.util.Checkpoints.ReliableKey, "true")
     spark.conf.set(graft.util.Checkpoints.DirKey, dir.toString)
@@ -339,6 +348,8 @@ class PipelineSpec extends AnyFunSuite {
       // the mode actually engaged: checkpoint files landed in the directory
       val files = java.nio.file.Files.walk(dir).count()
       assert(files > 1, s"no reliable checkpoint files written under $dir")
+      val stray = fallbackDirs() -- fallbackBefore
+      assert(stray.isEmpty, s"fallback checkpoint dirs created in $tmp: $stray")
     } finally {
       spark.conf.unset(graft.util.Checkpoints.ReliableKey)
       spark.conf.unset(graft.util.Checkpoints.DirKey)
