@@ -6,8 +6,9 @@ Usage: python3 scripts/check_correctness.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir tables, and
 compares (columns sorted by name, rows sorted by all columns, exact equality;
-reports max float deviation on mismatch). A query with an oracle but no dump
-fails as "no spark output".
+reports max float deviation on mismatch). A column whose dtype differs from
+the oracle's fails even when its values are equal. A query with an oracle but
+no dump fails as "no spark output".
 """
 import sys, json, glob, os
 import duckdb
@@ -77,16 +78,15 @@ def main():
                     ok = False
                     bad = np.where(pd.Series(a).astype(str) != pd.Series(b).astype(str))[0][:3]
                     detail.append(f"col {c}: e.g. idx {bad}: {a[bad]} vs {b[bad]}")
-        # dtype check (driver likely compares schemas)
+        # dtype check: a hash-compare over the result bytes is type-sensitive,
+        # so equal values under another column type do not pass
         dts = [(c, str(g[c].dtype), str(w[c].dtype)) for c in g.columns
                if str(g[c].dtype) != str(w[c].dtype)]
         if dts:
+            ok = False
             detail.append(f"dtype mismatches: {dts}")
-        if ok and not dts:
+        if ok:
             print(f"OK   {name}: {len(g)} rows")
-            n_ok += 1
-        elif ok:
-            print(f"WARN {name}: values equal but {'; '.join(detail)}")
             n_ok += 1
         else:
             print(f"FAIL {name}: {'; '.join(detail)}")

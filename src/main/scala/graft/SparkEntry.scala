@@ -104,6 +104,9 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long),
       graft.engine.QueryEngine]()
 
+  /** q_src_jsonl_roundtrip's JSONL scratch path per fixture dir. */
+  private val jsonlScratch = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** Materialized IVF index over `dir`'s embeddings — built once per (session,
     * dir); the build is the write-path cost a production deployment pays once.
     */
@@ -734,7 +737,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2)
             .as("sum_qty"),
-          grouping(col("l_linestatus")).as("g_ls"))
+          grouping(col("l_linestatus")).cast("int").as("g_ls"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first, col("g_ls")),
       oracle = """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
@@ -1501,16 +1504,15 @@ object SparkEntry {
         | WHERE epoch_ns(ts) >= 1704067200000000000 AND epoch_ns(ts) < 1704153600000000000
         |) sub WHERE rn <= 10 ORDER BY metric_name, rn""".stripMargin),
 
-    // §3.1 scan-layer pruning via the custom ZoneMapFileIndex: the DataFrame's
-    // own filters prune chunk files at PLANNING time (no engine pre-prune).
+    // §3.1 time-plus-label prune: the engine's catalog prune keeps the chunks
+    // whose time range and `host` zone map can match before any file opens.
     QuerySpec("q_engine_fileindex", (s, dir) => {
       val eng = engineWithData(s, dir, maxTsExclusiveNs = Jan3Ns)
-      graft.plans.ZoneMapFileIndex.table(s, eng.catalog)
-        .filter(col("timestamp_ns") >= Jan1Ns && col("timestamp_ns") < Jan2Ns &&
-          col("host") === "h3")
-        .groupBy("metric_name")
-        .agg(count(lit(1)).as("cnt"), round(max("value_f64"), 6).as("max_v"))
-        .orderBy("metric_name")
+      eng.sql(
+        s"""SELECT metric_name, COUNT(*) AS cnt, ROUND(MAX(value_f64), 6) AS max_v
+           |FROM metrics
+           |WHERE timestamp_ns >= $Jan1Ns AND timestamp_ns < $Jan2Ns AND host = 'h3'
+           |GROUP BY metric_name ORDER BY metric_name""".stripMargin)
     },
       oracle = """SELECT event_type AS metric_name, count(*) AS cnt, round(max(value), 6) AS max_v
         |FROM events
@@ -1815,11 +1817,11 @@ object SparkEntry {
     // JSONL path loses nothing (escaping, unicode, nulls, types).
     QuerySpec("q_src_jsonl_roundtrip", (s, dir) => {
       // scratch on tmpfs when available: the host block device intermittently
-      // throttles ~100×, and this query's write is scaffolding, not the op
-      val base =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-          "/dev/shm" else System.getProperty("java.io.tmpdir")
-      val path = s"$base/graft_jsonl_" + java.lang.Integer.toHexString(dir.hashCode)
+      // throttles ~100×, and this query's write is scaffolding, not the op.
+      // One dir per fixture, removed at JVM exit: the returned frame reads it
+      // lazily and a re-run overwrites it.
+      val path = jsonlScratch.computeIfAbsent(dir,
+        _ => graft.util.ShmDirs.tempDir("graft_jsonl_").resolve("documents").toString)
       graft.sources.DocumentSources.writeJsonl(t(s, dir, "documents"), path)
       graft.sources.DocumentSources.readDocumentsJsonl(s, path)
         .select("doc_id", "text", "lang", "source", "n_chars")

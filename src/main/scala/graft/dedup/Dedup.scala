@@ -765,40 +765,6 @@ object Dedup {
   /** Hamming distance between two 64-bit signatures (bit_count of xor). */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs: banded on 4 16-bit sub-blocks (a pair within Hamming
-    * distance ≤3 of 64 bits must agree exactly on at least one block — pigeonhole),
-    * then verified by full Hamming distance.
-    */
-  def simhashNearDupPairs(docs: DataFrame,
-                          textCol: String = "text",
-                          idCol: String = "doc_id",
-                          maxHamming: Int = 3): DataFrame = {
-    val sigs = graft.util.Parallelism.spreadNarrowScan(
-        docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), simhash(col(textCol)).as("sig"))
-      .cutLineage(true)
-    val blocks = sigs.select(col(idCol), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*)).as(Seq("block", "block_val")))
-    val l = blocks.select(col("block"), col("block_val"),
-      col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val r = blocks.select(col("block"), col("block_val"),
-      col(idCol).as("id_b"), col("sig").as("sig_b"))
-    l.join(r, Seq("block", "block_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hammingDistance(col("sig_a"), col("sig_b")).as("hamming"))
-      // hamming filter BEFORE the pair distinct (r12, guide §2.3): block
-      // collisions between non-near docs grow ~quadratically with corpus
-      // size, and the old shape shipped every colliding pair through the
-      // distinct exchange only to drop the far ones after it. hamming is
-      // deterministic per (id_a, id_b), so distinct∘filter ≡ filter∘distinct
-      // — identical pair set (oracle re-proven), but the exchange now carries
-      // only pairs actually within maxHamming.
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
   /** Portable 60-bit md5 SimHash (see HashExpressions.SimHashMd5): identical
     * signature is computable in DuckDB SQL, which is what lets the near-dup
     * query below be oracle hash-gated.
@@ -812,11 +778,9 @@ object Dedup {
     * into `nBlocks` sub-blocks with nBlocks > maxHamming, so by pigeonhole any
     * pair within `maxHamming` agrees exactly on ≥1 block — recall is PROVABLY
     * 1.0 (not probabilistic), and the verified output equals the brute-force
-    * all-pairs answer. That determinism is why this variant is oracle-gated
-    * while [[simhashNearDupPairs]] (4 fixed blocks, wider maxHamming) stays
-    * the probabilistic recall-tuned variant. Same scale shape: block-key
-    * equi-join, collision-proportional, never O(n²); smaller blocks trade
-    * more candidates for guaranteed recall.
+    * all-pairs answer, which is what lets it be oracle-gated. Scale shape:
+    * block-key equi-join, collision-proportional, never O(n²); smaller
+    * blocks trade more candidates for guaranteed recall.
     */
   def simhashNearDupPairsExact(docs: DataFrame,
                                textCol: String = "text",

@@ -2,8 +2,9 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.And
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import scala.jdk.CollectionConverters._
 import graft.catalog.ChunkCatalog
 import graft.prune.{ColumnPredicate, PredicateExtraction, TimeRange}
@@ -15,6 +16,8 @@ import graft.schema.MetricSchema
   *     (default: last 1 hour) + column predicates (engine.rs:368-487, 493-650).
   *  2. METADATA PRUNE — hour-bucket time-index range scan + zone-map filter over the
   *     catalog (s3.rs:1075-1136). This is the layer Spark doesn't give us for free.
+  *     It is the engine's only chunk selection: `sql`, `sqlForTenant`, `sqlAt`
+  *     and the label-values and series endpoints all read through it.
   *  3. BIND — the pruned chunk set becomes this query's own `metrics`
   *     relation: every `metrics` reference in the parsed statement, CTE
   *     bodies and subqueries included, is bound to a scan of exactly those
@@ -476,14 +479,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         analyzeMemo.put(query, if (independent) Some(full) else None)
         full
     }
-    val basePaths = asOf match {
-      case Some(v) =>
-        graft.catalog.ChunkCatalog
-          .chunksInRangeOf(catalog.stateAt(v), range.startNs, range.endNs)
-          .filter(c => preds.forall(_.keepChunk(c)))
-          .map(_.path)
-      case None => prune(range, preds)
-    }
+    val basePaths = pruneIn(asOf.fold(catalog.state)(catalog.stateAt), range, preds)
     val paths = tenant match {
       case Some(t) => basePaths
         .filter(p => graft.catalog.ChunkCatalog.tenantOf(catalog.root, p) == t)
@@ -760,7 +756,14 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** Step 2: catalog prune — time index then zone maps. */
   def prune(range: TimeRange, preds: Seq[ColumnPredicate]): Seq[String] =
-    catalog.chunksInRange(range.startNs, range.endNs)
+    pruneIn(catalog.state, range, preds)
+
+  /** [[prune]] over a given catalog state: the live one, or a retained
+    * version for [[sqlAt]]. Every read of the engine selects its chunks here.
+    */
+  private def pruneIn(st: ChunkCatalog.CatalogState, range: TimeRange,
+                      preds: Seq[ColumnPredicate]): Seq[String] =
+    ChunkCatalog.chunksInRangeOf(st, range.startNs, range.endNs)
       .filter(c => preds.forall(_.keepChunk(c)))
       .map(_.path)
 
@@ -835,9 +838,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** `/api/v1/label/<name>/values`, optionally matcher- and time-filtered
     * (reference prometheus_api.rs:330-470 filters values by `match[]` and
-    * start/end). The filtered path is served over the ZoneMapFileIndex table,
-    * so a time bound or an equality matcher prunes chunks at scan planning —
-    * an unfiltered dropdown refresh is the only shape that scans everything.
+    * start/end). Reads [[matchedRows]], so a time bound or an equality
+    * matcher prunes chunks in the catalog like any query, and a small window
+    * runs as one task.
     */
   def labelValues(label: String,
                   matchers: Seq[graft.promql.LabelMatcher] = Nil,
@@ -846,37 +849,44 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     require(graft.promql.PromQL.isValidIdentifier(label),
       s"invalid label identifier: $label")
     val c = if (label == "__name__") MetricSchema.MetricNameCol else label
-    if (matchers.isEmpty && startNs.isEmpty && endNs.isEmpty)
-      GraftBridge.ofRows(spark, relationOf(catalog.allChunks.map(_.path)))
-        .select(col(c)).where(col(c).isNotNull).distinct()
-    else {
-      val base = graft.plans.ZoneMapFileIndex.table(spark, catalog)
-      val timed = (startNs, endNs) match {
-        case (Some(s), Some(e)) =>
-          base.where(col(MetricSchema.TimestampNsCol).between(s, e))
-        case (Some(s), None) => base.where(col(MetricSchema.TimestampNsCol) >= s)
-        case (None, Some(e)) => base.where(col(MetricSchema.TimestampNsCol) <= e)
-        case (None, None) => base
-      }
-      val matched = matchers.foldLeft(timed) { (df, m) =>
-        df.filter(org.apache.spark.sql.functions.expr(graft.promql.PromQL.matcherToSql(m)))
-      }
-      matched.select(col(c)).where(col(c).isNotNull).distinct()
-    }
+    matchedRows(matchers, startNs, endNs)
+      .select(col(c)).where(col(c).isNotNull).distinct()
   }
 
   /** `/api/v1/series`: DISTINCT over (metric_name + every label column), optionally
-    * matcher-filtered (reference prometheus_api.rs:503-649). Served over the
-    * ZoneMapFileIndex table so equality matchers prune chunks at scan planning.
+    * matcher-filtered (reference prometheus_api.rs:503-649). Reads
+    * [[matchedRows]], so equality matchers prune chunks in the catalog.
     */
   def series(matchers: Seq[graft.promql.LabelMatcher] = Nil): DataFrame = {
-    val base = graft.plans.ZoneMapFileIndex.table(spark, catalog)
+    val rows = matchedRows(matchers, None, None)
     val cols = MetricSchema.MetricNameCol +:
-      base.schema.fieldNames.toSeq.filterNot(MetricSchema.internalColumns.contains)
-    val filtered = matchers.foldLeft(base) { (df, m) =>
-      df.filter(org.apache.spark.sql.functions.expr(graft.promql.PromQL.matcherToSql(m)))
-    }
-    filtered.select(cols.map(col): _*).distinct()
+      rows.schema.fieldNames.toSeq.filterNot(MetricSchema.internalColumns.contains)
+    rows.select(cols.map(col): _*).distinct()
+  }
+
+  /** The `metrics` rows in `[startNs, endNs]` (a missing side unbounded) that
+    * match every matcher. Chunks come from [[prune]] over that range and the
+    * zone-map predicates the matchers' SQL conditions extract to, bound as in
+    * [[relationOf]]. The columns are the whole catalog's union schema, in its
+    * order: a label that no selected chunk carries reads as NULL, as it does
+    * over all chunks, so it gives no label values and `!~` keeps the row.
+    */
+  private def matchedRows(matchers: Seq[graft.promql.LabelMatcher],
+                          startNs: Option[Long], endNs: Option[Long]): DataFrame = {
+    val conds = matchers.map(m =>
+      spark.sessionState.sqlParser.parseExpression(graft.promql.PromQL.matcherToSql(m)))
+    // the range comes from startNs/endNs; extraction's own range is ignored
+    val preds = conds.reduceOption(And).fold(Seq.empty[ColumnPredicate])(c =>
+      PredicateExtraction.extractFromExpression(c, 0L)._2)
+    val range = TimeRange(startNs.getOrElse(Long.MinValue), endNs.getOrElse(Long.MaxValue))
+    val pruned = GraftBridge.ofRows(spark, relationOf(prune(range, preds)))
+    val all = ChunkCatalog.mergedSchema(catalog.allChunks).getOrElse(pruned.schema)
+    val rows = pruned.select(all.fields.toSeq.map(f =>
+      if (pruned.columns.contains(f.name)) col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)): _*)
+    val ts = col(MetricSchema.TimestampNsCol)
+    (startNs.map(ts >= _) ++ endNs.map(ts <= _) ++ conds.map(GraftBridge.column))
+      .foldLeft(rows)(_ where _)
   }
 }
 

@@ -19,23 +19,4 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Build a DataFrame over a custom FileIndex (HadoopFsRelation +
-    * LogicalRelation + Dataset.ofRows are private[sql] in Spark 4) — the
-    * injection point for graft.plans.ZoneMapFileIndex.
-    */
-  def fileIndexTable(spark: SparkSession,
-                     index: org.apache.spark.sql.execution.datasources.FileIndex,
-                     schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val classicSpark = spark.asInstanceOf[classic.SparkSession]
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = org.apache.spark.sql.types.StructType(Nil),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      options = Map.empty)(classicSpark)
-    classic.Dataset.ofRows(classicSpark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(relation))
-  }
 }

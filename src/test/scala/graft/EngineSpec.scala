@@ -170,6 +170,12 @@ class EngineSpec extends AnyFunSuite {
     val nAll = scannedFiles(eng.labelValues("host",
       startNs = Some(Long.MinValue), endNs = Some(Long.MaxValue)))
     assert(nBounded < nAll, "time-bounded label values must prune chunks at planning")
+    // an equality matcher prunes by zone map: server2 lives only in hour 2
+    // (count files on the frame's first action: a re-run reports none)
+    val host2 = eng.labelValues("__name__",
+      matchers = graft.promql.PromQL.parseMatchers("""{host="server2"}"""))
+    assert(scannedFiles(host2) * 3 == nAll, s"{host=\"server2\"} must scan 1 of 3 chunks")
+    assert(host2.collect().map(_.getString(0)).sorted.toSeq == Seq("cpu_usage", "mem_usage"))
 
     // matcher-filtered: __name__ selector applies; zone maps can't split the
     // two metrics (same chunk) but value filtering must still apply
@@ -246,6 +252,14 @@ class EngineSpec extends AnyFunSuite {
         s"AND " + graft.promql.PromQL.matcherToSql(graft.promql.LabelMatcher("host", "!~", "a.*")))
       .collect()
     assert(kept.map(_.getDouble(0)).toSeq == Seq(2.0))
+    // label endpoints over a window whose only chunk lacks `zone`: the column
+    // reads as NULL, as over all chunks, instead of failing to resolve
+    val (lo, hi) = (Some(t0), Some(t0 + hourNs - 1))
+    assert(eng.labelValues("zone", Nil, lo, hi).collect().isEmpty)
+    assert(eng.labelValues("host", Seq(graft.promql.LabelMatcher("zone", "!~", "z.*")), lo, hi)
+      .collect().map(_.getString(0)).toSeq == Seq("a"))
+    // zone="z0" prunes the zone chunk by its zone map and keeps the host one
+    assert(eng.series(Seq(graft.promql.LabelMatcher("zone", "=", "z0"))).collect().isEmpty)
   }
 
   test("empty batch write is a no-op") {
@@ -465,38 +479,42 @@ class EngineSpec extends AnyFunSuite {
       Seq("cpu_usage", "mem_usage"))
   }
 
-  /** Run `q` through [[QueryEngine.execute]] and count, with a SparkListener
-    * on the job group execute tags the call with, the jobs and tasks it ran.
+  /** Run `thunk` and count, with a SparkListener on a local property this
+    * thread tags its jobs with, the jobs and tasks it ran.
     */
-  private def jobsAndTasks[T](eng: QueryEngine, q: String)
-                             (f: org.apache.spark.sql.DataFrame => T): (T, Int, Int) = {
+  private def jobsAndTasks[T](thunk: => T): (T, Int, Int) = {
     import org.apache.spark.scheduler._
-    val sc = eng.spark.sparkContext
-    val jobsOf = new java.util.concurrent.ConcurrentHashMap[Int, (String, Seq[Int])]()
+    val sc = spark.sparkContext
+    val key = "graft.test.probe"
+    val tag = java.util.UUID.randomUUID().toString
+    val stagesOf = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val tasksOf = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobsOf.put(js.jobId, (g, js.stageIds)))
+        if (Option(js.properties).exists(_.getProperty(key) == tag))
+          stagesOf.put(js.jobId, js.stageIds)
       override def onJobEnd(je: SparkListenerJobEnd): Unit = { ended.add(je.jobId); () }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         tasksOf.merge(te.stageId, 1, (a, b) => a + b); ()
       }
     }
     sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
     try {
-      var group: String = null
-      val out = eng.execute(q) { df => group = sc.getLocalProperty("spark.jobGroup.id"); f(df) }
+      val out = thunk
       import scala.jdk.CollectionConverters._
-      def ours = jobsOf.asScala.filter(_._2._1 == group)
       // every event is posted before the action returns; wait for delivery
       val deadline = System.currentTimeMillis() + 30000L
-      while ((ours.isEmpty || !ours.keys.forall(ended.contains)) &&
+      while ((stagesOf.isEmpty || !stagesOf.keySet.asScala.forall(ended.contains)) &&
           System.currentTimeMillis() < deadline) Thread.sleep(20)
-      val tasks = ours.values.flatMap(_._2).map(st => Option(tasksOf.get(st)).fold(0)(_.toInt)).sum
-      (out, ours.size, tasks)
-    } finally sc.removeSparkListener(listener)
+      val tasks = stagesOf.values.asScala.flatten
+        .map(st => Option(tasksOf.get(st)).fold(0)(_.toInt)).sum
+      (out, stagesOf.size, tasks)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   private val twoHourAgg =
@@ -517,7 +535,8 @@ class EngineSpec extends AnyFunSuite {
   test("one-task reads: a small pruned set runs as one job of one task, rows " +
     "equal an uncoalesced reference") {
     val (eng, cat) = freshEngine()
-    val (rows, jobs, tasks) = jobsAndTasks(eng, twoHourAgg)(_.collect().map(_.toSeq).toSeq)
+    val (rows, jobs, tasks) =
+      jobsAndTasks(eng.execute(twoHourAgg)(_.collect().map(_.toSeq).toSeq))
     val selected = eng.lastPrunedPaths
     assert(selected.size == 2, s"premise: the window prunes to 2 of 3 chunks: $selected")
     val bytes = selected.flatMap(cat.state.chunks.get).map(_.sizeBytes).sum
@@ -525,6 +544,11 @@ class EngineSpec extends AnyFunSuite {
       s"premise: $bytes selected bytes are under the one-task cut-off")
     assert(jobs == 1 && tasks == 1, s"expected 1 job / 1 task, got $jobs / $tasks")
     assert(rows == referenceRows(cat) && rows.size == 4)
+    // filtered label values over one hour read the same way
+    val (hosts, lvJobs, lvTasks) = jobsAndTasks(eng.labelValues("host",
+      startNs = Some(t0 + hourNs), endNs = Some(t0 + 2 * hourNs - 1)).collect())
+    assert(hosts.map(_.getString(0)).sorted.toSeq == Seq("server1", "server2"))
+    assert(lvJobs == 1 && lvTasks == 1, s"label values: $lvJobs jobs / $lvTasks tasks")
   }
 
   test("one-task reads: above the one-task cut-off the read keeps " +
@@ -535,7 +559,8 @@ class EngineSpec extends AnyFunSuite {
     assert(selected.size == 2)
     val eng = new QueryEngine(spark, cat)
     eng.oneTaskMaxBytes = bytes - 1
-    val (rows, jobs, tasks) = jobsAndTasks(eng, twoHourAgg)(_.collect().map(_.toSeq).toSeq)
+    val (rows, jobs, tasks) =
+      jobsAndTasks(eng.execute(twoHourAgg)(_.collect().map(_.toSeq).toSeq))
     assert(tasks > 1, s"a set above the cut-off must stay partitioned: $jobs jobs / $tasks tasks")
     assert(rows == referenceRows(cat))
   }
