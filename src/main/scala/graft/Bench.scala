@@ -157,17 +157,18 @@ object Bench {
     // cached bytes); count() would bolt a 2-stage shuffle onto every probe and
     // measure the scheduler instead.
     // BOTH warm shapes are measured (VERDICT r4 "What's wrong #2"):
-    //  - warm_persisted: repeat hit served from the persisted DISTRIBUTED
-    //    result (localization off) — what a first repeat or >20 K-row result
-    //    gets; an executor-block scan + collect, not a driver array lookup.
+    //  - warm_persisted: repeat hit on the cached PLAN with the result cache
+    //    off — analysis is skipped but the plan executes again over the
+    //    chunk files (what a >20 K-row result gets on every repeat); a scan +
+    //    collect, not a driver array lookup.
     //  - warm_local (the headline warm_query_median, L1-serving analog):
     //    repeat hit after the one-time localization to a LocalRelation.
-    eng.localizeWarmHits = false
+    eng.resultCacheEnabled = false
     eng.sql(windowSql(1704067210000000000L)).collect() // populate caches
-    val warmPersistedRuns = (1 to 9).map(_ =>
+    val warmPlanRuns = (1 to 9).map(_ =>
       time { eng.sql(windowSql(1704067210000000000L)).collect() }).sorted
-    val warmPersistedMedian = warmPersistedRuns(4)
-    eng.localizeWarmHits = true
+    val warmPlanMedian = warmPlanRuns(4)
+    eng.resultCacheEnabled = true
     eng.sql(windowSql(1704067210000000000L)).collect() // triggers localization
     val warmRuns = (1 to 9).map(_ =>
       time { eng.sql(windowSql(1704067210000000000L)).collect() }).sorted
@@ -186,17 +187,19 @@ object Bench {
     // L2 disk-tier serving latency (the reference's foyer NVMe tier; BASELINE
     // cache ladder "L1 ~10 ms / L2 ~50 ms / L3 ~200 ms"): the SAME window
     // query served from its demoted on-disk result instead of recomputing.
-    // Protocol: prime cold (persisted) → evict from L1 (demotes; awaited once)
-    // → each further cycle evicts again (the file is already valid, eviction
-    // is synchronous) and times the L2-hit serve.
+    // Protocol: prime cold (plan-only) and repeat once (localized) → evict
+    // from L1 (demotes; awaited once) → each further cycle evicts again (the
+    // file is already valid, eviction is synchronous) and times the L2-hit
+    // serve.
     val l2Median = {
       val l2Dir = graft.util.ShmDirs.tempDir("graft_bench_l2_")
       val engL2 = new graft.engine.QueryEngine(eng.spark, latCatalog,
         graft.engine.QueryEngine.QueryLimits(l2CacheDir = Some(l2Dir.toString)))
       val qa = windowSql(1704067260000000000L)
-      engL2.sql(qa).collect() // cold: computed + persisted
+      engL2.sql(qa).collect() // cold: computed, plan cached
+      engL2.sql(qa).collect() // first repeat: localized
       val d0 = graft.engine.Telemetry.l2Demotions.sum()
-      engL2.evictL1(qa) // async demote of the persisted result
+      engL2.evictL1(qa) // async demote of the localized rows
       val deadline = System.currentTimeMillis() + 30000
       while (graft.engine.Telemetry.l2Demotions.sum() <= d0 &&
         System.currentTimeMillis() < deadline) Thread.sleep(20)
@@ -387,7 +390,7 @@ object Bench {
          |"ingest_runs_sec":[${ingestRuns.map(f3).mkString(",")}],
          |"samples_per_sec":$samplesPerSec,"compression_ratio":$compressionRatio,
          |"warm_runs_sec":[${warmRuns.map(f3).mkString(",")}],
-         |"warm_persisted_runs_sec":[${warmPersistedRuns.map(f3).mkString(",")}],
+         |"warm_persisted_runs_sec":[${warmPlanRuns.map(f3).mkString(",")}],
          |"disk_mbps_start":$diskMbpsStart,"disk_mbps_end":$diskMbpsEnd,
          |"pruned_runs_sec":[${prunedRuns.map(f3).mkString(",")}],
          |"l2_query_median_sec":${f3(l2Median)},
@@ -419,7 +422,7 @@ object Bench {
       s""""samples_per_sec":$samplesPerSec,"ingest_sec":${f3(ingestSec)},""" +
       s""""compression_ratio":$compressionRatio,""" +
       s""""warm_query_median":${f3(warmMedian)},"warm_query_min":${f3(warmRuns.head)},""" +
-      s""""warm_local":${f3(warmMedian)},"warm_persisted":${f3(warmPersistedMedian)},""" +
+      s""""warm_local":${f3(warmMedian)},"warm_persisted":${f3(warmPlanMedian)},""" +
       s""""warm_rows":${f3(warmRowsMedian)},""" +
       s""""l2_query_median":${f3(l2Median)},""" +
       s""""disk_mbps":$diskMbps,""" +

@@ -152,8 +152,7 @@ object MinHashIndex {
       .repartition(p.nParts, col("bh_part"))
       .write.mode("append").partitionBy("bh_part").parquet(bucketsPath(indexRoot))
     // appended files change the listings — probes must re-list
-    Seq(bucketsPath(indexRoot), sigsPath(indexRoot), prunedPath(indexRoot))
-      .foreach(path => relationCache.remove((spark, path)))
+    forget(spark, bucketsPath(indexRoot), sigsPath(indexRoot), prunedPath(indexRoot))
   }
 
   private val prunedSchema = StructType(Seq(
@@ -178,39 +177,45 @@ object MinHashIndex {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], prunedSchema)
   }
 
-  // Params are write-once at build() time, so caching them per (session,
-  // root) is metadata caching, not result caching (r12: a probe paid a
-  // parquet head() job per call just to re-read 5 ints).
-  private val paramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Params]()
+  // Index metadata cached per (session, path): the Params row under
+  // paramsPath (write-once at build() time — r12: a probe paid a parquet
+  // head() job per call just to re-read 5 ints) and the ANALYZED relation of
+  // each table (r13, guide §6 "file listing ... cached per session": the
+  // bucket table is partitioned into n_parts (256) directories, which puts
+  // every spark.read.parquet over it past the parallel-partition-discovery
+  // threshold — each probe paid a 256-task LISTING job, ~0.4 s of pure
+  // scheduling, before reading a byte). Metadata only: every probe still
+  // scans the parquet data itself. INVALIDATED by build()/append(), the only
+  // writers; access-ordered LRU, so neither indices nor sessions accumulate.
+  private val metaCache =
+    new java.util.LinkedHashMap[(SparkSession, String), AnyRef](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, String), AnyRef]): Boolean = size() > 32
+    }
+
+  private def cached[T <: AnyRef](spark: SparkSession, path: String)(load: => T): T =
+    metaCache.synchronized {
+      val hit = metaCache.get((spark, path))
+      if (hit != null) hit.asInstanceOf[T]
+      else { val v = load; metaCache.put((spark, path), v); v }
+    }
 
   def readParams(spark: SparkSession, indexRoot: String): Params =
-    paramsCache.computeIfAbsent((spark, indexRoot), _ => {
+    cached(spark, paramsPath(indexRoot)) {
       val r = spark.read.parquet(paramsPath(indexRoot)).head()
       Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
-    })
+    }
 
-  // r13 (guide §6 "file listing ... cached per session"): the bucket table is
-  // partitioned into n_parts (256) directories, which puts every
-  // spark.read.parquet over it past the parallel-partition-discovery
-  // threshold — each probe paid a 256-task LISTING job (~0.4 s of pure
-  // scheduling) before reading a byte. The ANALYZED relation (file listing +
-  // schema — metadata only, same discipline as readParams/SparkEntry.t) is
-  // cached per (session, root) and INVALIDATED by build()/append(), which are
-  // the only writers. Every probe still scans the parquet data itself.
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private def invalidate(spark: SparkSession, indexRoot: String): Unit =
+    forget(spark, paramsPath(indexRoot), bucketsPath(indexRoot), sigsPath(indexRoot),
+      prunedPath(indexRoot))
 
-  private def invalidate(spark: SparkSession, indexRoot: String): Unit = {
-    paramsCache.remove((spark, indexRoot))
-    Seq(bucketsPath(indexRoot), sigsPath(indexRoot), prunedPath(indexRoot))
-      .foreach(p => relationCache.remove((spark, p)))
-  }
+  private def forget(spark: SparkSession, paths: String*): Unit =
+    metaCache.synchronized(paths.foreach(p => metaCache.remove((spark, p))))
 
   private def cachedRead(spark: SparkSession, path: String,
                          schema: Option[StructType]): DataFrame =
-    relationCache.computeIfAbsent((spark, path), _ =>
-      schema.fold(spark.read)(spark.read.schema(_)).parquet(path))
+    cached(spark, path)(schema.fold(spark.read)(spark.read.schema(_)).parquet(path))
 
   // Explicit schema: a corpus whose every bucket was dropped as degenerate
   // (or an empty corpus) writes ZERO data files, and schema inference over an

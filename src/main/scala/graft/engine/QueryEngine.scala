@@ -98,8 +98,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * Re-running a repeated dashboard query skips Catalyst analysis/optimization —
     * the dominant cost of a warm pruned query (~100 ms). Size mirrors the
     * reference's 100-concurrent-queries default (src/query/mod.rs:50-60).
-    * Eviction is by entry count AND by total persisted-result bytes (see
-    * [[QueryEngine.Persisted]]): evicted entries are unpersisted.
+    * Eviction is by entry count; nothing in it holds executor storage.
     */
   private val planCache =
     new java.util.LinkedHashMap[Key, Entry](128, 0.75f, true) {
@@ -110,29 +109,28 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       }
     }
 
-  private def dropEntry(key: Key, entry: Entry): Unit =
-    // MATERIALIZED entries (persisted result blocks or a driver-local
-    // LocalRelation) demote to the L2 disk tier instead of vanishing; the
-    // demote task unpersists after the file is written. Plan-only entries
-    // (including rollup/top-k routed plans, which are never persisted) have
-    // nothing materialized worth writing — recomputing the plan is cheap.
-    if (!(l2Enabled && !entry.isInstanceOf[Planned] && demoteToL2(key, entry.df))) {
-      try entry.df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+  /** A [[QueryEngine.Localized]] entry demotes its rows to the L2 disk tier
+    * instead of vanishing. Plan-only entries (including rollup/top-k routed
+    * plans) have nothing materialized worth writing — recomputing the plan
+    * is cheap.
+    */
+  private def dropEntry(key: Key, entry: Entry): Unit = entry match {
+    case l: Localized if l2Enabled => demoteToL2(key, l)
+    case _ =>
+  }
 
   // ---------------------------------------------------------------------------
   // L2 disk result-cache tier — the Spark analog of the reference's foyer NVMe
   // tier under the moka RAM tier (src/query/cached_store.rs:49-181: get checks
   // RAM, then disk, then the object store; inserts write through to disk). Here
-  // the RAM tier holds whole RESULT SETS, so the disk tier does too: an L1
-  // eviction DEMOTES the materialized result to one local parquet file
-  // (asynchronously — eviction never blocks the query path), and an L1 miss
-  // whose key has a demoted file PROMOTES it back with one local-disk read
-  // instead of re-executing over raw chunk blocks. The key is the same
-  // (query, pruned-path-set + rollup ids + markers, split) tuple as L1, so a
-  // stale hit is impossible — any ingest/compaction/rollup change changes the
-  // key and the orphaned file simply ages out by LRU. The tier is
+  // the RAM tier holds localized RESULT ROWS, so the disk tier does too: an L1
+  // eviction DEMOTES them to one local file (asynchronously — eviction never
+  // blocks the query path), and an L1 miss whose key has a demoted file
+  // PROMOTES it back with one local-disk read instead of re-executing over
+  // raw chunk blocks. The key is the same (query, pruned-path-set + rollup
+  // ids + markers, split) tuple as L1, so a stale hit is impossible — any
+  // ingest/compaction/rollup change changes the key and the orphaned file
+  // simply ages out by LRU. The tier is
   // process-lifetime (foyer's crash recovery is an opt-in mode the reference
   // does not enable; documented divergence).
   // ---------------------------------------------------------------------------
@@ -156,40 +154,31 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** Keys with a demote write in flight (skip duplicate demotes). */
   private val l2Pending = java.util.concurrent.ConcurrentHashMap.newKeySet[Key]()
 
-  /** Single demote worker: L2 writes are tiny (results are ≤
-    * `maxCachedResultBytes` by construction) and strictly background —
-    * serializing them keeps demotion from ever competing with query jobs.
+  /** Single demote worker: L2 writes are tiny (at most `maxLocalRows` rows)
+    * and strictly background.
     */
   private lazy val l2Demoter = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
     val t = new Thread(r, "graft-l2-demote"); t.setDaemon(true); t
   })
 
-  /** Enqueue a demote; returns true iff the task now owns the unpersist. */
-  private def demoteToL2(key: Key, df: DataFrame): Boolean = {
+  /** Enqueue a demote of a localized entry's rows as driver-serialized
+    * `rows.bin`: both the write here and the later promote are pure local
+    * I/O, no Spark job on either side (the reference's foyer tier likewise
+    * moves raw bytes, not queries).
+    */
+  private def demoteToL2(key: Key, entry: Localized): Unit = {
     val already = l2Entries.synchronized(l2Entries.containsKey(key))
-    if (already || !l2Pending.add(key)) return false // file already valid / in flight
+    if (already || !l2Pending.add(key)) return // file already valid / in flight
     l2Demoter.submit(new Runnable {
       override def run(): Unit = {
         val dir = new java.io.File(limits.l2CacheDir.get,
           s"l2-${java.util.UUID.randomUUID().toString.take(12)}").getAbsolutePath
         try {
-          // Small (localizable) results — the dashboard shape, and the only
-          // shape that ever serves as a LocalRelation — demote as
-          // driver-serialized rows: both the write here and the later promote
-          // are pure local I/O, no Spark job on either side (the reference's
-          // foyer tier likewise moves raw bytes, not queries). Oversized
-          // results keep the parquet form so promote can re-persist them
-          // distributed.
-          val rows0 = collectForLocalize(() => df.limit(maxLocalRows + 1).collect())
-          if (rows0 != null && rows0.length <= maxLocalRows) {
-            java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-            val oos = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(new java.io.File(dir, "rows.bin"))))
-            try { oos.writeObject(df.schema); oos.writeObject(rows0) }
-            finally oos.close()
-          } else {
-            df.coalesce(1).write.mode("overwrite").parquet(dir)
-          }
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+          val oos = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
+            new java.io.FileOutputStream(new java.io.File(dir, "rows.bin"))))
+          try { oos.writeObject(entry.df.schema); oos.writeObject(entry.rows) }
+          finally oos.close()
           val bytes = graft.ingest.ChunkStats.dirSize(java.nio.file.Paths.get(dir))
           Telemetry.l2Demotions.increment()
           l2Entries.synchronized {
@@ -212,14 +201,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
           }
         } catch {
           case scala.util.control.NonFatal(_) => scheduleL2Delete(dir, 0L)
-        } finally {
-          try df.unpersist(blocking = false)
-          catch { case scala.util.control.NonFatal(_) => () }
-          l2Pending.remove(key)
-        }
+        } finally l2Pending.remove(key)
       }
     })
-    true
   }
 
   private def scheduleL2Delete(dir: String, afterMs: Long): Unit =
@@ -229,100 +213,63 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         catch { case scala.util.control.NonFatal(_) => () }
     }, afterMs, java.util.concurrent.TimeUnit.MILLISECONDS)
 
-  /** L2 hit path: read the demoted file back. Small results (the dashboard
-    * shape) collect into a driver-local LocalRelation — the same terminal form
-    * a twice-hit L1 entry reaches; oversized results re-enter L1 as a
-    * persisted parquet-backed plan (materialized here, while the file is
-    * guaranteed live). An unreadable file (corruption, external cleanup) drops
-    * the entry and falls through to a plain recompute — the tier can serve
-    * wrong-shaped bytes to nobody.
+  /** L2 hit path: read the demoted rows back into a driver-local
+    * LocalRelation — the same terminal form a repeated L1 entry reaches. An
+    * unreadable file (corruption, external cleanup) drops the entry and falls
+    * through to a plain recompute — the tier can serve wrong-shaped bytes to
+    * nobody.
     */
   private def promoteFromL2(key: Key): Option[DataFrame] = {
     if (!l2Enabled) return None
     val ent = l2Entries.synchronized(l2Entries.get(key)) // touches LRU order
     if (ent == null) return None
-    val (dir, bytes) = ent
+    val dir = ent._1
     // Everything that touches the file sits inside the fail-open guard — a
     // corrupt/deleted file must fall through to a recompute, never out of
     // sql(). NonFatal ONLY, same discipline as collectForLocalize: an OOM must
     // propagate.
-    val rowsFile = new java.io.File(dir, "rows.bin")
-    val read: Option[(Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)] =
+    val read: Option[(Array[Row], org.apache.spark.sql.types.StructType)] =
       try {
-        if (rowsFile.isFile) { // serialized small result: pure driver-side read
-          val ois = new java.io.ObjectInputStream(new java.io.BufferedInputStream(
-            new java.io.FileInputStream(rowsFile)))
-          try {
-            val schema = ois.readObject().asInstanceOf[org.apache.spark.sql.types.StructType]
-            val rows = ois.readObject().asInstanceOf[Array[org.apache.spark.sql.Row]]
-            Some((rows, schema))
-          } finally ois.close()
-        } else {
-          val pdf = spark.read.parquet(dir)
-          Some((pdf.limit(maxLocalRows + 1).collect(), pdf.schema))
-        }
+        val ois = new java.io.ObjectInputStream(new java.io.BufferedInputStream(
+          new java.io.FileInputStream(new java.io.File(dir, "rows.bin"))))
+        try {
+          val schema = ois.readObject().asInstanceOf[org.apache.spark.sql.types.StructType]
+          Some((ois.readObject().asInstanceOf[Array[Row]], schema))
+        } finally ois.close()
       } catch { case scala.util.control.NonFatal(_) => None }
     read match {
       case None => // unreadable → forget the entry, recompute
         l2Entries.synchronized(l2Entries.remove(key))
         scheduleL2Delete(dir, 0L)
         None
-      case Some((rows, schema)) => promoteRows(key, dir, bytes, rows, schema)
-    }
-  }
-
-  private def promoteRows(key: Key, dir: String, bytes: Long, rows: Array[Row],
-                          schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
-    if (rows.length > maxLocalRows) {
-      val df = spark.read.parquet(dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val counted = collectForLocalize(() => { df.count(); Array.empty })
-      if (counted == null) { // materialization failed → recompute path
-        try df.unpersist(blocking = false)
-        catch { case scala.util.control.NonFatal(_) => () }
-        None
-      } else {
+      case Some((rows, schema)) =>
         Telemetry.l2Hits.increment()
-        planCache.synchronized { planCache.put(key, Persisted(df, bytes, localizeTried = false)) }
-        Some(df)
-      }
-    } else {
-      Telemetry.l2Hits.increment()
-      val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      planCache.synchronized { planCache.put(key, Localized(local, rows)) }
-      Some(local)
+        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        planCache.synchronized { planCache.put(key, Localized(local, rows)) }
+        Some(local)
     }
   }
 
   /** RAM result-cache tier, the Spark analog of the reference's L1 moka cache
-    * (README.md:280-283: L1 RAM ~10 ms). Cached plans are persisted
-    * MEMORY_AND_DISK; the cache key includes the pruned chunk-path set, so any
-    * newly ingested or compacted chunk changes the key and stale hits are
-    * impossible. Evicted entries are unpersisted.
+    * (README.md:280-283: L1 RAM ~10 ms). Admission follows the repeat
+    * pattern: a first sighting keeps only its plan (nothing is materialized,
+    * so a one-off cold query holds no executor storage), and the FIRST
+    * REPEAT collects at most `maxLocalRows` + 1 rows. A result that fits is
+    * kept as driver-side rows ([[QueryEngine.Localized]]), which later
+    * repeats serve with no plan execution; a larger one stays plan-only and
+    * is never collected again. The cache key includes the pruned chunk-path
+    * set, so any newly ingested or compacted chunk changes the key and stale
+    * hits are impossible.
     *
-    * BOUNDED BY BYTES, not just entry count: a result is persisted only when its
-    * optimizer size estimate is ≤ `limits.maxCachedResultBytes` (the reference's
-    * L1 caches fixed-size chunks, never unbounded result sets — a full-window
-    * `SELECT *` must stream, not pin the whole scan in executor memory), and the
-    * cache evicts LRU entries once the summed estimates exceed
-    * `limits.maxRetainedCacheBytes`. Oversized results still get PLAN caching
-    * (analysis skipped on re-run) — just not storage.
-    *
-    * The default comes from the session conf `spark.graft.resultCache.enabled`
-    * (default true) — session-scoped, not a process-wide static, so one
-    * harness (e.g. the bench, which turns caching off while timing 70+
-    * queries) can't silently change engines built later on OTHER sessions in
-    * the same JVM.
+    * When false, every entry stays plan-only (repeats re-execute the cached
+    * plan). The default comes from the session conf
+    * `spark.graft.resultCache.enabled` (default true) — session-scoped, not a
+    * process-wide static, so one harness (e.g. the bench, which turns caching
+    * off while timing 70+ queries) can't silently change engines built later
+    * on OTHER sessions in the same JVM.
     */
   @volatile var resultCacheEnabled: Boolean =
     spark.conf.get("spark.graft.resultCache.enabled", "true").toBoolean
-
-  /** When false, warm repeat hits stay on the persisted DISTRIBUTED result
-    * (never swapped to a driver-local LocalRelation) — the shape a first
-    * repeat or a >20 K-row result always gets. The bench measures both warm
-    * numbers so the <100 ms gate can't be read as a driver array lookup.
-    */
-  @volatile var localizeWarmHits: Boolean = true
 
   /** Resolution-based rollup routing (graft.plans.RollupRouting) — on by
     * default; registered rollups only exist when an operator materialized one.
@@ -514,8 +461,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         lastServedFromRollup = hit.route == Rollup
         lastTopKRouted = hit.route == TopK
         hit match {
-          // persisted-but-not-yet-localized entry on a REPEAT hit → localize it
-          case Persisted(df, _, false) if localizeWarmHits => toLocalize = df
+          // first repeat of a raw result → localize it (outside the lock)
+          case Planned(df, Raw, false) if resultCacheEnabled => toLocalize = df
           // localized hit: expose the stored rows so sqlRows() can serve them
           // with ZERO plan execution (the reference's L1-serves-bytes shape)
           case Localized(df, rows) => lastHitRows.set(rows); return df
@@ -525,8 +472,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     }
     if (toLocalize != null) return localizeHit(key, toLocalize)
     Telemetry.cacheMisses.increment()
-    // L1 miss → probe the L2 disk tier before recomputing (only plain
-    // materialized results ever demote, so routing flags are per-force false).
+    // L1 miss → probe the L2 disk tier before recomputing (only localized raw
+    // results ever demote, so routing flags are per-force false).
     promoteFromL2(key).foreach { df =>
       lastServedFromRollup = false
       lastTopKRouted = false
@@ -580,50 +527,21 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       if (split && dedupCols.forall(raw.schema.fieldNames.contains))
         raw.dropDuplicates(dedupCols)
       else raw
-    // Persist only results the optimizer estimates small enough: est comes from
-    // Catalyst plan stats (file-size-accurate at the scan, conservatively
-    // propagated upward), so a full-window `SELECT *` is never pinned while a
-    // dashboard-sized aggregate over a pruned chunk set is.
-    val estBytes =
-      try result.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    val persisted = resultCacheEnabled && estBytes <= limits.maxCachedResultBytes
-    if (persisted)
-      result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    planCache.synchronized {
-      if (!persisted) planCache.put(key, Planned(result, Raw))
-      else {
-        planCache.put(key, Persisted(result, estBytes.toLong, localizeTried = false))
-        // Evict LRU persisted entries until the summed estimates fit the budget
-        // (never the entry just added — it is MRU by definition).
-        var retained = planCache.values.asScala.collect { case p: Persisted => p.bytes }.sum
-        val it = planCache.entrySet().iterator()
-        while (retained > limits.maxRetainedCacheBytes && it.hasNext) {
-          val e = it.next()
-          e.getValue match {
-            case p: Persisted if e.getKey != key =>
-              retained -= p.bytes
-              dropEntry(e.getKey, p)
-              it.remove()
-            case _ =>
-          }
-        }
-      }
-    }
+    planCache.synchronized { planCache.put(key, Planned(result, Raw)) }
     result
   }
 
-  /** True if the given query's most recent result was persisted in the L1
-    * result-cache tier (observability for tests/telemetry).
+  /** True if the L1 tier holds rows of the given query, i.e. a repeat
+    * localized them (observability for tests/telemetry).
     */
   def isResultCached(query: String): Boolean = planCache.synchronized {
-    planCache.asScala.exists { case (k, e) => k._1 == query && !e.isInstanceOf[Planned] }
+    planCache.asScala.exists { case (k, e) => k._1 == query && e.isInstanceOf[Localized] }
   }
 
   /** Probe/test hook: evict a query's L1 entries through the normal dropEntry
-    * path (materialized entries demote to L2 when the tier is enabled). Lets
+    * path (localized entries demote to L2 when the tier is enabled). Lets
     * the bench measure the L2-hit latency deterministically — production code
-    * never needs this; eviction is budget-driven.
+    * never needs this; eviction is LRU by entry count.
     */
   private[graft] def evictL1(query: String): Unit = planCache.synchronized {
     val it = planCache.entrySet().iterator()
@@ -634,40 +552,40 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   }
 
   /** A repeated warm hit gets served the way the reference's L1 serves cached
-    * BYTES (README.md:280-283, ~10 ms): the already-persisted result is
-    * collected once into a driver-local LocalRelation, so every further repeat
-    * costs one local-scan job instead of re-executing the aggregate over the
-    * cached blocks (~10× latency cut measured at local[32]). Results too large
-    * to hold driver-side stay in their persisted distributed form. The collect
-    * runs OUTSIDE the cache lock — concurrent hits at worst localize twice.
+    * BYTES (README.md:280-283, ~10 ms): the first repeat collects the result
+    * once into a driver-local LocalRelation, so every further repeat skips
+    * plan execution ([[sqlRows]] hands back the stored rows). A result with
+    * more than this many rows stays plan-only. Not a serving option: tests
+    * move it to put a result on either side.
     */
-  private val maxLocalRows = 20000
+  @volatile private[graft] var maxLocalRows: Int = 20000
 
   /** Guarded collect for localization: a benign execution failure (e.g. a
-    * SparkException from a lost cached block) falls back to the persisted
-    * distributed form (null ⇒ don't localize), but NonFatal ONLY — an
-    * OOM/JVM error must propagate, not silently become a cache-policy
-    * decision. Package-private so the spec can exercise the discipline.
+    * SparkException from a lost block) leaves the entry plan-only (null ⇒
+    * don't localize), but NonFatal ONLY — an OOM/JVM error must propagate,
+    * not silently become a cache-policy decision. Package-private so the
+    * spec can exercise the discipline.
     */
   private[graft] def collectForLocalize(
       thunk: () => Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] =
     try thunk() catch { case scala.util.control.NonFatal(_) => null }
 
+  /** The collect runs OUTSIDE the cache lock — concurrent hits at worst
+    * localize twice; at most `maxLocalRows` + 1 rows reach the driver.
+    */
   private def localizeHit(key: Key, df: DataFrame): DataFrame = {
-    val rows = collectForLocalize(() => df.collect())
+    val rows = collectForLocalize(() => df.limit(maxLocalRows + 1).collect())
     planCache.synchronized {
       planCache.get(key) match {
-        case p: Persisted if (p.df eq df) && !p.localizeTried =>
+        case p: Planned if (p.df eq df) && !p.localizeTried =>
           if (rows == null || rows.length > maxLocalRows) {
             // even on failure/oversize: don't re-collect every hit
             planCache.put(key, p.copy(localizeTried = true))
             df
           } else {
             val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-            try df.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () }
-            // the executor-storage copy is gone, and with it its charge to the
-            // retained-bytes budget
             planCache.put(key, Localized(local, rows))
+            lastHitRows.set(rows)
             local
           }
         case null => df // evicted meanwhile
@@ -686,9 +604,10 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * ROWS, serving a localized L1 repeat straight from the stored driver-side
     * array — no Catalyst execution, no LocalRelation scan job, no per-row
     * copying; the moral equivalent of the reference's moka L1 handing back
-    * cached bytes. Every other serve shape (first sighting, persisted
-    * distributed result, L2 promote, recompute) falls through to the normal
-    * sql().collect(), and the NEXT repeat is localized by the standard path.
+    * cached bytes. The repeat that localizes an entry returns the rows it
+    * stored too. Every other serve shape (first sighting, plan-only repeat,
+    * L2 promote, recompute) falls through to the normal sql().collect(),
+    * and the NEXT repeat is localized by the standard path.
     * lastServeMode stays "l1" for the hit (it IS an L1 hit — the soak's
     * warm-tail decomposition keys on that).
     *
@@ -722,10 +641,10 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   private def analyzeOptimized(query: String, nowNs: Long): Option[(TimeRange, Seq[ColumnPredicate])] =
     try {
       // Optimize the ANALYZED plan directly — queryExecution.optimizedPlan
-      // first substitutes any cached (persisted) result as an
-      // InMemoryRelation, which erases the Filter nodes: a repeat of a
-      // result-cached query would re-extract NO bounds, fall to the default
-      // window, and prune to the wrong chunk set.
+      // first substitutes any plan persisted on the session as an
+      // InMemoryRelation, which erases the Filter nodes: a query matching
+      // one would re-extract NO bounds, fall to the default window, and
+      // prune to the wrong chunk set.
       val analyzed = GraftBridge.ofRows(spark,
         withMetrics(parsedPlan(query), relationOf(catalog.allChunks.map(_.path))))
         .queryExecution.analyzed
@@ -904,12 +823,11 @@ object QueryEngine {
   val OneTaskMaxBytes: Long = 1L << 20
 
   /** Reference QueryNode defaults: 100 concurrent queries, 300 s statement
-    * timeout (src/query/mod.rs:50-60). Cache bounds are ours: the reference's L1
-    * moka tier is 1 GB of fixed-size chunks (README.md:280-283) — we bound by a
-    * per-result estimate cap plus a total retained budget instead, because Spark
-    * persists whole result sets, not chunks.
-    */
-  /** `l2CacheDir = Some(dir)` enables the L2 disk result-cache tier (the
+    * timeout (src/query/mod.rs:50-60). The L1 tier is bounded by entry count
+    * (100) and rows per localized result (`maxLocalRows`), not bytes: it holds
+    * no executor storage.
+    *
+    * `l2CacheDir = Some(dir)` enables the L2 disk result-cache tier (the
     * reference's foyer NVMe layer, cached_store.rs:49-181) rooted at `dir`;
     * `maxL2CacheBytes` bounds its on-disk footprint (foyer's fixed-capacity
     * disk cache), and evicted files are physically deleted only after
@@ -917,8 +835,6 @@ object QueryEngine {
     * mid-read (same grace idiom as chunk/rollup GC).
     */
   final case class QueryLimits(maxConcurrent: Int = 100, timeoutMs: Long = 300000L,
-                               maxCachedResultBytes: Long = 64L << 20,
-                               maxRetainedCacheBytes: Long = 1L << 30,
                                l2CacheDir: Option[String] = None,
                                maxL2CacheBytes: Long = 256L << 20,
                                l2DeleteGraceMs: Long = 300000L)
@@ -938,14 +854,11 @@ object QueryEngine {
     def route: Route = Raw
   }
 
-  /** Plan only: analysis is skipped on re-run, nothing is materialized. */
-  private final case class Planned(df: DataFrame, override val route: Route) extends Entry
-
-  /** Result persisted in executor storage, charged `bytes` against the
-    * retained budget; `localizeTried` once a repeat hit tried to collect it.
+  /** Plan only: analysis is skipped on re-run, nothing is materialized;
+    * `localizeTried` once a repeat hit tried to collect it.
     */
-  private final case class Persisted(df: DataFrame, bytes: Long, localizeTried: Boolean)
-    extends Entry
+  private final case class Planned(df: DataFrame, override val route: Route,
+                                   localizeTried: Boolean = false) extends Entry
 
   /** Result collected to the driver: `df` scans `rows`, which [[sqlRows]]
     * hands back directly.

@@ -157,25 +157,26 @@ class EngineSpec extends AnyFunSuite {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
       case other => other.children.flatMap(allScans)
     }
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      allScans(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+    // values and files scanned, both from the frame's FIRST action: a re-run
+    // reports no files
+    def scan(df: org.apache.spark.sql.DataFrame): (Seq[String], Long) = {
+      val values = df.collect().map(_.getString(0)).sorted.toSeq
+      (values, allScans(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum)
     }
 
     // time-bounded: only hour 1's host, and only hour 1's chunk scanned
-    val hour1 = eng.labelValues("host",
-      startNs = Some(t0 + hourNs), endNs = Some(t0 + 2 * hourNs - 1))
-    assert(hour1.collect().map(_.getString(0)).toSeq == Seq("server1"))
-    val nBounded = scannedFiles(hour1)
-    val nAll = scannedFiles(eng.labelValues("host",
+    val (hour1, nBounded) = scan(eng.labelValues("host",
+      startNs = Some(t0 + hourNs), endNs = Some(t0 + 2 * hourNs - 1)))
+    assert(hour1 == Seq("server1"))
+    val (_, nAll) = scan(eng.labelValues("host",
       startNs = Some(Long.MinValue), endNs = Some(Long.MaxValue)))
-    assert(nBounded < nAll, "time-bounded label values must prune chunks at planning")
+    assert(nBounded * 3 == nAll && nAll > 0,
+      s"time-bounded label values must scan 1 of 3 chunks: $nBounded of $nAll files")
     // an equality matcher prunes by zone map: server2 lives only in hour 2
-    // (count files on the frame's first action: a re-run reports none)
-    val host2 = eng.labelValues("__name__",
-      matchers = graft.promql.PromQL.parseMatchers("""{host="server2"}"""))
-    assert(scannedFiles(host2) * 3 == nAll, s"{host=\"server2\"} must scan 1 of 3 chunks")
-    assert(host2.collect().map(_.getString(0)).sorted.toSeq == Seq("cpu_usage", "mem_usage"))
+    val (host2, nHost2) = scan(eng.labelValues("__name__",
+      matchers = graft.promql.PromQL.parseMatchers("""{host="server2"}""")))
+    assert(nHost2 * 3 == nAll, s"{host=\"server2\"} must scan 1 of 3 chunks")
+    assert(host2 == Seq("cpu_usage", "mem_usage"))
 
     // matcher-filtered: __name__ selector applies; zone maps can't split the
     // two metrics (same chunk) but value filtering must still apply
@@ -214,9 +215,8 @@ class EngineSpec extends AnyFunSuite {
   test("repeat of a result-cached foldable query keeps its pruned set (no InMemoryRelation poisoning)") {
     val (eng, _) = freshEngine()
     // arithmetic bound → parse-only extraction can't memoize → RE-extracted
-    // per call through the optimizer. The first call persists its small
-    // result; the repeat's re-extraction must not see the cached
-    // InMemoryRelation (whose plan has no Filter) or it collapses to the
+    // per call through the optimizer. The repeat localizes the result; its
+    // re-extraction must still find the folded bounds or it collapses to the
     // default window and prunes everything away.
     val q = s"SELECT COUNT(*) AS cnt FROM metrics " +
       s"WHERE timestamp_ns >= $t0 + $hourNs AND timestamp_ns < $t0 + 2 * $hourNs"
@@ -292,35 +292,46 @@ class EngineSpec extends AnyFunSuite {
     assert(interactive.spark ne spark)
   }
 
-  test("result cache is byte-bounded: huge results are NOT persisted, small ones are") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_rc_"), cacheTtlMs = 0L)
-    val points = for {
-      h <- 0 until 3; m <- Seq("cpu_usage", "mem_usage")
-      host <- Seq("server1", "server2"); i <- 0 until 6
-    } yield MetricPoint(t0 + h * hourNs + i * 600L * 1000000000L,
-      m, (i % 100) / 100.0 + h, Map("host" -> host))
-    new ChunkWriter(cat).write(Converters.pointsToDf(spark, points))
-    val chunkBytes = cat.allChunks.map(_.sizeBytes).sum
-    assert(chunkBytes > 4096, "test premise: warehouse bigger than the cache cap")
-    // cap below the scan size: a full `SELECT *` (estimate ≈ file bytes) must
-    // stream, not pin the whole scan; a global aggregate (estimate = 1 row) fits
-    val eng = new QueryEngine(spark, cat,
-      QueryEngine.QueryLimits(maxCachedResultBytes = 4096))
-    val huge = s"SELECT * FROM metrics WHERE timestamp_ns >= $t0"
+  test("result cache is row-bounded: a repeat localizes a small result; a larger " +
+    "one stays plan-only and is not collected again") {
+    val (eng, _) = freshEngine()
+    eng.maxLocalRows = 10
+    val huge = s"SELECT * FROM metrics WHERE timestamp_ns >= $t0" // 72 rows
     val tiny = s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0"
-    eng.sql(huge).count()
-    eng.sql(tiny).count()
-    assert(!eng.isResultCached(huge), "SELECT * over the full window must not be persisted")
-    assert(eng.isResultCached(tiny), "dashboard-sized result must be persisted")
-    // retained-bytes budget evicts LRU persisted entries (budget 1 byte → only
-    // the most recent persisted result survives)
-    val eng2 = new QueryEngine(spark, cat,
-      QueryEngine.QueryLimits(maxCachedResultBytes = 4096, maxRetainedCacheBytes = 1L))
-    val tiny2 = s"SELECT COUNT(*) AS c2 FROM metrics WHERE timestamp_ns >= $t0"
-    eng2.sql(tiny).count()
-    eng2.sql(tiny2).count()
-    assert(!eng2.isResultCached(tiny), "older persisted entry must be evicted by the byte budget")
-    assert(eng2.isResultCached(tiny2), "most recent entry survives the sweep")
+    eng.sql(tiny).collect()
+    eng.sql(tiny).collect()
+    assert(eng.isResultCached(tiny), "a small result localizes on its first repeat")
+    val want = eng.sql(huge).collect().map(_.toSeq).toSet
+    assert(want.size == 72)
+    // the first repeat runs one bounded collect besides its own execution ...
+    val (rows1, jobs1, _) = jobsAndTasks(eng.sql(huge).collect())
+    // ... and marks the entry, so a later repeat only executes the plan
+    val (rows2, jobs2, _) = jobsAndTasks(eng.sql(huge).collect())
+    assert(!eng.isResultCached(huge), "a result above maxLocalRows must stay plan-only")
+    assert(jobs2 >= 1 && jobs1 == jobs2 + 1, s"jobs: first repeat $jobs1, later repeat $jobs2")
+    assert(rows1.map(_.toSeq).toSet == want && rows2.map(_.toSeq).toSet == want)
+    assert(eng.lastServeMode.get() == "l1")
+  }
+
+  test("a one-off cold query leaves the session's cache manager empty") {
+    val (eng, _) = freshEngine()
+    spark.catalog.clearCache()
+    assert(eng.sql(hourCounts(0)).collect().length == 2)
+    assert(spark.sharedState.cacheManager.isEmpty, "a first sighting must persist nothing")
+    assert(!eng.isResultCached(hourCounts(0)))
+  }
+
+  test("a first repeat localizes; the next sqlRows serves the same array with zero jobs") {
+    val (eng, _) = freshEngine()
+    val q = hourCounts(1)
+    val cold = eng.sqlRows(q)
+    assert(!eng.isResultCached(q), "a first sighting keeps only its plan")
+    val repeat = eng.sqlRows(q) // localizes and hands back the rows it stored
+    assert(eng.isResultCached(q))
+    val (again, jobs, _) = jobsAndTasks(eng.sqlRows(q))
+    assert(jobs == 0, s"a localized hit ran $jobs Spark jobs")
+    assert(again eq repeat, "sqlRows must serve the stored row array, not re-collect")
+    assert(again.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
   }
 
   test("r11 sqlRows: localized repeat serves the stored row array with ZERO " +
@@ -422,23 +433,22 @@ class EngineSpec extends AnyFunSuite {
     s"SELECT metric_name, COUNT(*) AS c FROM metrics WHERE timestamp_ns >= ${t0 + h * hourNs} " +
       s"AND timestamp_ns < ${t0 + (h + 1) * hourNs} GROUP BY metric_name ORDER BY metric_name"
 
-  test("a persisted result stays cached after another query plans a different path set") {
+  test("a localized result stays cached after another query plans a different path set") {
     // Replacing a session temp view un-caches every cached plan built over the
-    // old view, so re-registering `metrics` per path set silently dropped the
-    // engine's persisted results while isResultCached still reported them.
+    // old view, so re-registering `metrics` per path set once silently dropped
+    // the engine's cached results while isResultCached still reported them.
     val (eng, _) = freshEngine()
-    val q1 = eng.sql(hourCounts(0))
-    val want = q1.collect().map(_.toSeq).toSeq
-    assert(eng.isResultCached(hourCounts(0)) &&
-      q1.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "premise: the first result is persisted")
+    val want = eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq
+    val rows = eng.sqlRows(hourCounts(0))
+    assert(eng.isResultCached(hourCounts(0)), "premise: the repeat localized the result")
     val paths0 = eng.lastPrunedPaths
     eng.sql(hourCounts(1)).collect()
+    eng.sql(hourCounts(1)).collect()
     assert(eng.lastPrunedPaths != paths0, "premise: the second query selects other chunks")
-    assert(q1.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "planning another path set must not un-cache a persisted result")
-    assert(eng.isResultCached(hourCounts(0)))
-    assert(eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq == want)
+    assert(eng.isResultCached(hourCounts(0)),
+      "planning another path set must not drop a cached result")
+    assert(eng.sqlRows(hourCounts(0)) eq rows)
+    assert(rows.map(_.toSeq).toSeq == want)
     assert(eng.lastServeMode.get() == "l1")
   }
 
@@ -472,8 +482,8 @@ class EngineSpec extends AnyFunSuite {
     // a new text plans after the foreign view exists; a repeat hits the cache
     val got1 = eng.sql(hourCounts(1)).collect().map(_.toSeq).toSeq
     assert(got1 == Seq(Seq("cpu_usage", 12L), Seq("mem_usage", 12L)), got1.toString)
-    assert(first.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     assert(eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq == want0)
+    assert(eng.lastServeMode.get() == "l1")
     assert(eng.labels() == labels)
     assert(eng.labelValues("__name__").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("cpu_usage", "mem_usage"))
@@ -490,10 +500,13 @@ class EngineSpec extends AnyFunSuite {
     val stagesOf = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val tasksOf = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
+    val marker = new java.util.concurrent.atomic.AtomicInteger(-1)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty(key) == tag))
-          stagesOf.put(js.jobId, js.stageIds)
+        Option(js.properties).map(_.getProperty(key)).foreach { t =>
+          if (t == tag) stagesOf.put(js.jobId, js.stageIds)
+          else if (t == tag + "-marker") marker.set(js.jobId)
+        }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = { ended.add(je.jobId); () }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         tasksOf.merge(te.stageId, 1, (a, b) => a + b); ()
@@ -503,11 +516,14 @@ class EngineSpec extends AnyFunSuite {
     sc.setLocalProperty(key, tag)
     try {
       val out = thunk
-      import scala.jdk.CollectionConverters._
-      // every event is posted before the action returns; wait for delivery
+      // the listener bus delivers events in order: once a marker job run
+      // after the thunk has ended, every event of the thunk's jobs has too
+      sc.setLocalProperty(key, tag + "-marker")
+      sc.parallelize(Seq(1), 1).count()
       val deadline = System.currentTimeMillis() + 30000L
-      while ((stagesOf.isEmpty || !stagesOf.keySet.asScala.forall(ended.contains)) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      while (!ended.contains(marker.get()) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
       val tasks = stagesOf.values.asScala.flatten
         .map(st => Option(tasksOf.get(st)).fold(0)(_.toInt)).sum
       (out, stagesOf.size, tasks)

@@ -7,11 +7,11 @@ import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import java.nio.file.Files
 
 /** L2 disk result-cache tier (reference foyer NVMe layer,
-  * src/query/cached_store.rs:49-181): L1 evictions demote the materialized
-  * result to a local parquet file; an L1 miss with a demoted key promotes it
-  * back instead of re-executing. Byte-bounded, staleness-safe (the key carries
-  * the pruned chunk-path set), and strictly fail-open (an unreadable file
-  * falls through to a plain recompute).
+  * src/query/cached_store.rs:49-181): L1 evictions demote localized result
+  * rows to a local file; an L1 miss with a demoted key promotes it back
+  * instead of re-executing. Byte-bounded, staleness-safe (the key carries the
+  * pruned chunk-path set), and strictly fail-open (an unreadable file falls
+  * through to a plain recompute).
   */
 class L2CacheSpec extends AnyFunSuite {
 
@@ -19,9 +19,7 @@ class L2CacheSpec extends AnyFunSuite {
   private val hourNs = 3600L * 1000000000L
   private val t0 = 1704067200L * 1000000000L
 
-  /** Engine whose L1 evicts every previously persisted entry on each insert
-    * (retained budget 1 byte) so demotion is deterministic to trigger.
-    */
+  /** Engine with the L2 tier on; [[demote]] puts an entry there. */
   private def l2Engine(maxL2Bytes: Long = 256L << 20,
                        graceMs: Long = 0L): (QueryEngine, ChunkCatalog, java.io.File) = {
     val cat = new ChunkCatalog(Files.createTempDirectory("graft_l2_"), cacheTtlMs = 0L)
@@ -33,7 +31,6 @@ class L2CacheSpec extends AnyFunSuite {
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, points))
     val dir = Files.createTempDirectory("graft_l2c_").toFile
     val eng = new QueryEngine(spark, cat, QueryEngine.QueryLimits(
-      maxCachedResultBytes = 1L << 20, maxRetainedCacheBytes = 1L,
       l2CacheDir = Some(dir.getAbsolutePath), maxL2CacheBytes = maxL2Bytes,
       l2DeleteGraceMs = graceMs))
     (eng, cat, dir)
@@ -47,6 +44,19 @@ class L2CacheSpec extends AnyFunSuite {
     }
   }
 
+  /** Localize `q` (first sighting, then its first repeat), evict it from L1
+    * and wait for the demote; returns the rows.
+    */
+  private def demote(eng: QueryEngine, q: String): Seq[Seq[Any]] = {
+    val rows = eng.sql(q).collect().map(_.toSeq).toSeq
+    eng.sql(q).collect()
+    assert(eng.isResultCached(q), "premise: the repeat localized the result")
+    val d0 = Telemetry.l2Demotions.sum()
+    eng.evictL1(q)
+    eventually() { Telemetry.l2Demotions.sum() > d0 }
+    rows
+  }
+
   private def l2Dirs(root: java.io.File): Seq[java.io.File] =
     Option(root.listFiles()).map(_.toSeq.filter(_.isDirectory)).getOrElse(Nil)
 
@@ -57,14 +67,11 @@ class L2CacheSpec extends AnyFunSuite {
 
   test("L1 eviction demotes to disk; repeat serves from L2 as a LocalRelation") {
     val (eng, _, dir) = l2Engine()
-    val d0 = Telemetry.l2Demotions.sum()
-    val expected = eng.sql(qA).collect().map(_.toSeq).toSeq
-    eng.sql(qB).count() // 1-byte retained budget → evicts qA → demote
-    eventually() { Telemetry.l2Demotions.sum() > d0 }
+    val expected = demote(eng, qA)
     assert(l2Dirs(dir).nonEmpty, "demoted entry dir must exist")
-    // small results demote as driver-serialized rows (no Spark job on promote)
+    // localized rows demote driver-serialized (no Spark job on promote)
     assert(l2Dirs(dir).exists(d => new java.io.File(d, "rows.bin").isFile),
-      "localizable result must use the serialized-rows form")
+      "a demoted result must use the serialized-rows form")
     val h0 = Telemetry.l2Hits.sum()
     val served = eng.sql(qA)
     assert(Telemetry.l2Hits.sum() == h0 + 1, "repeat must be an L2 hit")
@@ -80,15 +87,10 @@ class L2CacheSpec extends AnyFunSuite {
 
   test("L2 byte budget LRU-evicts demoted files (grace-deferred delete)") {
     val (eng, _, dir) = l2Engine(maxL2Bytes = 1L, graceMs = 0L)
-    val d0 = Telemetry.l2Demotions.sum()
-    eng.sql(qA).count()
-    eng.sql(qB).count() // demotes qA
-    eventually() { Telemetry.l2Demotions.sum() >= d0 + 1 }
-    // a third persisted insert evicts qB → demotes it → the 1-byte L2 budget
-    // then LRU-evicts qA's file
-    eng.sql(s"SELECT COUNT(DISTINCT host) AS h FROM metrics " +
-      s"WHERE timestamp_ns >= $t0").count()
-    eventually() { Telemetry.l2Demotions.sum() >= d0 + 2 }
+    demote(eng, qA)
+    // a second demote exceeds the 1-byte L2 budget, which then LRU-evicts
+    // qA's file
+    demote(eng, qB)
     // budget of 1 byte keeps only the most recent demoted entry; the evicted
     // file is physically deleted (grace 0)
     eventually() { l2Dirs(dir).size == 1 }
@@ -96,10 +98,7 @@ class L2CacheSpec extends AnyFunSuite {
 
   test("staleness: new ingest changes the key, so L2 is never consulted") {
     val (eng, cat, _) = l2Engine()
-    val d0 = Telemetry.l2Demotions.sum()
-    val before = eng.sql(qA).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    eng.sql(qB).count()
-    eventually() { Telemetry.l2Demotions.sum() > d0 }
+    val before = demote(eng, qA).map(r => r(0).asInstanceOf[String] -> r(1).asInstanceOf[Long]).toMap
     // a new chunk in the window changes the pruned path set → different key
     new ChunkWriter(cat).write(Converters.pointsToDf(spark,
       Seq(MetricPoint(t0 + 10L, "cpu_usage", 0.5, Map("host" -> "server3")))))
@@ -111,14 +110,11 @@ class L2CacheSpec extends AnyFunSuite {
 
   test("unreadable demoted file falls back to recompute (fail-open)") {
     val (eng, _, dir) = l2Engine()
-    val d0 = Telemetry.l2Demotions.sum()
-    val expected = eng.sql(qA).collect().map(_.toSeq).toSeq
-    eng.sql(qB).count()
-    eventually() { Telemetry.l2Demotions.sum() > d0 }
-    // corrupt every demoted payload (serialized-rows or parquet form alike)
+    val expected = demote(eng, qA)
+    // corrupt every demoted payload
     l2Dirs(dir).foreach { d =>
       Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(".parquet") || f.getName == "rows.bin")
+        .filter(_.getName == "rows.bin")
         .foreach { f => val w = new java.io.FileOutputStream(f); w.write(1); w.close() }
     }
     val h0 = Telemetry.l2Hits.sum()
@@ -129,21 +125,16 @@ class L2CacheSpec extends AnyFunSuite {
 
   test("plan-only entries (never materialized) do not demote") {
     val (eng, _, dir) = l2Engine()
-    // result estimate above maxCachedResultBytes → plan-cached but not persisted
-    val cat2 = new ChunkCatalog(Files.createTempDirectory("graft_l2p_"), cacheTtlMs = 0L)
-    val pts = for (i <- 0 until 100) yield
-      MetricPoint(t0 + i * 1000000L, "m", i.toDouble, Map("host" -> "h"))
-    new ChunkWriter(cat2).write(Converters.pointsToDf(spark, pts))
-    val dir2 = Files.createTempDirectory("graft_l2c2_").toFile
-    val eng2 = new QueryEngine(spark, cat2, QueryEngine.QueryLimits(
-      maxCachedResultBytes = 0L, maxRetainedCacheBytes = 1L,
-      l2CacheDir = Some(dir2.getAbsolutePath)))
     val d0 = Telemetry.l2Demotions.sum()
-    eng2.sql(s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0").count()
-    eng2.sql(s"SELECT COUNT(*) AS c2 FROM metrics WHERE timestamp_ns >= $t0").count()
+    eng.sql(qA).count() // first sighting: plan only
+    eng.maxLocalRows = 1
+    eng.sql(qB).count()
+    eng.sql(qB).count() // a repeat above the row bound stays plan-only
+    assert(!eng.isResultCached(qA) && !eng.isResultCached(qB))
+    eng.evictL1(qA)
+    eng.evictL1(qB)
     Thread.sleep(500)
     assert(Telemetry.l2Demotions.sum() == d0, "plan-only entries must not demote")
-    assert(l2Dirs(dir2).isEmpty)
-    assert(eng != null && dir != null) // silence unused warnings
+    assert(l2Dirs(dir).isEmpty)
   }
 }
