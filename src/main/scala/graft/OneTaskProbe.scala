@@ -139,7 +139,7 @@ object OneTaskProbe {
         require(a._2 == b._2, s"answers differ for ${q._1}")
         one += a._1; part += b._1
         if (a._1 < b._1) wins += 1
-        bytes += oneTask.lastPrunedPaths.flatMap(cat.state.chunks.get).map(_.sizeBytes).sum
+        bytes += oneTask.serve(q._1).paths.flatMap(cat.state.chunks.get).map(_.sizeBytes).sum
       }
       val (o, p, bs) = (one.result(), part.result(), bytes.result().sorted)
       println(f"[onetask] instances=$instances selected_kb=${bs(bs.size / 2) / 1024.0}%.0f " +

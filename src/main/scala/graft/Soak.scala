@@ -27,7 +27,9 @@ import scala.collection.mutable.ArrayBuffer
   * reporting processed rows/s and the state-row trend (flat state == the
   * watermark is really evicting).
   *
-  * Emits SOAK_r07.json (repo cwd) and the same JSON on stdout's last line.
+  * Prints the JSON record as stdout's last line and writes it to `SOAK_OUT`
+  * (default `SOAK_<yyyyMMdd-HHmmss>.json` in the cwd); an existing file of
+  * that name fails the run instead of being overwritten.
   * All load is wall-clock bounded: SOAK_BASELINE_SEC / SOAK_SOAK_SEC /
   * SOAK_STREAM_SEC env knobs (defaults 25 / 150 / 45).
   */
@@ -50,6 +52,10 @@ object Soak {
     val soakSec = env("SOAK_SOAK_SEC", 150L)
     val streamSec = env("SOAK_STREAM_SEC", 45L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val out = java.nio.file.Paths.get(sys.env.getOrElse("SOAK_OUT",
+      "SOAK_" + java.time.LocalDateTime.now().format(
+        java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss")) + ".json"))
+    require(!java.nio.file.Files.exists(out), s"soak record $out already exists")
 
     val shuffleDir = graft.util.ShmDirs.shuffleDir("graft_soak_shuffle")
     val spark = SparkSession.builder()
@@ -278,15 +284,15 @@ object Soak {
     val tWarm = loopThread("warm") { () =>
       engine.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "queries")
       val t0 = System.nanoTime()
-      // sqlRows = the real repeat-serve path (r11): a localized L1 hit hands
-      // back the stored row array — zero plan execution, zero row copying —
-      // exactly how the reference's L1 serves cached bytes. Maintenance
-      // rewrites change the cache key, so recomputes still happen in-band
-      // and the serve-mode decomposition still sees them.
-      engine.sqlRows(warmSql)
+      // the sqlRows serve (r11), with its serve mode kept: a localized L1
+      // hit hands back the stored row array — zero plan execution, zero row
+      // copying — exactly how the reference's L1 serves cached bytes.
+      // Maintenance rewrites change the cache key, so recomputes still
+      // happen in-band and the serve-mode decomposition still sees them.
+      val served = engine.serve(warmSql)
+      served.rows.getOrElse(served.df.collect())
       val ms = (System.nanoTime() - t0) / 1e6
-      val mode = engine.lastServeMode.get()
-      soakWarm.synchronized { soakWarm += ms; soakWarmModes += mode }
+      soakWarm.synchronized { soakWarm += ms; soakWarmModes += served.mode }
       Thread.sleep(25)
     }
     val coldI = new AtomicLong(1000L) // distinct text space from baseline
@@ -619,7 +625,8 @@ object Soak {
       .getInputArguments.asScala.filter(a => a.startsWith("-XX") || a.startsWith("-Xm"))
       .mkString(" ").replace("\"", "")
     val json =
-      s"""{"metric":"soak_mixed_load","duration_sec":$soakSec,""" +
+      s"""{"metric":"soak_mixed_load","duration_sec":$soakSec,"cpus":$cpus,""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory >> 20},""" +
       s""""baseline":{"ingest_samples_per_sec":${baselineRate.toLong},""" +
       s""""warm_p99_ms":${round1(p99(baseWarm))},"warm_median_ms":${round1(baseWarm.sorted.apply(baseWarm.size / 2))},""" +
       s""""cold_p99_ms":${round1(p99(baseCold))},"cold_median_ms":${round1(baseCold.sorted.apply(baseCold.size / 2))}},""" +
@@ -670,12 +677,10 @@ object Soak {
       s""""dropped":$sniDropped,"docs_per_sec":${(sniInput.get() / sniWall).toLong},""" +
       s""""index_sigs_start":$sigs0,"index_sigs_end":$sigs1,""" +
       s""""growth_matches_accepted":$sniGrowthOk,"ok":$sniOk}}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(sys.env.getOrElse("SOAK_OUT", "SOAK_r12.json")),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[soak] sidecar write failed: $e") }
     println(json)
-    spark.stop()
+    try java.nio.file.Files.write(out,
+      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      java.nio.file.StandardOpenOption.CREATE_NEW)
+    finally spark.stop()
   }
 }

@@ -186,7 +186,7 @@ object SparkEntry {
   /** Memoized TWO-TENANT warehouse for q_tenant_scope: tenant-a ingests the
     * even-user_id rows, tenant-b the odd ones (two flushes each so L0 ripens),
     * then a compaction sweep runs over the mixed catalog — proving both that
-    * sqlForTenant scopes reads to the tenant's chunk paths AND that merges
+    * a tenant-scoped serve reads only the tenant's chunk paths AND that merges
     * never coalesce two tenants' rows (Compactor groups per tenant).
     */
   private val tenantCache =
@@ -1457,12 +1457,12 @@ object SparkEntry {
     // and must see exactly batch 1 — while the live engine sees both.
     QuerySpec("q_engine_asof", (s, dir) => {
       val (eng, v1) = asofEngine(s, dir)
-      eng.sqlAt(v1,
+      eng.serve(
         """SELECT metric_name, COUNT(*) AS cnt,
           |  CAST(SUM(CAST(value_f64 AS DECIMAL(18,6))) AS DOUBLE) AS sum_v
           |FROM metrics
           |WHERE timestamp_ns >= 0
-          |GROUP BY metric_name ORDER BY metric_name""".stripMargin)
+          |GROUP BY metric_name ORDER BY metric_name""".stripMargin, asOf = Some(v1)).df
     },
       oracle = s"""SELECT event_type AS metric_name, count(*) AS cnt,
          |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v
@@ -1480,17 +1480,17 @@ object SparkEntry {
     // assignment is deterministic on both sides.
     QuerySpec("q_topk_routed", (s, dir) => {
       val eng = engineWithData(s, dir, maxTsExclusiveNs = Jan3Ns)
-      val df = eng.sql(
+      val served = eng.serve(
         "SELECT metric_name, host, timestamp_ns, value_f64, rn FROM (" +
           "SELECT metric_name, host, timestamp_ns, value_f64, " +
           "row_number() OVER (PARTITION BY metric_name " +
           "ORDER BY value_f64 DESC, timestamp_ns, host) AS rn FROM metrics " +
           s"WHERE timestamp_ns >= $Jan1Ns AND timestamp_ns < $Jan2Ns" +
           ") WHERE rn <= 10 ORDER BY metric_name, rn")
-      require(eng.lastTopKRouted,
+      require(served.route == graft.engine.QueryEngine.TopK,
         "q_topk_routed must be re-planned by TopKRouting")
       // DuckDB sees parquet ns truncated to µs — align the emitted ns column
-      df.withColumn("timestamp_ns", expr("(timestamp_ns div 1000) * 1000"))
+      served.df.withColumn("timestamp_ns", expr("(timestamp_ns div 1000) * 1000"))
         .withColumn("rn", col("rn").cast("long"))
     },
       // NAIVE row_number ≤ k formulation — the engine-REWRITTEN two-phase
@@ -1575,12 +1575,12 @@ object SparkEntry {
     QuerySpec("q_tenant_scope", (s, dir) => {
       val half = Jan1Ns + 43200L * 1000000000L
       val eng = tenantEngine(s, dir, half)
-      eng.sqlForTenant(
+      eng.serve(
         s"""SELECT metric_name, COUNT(*) AS cnt,
            | ROUND(CAST(SUM(CAST(value_f64 AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_v
            |FROM metrics WHERE timestamp_ns >= $Jan1Ns AND timestamp_ns <= $half
            |GROUP BY metric_name ORDER BY metric_name""".stripMargin,
-        Some("tenant-a"))
+        tenant = Some("tenant-a")).df
     },
       oracle = """SELECT event_type AS metric_name, count(*) AS cnt,
         | round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_v
@@ -1712,15 +1712,15 @@ object SparkEntry {
     QuerySpec("q_rollup_routed", (s, dir) => {
       val eng = rollupEngine(s, dir)
       val step = 43200L * 1000000000L
-      val df = eng.sql(
+      val served = eng.serve(
         s"SELECT (timestamp_ns div $step) * $step AS time_bucket, metric_name, host, " +
           "round(sum(value_f64), 4) AS sum_v, min(value_f64) AS min_value, " +
           "max(value_f64) AS max_value, count(*) AS sample_count " +
           s"FROM metrics WHERE timestamp_ns >= $Jan1Ns AND timestamp_ns < $Jan3Ns " +
           "GROUP BY 1, 2, 3 ORDER BY 1, 2, 3")
-      require(eng.lastServedFromRollup,
+      require(served.route == graft.engine.QueryEngine.Rollup,
         "q_rollup_routed must be answered from the registered rollup")
-      df
+      served.df
     },
       // RAW aggregation at 12 h over the first two days — the engine-ROUTED
       // (6 h rollup → 12 h re-bucket) result must hash-equal this
@@ -1741,16 +1741,16 @@ object SparkEntry {
     // engines); the oracle aggregates RAW events.
     QuerySpec("q_rollup_routed_trunc", (s, dir) => {
       val eng = rollupEngine(s, dir)
-      val df = eng.sql(
+      val served = eng.serve(
         "SELECT date_trunc('day', timestamp) AS day_ts, metric_name, host, " +
           "round(sum(value_f64), 4) AS sum_v, min(value_f64) AS min_value, " +
           "max(value_f64) AS max_value, count(*) AS sample_count " +
           "FROM metrics WHERE timestamp >= TIMESTAMP '2024-01-01 00:00:00+00:00' " +
           "AND timestamp < TIMESTAMP '2024-01-03 00:00:00+00:00' " +
           "GROUP BY 1, 2, 3 ORDER BY 1, 2, 3")
-      require(eng.lastServedFromRollup,
+      require(served.route == graft.engine.QueryEngine.Rollup,
         "q_rollup_routed_trunc must be answered from the registered rollup")
-      df.select(unix_micros(col("day_ts")).as("day_us"), col("metric_name"),
+      served.df.select(unix_micros(col("day_ts")).as("day_us"), col("metric_name"),
         col("host"), col("sum_v"), col("min_value"), col("max_value"),
         col("sample_count"))
     },

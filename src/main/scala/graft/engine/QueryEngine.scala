@@ -16,8 +16,9 @@ import graft.schema.MetricSchema
   *     (default: last 1 hour) + column predicates (engine.rs:368-487, 493-650).
   *  2. METADATA PRUNE — hour-bucket time-index range scan + zone-map filter over the
   *     catalog (s3.rs:1075-1136). This is the layer Spark doesn't give us for free.
-  *     It is the engine's only chunk selection: `sql`, `sqlForTenant`, `sqlAt`
-  *     and the label-values and series endpoints all read through it.
+  *     It is the engine's only chunk selection: [[serve]] (under `sql`,
+  *     `sqlRows` and `execute`) and the label-values and series endpoints all
+  *     read through it.
   *  3. BIND — the pruned chunk set becomes this query's own `metrics`
   *     relation: every `metrics` reference in the parsed statement, CTE
   *     bodies and subqueries included, is bound to a scan of exactly those
@@ -77,7 +78,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       sc.setJobGroup(tag, s"graft query: ${query.replaceAll("\\s+", " ").take(120)}",
         interruptOnCancel = true)
       try {
-        val out = action(sqlScoped(query, nowNs, tenant, asOfVersion))
+        val out = action(serve(query, nowNs, tenant, asOfVersion).df)
         ok = true
         out
       } catch {
@@ -90,9 +91,6 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       querySlots.release()
     }
   }
-
-  /** Paths selected by the most recent sql() — observability for tests/telemetry. */
-  @volatile var lastPrunedPaths: Seq[String] = Nil
 
   /** Plan cache: (query, pruned path set, split-active) → one [[QueryEngine.Entry]].
     * Re-running a repeated dashboard query skips Catalyst analysis/optimization —
@@ -219,14 +217,14 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * through to a plain recompute — the tier can serve wrong-shaped bytes to
     * nobody.
     */
-  private def promoteFromL2(key: Key): Option[DataFrame] = {
+  private def promoteFromL2(key: Key): Option[Localized] = {
     if (!l2Enabled) return None
     val ent = l2Entries.synchronized(l2Entries.get(key)) // touches LRU order
     if (ent == null) return None
     val dir = ent._1
     // Everything that touches the file sits inside the fail-open guard — a
     // corrupt/deleted file must fall through to a recompute, never out of
-    // sql(). NonFatal ONLY, same discipline as collectForLocalize: an OOM must
+    // serve(). NonFatal ONLY, same discipline as collectForLocalize: an OOM must
     // propagate.
     val read: Option[(Array[Row], org.apache.spark.sql.types.StructType)] =
       try {
@@ -244,8 +242,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         None
       case Some((rows, schema)) =>
         Telemetry.l2Hits.increment()
-        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        planCache.synchronized { planCache.put(key, Localized(local, rows)) }
+        val local = Localized(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), rows)
+        planCache.synchronized { planCache.put(key, local) }
         Some(local)
     }
   }
@@ -271,36 +269,6 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   @volatile var resultCacheEnabled: Boolean =
     spark.conf.get("spark.graft.resultCache.enabled", "true").toBoolean
 
-  /** Resolution-based rollup routing (graft.plans.RollupRouting) — on by
-    * default; registered rollups only exist when an operator materialized one.
-    */
-  @volatile var rollupRoutingEnabled: Boolean = true
-
-  /** True iff the most recent sql() was answered from a registered rollup
-    * (observability for tests/telemetry, like lastPrunedPaths).
-    */
-  @volatile var lastServedFromRollup: Boolean = false
-
-  /** Per-THREAD observability: how this thread's last `sql()` was served —
-    * "l1" (plan/result cache hit, incl. localized repeats), "l2" (disk-tier
-    * promote), or "computed" (full plan+execute; includes the first sighting
-    * after a maintenance rewrite changed the pruned-path-set cache key).
-    * ThreadLocal, not @volatile: the soak's warm/cold loops share one engine
-    * and must each read their own call's mode (the warm-tail decomposition
-    * of r10 — VERDICT "Next round #8").
-    */
-  val lastServeMode: ThreadLocal[String] = ThreadLocal.withInitial(() => "")
-
-  /** Naive-top-k rewrite (graft.plans.TopKRouting): `row_number() ≤ k` over
-    * the bound `metrics` scan re-planned as the two-phase Operators.topKPerGroup.
-    * On by default — the naive form's window sort parallelism is the group
-    * count, the one deliberate scale outlier in the bench record.
-    */
-  @volatile var topKRoutingEnabled: Boolean = true
-
-  /** True iff the most recent sql() was re-planned by TopKRouting. */
-  @volatile var lastTopKRouted: Boolean = false
-
   /** Cut-off of the one-task rule ([[relationOf]]): a pruned chunk set whose
     * catalog sizes sum to at most this many bytes is read as one partition.
     * Not a serving option: tests and `graft.OneTaskProbe` move it to put a
@@ -314,48 +282,57 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     */
   val adaptiveStats = new graft.adaptive.AdaptiveIndex.StatsCollector()
 
-  /** Memoized (range, preds) per query TEXT, for queries whose extraction is
-    * provably independent of `nowNs` (explicit literal time bounds — the
-    * dashboard-repeat shape). A warm repeat then skips the SQL parse entirely:
-    * the warm path is hash probe → catalog prune (TTL-cached metadata) → plan
-    * cache hit, no Catalyst work at all. Value None marks a query whose range
-    * DOES depend on nowNs (now()-relative or default-window) — always recomputed.
+  /** One entry per query TEXT, access-ordered, at most 256: its ANTLR parse,
+    * shared by predicate extraction and execution (each call binds and
+    * analyzes its own copy, so reusing the unresolved tree across path sets
+    * is safe), and its (range, preds) when extraction is provably independent
+    * of `nowNs` (explicit literal time bounds — the dashboard-repeat shape).
+    * A warm repeat of such a text skips Catalyst entirely: hash probe →
+    * catalog prune (TTL-cached metadata) → plan cache hit. `fixed = None`
+    * marks a text whose range DOES depend on nowNs (now()-relative or
+    * default window): it is re-extracted from the cached parse on every call.
     */
-  private val analyzeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(TimeRange, Seq[ColumnPredicate])]]()
-
-  /** Parsed-plan cache: one ANTLR parse per query TEXT, shared by predicate
-    * extraction and execution (each call binds and analyzes its own copy, so
-    * reusing the unresolved tree across path sets is safe).
-    */
-  private val parsedPlans =
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
-        : Boolean = size() > 256
-    }
+  private val textCache = new java.util.LinkedHashMap[String, Text](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Text]): Boolean =
+      size() > 256
+  }
 
   /** True iff `query`'s range and predicates are memoized as coming from
     * literals: extraction gave the same result at two values of nowNs, and
     * the range is neither the default window nor the full range. Such a
     * query's answer depends only on the data the manifest version names,
     * not on when it runs. A query not yet seen, seen as now-relative, or
-    * dropped when the memo was cleared, is false.
+    * evicted from the text cache, is false.
     */
   def isTimeFixed(query: String): Boolean =
-    Option(analyzeMemo.get(query)).exists(_.isDefined)
+    textCache.synchronized(Option(textCache.get(query)).exists(_.fixed.isDefined))
 
-  private def parsedPlan(query: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    parsedPlans.synchronized {
-      val hit = parsedPlans.get(query)
-      if (hit != null) hit
-      else {
-        val p = spark.sessionState.sqlParser.parsePlan(query)
-        parsedPlans.put(query, p)
-        p
-      }
+  /** `query`'s parse and its (range, preds) at `nowNs`. A first sighting
+    * parses ONCE, then runs the (pure tree-walk, ~free) extraction at two
+    * distant nowNs values: identical non-fallback results ⇒ the range comes
+    * from literals only ⇒ safe to memoize with the parse.
+    */
+  private def textOf(query: String,
+                     nowNs: Long): (LogicalPlan, (TimeRange, Seq[ColumnPredicate])) =
+    textCache.synchronized(textCache.get(query)) match {
+      case Text(plan, Some(fixed)) => (plan, fixed)
+      case Text(plan, None) =>
+        (plan, withOptimizedFallback(extractFromParsed(plan, nowNs), plan, nowNs))
+      case null =>
+        val plan = spark.sessionState.sqlParser.parsePlan(query)
+        val a = extractFromParsed(plan, nowNs)
+        val fixed = !isFallback(a._1, nowNs) &&
+          a == extractFromParsed(plan, nowNs + 7200L * 1000000000L)
+        val full = withOptimizedFallback(a, plan, nowNs)
+        val text = Text(plan, if (fixed) Some(full) else None)
+        textCache.synchronized(textCache.put(query, text))
+        (plan, full)
     }
+
+  /** The ranges extraction falls back to when the parse shows no time bound. */
+  private def isFallback(range: TimeRange, nowNs: Long): Boolean =
+    range == TimeRange(nowNs - PredicateExtraction.DefaultWindowNs, nowNs) ||
+      range == TimeRange(Long.MinValue, Long.MaxValue)
 
   /** Fallback leg of the two-phase extraction: when the parse-only result is
     * the default window or the full range, the WHERE may still carry foldable
@@ -364,171 +341,116 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * plan, mod.rs:163-184): bind every chunk, let the optimizer
     * constant-fold, and re-extract from the optimized plan.
     */
-  private def withOptimizedFallback(parsed: (TimeRange, Seq[ColumnPredicate]),
-                                    query: String,
+  private def withOptimizedFallback(found: (TimeRange, Seq[ColumnPredicate]),
+                                    parsed: LogicalPlan,
                                     nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
-    parsed match {
-      case (range, preds) if range == TimeRange(nowNs - PredicateExtraction.DefaultWindowNs, nowNs) ||
-          range == TimeRange(Long.MinValue, Long.MaxValue) =>
-        analyzeOptimized(query, nowNs).getOrElse((range, preds))
-      case found => found
-    }
-
-  /** Per-tenant query scoping — the engine-side completion of the reference's
-    * `query_for_tenant(sql, tenant)` (src/query/mod.rs:158-241): the chunk set
-    * a query may see is restricted to the tenant's own write paths
-    * (`{root}/{tenant}/data/...` — ChunkWriter/Compactor/ShardSplit all
-    * preserve the prefix). `None` = unscoped (every chunk, the single-tenant
-    * deployment shape and the default for embedded/API callers); rollup
-    * routing is disabled under a scope because rollups are built over the
-    * whole warehouse. Cache-safe for free: the pruned PATH SET is part of
-    * both the plan-cache and L2 keys, so two tenants can never share an entry.
-    */
-  def sqlForTenant(query: String, tenant: Option[String],
-                   nowNs: Long = System.currentTimeMillis() * 1000000L): DataFrame =
-    sqlScoped(query, nowNs, tenant)
+    if (isFallback(found._1, nowNs)) analyzeOptimized(parsed, nowNs).getOrElse(found)
+    else found
 
   def sql(query: String, nowNs: Long = System.currentTimeMillis() * 1000000L): DataFrame =
-    sqlScoped(query, nowNs, None)
+    serve(query, nowNs).df
 
-  /** Time travel (Delta/Iceberg `VERSION AS OF` analog, flagged extension):
-    * run `query` against the chunk set of a RETAINED catalog manifest version
+  /** Answer `query` and report how this call answered it ([[QueryEngine.Served]]):
+    * the engine's one query entry point; [[sql]], [[sqlRows]] and [[execute]]
+    * are built on it. The report is this call's own, so concurrent callers
+    * each read their own mode, route and chunk paths.
+    *
+    * `tenant` — per-tenant scoping, the engine side of the reference's
+    * `query_for_tenant(sql, tenant)` (src/query/mod.rs:158-241): the chunk set
+    * the query may see is restricted to the tenant's own write paths
+    * (`{root}/{tenant}/data/...` — ChunkWriter/Compactor/ShardSplit all
+    * preserve the prefix). `None` = unscoped (every chunk, the single-tenant
+    * deployment shape).
+    *
+    * `asOf` — time travel (Delta/Iceberg `VERSION AS OF` analog, flagged
+    * extension): the chunk set of a RETAINED catalog manifest version
     * (catalog built with manifestRetain > 0; see
-    * [[graft.catalog.ChunkCatalog.stateAt]]). Same time-range + zone-map
-    * pruning, evaluated against the historical state. Cache-safe for free —
-    * the historical path set keys the plan cache and L2 tier, like tenant
-    * scoping. Rollup routing is disabled (rollups may postdate the version).
-    * Readable as far back as manifests are retained AND chunk data files
-    * survive the GC grace window — the documented AS OF bound.
+    * [[graft.catalog.ChunkCatalog.stateAt]]), pruned by the same time range
+    * and zone maps. Readable as far back as manifests are retained AND chunk
+    * data files survive the GC grace window — the documented AS OF bound.
+    *
+    * Both are cache-safe for free: the pruned PATH SET is part of the
+    * plan-cache and L2 keys, so two tenants or two versions never share an
+    * entry. Rollup routing is off under either, because rollups are built
+    * over the whole live warehouse.
     */
-  def sqlAt(version: Long, query: String,
-            nowNs: Long = System.currentTimeMillis() * 1000000L): DataFrame =
-    sqlScoped(query, nowNs, None, Some(version))
-
-  private def sqlScoped(query: String, nowNs: Long, tenant: Option[String],
-                        asOf: Option[Long] = None): DataFrame = {
-    val (range, preds) = analyzeMemo.get(query) match {
-      case Some(memo) => memo
-      case None => // marked nowNs-dependent: recompute (parse once per call)
-        withOptimizedFallback(analyze(query, nowNs), query, nowNs)
-      case null =>
-        // First sighting: parse ONCE, then run the (pure tree-walk, ~free)
-        // extraction at two distant nowNs values. Identical non-fallback
-        // results ⇒ the range comes from literals only ⇒ safe to memoize.
-        val plan = parsedPlan(query)
-        val probeNs = nowNs + 7200L * 1000000000L
-        val a = extractFromParsed(plan, nowNs)
-        val independent = a == extractFromParsed(plan, probeNs) &&
-          a._1 != TimeRange(nowNs - PredicateExtraction.DefaultWindowNs, nowNs) &&
-          a._1 != TimeRange(Long.MinValue, Long.MaxValue)
-        val full = withOptimizedFallback(a, query, nowNs)
-        if (analyzeMemo.size > 1000) analyzeMemo.clear() // bound driver memory
-        analyzeMemo.put(query, if (independent) Some(full) else None)
-        full
-    }
+  def serve(query: String, nowNs: Long = System.currentTimeMillis() * 1000000L,
+            tenant: Option[String] = None, asOf: Option[Long] = None): Served = {
+    val (parsed, (range, preds)) = textOf(query, nowNs)
     val basePaths = pruneIn(asOf.fold(catalog.state)(catalog.stateAt), range, preds)
-    val paths = tenant match {
-      case Some(t) => basePaths
-        .filter(p => graft.catalog.ChunkCatalog.tenantOf(catalog.root, p) == t)
-      case None => basePaths
-    }
-    lastPrunedPaths = paths
+    val paths = tenant.fold(basePaths)(t =>
+      basePaths.filter(p => ChunkCatalog.tenantOf(catalog.root, p) == t))
     val split = catalog.hasActiveSplit
     // rollup identity is part of the cache key: (de)registering a rollup must
-    // never serve a stale cached plan built against the other source; the
-    // topK-rewrite toggle likewise (a cached naive plan must not be served
-    // while the rewrite is on, nor the reverse)
-    val rollups =
-      if (rollupRoutingEnabled && !split && tenant.isEmpty && asOf.isEmpty)
-        catalog.rollups
-      else Nil
-    // the marker is scoped to queries that could possibly match the rewrite
-    // (TopKRouting only ever matches a row_number() window), so flipping the
-    // toggle doesn't double-key every unrelated cached plan
-    val topKMarker = topKRoutingEnabled && !split &&
-      query.toLowerCase(java.util.Locale.ROOT).contains("row_number")
-    val key = (query,
-      paths ++ rollups.map("rollup:" + _.path) ++
-        (if (topKMarker) Seq("topk:on") else Nil),
-      split)
-    lastServeMode.set("computed")
+    // never serve a stale cached plan built against the other source
+    val rollups = if (!split && tenant.isEmpty && asOf.isEmpty) catalog.rollups else Nil
+    val key = (query, paths ++ rollups.map("rollup:" + _.path), split)
+    def served(df: DataFrame, mode: String, route: Route = Raw,
+               rows: Option[Array[Row]] = None) = Served(df, rows, mode, route, paths)
     var toLocalize: DataFrame = null
     planCache.synchronized {
       val hit = planCache.get(key)
       if (hit != null) {
         Telemetry.cacheHits.increment()
-        lastServeMode.set("l1")
-        lastServedFromRollup = hit.route == Rollup
-        lastTopKRouted = hit.route == TopK
         hit match {
           // first repeat of a raw result → localize it (outside the lock)
           case Planned(df, Raw, false) if resultCacheEnabled => toLocalize = df
-          // localized hit: expose the stored rows so sqlRows() can serve them
+          // localized hit: hand back the stored rows so sqlRows() serves them
           // with ZERO plan execution (the reference's L1-serves-bytes shape)
-          case Localized(df, rows) => lastHitRows.set(rows); return df
-          case _ => return hit.df
+          case Localized(df, rows) => return served(df, "l1", rows = Some(rows))
+          case _ => return served(hit.df, "l1", hit.route)
         }
       }
     }
-    if (toLocalize != null) return localizeHit(key, toLocalize)
+    if (toLocalize != null) {
+      val (df, rows) = localizeHit(key, toLocalize)
+      return served(df, "l1", rows = rows)
+    }
     Telemetry.cacheMisses.increment()
     // L1 miss → probe the L2 disk tier before recomputing (only localized raw
-    // results ever demote, so routing flags are per-force false).
-    promoteFromL2(key).foreach { df =>
-      lastServedFromRollup = false
-      lastTopKRouted = false
-      lastServeMode.set("l2")
-      return df
-    }
+    // results ever demote)
+    promoteFromL2(key).foreach(l => return served(l.df, "l2", rows = Some(l.rows)))
     // Reuse the cached PARSED tree — the ANTLR parse is paid once per text —
     // bound to THIS query's path set; ofRows analyzes it eagerly.
-    val raw = GraftBridge.ofRows(spark, withMetrics(parsedPlan(query), relationOf(paths)))
+    val raw = GraftBridge.ofRows(spark, withMetrics(parsed, relationOf(paths)))
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
     // aggregate the registered rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
     // predates the split's dedup semantics); a failed match routes to raw.
-    val routed: Option[DataFrame] =
+    val rollupPlan: Option[DataFrame] =
       if (rollups.isEmpty) None
       else
         try graft.plans.RollupRouting.route(spark, rollups,
           raw.queryExecution.analyzed, paths)
         catch { case scala.util.control.NonFatal(_) => None }
-    lastServedFromRollup = routed.isDefined
-    lastTopKRouted = false // may be overwritten below; must not stay stale
-    routed.foreach { r =>
-      Telemetry.rollupRouted.increment()
-      planCache.synchronized { planCache.put(key, Planned(r, Rollup)) }
-      return r
-    }
+    rollupPlan.foreach(_ => Telemetry.rollupRouted.increment())
     // Two-phase top-k rewrite (graft.plans.TopKRouting): the naive
     // row_number-filter window shape over the bound `metrics` scan re-plans as
     // Operators.topKPerGroup — same rows, parallelism no longer bounded by
     // the group count. Skipped during an active split (the raw path applies
     // split dedup); a failed match routes to raw.
-    val topk: Option[DataFrame] =
-      if (!topKRoutingEnabled || split) None
+    val routed: Option[(DataFrame, Route)] = rollupPlan.map(r => (r, Rollup)).orElse {
+      if (split) None
       else
         try graft.plans.TopKRouting.route(spark, raw.queryExecution.analyzed, paths)
+          .map(r => (r, TopK))
         catch { case scala.util.control.NonFatal(_) => None }
-    lastTopKRouted = topk.isDefined
-    topk.foreach { r =>
-      planCache.synchronized { planCache.put(key, Planned(r, TopK)) }
-      return r
     }
-    try adaptiveStats.recordFromPlan(raw.queryExecution.analyzed)
-    catch { case scala.util.control.NonFatal(_) => () } // advisory, never fail a query
-    // Split-dedup only applies when the result still carries the dedup key
-    // columns; aggregated results pass through untouched, mirroring the
-    // reference's dedup_batches which skips batches lacking the key columns
-    // (src/query/dedup.rs:35-43). Without this guard every GROUP BY query
-    // would throw AnalysisException during an active split.
-    val dedupCols = MetricSchema.TimestampCol :: MetricSchema.MetricNameCol :: Nil
-    val result =
+    val (df, route) = routed.getOrElse {
+      try adaptiveStats.recordFromPlan(raw.queryExecution.analyzed)
+      catch { case scala.util.control.NonFatal(_) => () } // advisory, never fail a query
+      // Split-dedup only applies when the result still carries the dedup key
+      // columns; aggregated results pass through untouched, mirroring the
+      // reference's dedup_batches which skips batches lacking the key columns
+      // (src/query/dedup.rs:35-43). Without this guard every GROUP BY query
+      // would throw AnalysisException during an active split.
+      val dedupCols = MetricSchema.TimestampCol :: MetricSchema.MetricNameCol :: Nil
       if (split && dedupCols.forall(raw.schema.fieldNames.contains))
-        raw.dropDuplicates(dedupCols)
-      else raw
-    planCache.synchronized { planCache.put(key, Planned(result, Raw)) }
-    result
+        (raw.dropDuplicates(dedupCols), Raw)
+      else (raw, Raw)
+    }
+    planCache.synchronized { planCache.put(key, Planned(df, route)) }
+    served(df, "computed", route)
   }
 
   /** True if the L1 tier holds rows of the given query, i.e. a repeat
@@ -572,8 +494,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** The collect runs OUTSIDE the cache lock — concurrent hits at worst
     * localize twice; at most `maxLocalRows` + 1 rows reach the driver.
+    * Returns the frame to serve and, when the entry is now localized, its rows.
     */
-  private def localizeHit(key: Key, df: DataFrame): DataFrame = {
+  private def localizeHit(key: Key, df: DataFrame): (DataFrame, Option[Array[Row]]) = {
     val rows = collectForLocalize(() => df.limit(maxLocalRows + 1).collect())
     planCache.synchronized {
       planCache.get(key) match {
@@ -581,64 +504,42 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
           if (rows == null || rows.length > maxLocalRows) {
             // even on failure/oversize: don't re-collect every hit
             planCache.put(key, p.copy(localizeTried = true))
-            df
+            (df, None)
           } else {
             val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
             planCache.put(key, Localized(local, rows))
-            lastHitRows.set(rows)
-            local
+            (local, Some(rows))
           }
-        case null => df // evicted meanwhile
-        case other => other.df // another hit got there first
+        case Localized(local, stored) => (local, Some(stored)) // another hit got there first
+        case null => (df, None) // evicted meanwhile
+        case other => (other.df, None)
       }
     }
   }
 
-  /** Thread-local handoff of a localized hit's stored rows from sqlScoped to
-    * [[sqlRows]] (null when the serve wasn't a localized L1 hit).
-    */
-  private val lastHitRows: ThreadLocal[Array[org.apache.spark.sql.Row]] =
-    new ThreadLocal[Array[org.apache.spark.sql.Row]]
-
   /** The zero-row-work warm serve (r11, VERDICT #3): deliver a query's RESULT
-    * ROWS, serving a localized L1 repeat straight from the stored driver-side
-    * array — no Catalyst execution, no LocalRelation scan job, no per-row
-    * copying; the moral equivalent of the reference's moka L1 handing back
-    * cached bytes. The repeat that localizes an entry returns the rows it
-    * stored too. Every other serve shape (first sighting, plan-only repeat,
-    * L2 promote, recompute) falls through to the normal sql().collect(),
-    * and the NEXT repeat is localized by the standard path.
-    * lastServeMode stays "l1" for the hit (it IS an L1 hit — the soak's
-    * warm-tail decomposition keys on that).
+    * ROWS, serving a localized L1 repeat (and an L2 promote) straight from
+    * the stored driver-side array — no Catalyst execution, no LocalRelation
+    * scan job, no per-row copying; the moral equivalent of the reference's
+    * moka L1 handing back cached bytes. The repeat that localizes an entry
+    * returns the rows it stored too. Every other serve shape (first
+    * sighting, plan-only repeat, recompute) collects the frame.
     *
     * CONTRACT — the returned array is SHARED, not a copy: a localized hit
     * hands back the cache's own internal Array[Row] (EngineSpec pins
     * reference equality across repeats). Callers MUST treat it as
     * immutable — mutating or reordering it in place poisons the cached
-    * entry for every later serve of the same key. Read-only iteration
-    * (the bench/soak/serving shape) is the intended use; a caller that
-    * needs to own the array must use [[sqlRowsCopy]].
+    * entry for every later serve of the same key. A caller that needs to
+    * own the array clones it.
     */
   def sqlRows(query: String,
-              nowNs: Long = System.currentTimeMillis() * 1000000L)
-      : Array[org.apache.spark.sql.Row] = {
-    lastHitRows.remove()
-    val df = sqlScoped(query, nowNs, None)
-    val hit = lastHitRows.get()
-    lastHitRows.remove()
-    if (hit != null) hit else df.collect()
+              nowNs: Long = System.currentTimeMillis() * 1000000L): Array[Row] = {
+    val s = serve(query, nowNs)
+    s.rows.getOrElse(s.df.collect())
   }
 
-  /** [[sqlRows]] with ownership: returns a defensive clone of the (possibly
-    * cache-internal) row array, so the caller may sort/mutate freely. Rows
-    * themselves are immutable; cloning the spine is all that is needed.
-    */
-  def sqlRowsCopy(query: String,
-                  nowNs: Long = System.currentTimeMillis() * 1000000L)
-      : Array[org.apache.spark.sql.Row] =
-    sqlRows(query, nowNs).clone()
-
-  private def analyzeOptimized(query: String, nowNs: Long): Option[(TimeRange, Seq[ColumnPredicate])] =
+  private def analyzeOptimized(parsed: LogicalPlan,
+                               nowNs: Long): Option[(TimeRange, Seq[ColumnPredicate])] =
     try {
       // Optimize the ANALYZED plan directly — queryExecution.optimizedPlan
       // first substitutes any plan persisted on the session as an
@@ -646,7 +547,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       // one would re-extract NO bounds, fall to the default window, and
       // prune to the wrong chunk set.
       val analyzed = GraftBridge.ofRows(spark,
-        withMetrics(parsedPlan(query), relationOf(catalog.allChunks.map(_.path))))
+        withMetrics(parsed, relationOf(catalog.allChunks.map(_.path))))
         .queryExecution.analyzed
       val optimized = spark.sessionState.optimizer.execute(analyzed)
       val extracted = PredicateExtraction.extract(optimized, nowNs)
@@ -669,8 +570,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * intersecting would let a time-free OUTER filter (`WHERE rn <= 5` above a
     * bounded subquery) inject the default window and silently empty the prune.
     */
-  private def extractFromParsed(parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                                nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
+  private def extractFromParsed(parsed: LogicalPlan, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
     PredicateExtraction.extract(parsed, nowNs)
 
   /** Step 2: catalog prune — time index then zone maps. */
@@ -678,7 +578,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     pruneIn(catalog.state, range, preds)
 
   /** [[prune]] over a given catalog state: the live one, or a retained
-    * version for [[sqlAt]]. Every read of the engine selects its chunks here.
+    * version for [[serve]]'s `asOf`. Every read of the engine selects its chunks here.
     */
   private def pruneIn(st: ChunkCatalog.CatalogState, range: TimeRange,
                       preds: Seq[ColumnPredicate]): Seq[String] =
@@ -839,14 +739,38 @@ object QueryEngine {
                                maxL2CacheBytes: Long = 256L << 20,
                                l2DeleteGraceMs: Long = 300000L)
 
-  /** Plan-cache key: (query text, pruned paths + rollup ids + markers, split active). */
+  /** Plan-cache key: (query text, pruned paths + rollup ids, split active). */
   private type Key = (String, Seq[String], Boolean)
 
-  /** Which plan a plan-only entry holds, so route flags stay truthful on hits. */
-  private sealed trait Route
-  private case object Raw extends Route
-  private case object Rollup extends Route
-  private case object TopK extends Route
+  /** Which plan answers a query: the raw chunks, a registered rollup
+    * (graft.plans.RollupRouting) or the two-phase top-k rewrite
+    * (graft.plans.TopKRouting). A plan-only entry keeps its route, so a hit
+    * reports it truthfully.
+    */
+  sealed trait Route
+  case object Raw extends Route
+  case object Rollup extends Route
+  case object TopK extends Route
+
+  /** How one [[QueryEngine.serve]] call answered its query.
+    *  - `df`: the answer.
+    *  - `rows`: the stored result rows when a localized L1 entry, the repeat
+    *    that localized it, or an L2 promote answered; shared with the cache,
+    *    so read-only.
+    *  - `mode`: "computed" (this call planned the query, including the first
+    *    sighting after a maintenance rewrite changed the pruned-path-set key),
+    *    "l1" (plan or result cache hit) or "l2" (disk-tier promote).
+    *  - `route`: which plan answers.
+    *  - `paths`: the chunk paths the catalog prune selected.
+    */
+  final case class Served(df: DataFrame, rows: Option[Array[Row]], mode: String,
+                          route: Route, paths: Seq[String])
+
+  /** One text-cache entry: the parse, and the memoized (range, preds) of a
+    * query whose time bounds are literals (None when they depend on nowNs).
+    */
+  private final case class Text(plan: LogicalPlan,
+                                fixed: Option[(TimeRange, Seq[ColumnPredicate])])
 
   /** The one plan-cache value per key. */
   private sealed trait Entry {

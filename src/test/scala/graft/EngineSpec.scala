@@ -199,17 +199,17 @@ class EngineSpec extends AnyFunSuite {
   test("foldable time expressions prune via the optimized plan (now()-interval path)") {
     val (eng, _) = freshEngine()
     // arithmetic bound: parse-only extraction can't see it; the optimizer folds it
-    val df = eng.sql(
+    val served = eng.serve(
       s"""SELECT COUNT(*) AS cnt FROM metrics
          |WHERE timestamp_ns >= ${t0} + ${hourNs} AND timestamp_ns < ${t0} + 2 * ${hourNs}
          |""".stripMargin, nowNs = t0 + 100 * hourNs)
-    assert(df.collect()(0).getLong(0) == 24L)
-    assert(eng.lastPrunedPaths.size == 1) // only the hour-1 chunk survives pruning
+    assert(served.df.collect()(0).getLong(0) == 24L)
+    assert(served.paths.size == 1) // only the hour-1 chunk survives pruning
     // now()-based query: prunes to nothing against 2024 data, returns 0 rows cleanly
-    val df2 = eng.sql(
+    val served2 = eng.serve(
       "SELECT COUNT(*) AS cnt FROM metrics WHERE timestamp > now() - INTERVAL '5' MINUTE")
-    assert(df2.collect()(0).getLong(0) == 0L)
-    assert(eng.lastPrunedPaths.isEmpty)
+    assert(served2.df.collect()(0).getLong(0) == 0L)
+    assert(served2.paths.isEmpty)
   }
 
   test("repeat of a result-cached foldable query keeps its pruned set (no InMemoryRelation poisoning)") {
@@ -220,10 +220,12 @@ class EngineSpec extends AnyFunSuite {
     // default window and prunes everything away.
     val q = s"SELECT COUNT(*) AS cnt FROM metrics " +
       s"WHERE timestamp_ns >= $t0 + $hourNs AND timestamp_ns < $t0 + 2 * $hourNs"
-    assert(eng.sql(q).collect()(0).getLong(0) == 24L)
-    assert(eng.lastPrunedPaths.size == 1)
-    assert(eng.sql(q).collect()(0).getLong(0) == 24L, "repeat must return the same rows")
-    assert(eng.lastPrunedPaths.size == 1,
+    val first = eng.serve(q)
+    assert(first.df.collect()(0).getLong(0) == 24L)
+    assert(first.paths.size == 1)
+    val repeat = eng.serve(q)
+    assert(repeat.df.collect()(0).getLong(0) == 24L, "repeat must return the same rows")
+    assert(repeat.paths.size == 1,
       "repeat must re-prune to the same chunk, not the default window")
   }
 
@@ -310,7 +312,8 @@ class EngineSpec extends AnyFunSuite {
     assert(!eng.isResultCached(huge), "a result above maxLocalRows must stay plan-only")
     assert(jobs2 >= 1 && jobs1 == jobs2 + 1, s"jobs: first repeat $jobs1, later repeat $jobs2")
     assert(rows1.map(_.toSeq).toSet == want && rows2.map(_.toSeq).toSet == want)
-    assert(eng.lastServeMode.get() == "l1")
+    val later = eng.serve(huge)
+    assert(later.mode == "l1" && later.rows.isEmpty, "a plan-only hit carries no rows")
   }
 
   test("a one-off cold query leaves the session's cache manager empty") {
@@ -324,14 +327,62 @@ class EngineSpec extends AnyFunSuite {
   test("a first repeat localizes; the next sqlRows serves the same array with zero jobs") {
     val (eng, _) = freshEngine()
     val q = hourCounts(1)
-    val cold = eng.sqlRows(q)
-    assert(!eng.isResultCached(q), "a first sighting keeps only its plan")
-    val repeat = eng.sqlRows(q) // localizes and hands back the rows it stored
-    assert(eng.isResultCached(q))
+    val first = eng.serve(q)
+    assert(first.mode == "computed" && first.rows.isEmpty && !eng.isResultCached(q),
+      "a first sighting keeps only its plan")
+    val cold = first.df.collect()
+    val repeat = eng.serve(q) // localizes and returns the rows it stored
+    assert(repeat.mode == "l1" && repeat.rows.isDefined && eng.isResultCached(q))
     val (again, jobs, _) = jobsAndTasks(eng.sqlRows(q))
     assert(jobs == 0, s"a localized hit ran $jobs Spark jobs")
-    assert(again eq repeat, "sqlRows must serve the stored row array, not re-collect")
+    assert(repeat.rows.exists(_ eq again), "sqlRows must serve the stored row array, not re-collect")
     assert(again.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
+    assert(first.paths == repeat.paths && first.paths.size == 1)
+  }
+
+  test("concurrent serves each report their own chunk paths and route") {
+    val (eng, cat) = freshEngine()
+    graft.compact.Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
+      labelCols = Seq("host"))
+    // per hour window: a raw read (a row-level value predicate never routes)
+    // and a bucketed aggregate the hourly rollup answers
+    val texts = for (h <- Seq(0, 2); routed <- Seq(false, true)) yield {
+      val window = s"timestamp_ns >= ${t0 + h * hourNs} AND timestamp_ns < ${t0 + (h + 1) * hourNs}"
+      if (routed)
+        s"SELECT (timestamp_ns div $hourNs) * $hourNs AS b, metric_name, COUNT(*) AS c " +
+          s"FROM metrics WHERE $window GROUP BY 1, 2"
+      else s"SELECT metric_name, COUNT(*) AS c FROM metrics WHERE $window " +
+        "AND value_f64 >= 0 GROUP BY metric_name"
+    }
+    val expected = texts.map { q => val s = eng.serve(q); (s.paths, s.route) }
+    assert(expected.map(_._2) == Seq(QueryEngine.Raw, QueryEngine.Rollup,
+      QueryEngine.Raw, QueryEngine.Rollup), s"premise: routes $expected")
+    assert(expected(0)._1 != expected(2)._1, "premise: the two windows select other chunks")
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 8).map(t => new Thread(() => {
+      try (0 until 25).foreach { i =>
+        val k = (t + i) % texts.size
+        // a distinct text per call, so every call plans instead of hitting L1
+        val s = eng.serve(s"${texts(k)} -- t$t i$i")
+        if ((s.paths, s.route) != expected(k))
+          errs.add(s"thread $t call $i: ${(s.paths, s.route)} vs ${expected(k)}")
+      } catch { case e: Throwable => errs.add(s"thread $t: $e") }
+    }))
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(errs.isEmpty, errs.toString)
+  }
+
+  test("a hot text keeps its memoized time range while more than 1000 other texts are served") {
+    val (eng, _) = freshEngine()
+    val hot = hourCounts(1)
+    (1 until 1100).foreach { i =>
+      if (i % 100 == 0) eng.serve(hot)
+      else eng.serve(s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0 " +
+        s"AND timestamp_ns < ${t0 + hourNs} LIMIT $i")
+    }
+    assert(eng.isTimeFixed(hot), "a text served every 100 calls must stay in the text cache")
+    assert(!eng.isTimeFixed(s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0 " +
+      s"AND timestamp_ns < ${t0 + hourNs} LIMIT 1"), "the oldest cold texts are evicted")
   }
 
   test("r11 sqlRows: localized repeat serves the stored row array with ZERO " +
@@ -349,7 +400,8 @@ class EngineSpec extends AnyFunSuite {
     val got1 = eng.sqlRows(q)
     val got2 = eng.sqlRows(q)
     assert(got1.map(r => (r.getString(0), r.getLong(1))).toSeq == want)
-    assert(eng.lastServeMode.get() == "l1")
+    val served = eng.serve(q)
+    assert(served.mode == "l1" && served.rows.exists(_ eq got1))
     assert(got1 eq got2, "sqlRows must serve the stored row array, not re-collect")
     // new data changes the pruned-path key: sqlRows must NOT serve stale rows
     val pts = Seq(graft.ingest.MetricPoint(t0 + 100L, "cpu_usage", 9.0,
@@ -403,7 +455,7 @@ class EngineSpec extends AnyFunSuite {
     assert(errs.isEmpty, errs.toString)
   }
 
-  test("time travel: sqlAt a retained version sees exactly the rows committed " +
+  test("time travel: serve asOf a retained version sees exactly the rows committed " +
     "by then; the live query sees everything; rollup routing stays off") {
     val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_tt_"),
       cacheTtlMs = 0L, manifestRetain = 8)
@@ -418,12 +470,12 @@ class EngineSpec extends AnyFunSuite {
     val range = s"timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 3 * hourNs}"
     val live = eng.sql(s"SELECT count(*) AS c FROM metrics WHERE $range")
       .collect()(0).getLong(0)
-    val asof = eng.sqlAt(v1, s"SELECT count(*) AS c FROM metrics WHERE $range")
-      .collect()(0).getLong(0)
+    val asof = eng.serve(s"SELECT count(*) AS c FROM metrics WHERE $range", asOf = Some(v1))
+      .df.collect()(0).getLong(0)
     assert(live == 17 && asof == 10, s"live=$live asof=$asof")
     // AS OF a version that never existed / was evicted → clean failure
     intercept[Exception](
-      eng.sqlAt(99999L, s"SELECT count(*) FROM metrics WHERE $range").collect())
+      eng.serve(s"SELECT count(*) FROM metrics WHERE $range", asOf = Some(99999L)).df.collect())
     // live query again (cache scoping didn't leak the historical path set)
     assert(eng.sql(s"SELECT count(*) AS c FROM metrics WHERE $range")
       .collect()(0).getLong(0) == 17)
@@ -441,15 +493,15 @@ class EngineSpec extends AnyFunSuite {
     val want = eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq
     val rows = eng.sqlRows(hourCounts(0))
     assert(eng.isResultCached(hourCounts(0)), "premise: the repeat localized the result")
-    val paths0 = eng.lastPrunedPaths
+    val paths0 = eng.serve(hourCounts(0)).paths
     eng.sql(hourCounts(1)).collect()
-    eng.sql(hourCounts(1)).collect()
-    assert(eng.lastPrunedPaths != paths0, "premise: the second query selects other chunks")
+    assert(eng.serve(hourCounts(1)).paths != paths0,
+      "premise: the second query selects other chunks")
     assert(eng.isResultCached(hourCounts(0)),
       "planning another path set must not drop a cached result")
-    assert(eng.sqlRows(hourCounts(0)) eq rows)
+    val again = eng.serve(hourCounts(0))
+    assert(again.mode == "l1" && again.rows.exists(_ eq rows))
     assert(rows.map(_.toSeq).toSeq == want)
-    assert(eng.lastServeMode.get() == "l1")
   }
 
   test("metrics inside a CTE body and an IN subquery binds to the pruned scan, " +
@@ -463,11 +515,10 @@ class EngineSpec extends AnyFunSuite {
          |WHERE m.timestamp_ns >= $t0 AND m.timestamp_ns < ${t0 + 2 * hourNs} AND m.metric_name IN
          |  (SELECT metric_name FROM metrics WHERE $range AND metric_name LIKE 'cpu%')
          |GROUP BY m.metric_name, m.host ORDER BY m.metric_name, m.host""".stripMargin
-    val got = eng.sql(q).collect().map(_.toSeq).toSeq
-    assert(eng.lastPrunedPaths.size == 2, s"premise: prunes to 2 of 3 chunks: ${eng.lastPrunedPaths}")
-    val ref = spark.newSession()
-    ref.read.parquet(cat.allChunks.map(_.path): _*).createOrReplaceTempView("metrics")
-    val want = ref.sql(q).collect().map(_.toSeq).toSeq
+    val served = eng.serve(q)
+    val got = served.df.collect().map(_.toSeq).toSeq
+    assert(served.paths.size == 2, s"premise: prunes to 2 of 3 chunks: ${served.paths}")
+    val want = SparkTestBase.referenceRows(cat, q)
     assert(got == want && got.size == 2, s"$got vs $want")
   }
 
@@ -482,8 +533,9 @@ class EngineSpec extends AnyFunSuite {
     // a new text plans after the foreign view exists; a repeat hits the cache
     val got1 = eng.sql(hourCounts(1)).collect().map(_.toSeq).toSeq
     assert(got1 == Seq(Seq("cpu_usage", 12L), Seq("mem_usage", 12L)), got1.toString)
-    assert(eng.sql(hourCounts(0)).collect().map(_.toSeq).toSeq == want0)
-    assert(eng.lastServeMode.get() == "l1")
+    val repeat = eng.serve(hourCounts(0))
+    assert(repeat.mode == "l1")
+    assert(repeat.df.collect().map(_.toSeq).toSeq == want0)
     assert(eng.labels() == labels)
     assert(eng.labelValues("__name__").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("cpu_usage", "mem_usage"))
@@ -553,7 +605,7 @@ class EngineSpec extends AnyFunSuite {
     val (eng, cat) = freshEngine()
     val (rows, jobs, tasks) =
       jobsAndTasks(eng.execute(twoHourAgg)(_.collect().map(_.toSeq).toSeq))
-    val selected = eng.lastPrunedPaths
+    val selected = eng.serve(twoHourAgg).paths
     assert(selected.size == 2, s"premise: the window prunes to 2 of 3 chunks: $selected")
     val bytes = selected.flatMap(cat.state.chunks.get).map(_.sizeBytes).sum
     assert(bytes <= eng.oneTaskMaxBytes,

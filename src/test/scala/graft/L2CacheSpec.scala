@@ -73,15 +73,19 @@ class L2CacheSpec extends AnyFunSuite {
     assert(l2Dirs(dir).exists(d => new java.io.File(d, "rows.bin").isFile),
       "a demoted result must use the serialized-rows form")
     val h0 = Telemetry.l2Hits.sum()
-    val served = eng.sql(qA)
+    val promoted = eng.serve(qA)
     assert(Telemetry.l2Hits.sum() == h0 + 1, "repeat must be an L2 hit")
+    assert(promoted.mode == "l2", s"a promote reports l2, not ${promoted.mode}")
+    assert(promoted.rows.map(_.map(_.toSeq).toSeq).contains(expected),
+      "a promote returns the rows it read")
+    val served = promoted.df
     assert(served.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
       "small L2 hit must serve a driver-local relation, not a rescan")
     assert(served.collect().map(_.toSeq).toSeq == expected)
     // the promoted entry is back in L1: the NEXT repeat is a plain L1 hit
     val h1 = Telemetry.l2Hits.sum()
-    eng.sql(qA).count()
+    assert(eng.serve(qA).mode == "l1")
     assert(Telemetry.l2Hits.sum() == h1, "promoted entry must hit L1, not L2 again")
   }
 

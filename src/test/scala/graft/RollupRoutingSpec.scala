@@ -34,6 +34,8 @@ class RollupRoutingSpec extends AnyFunSuite {
     (new QueryEngine(spark, cat), cat, writer)
   }
 
+  private def routed(s: QueryEngine.Served): Boolean = s.route == QueryEngine.Rollup
+
   private val bucketedSql: String = {
     val step = 2L * hourNs
     s"SELECT (timestamp_ns div $step) * $step AS time_bucket, metric_name, host, " +
@@ -46,9 +48,10 @@ class RollupRoutingSpec extends AnyFunSuite {
   test("bucketed aggregate routes to the rollup, reads no raw chunk, equals the raw answer") {
     val (eng, cat, _) = freshEngine()
     // the raw answer first (no rollup registered yet)
-    val rawDf = eng.sql(bucketedSql)
+    val rawServed = eng.serve(bucketedSql)
+    val rawDf = rawServed.df
     val raw = rawDf.collect().map(_.toSeq).toSeq
-    assert(!eng.lastServedFromRollup && raw.size == 8) // 2 buckets × 2 metrics × 2 hosts
+    assert(!routed(rawServed) && raw.size == 8) // 2 buckets × 2 metrics × 2 hosts
     // premise: this chunk set is small, so the engine bound its one-task
     // relation — routing below must see through the Repartition(1) wrapper
     assert(rawDf.queryExecution.analyzed.collectFirst {
@@ -56,8 +59,9 @@ class RollupRoutingSpec extends AnyFunSuite {
     }.isDefined)
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
       labelCols = Seq("host"))
-    val routedDf = eng.sql(bucketedSql)
-    assert(eng.lastServedFromRollup, "2h step over a 1h rollup must route")
+    val routedServed = eng.serve(bucketedSql)
+    val routedDf = routedServed.df
+    assert(routed(routedServed), "2h step over a 1h rollup must route")
     // the physical scan reads the rollup table, not the raw chunk files
     val plan = routedDf.queryExecution.executedPlan.toString
     assert(plan.contains("rollup"), s"scan must read the rollup table:\n$plan")
@@ -65,8 +69,8 @@ class RollupRoutingSpec extends AnyFunSuite {
     assert(routedDf.collect().map(_.toSeq).toSeq == raw,
       "rollup-served result must EQUAL the raw aggregation")
     // warm repeat stays truthful about its source
-    eng.sql(bucketedSql)
-    assert(eng.lastServedFromRollup)
+    val repeat = eng.serve(bucketedSql)
+    assert(repeat.mode == "l1" && routed(repeat))
   }
 
   test("routing never rewrites a foreign table that mimics the metrics schema") {
@@ -81,9 +85,9 @@ class RollupRoutingSpec extends AnyFunSuite {
         Seq(MetricPoint(t0, "cpu_usage", 999.0, Map("host" -> "server1"))))
       .write.parquet(foreign)
     spark.read.parquet(foreign).createOrReplaceTempView("foreign_metrics")
-    val out = eng.sql(bucketedSql.replace("FROM metrics ", "FROM foreign_metrics "))
-      .collect()
-    assert(!eng.lastServedFromRollup, "foreign relation must not route")
+    val served = eng.serve(bucketedSql.replace("FROM metrics ", "FROM foreign_metrics "))
+    val out = served.df.collect()
+    assert(!routed(served), "foreign relation must not route")
     assert(out.length == 1 && out(0).getAs[Double]("sum_v") == 999.0)
   }
 
@@ -92,48 +96,49 @@ class RollupRoutingSpec extends AnyFunSuite {
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
       labelCols = Seq("host"))
     val step = 2L * hourNs
-    def runs(sql: String): Unit = { eng.sql(sql).collect(); () }
+    def runs(sql: String): Boolean = {
+      val s = eng.serve(sql)
+      s.df.collect()
+      routed(s)
+    }
     // bound not bucket-aligned (off by one second)
-    runs(s"SELECT metric_name, count(*) AS cnt FROM metrics " +
+    assert(!runs(s"SELECT metric_name, count(*) AS cnt FROM metrics " +
       s"WHERE timestamp_ns >= ${t0 + 1000000000L} AND timestamp_ns < ${t0 + 4 * hourNs} " +
-      "GROUP BY 1 ORDER BY 1")
-    assert(!eng.lastServedFromRollup, "unaligned lower bound must not route")
+      "GROUP BY 1 ORDER BY 1"), "unaligned lower bound must not route")
     // step not a multiple of the resolution (90 min over a 1h rollup)
     val badStep = 5400L * 1000000000L
-    runs(s"SELECT (timestamp_ns div $badStep) * $badStep AS b, count(*) AS cnt " +
+    assert(!runs(s"SELECT (timestamp_ns div $badStep) * $badStep AS b, count(*) AS cnt " +
       s"FROM metrics WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 4 * hourNs} " +
-      "GROUP BY 1 ORDER BY 1")
-    assert(!eng.lastServedFromRollup, "non-multiple step must not route")
+      "GROUP BY 1 ORDER BY 1"), "non-multiple step must not route")
     // a predicate on a column the rollup does not retain per-row
-    runs(s"SELECT metric_name, count(*) AS cnt FROM metrics " +
+    assert(!runs(s"SELECT metric_name, count(*) AS cnt FROM metrics " +
       s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 4 * hourNs} " +
-      "AND value_f64 >= 1.0 GROUP BY 1 ORDER BY 1")
-    assert(!eng.lastServedFromRollup, "row-level value predicate must not route")
+      "AND value_f64 >= 1.0 GROUP BY 1 ORDER BY 1"), "row-level value predicate must not route")
     // an aggregate over a column the rollup does not store
-    runs(s"SELECT metric_name, count(DISTINCT host) AS h FROM metrics " +
+    assert(!runs(s"SELECT metric_name, count(DISTINCT host) AS h FROM metrics " +
       s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 4 * hourNs} " +
-      "GROUP BY 1 ORDER BY 1")
-    assert(!eng.lastServedFromRollup, "count distinct must not route")
+      "GROUP BY 1 ORDER BY 1"), "count distinct must not route")
     // the routable shape still routes after all those misses
-    runs(s"SELECT (timestamp_ns div $step) * $step AS b, count(*) AS cnt " +
+    assert(runs(s"SELECT (timestamp_ns div $step) * $step AS b, count(*) AS cnt " +
       s"FROM metrics WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 4 * hourNs} " +
-      "GROUP BY 1 ORDER BY 1")
-    assert(eng.lastServedFromRollup)
+      "GROUP BY 1 ORDER BY 1"))
   }
 
   test("write-invalidation: a new overlapping chunk drops the rollup; retention drops it too") {
     val (eng, cat, writer) = freshEngine()
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
       labelCols = Seq("host"))
-    val before = eng.sql(bucketedSql).collect().map(_.toSeq).toSeq
-    assert(eng.lastServedFromRollup)
+    val beforeServed = eng.serve(bucketedSql)
+    val before = beforeServed.df.collect().map(_.toSeq).toSeq
+    assert(routed(beforeServed))
     // new raw data inside the covered window: rollup must vanish and the SAME
     // SQL must answer from raw — now INCLUDING the new rows
     writer.write(Converters.pointsToDf(spark, Seq(
       MetricPoint(t0 + hourNs + 1000L, "cpu_usage", 100.0, Map("host" -> "server1")))))
     assert(cat.rollups.isEmpty, "overlapping ingest must invalidate the rollup")
-    val after = eng.sql(bucketedSql).collect().map(_.toSeq).toSeq
-    assert(!eng.lastServedFromRollup, "stale cache must not serve the dropped rollup")
+    val afterServed = eng.serve(bucketedSql)
+    val after = afterServed.df.collect().map(_.toSeq).toSeq
+    assert(!routed(afterServed), "stale cache must not serve the dropped rollup")
     assert(after != before, "the new row must be visible (no stale rollup serving)")
     // retention removal likewise invalidates (it deletes rows)
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
@@ -159,16 +164,14 @@ class RollupRoutingSpec extends AnyFunSuite {
     // 12 points/hour at whole minutes: 48×4 / 4×4 / 1×4 expected rows
     for ((unit, hi, rows) <- Seq(("minute", hiHours, 192), ("hour", hiHours, 16),
         ("day", hiDay, 4))) {
-      eng.rollupRoutingEnabled = false
-      val raw = eng.sql(q(unit, hi)).collect().map(_.toSeq).toSeq
-      assert(!eng.lastServedFromRollup && raw.size == rows, s"$unit raw shape")
-      eng.rollupRoutingEnabled = true
-      val routed = eng.sql(q(unit, hi))
-      assert(eng.lastServedFromRollup, s"date_trunc('$unit') must route")
-      val plan = routed.queryExecution.executedPlan.toString
+      val raw = SparkTestBase.referenceRows(cat, q(unit, hi))
+      assert(raw.size == rows, s"$unit raw shape")
+      val served = eng.serve(q(unit, hi))
+      assert(routed(served), s"date_trunc('$unit') must route")
+      val plan = served.df.queryExecution.executedPlan.toString
       assert(plan.contains("rollup") && !plan.contains("/data/"),
         s"$unit must read only the rollup table:\n$plan")
-      assert(routed.collect().map(_.toSeq).toSeq == raw,
+      assert(served.df.collect().map(_.toSeq).toSeq == raw,
         s"date_trunc('$unit') routed result must equal raw")
     }
     // Kathmandu is +05:45: hour/day truncation boundaries sit off the UTC
@@ -177,10 +180,12 @@ class RollupRoutingSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
     val eng2 = new QueryEngine(s2, cat)
-    eng2.sql(q("hour", hiHours)).collect()
-    assert(!eng2.lastServedFromRollup, "hour truncation in +05:45 must not route")
-    eng2.sql(q("minute", hiHours)).collect()
-    assert(eng2.lastServedFromRollup, "minute truncation is zone-safe and must route")
+    val hour = eng2.serve(q("hour", hiHours))
+    hour.df.collect()
+    assert(!routed(hour), "hour truncation in +05:45 must not route")
+    val minute = eng2.serve(q("minute", hiHours))
+    minute.df.collect()
+    assert(routed(minute), "minute truncation is zone-safe and must route")
   }
 
   test("BETWEEN and ns-column bounds route (closed-closed +1 edge absorbed)") {
@@ -206,21 +211,19 @@ class RollupRoutingSpec extends AnyFunSuite {
       "GROUP BY 1, 2 ORDER BY 1, 2"
     for ((q, name) <- Seq((q1, "ns BETWEEN"), (q2, "trunc + ns bounds"),
         (q3, "µs BETWEEN"))) {
-      eng.rollupRoutingEnabled = false
-      val raw = eng.sql(q).collect().map(_.toSeq).toSeq
+      val raw = SparkTestBase.referenceRows(cat, q)
       assert(raw.nonEmpty)
-      eng.rollupRoutingEnabled = true
-      val routed = eng.sql(q)
-      assert(eng.lastServedFromRollup, s"$name must route")
-      assert(routed.collect().map(_.toSeq).toSeq == raw, s"$name routed == raw")
+      val served = eng.serve(q)
+      assert(routed(served), s"$name must route")
+      assert(served.df.collect().map(_.toSeq).toSeq == raw, s"$name routed == raw")
     }
     // misaligned BETWEEN upper edge (mid-bucket) must stay on raw — absorbing
     // it would add the rest of the bucket's rows
-    eng.rollupRoutingEnabled = true
-    eng.sql(s"SELECT (timestamp_ns div $step) * $step AS b, sum(value_f64) AS s " +
-      s"FROM metrics WHERE timestamp_ns BETWEEN $t0 AND ${t0 + hourNs + 5} " +
-      "GROUP BY 1").collect()
-    assert(!eng.lastServedFromRollup, "mid-bucket BETWEEN upper bound must not route")
+    val midBucket = eng.serve(s"SELECT (timestamp_ns div $step) * $step AS b, " +
+      s"sum(value_f64) AS s FROM metrics WHERE timestamp_ns BETWEEN $t0 AND " +
+      s"${t0 + hourNs + 5} GROUP BY 1")
+    midBucket.df.collect()
+    assert(!routed(midBucket), "mid-bucket BETWEEN upper bound must not route")
   }
 
   test("catalog JSON roundtrips rollup registrations") {

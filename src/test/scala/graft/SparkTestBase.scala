@@ -19,4 +19,15 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `sql` over an unpruned spark.read.parquet of every chunk `cat` holds,
+    * bound as `metrics` on a fresh session with the shared session's time
+    * zone: an answer that no QueryEngine pruning or routing produced.
+    */
+  def referenceRows(cat: graft.catalog.ChunkCatalog, sql: String): Seq[Seq[Any]] = {
+    val ref = spark.newSession()
+    ref.conf.set("spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone"))
+    ref.read.parquet(cat.allChunks.map(_.path): _*).createOrReplaceTempView("metrics")
+    ref.sql(sql).collect().map(_.toSeq).toSeq
+  }
 }

@@ -34,6 +34,15 @@ class TopKRoutingSpec extends AnyFunSuite {
     cat
   }
 
+  private def routed(s: QueryEngine.Served): Boolean = s.route == QueryEngine.TopK
+
+  /** Serve and run `sql`; true iff TopKRouting re-planned it. */
+  private def runsRouted(eng: QueryEngine, sql: String): Boolean = {
+    val s = eng.serve(sql)
+    s.df.collect()
+    routed(s)
+  }
+
   private val naiveSql =
     "SELECT metric_name, host, timestamp_ns, value_f64, rn FROM (" +
       "SELECT metric_name, host, timestamp_ns, value_f64, " +
@@ -43,72 +52,66 @@ class TopKRoutingSpec extends AnyFunSuite {
       ") WHERE rn <= 5 ORDER BY metric_name, rn"
 
   test("row_number ≤ k rewrites to the two-phase shape with identical rows") {
-    val eng = freshEngine()
-    eng.topKRoutingEnabled = false
-    val raw = eng.sql(naiveSql).collect().map(_.toSeq).toSeq
-    assert(!eng.lastTopKRouted && raw.size == 10) // 2 metrics × top-5
-    eng.topKRoutingEnabled = true
-    val routed = eng.sql(naiveSql)
-    assert(eng.lastTopKRouted, "the naive shape must re-plan")
+    val cat = freshCatalog()
+    val eng = new QueryEngine(spark, cat)
+    val raw = SparkTestBase.referenceRows(cat, naiveSql)
+    assert(raw.size == 10) // 2 metrics × top-5
+    val served = eng.serve(naiveSql)
+    assert(routed(served), "the naive shape must re-plan")
     // the two-phase local-prune marker must be in the executed plan
-    val plan = routed.queryExecution.executedPlan.toString
+    val plan = served.df.queryExecution.executedPlan.toString
     assert(plan.contains("__rn_local"),
       s"expected the two-phase local-prune stage in the plan:\n$plan")
-    assert(routed.collect().map(_.toSeq).toSeq == raw,
+    assert(served.df.collect().map(_.toSeq).toSeq == raw,
       "rewritten result must equal the naive window result")
     // warm repeat stays truthful
-    eng.sql(naiveSql)
-    assert(eng.lastTopKRouted)
+    val repeat = eng.serve(naiveSql)
+    assert(repeat.mode == "l1" && routed(repeat))
   }
 
   test("expression ordering routes too (analyzer extracts it into the child projection)") {
-    val eng = freshEngine()
+    val cat = freshCatalog()
+    val eng = new QueryEngine(spark, cat)
     val sql =
       "SELECT metric_name, host, rn FROM (" +
         "SELECT metric_name, host, row_number() OVER (PARTITION BY metric_name " +
         "ORDER BY value_f64 * 2 DESC, timestamp_ns, host) AS rn FROM metrics " +
         s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}" +
         ") WHERE rn <= 3 ORDER BY metric_name, rn"
-    eng.topKRoutingEnabled = false
-    val raw = eng.sql(sql).collect().map(_.toSeq).toSeq
-    eng.topKRoutingEnabled = true
-    val routed = eng.sql(sql)
-    assert(eng.lastTopKRouted, "expression ordering must still match via _w0")
-    assert(routed.collect().map(_.toSeq).toSeq == raw)
+    val raw = SparkTestBase.referenceRows(cat, sql)
+    val served = eng.serve(sql)
+    assert(routed(served), "expression ordering must still match via _w0")
+    assert(served.df.collect().map(_.toSeq).toSeq == raw)
   }
 
   test("non-routable shapes stay on the raw plan") {
     val eng = freshEngine()
     // extra conjunct on the rank filter: not a single bound
-    eng.sql(naiveSql.replace("WHERE rn <= 5", "WHERE rn <= 5 AND rn > 1")).collect()
-    assert(!eng.lastTopKRouted)
+    assert(!runsRouted(eng, naiveSql.replace("WHERE rn <= 5", "WHERE rn <= 5 AND rn > 1")))
     // no partition: global top-k (TakeOrdered territory)
-    eng.sql(
+    assert(!runsRouted(eng,
       "SELECT metric_name, rn FROM (SELECT metric_name, row_number() OVER (" +
         "ORDER BY value_f64 DESC, timestamp_ns, host, metric_name) AS rn FROM metrics " +
         s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}" +
-        ") WHERE rn <= 5 ORDER BY rn").collect()
-    assert(!eng.lastTopKRouted)
+        ") WHERE rn <= 5 ORDER BY rn"))
     // rank() instead of row_number(): different tie semantics, never rewritten
-    eng.sql(
+    assert(!runsRouted(eng,
       "SELECT metric_name, rn FROM (SELECT metric_name, rank() OVER (" +
         "PARTITION BY metric_name ORDER BY value_f64 DESC) AS rn FROM metrics " +
         s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}" +
-        ") WHERE rn <= 5 ORDER BY metric_name, rn").collect()
-    assert(!eng.lastTopKRouted)
+        ") WHERE rn <= 5 ORDER BY metric_name, rn"))
     // a foreign table mimicking the schema must not be rewritten
     val foreign = Files.createTempDirectory("graft_topk_f_").resolve("t").toString
     Converters.pointsToDf(spark,
         Seq(MetricPoint(t0, "cpu_usage", 999.0, Map("host" -> "server1"))))
       .write.parquet(foreign)
     spark.read.parquet(foreign).createOrReplaceTempView("foreign_metrics_topk")
-    val out = eng.sql(naiveSql.replace("FROM metrics ", "FROM foreign_metrics_topk "))
-      .collect()
-    assert(!eng.lastTopKRouted)
+    val served = eng.serve(naiveSql.replace("FROM metrics ", "FROM foreign_metrics_topk "))
+    val out = served.df.collect()
+    assert(!routed(served))
     assert(out.length == 1 && out(0).getAs[Double]("value_f64") == 999.0)
     // and the routable shape still routes afterwards
-    eng.sql(naiveSql).collect()
-    assert(eng.lastTopKRouted)
+    assert(runsRouted(eng, naiveSql))
   }
 
   test("routes over the one-task coalesced view and over the partitioned scan alike") {
@@ -118,16 +121,16 @@ class TopKRoutingSpec extends AnyFunSuite {
         case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
       }.isDefined
     val small = new QueryEngine(spark, cat)
-    val smallDf = small.sql(naiveSql)
-    val smallRows = smallDf.collect().map(_.toSeq).toSeq
-    assert(small.lastTopKRouted && coalesced(smallDf),
+    val smallServed = small.serve(naiveSql)
+    val smallRows = smallServed.df.collect().map(_.toSeq).toSeq
+    assert(routed(smallServed) && coalesced(smallServed.df),
       "a dashboard-sized chunk set binds as the one-task relation and still routes")
     // cut-off 0: no chunk set is small enough, the relation stays a plain scan
     val large = new QueryEngine(spark, cat)
     large.oneTaskMaxBytes = 0L
-    val largeDf = large.sql(naiveSql)
-    val largeRows = largeDf.collect().map(_.toSeq).toSeq
-    assert(large.lastTopKRouted && !coalesced(largeDf))
+    val largeServed = large.serve(naiveSql)
+    val largeRows = largeServed.df.collect().map(_.toSeq).toSeq
+    assert(routed(largeServed) && !coalesced(largeServed.df))
     assert(smallRows == largeRows && smallRows.size == 10)
   }
 }
