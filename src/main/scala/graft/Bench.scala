@@ -12,8 +12,10 @@ package graft
   * Output contract: stdout's FINAL line is a SHORT headline JSON (the driver
   * captures only a 2000-char stdout tail — round 3's 76-entry per-query map
   * outgrew it and left the round with no machine-readable record). The full
-  * per-query detail (every run of every query, GC/heap telemetry) goes to
-  * stderr AND a BENCH_DETAIL.json sidecar in the working directory.
+  * per-query detail (every run of every query, GC/heap telemetry, the
+  * commit) goes to stderr AND a new `BENCH_DETAIL_<yyyyMMdd-HHmmss>.json`
+  * sidecar in the working directory (an existing file is never overwritten),
+  * which the headline's `detail` names.
   *
   * The engine result cache is disabled for the sweep (segment 3): 70+ timed
   * queries each pinning a persisted result was the prime suspect for round 3's
@@ -380,13 +382,16 @@ object Bench {
     val diskMbps = math.min(diskMbpsStart, diskMbpsEnd)
 
     def f3(v: Double): String = f"$v%.3f"
+    // HEAD of the checkout the bench runs in, or "unknown" outside a git work tree
+    val commit = scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim).getOrElse("unknown")
     // ---- sidecar + stderr: the FULL record ----------------------------------
     val detailJson = {
       val q = detail.map { case (k, runs) =>
         "\"" + k + "\":{\"runs\":[" + runs.map(f3).mkString(",") +
           s"""],"median":${f3(medians(k))}}"""
       }.mkString("{", ",", "}")
-      s"""{"sf":"$sfDir","cpus":$cpus,
+      s"""{"sf":"$sfDir","cpus":$cpus,"commit":"$commit",
          |"ingest_runs_sec":[${ingestRuns.map(f3).mkString(",")}],
          |"samples_per_sec":$samplesPerSec,"compression_ratio":$compressionRatio,
          |"warm_runs_sec":[${warmRuns.map(f3).mkString(",")}],
@@ -406,9 +411,14 @@ object Bench {
          }.mkString("{", ",", "}")},
          |"queries":$q}""".stripMargin.replace("\n", "")
     }
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      (detailJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(e) => System.err.println(s"[bench] sidecar write failed: $e") }
+    val detailFile = "BENCH_DETAIL_" + java.time.LocalDateTime.now().format(
+      java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss")) + ".json"
+    val detailWritten = try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
+        (detailJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      detailFile
+    } catch { case scala.util.control.NonFatal(e) => System.err.println(s"[bench] sidecar write failed: $e"); "none" }
     System.err.println(detailJson)
 
     // ---- final stdout line: SHORT headline (driver tail-captures 2000 chars) --
@@ -430,13 +440,13 @@ object Bench {
       s""""gc_time_ms":$gcTotalMs,"peak_heap_mb":$peakHeapMb,""" +
       // 10× leg: slow-cohort medians, diffable round-over-round (≤12 entries
       // at 2 decimals keeps the headline under the driver's 2000-char tail);
-      // per-query runs/n/IQR live in BENCH_DETAIL.json — the headline carries
+      // per-query runs/n/IQR live in the detail sidecar — the headline carries
       // the protocol line (mode, run floor, host calibration, worst spread)
       s""""x10":${x10Medians.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
         .mkString("{", ",", "}")},""" +
       s""""x10_protocol":{"mode":"$x10Mode","n_min":${if (x10N.isEmpty) 0 else x10N.values.min},""" +
       s""""cal_sps":$x10CalSps,"max_rel_iqr":${f3(x10MaxRelIqr)}},""" +
-      s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+      s""""detail":"$detailWritten","sf":"$sfDir"}""")
     spark.stop()
     // tmpfs hygiene: the per-run warehouses are ~100 MB each and /dev/shm is
     // shared with the scale fixtures — leaked dirs from 10 bench runs were

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.And
+import org.apache.spark.sql.catalyst.expressions.{And, CurrentDate, CurrentTime, CurrentTimestampLike}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions.{col, lit}
 import scala.jdk.CollectionConverters._
@@ -126,9 +126,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   // blocks the query path), and an L1 miss whose key has a demoted file
   // PROMOTES it back with one local-disk read instead of re-executing over
   // raw chunk blocks. The key is the same (query, pruned-path-set + rollup
-  // ids + markers, split) tuple as L1, so a stale hit is impossible — any
-  // ingest/compaction/rollup change changes the key and the orphaned file
-  // simply ages out by LRU. The tier is
+  // ids + markers, split) tuple as L1, of a time-fixed text only, so a stale
+  // hit is impossible — any ingest/compaction/rollup change changes the key
+  // and the orphaned file simply ages out by LRU. The tier is
   // process-lifetime (foyer's crash recovery is an opt-in mode the reference
   // does not enable; documented divergence).
   // ---------------------------------------------------------------------------
@@ -137,17 +137,16 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   limits.l2CacheDir.foreach { d =>
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
     // Orphan sweep (ADVICE r8): the index is process-lifetime, so any l2-*
-    // directory already on disk belongs to a dead process and can never be
+    // entry already on disk belongs to a dead process and can never be
     // served again — without this, a long-lived cache dir grows without
     // bound across restarts.
     Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("l2-"))
-      .foreach(f => scala.util.Try(
-        org.apache.commons.io.FileUtils.deleteDirectory(f)))
+      .filter(_.getName.startsWith("l2-"))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 
-  /** key → (parquet dir, bytes on disk); access-ordered for LRU eviction. */
-  private val l2Entries = new java.util.LinkedHashMap[Key, (String, Long)](32, 0.75f, true)
+  /** key → (`l2-<id>.bin` file, bytes on disk); access-ordered for LRU eviction. */
+  private val l2Entries = new java.util.LinkedHashMap[Key, (java.io.File, Long)](32, 0.75f, true)
 
   /** Keys with a demote write in flight (skip duplicate demotes). */
   private val l2Pending = java.util.concurrent.ConcurrentHashMap.newKeySet[Key]()
@@ -159,8 +158,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val t = new Thread(r, "graft-l2-demote"); t.setDaemon(true); t
   })
 
-  /** Enqueue a demote of a localized entry's rows as driver-serialized
-    * `rows.bin`: both the write here and the later promote are pure local
+  /** Enqueue a demote of a localized entry's rows as one driver-serialized
+    * `l2-<id>.bin`: both the write here and the later promote are pure local
     * I/O, no Spark job on either side (the reference's foyer tier likewise
     * moves raw bytes, not queries).
     */
@@ -169,59 +168,47 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     if (already || !l2Pending.add(key)) return // file already valid / in flight
     l2Demoter.submit(new Runnable {
       override def run(): Unit = {
-        val dir = new java.io.File(limits.l2CacheDir.get,
-          s"l2-${java.util.UUID.randomUUID().toString.take(12)}").getAbsolutePath
+        val file = new java.io.File(limits.l2CacheDir.get,
+          s"l2-${java.util.UUID.randomUUID().toString.take(12)}.bin")
         try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
           val oos = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
-            new java.io.FileOutputStream(new java.io.File(dir, "rows.bin"))))
+            new java.io.FileOutputStream(file)))
           try { oos.writeObject(entry.df.schema); oos.writeObject(entry.rows) }
           finally oos.close()
-          val bytes = graft.ingest.ChunkStats.dirSize(java.nio.file.Paths.get(dir))
-          Telemetry.l2Demotions.increment()
           l2Entries.synchronized {
-            l2Entries.put(key, (dir, bytes))
-            // LRU-evict until the tier fits its byte budget; physical deletion
-            // is grace-deferred so a concurrently promoted (lazily re-read)
-            // entry never loses its file mid-scan.
-            var retained = 0L
-            val it0 = l2Entries.values().iterator()
-            while (it0.hasNext) retained += it0.next()._2
+            l2Entries.put(key, (file, file.length()))
+            // LRU-evict until the tier fits its byte budget. An evicted file
+            // is deleted at once: a promote reads its file whole, so one that
+            // loses the race recomputes.
+            var retained = l2Entries.values().asScala.map(_._2).sum
             val it = l2Entries.entrySet().iterator()
             while (retained > limits.maxL2CacheBytes && it.hasNext) {
               val e = it.next()
               if (e.getKey != key) {
                 retained -= e.getValue._2
-                scheduleL2Delete(e.getValue._1, limits.l2DeleteGraceMs)
+                e.getValue._1.delete()
                 it.remove()
               }
             }
           }
+          Telemetry.l2Demotions.increment()
         } catch {
-          case scala.util.control.NonFatal(_) => scheduleL2Delete(dir, 0L)
+          case scala.util.control.NonFatal(_) => file.delete()
         } finally l2Pending.remove(key)
       }
     })
   }
 
-  private def scheduleL2Delete(dir: String, afterMs: Long): Unit =
-    QueryEngine.l2Janitor.schedule(new Runnable {
-      override def run(): Unit =
-        try graft.ingest.ChunkStats.deleteDir(java.nio.file.Paths.get(dir))
-        catch { case scala.util.control.NonFatal(_) => () }
-    }, afterMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-
   /** L2 hit path: read the demoted rows back into a driver-local
     * LocalRelation — the same terminal form a repeated L1 entry reaches. An
-    * unreadable file (corruption, external cleanup) drops the entry and falls
-    * through to a plain recompute — the tier can serve wrong-shaped bytes to
-    * nobody.
+    * unreadable file (corruption, eviction, external cleanup) drops the entry
+    * and falls through to a plain recompute — the tier can serve
+    * wrong-shaped bytes to nobody.
     */
   private def promoteFromL2(key: Key): Option[Localized] = {
     if (!l2Enabled) return None
     val ent = l2Entries.synchronized(l2Entries.get(key)) // touches LRU order
     if (ent == null) return None
-    val dir = ent._1
     // Everything that touches the file sits inside the fail-open guard — a
     // corrupt/deleted file must fall through to a recompute, never out of
     // serve(). NonFatal ONLY, same discipline as collectForLocalize: an OOM must
@@ -229,7 +216,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val read: Option[(Array[Row], org.apache.spark.sql.types.StructType)] =
       try {
         val ois = new java.io.ObjectInputStream(new java.io.BufferedInputStream(
-          new java.io.FileInputStream(new java.io.File(dir, "rows.bin"))))
+          new java.io.FileInputStream(ent._1)))
         try {
           val schema = ois.readObject().asInstanceOf[org.apache.spark.sql.types.StructType]
           Some((ois.readObject().asInstanceOf[Array[Row]], schema))
@@ -237,8 +224,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       } catch { case scala.util.control.NonFatal(_) => None }
     read match {
       case None => // unreadable → forget the entry, recompute
-        l2Entries.synchronized(l2Entries.remove(key))
-        scheduleL2Delete(dir, 0L)
+        l2Entries.synchronized(l2Entries.remove(key, ent))
+        ent._1.delete()
         None
       case Some((rows, schema)) =>
         Telemetry.l2Hits.increment()
@@ -287,7 +274,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * analyzes its own copy, so reusing the unresolved tree across path sets
     * is safe), and its (range, preds) when extraction is provably independent
     * of `nowNs` (explicit literal time bounds — the dashboard-repeat shape).
-    * A warm repeat of such a text skips Catalyst entirely: hash probe →
+    * A warm repeat of a time-fixed text skips Catalyst entirely: hash probe →
     * catalog prune (TTL-cached metadata) → plan cache hit. `fixed = None`
     * marks a text whose range DOES depend on nowNs (now()-relative or
     * default window): it is re-extracted from the cached parse on every call.
@@ -298,14 +285,16 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   }
 
   /** True iff `query`'s range and predicates are memoized as coming from
-    * literals: extraction gave the same result at two values of nowNs, and
-    * the range is neither the default window nor the full range. Such a
-    * query's answer depends only on the data the manifest version names,
-    * not on when it runs. A query not yet seen, seen as now-relative, or
-    * evicted from the text cache, is false.
+    * literals (extraction gave the same result at two values of nowNs, and
+    * the range is neither the default window nor the full range) and the
+    * serve that first planned it found no clock call ([[callsClock]]). Such
+    * a query's answer depends only on the data the manifest version names,
+    * not on when it runs, so it is the only kind any cache tier reuses. A
+    * query not yet served, now-relative, or evicted from the text cache, is
+    * false.
     */
   def isTimeFixed(query: String): Boolean =
-    textCache.synchronized(Option(textCache.get(query)).exists(_.fixed.isDefined))
+    textCache.synchronized(Option(textCache.get(query)).exists(_.timeFixed.contains(true)))
 
   /** `query`'s parse and its (range, preds) at `nowNs`. A first sighting
     * parses ONCE, then runs the (pure tree-walk, ~free) extraction at two
@@ -313,11 +302,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * from literals only ⇒ safe to memoize with the parse.
     */
   private def textOf(query: String,
-                     nowNs: Long): (LogicalPlan, (TimeRange, Seq[ColumnPredicate])) =
+                     nowNs: Long): (Text, (TimeRange, Seq[ColumnPredicate])) =
     textCache.synchronized(textCache.get(query)) match {
-      case Text(plan, Some(fixed)) => (plan, fixed)
-      case Text(plan, None) =>
-        (plan, withOptimizedFallback(extractFromParsed(plan, nowNs), plan, nowNs))
+      case text @ Text(_, Some(fixed)) => (text, fixed)
+      case text @ Text(plan, None) =>
+        (text, withOptimizedFallback(extractFromParsed(plan, nowNs), plan, nowNs))
       case null =>
         val plan = spark.sessionState.sqlParser.parsePlan(query)
         val a = extractFromParsed(plan, nowNs)
@@ -326,8 +315,20 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         val full = withOptimizedFallback(a, plan, nowNs)
         val text = Text(plan, if (fixed) Some(full) else None)
         textCache.synchronized(textCache.put(query, text))
-        (plan, full)
+        (text, full)
     }
+
+  /** True iff an analyzed plan, subqueries included, calls a clock function:
+    * one of the expressions Spark's `ComputeCurrentTime` fixes when a plan is
+    * optimized, so the plan's answer changes as time passes.
+    */
+  private def callsClock(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case p =>
+      p.expressions.exists(_.exists {
+        case _: CurrentTimestampLike | _: CurrentDate | _: CurrentTime => true
+        case _ => false
+      })
+    }.contains(true)
 
   /** The ranges extraction falls back to when the parse shows no time bound. */
   private def isFallback(range: TimeRange, nowNs: Long): Boolean =
@@ -373,10 +374,12 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * plan-cache and L2 keys, so two tenants or two versions never share an
     * entry. Rollup routing is off under either, because rollups are built
     * over the whole live warehouse.
+    * Only a time-fixed text ([[isTimeFixed]]) is looked up in and stored to
+    * the plan cache (so L1 and L2); any other is planned on every call.
     */
   def serve(query: String, nowNs: Long = System.currentTimeMillis() * 1000000L,
             tenant: Option[String] = None, asOf: Option[Long] = None): Served = {
-    val (parsed, (range, preds)) = textOf(query, nowNs)
+    val (text, (range, preds)) = textOf(query, nowNs)
     val basePaths = pruneIn(asOf.fold(catalog.state)(catalog.stateAt), range, preds)
     val paths = tenant.fold(basePaths)(t =>
       basePaths.filter(p => ChunkCatalog.tenantOf(catalog.root, p) == t))
@@ -387,8 +390,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val key = (query, paths ++ rollups.map("rollup:" + _.path), split)
     def served(df: DataFrame, mode: String, route: Route = Raw,
                rows: Option[Array[Row]] = None) = Served(df, rows, mode, route, paths)
+    val reuse = text.timeFixed.contains(true)
     var toLocalize: DataFrame = null
-    planCache.synchronized {
+    if (reuse) planCache.synchronized {
       val hit = planCache.get(key)
       if (hit != null) {
         Telemetry.cacheHits.increment()
@@ -409,10 +413,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     Telemetry.cacheMisses.increment()
     // L1 miss → probe the L2 disk tier before recomputing (only localized raw
     // results ever demote)
-    promoteFromL2(key).foreach(l => return served(l.df, "l2", rows = Some(l.rows)))
+    if (reuse) promoteFromL2(key).foreach(l => return served(l.df, "l2", rows = Some(l.rows)))
     // Reuse the cached PARSED tree — the ANTLR parse is paid once per text —
     // bound to THIS query's path set; ofRows analyzes it eagerly.
-    val raw = GraftBridge.ofRows(spark, withMetrics(parsed, relationOf(paths)))
+    val raw = GraftBridge.ofRows(spark, withMetrics(text.plan, relationOf(paths)))
+    if (text.timeFixed.isEmpty) text.timeFixed = Some(!callsClock(raw.queryExecution.analyzed))
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
     // aggregate the registered rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
@@ -449,7 +454,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         (raw.dropDuplicates(dedupCols), Raw)
       else (raw, Raw)
     }
-    planCache.synchronized { planCache.put(key, Planned(df, route)) }
+    if (text.timeFixed.contains(true))
+      planCache.synchronized { planCache.put(key, Planned(df, route)) }
     served(df, "computed", route)
   }
 
@@ -730,14 +736,13 @@ object QueryEngine {
     * `l2CacheDir = Some(dir)` enables the L2 disk result-cache tier (the
     * reference's foyer NVMe layer, cached_store.rs:49-181) rooted at `dir`;
     * `maxL2CacheBytes` bounds its on-disk footprint (foyer's fixed-capacity
-    * disk cache), and evicted files are physically deleted only after
-    * `l2DeleteGraceMs` so a concurrently promoted entry never loses its file
-    * mid-read (same grace idiom as chunk/rollup GC).
+    * disk cache). An entry is one `l2-<id>.bin` file, deleted as soon as it
+    * is evicted: no tier keeps anything by age, since only time-fixed texts
+    * are cached and a key alone says whether its entry is valid.
     */
   final case class QueryLimits(maxConcurrent: Int = 100, timeoutMs: Long = 300000L,
                                l2CacheDir: Option[String] = None,
-                               maxL2CacheBytes: Long = 256L << 20,
-                               l2DeleteGraceMs: Long = 300000L)
+                               maxL2CacheBytes: Long = 256L << 20)
 
   /** Plan-cache key: (query text, pruned paths + rollup ids, split active). */
   private type Key = (String, Seq[String], Boolean)
@@ -757,9 +762,10 @@ object QueryEngine {
     *  - `rows`: the stored result rows when a localized L1 entry, the repeat
     *    that localized it, or an L2 promote answered; shared with the cache,
     *    so read-only.
-    *  - `mode`: "computed" (this call planned the query, including the first
-    *    sighting after a maintenance rewrite changed the pruned-path-set key),
-    *    "l1" (plan or result cache hit) or "l2" (disk-tier promote).
+    *  - `mode`: "computed" (this call planned the query: a first sighting,
+    *    also after a maintenance rewrite changed the pruned-path-set key, or
+    *    any call of a text that is not time-fixed), "l1" (plan or result
+    *    cache hit) or "l2" (disk-tier promote).
     *  - `route`: which plan answers.
     *  - `paths`: the chunk paths the catalog prune selected.
     */
@@ -768,9 +774,13 @@ object QueryEngine {
 
   /** One text-cache entry: the parse, and the memoized (range, preds) of a
     * query whose time bounds are literals (None when they depend on nowNs).
+    * `timeFixed` ([[QueryEngine.isTimeFixed]]) is None until the first serve
+    * of a literal-bounded text plans it.
     */
   private final case class Text(plan: LogicalPlan,
-                                fixed: Option[(TimeRange, Seq[ColumnPredicate])])
+                                fixed: Option[(TimeRange, Seq[ColumnPredicate])]) {
+    @volatile var timeFixed: Option[Boolean] = if (fixed.isEmpty) Some(false) else None
+  }
 
   /** The one plan-cache value per key. */
   private sealed trait Entry {
@@ -815,14 +825,6 @@ object QueryEngine {
   private val watchdog: java.util.concurrent.ScheduledExecutorService =
     java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
       val t = new Thread(r, "graft-query-watchdog")
-      t.setDaemon(true)
-      t
-    })
-
-  /** Shared daemon scheduler for grace-deferred L2 cache file deletions. */
-  private val l2Janitor: java.util.concurrent.ScheduledExecutorService =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
-      val t = new Thread(r, "graft-l2-janitor")
       t.setDaemon(true)
       t
     })

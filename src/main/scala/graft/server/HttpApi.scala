@@ -109,18 +109,16 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   // write/compaction/gc changes the key and a stale structural hit is
   // impossible.
   //
-  // TTL rule: the TTL bounds staleness only where the answer depends on
-  // "now" — `/api/v1/query` without `time`, and SQL the engine has not
-  // memoized as time-independent ([[QueryEngine.isTimeFixed]]); their text
-  // does not change between repeats while "now" moves. Every other route
-  // (query_range, query with `time`, bounded SQL, labels, label values,
-  // series) is a function of its key alone and is served until the key
-  // changes. Entries are LRU, per-entry ≤ 256 KB (dashboard payloads), ≤ 256
-  // entries; TTL 0 disables the tier. Embedded stats (elapsed_ms) are the
-  // ORIGINAL compute's — documented cached-response semantics.
+  // Reuse by key, never by clock: only a response its key determines is
+  // stored — labels, label values, series, and the query routes whose SQL
+  // the engine reports time-fixed ([[QueryEngine.isTimeFixed]]: literal time
+  // bounds, no clock call). A request whose answer moves with "now"
+  // (`/api/v1/query` without `time`, now()-relative or unbounded SQL) is
+  // computed on every call, so a hit needs no age check and is served until
+  // the key changes. Entries are LRU, per-entry ≤ 256 KB (dashboard
+  // payloads), ≤ 256 entries. Embedded stats (elapsed_ms) are the ORIGINAL
+  // compute's — documented cached-response semantics.
 
-  /** TTL for byte-cache hits of now-relative requests; 0 disables the tier. */
-  @volatile var responseByteCacheTtlMs: Long = 2000L
   private val byteCacheMaxEntryBytes = 262144
   private val byteCache =
     new java.util.LinkedHashMap[String, HttpApi.CachedResponse](64, 0.75f, true) {
@@ -134,34 +132,26 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     s"$route|v${engine.catalog.state.version}|t$tenant|a$asOf|$canonical"
   }
 
-  /** Serve `key` from the byte cache if still valid; else compute the payload
-    * via `mk`, respond, and store it. `timeFixed` is evaluated after `mk`
-    * (the engine memoizes a query's time-independence while computing it):
-    * true exempts the entry from the TTL. NON-200 paths never enter the cache
-    * (mk throws → the standard handler guard responds).
+  /** Serve `key`'s stored bytes if any; else compute the payload via `mk`,
+    * respond, and store it when `timeFixed`. `timeFixed` is evaluated after
+    * `mk` (the engine classifies a query text while planning it). NON-200
+    * paths never enter the cache (mk throws → the standard handler guard
+    * responds).
     */
   private def respondCached(ex: HttpExchange, key: String, contentType: String,
-                            timeFixed: => Boolean)(mk: => Array[Byte]): Unit = {
-    val ttl = responseByteCacheTtlMs
-    if (ttl > 0) {
-      val hit = byteCache.synchronized(Option(byteCache.get(key)))
-      hit match {
-        case Some(c) if c.timeFixed || System.currentTimeMillis() - c.storedMs <= ttl =>
-          graft.engine.Telemetry.httpByteCacheHits.increment()
-          respond(ex, 200, c.bytes, c.contentType)
-          return
-        case Some(_) => byteCache.synchronized { byteCache.remove(key); () }
-        case None => ()
-      }
+                            timeFixed: => Boolean)(mk: => Array[Byte]): Unit =
+    byteCache.synchronized(byteCache.get(key)) match {
+      case null =>
+        val bytes = mk
+        if (bytes.length <= byteCacheMaxEntryBytes && timeFixed) {
+          val entry = HttpApi.CachedResponse(bytes, contentType)
+          byteCache.synchronized { byteCache.put(key, entry); () }
+        }
+        respond(ex, 200, bytes, contentType)
+      case hit =>
+        graft.engine.Telemetry.httpByteCacheHits.increment()
+        respond(ex, 200, hit.bytes, hit.contentType)
     }
-    val bytes = mk
-    if (ttl > 0 && bytes.length <= byteCacheMaxEntryBytes) {
-      val entry = HttpApi.CachedResponse(System.currentTimeMillis(), bytes, contentType,
-        timeFixed)
-      byteCache.synchronized { byteCache.put(key, entry); () }
-    }
-    respond(ex, 200, bytes, contentType)
-  }
 
   private val server = HttpServer.create(new java.net.InetSocketAddress(port), 16)
   // daemon handler threads: the pool must never keep a driver JVM alive after
@@ -373,10 +363,11 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     def req(k: String) = p.get(k).flatMap(_.headOption)
       .getOrElse(throw new IllegalArgumentException(s"missing $k param"))
     val (q, start, end, step) = (req("query"), req("start"), req("end"), req("step"))
+    // lazy: a byte-cache hit skips the transpile
+    lazy val sql = PromQL.transpileRange(q, secToNs(start), secToNs(end), step.toLong)
     respondCached(ex,
       byteCacheKey(ex, "query_range", s"$q|$start|$end|$step"), "application/json",
-      timeFixed = true) {
-      val sql = PromQL.transpileRange(q, secToNs(start), secToNs(end), step.toLong)
+      engine.isTimeFixed(sql)) {
       // same explicit-header tenant scoping as the SQL route
       engine.execute(sql, tenant = Option(ex.getRequestHeaders.getFirst("X-Graft-Tenant")))(
         df => ResultFormat.toPromMatrix(df).getBytes("UTF-8"))
@@ -388,10 +379,12 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     val q = p.get("query").flatMap(_.headOption)
       .getOrElse(throw new IllegalArgumentException("missing query param"))
     val time = p.get("time").flatMap(_.headOption)
+    // without `time` the SQL reads the engine's now-relative default window
+    lazy val sql = PromQL.transpileInstant(q, time.map(secToNs))
     respondCached(ex,
       byteCacheKey(ex, "query", s"$q|${time.getOrElse("")}"), "application/json",
-      timeFixed = time.isDefined) {
-      engine.execute(PromQL.transpileInstant(q, time.map(secToNs)),
+      engine.isTimeFixed(sql)) {
+      engine.execute(sql,
         tenant = Option(ex.getRequestHeaders.getFirst("X-Graft-Tenant")))(
         df => ResultFormat.toPromVector(df).getBytes("UTF-8"))
     }
@@ -624,9 +617,8 @@ object HttpApi {
     */
   val MaxResultRows: Int = 100000
 
-  /** One byte-cache entry; `timeFixed` entries ignore the TTL. */
-  private final case class CachedResponse(storedMs: Long, bytes: Array[Byte],
-                                          contentType: String, timeFixed: Boolean)
+  /** One byte-cache entry. */
+  private final case class CachedResponse(bytes: Array[Byte], contentType: String)
 
   /** Thrown by routes to produce a specific HTTP status (e.g. 413). */
   final case class HttpError(code: Int, msg: String) extends RuntimeException(msg)

@@ -113,9 +113,6 @@ object IvfIndex {
     cvecs.length
   }
 
-  /** Probe strategy the last `topKPq` call chose — observability for specs. */
-  @volatile var lastPqProbeMode: String = ""
-
   /** IVF-PQ read path: probe each query's `nProbe` nearest cells, ADC-score the
     * probed rows from their stored PQ codes (the scan reads the m-byte
     * `pq_codes` column, NOT the embedding column — column pruning on top of
@@ -146,12 +143,9 @@ object IvfIndex {
       throw new IllegalArgumentException(s"no PQ codebooks at $indexRoot — build with pqM > 0"))
     // limit+count reads at most threshold+1 rows — never a full panel scan
     val small = queries.limit(bulkThreshold + 1).count() <= bulkThreshold
-    if (!small) {
-      lastPqProbeMode = "bulk"
+    if (!small)
       return topKPqBulk(spark, indexRoot, queries, k, nProbe, rerankFactor,
         idCol, vecCol, queryIdCol, queryVecCol)
-    }
-    lastPqProbeMode = "driver"
     val centroids = spark.read.parquet(centroidsPath(indexRoot)).collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
     // distinct: the old groupBy-sum ADC happened to tolerate duplicate panel
@@ -266,9 +260,6 @@ object IvfIndex {
   def probedScan(spark: SparkSession, indexRoot: String, cells: Seq[Int]): DataFrame =
     spark.read.parquet(dataPath(indexRoot)).filter(col("cell").isin(cells: _*))
 
-  /** Probe strategy the last `topK` call chose — observability for specs. */
-  @volatile var lastProbeMode: String = ""
-
   /** ANN top-k over a materialized index: probe each query's `nProbe` nearest
     * cells, re-rank exactly inside them. Output schema matches the other ANN
     * paths: (query_id, id, cosine, rank).
@@ -287,12 +278,9 @@ object IvfIndex {
            bulkThreshold: Int = 4096): DataFrame = {
     // limit+count reads at most threshold+1 rows — never a full panel scan
     val small = queries.limit(bulkThreshold + 1).count() <= bulkThreshold
-    if (!small) {
-      lastProbeMode = "bulk"
+    if (!small)
       return topKBulk(spark, indexRoot, queries, k, nProbe, idCol, vecCol,
         queryIdCol, queryVecCol)
-    }
-    lastProbeMode = "driver"
     val centroids = spark.read.parquet(centroidsPath(indexRoot)).collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
     // distinct: a duplicated panel row would duplicate its probe rows and the

@@ -229,6 +229,64 @@ class EngineSpec extends AnyFunSuite {
       "repeat must re-prune to the same chunk, not the default window")
   }
 
+  test("a now()-relative count is planned on every call and declines as time " +
+    "passes, with the result cache on and off") {
+    // one sample per second from 10 s ago to 2 min ahead: a count over the
+    // last 10 s loses about one sample per second as the clock moves
+    val nowNs = System.currentTimeMillis() * 1000000L
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_now_"), cacheTtlMs = 0L)
+    new ChunkWriter(cat).write(Converters.pointsToDf(spark, (-10 until 120).map(i =>
+      MetricPoint(nowNs + i * 1000000000L, "cpu_usage", 1.0, Map("host" -> "server1")))))
+    val cached = new QueryEngine(spark, cat)
+    val uncached = new QueryEngine(spark, cat)
+    uncached.resultCacheEnabled = false
+    val recent = "timestamp > now() - INTERVAL '10' SECOND"
+    val queries = Seq(s"SELECT COUNT(*) AS c FROM metrics WHERE $recent",
+      // literal bounds as well: the range memoizes, the clock call still decides
+      s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= ${nowNs - hourNs} " +
+        s"AND timestamp_ns < ${nowNs + hourNs} AND $recent")
+    val cases = for (eng <- Seq(cached, uncached); q <- queries) yield (eng, q)
+    val rounds = (0 until 4).map { i =>
+      if (i > 0) Thread.sleep(2500L)
+      cases.map { case (eng, q) =>
+        val served = eng.serve(q)
+        assert(served.mode == "computed", s"round $i served from ${served.mode}: $q")
+        assert(!eng.isTimeFixed(q), s"round $i: classified time-fixed: $q")
+        served.df.collect()(0).getLong(0)
+      }
+    }
+    cases.indices.foreach { c =>
+      val counts = rounds.map(_(c))
+      assert(counts.zip(counts.tail).forall { case (x, y) => y < x },
+        s"result cache ${cases(c)._1.resultCacheEnabled}: the count must decline " +
+          s"on every repeat: $counts (${cases(c)._2})")
+    }
+  }
+
+  test("time-fixed after one serve: literal bounds and no clock call; only " +
+    "time-fixed texts are reused") {
+    val (eng, _) = freshEngine()
+    val fixed = Seq(
+      graft.promql.PromQL.transpileRange("sum by (host) (cpu_usage)", t0, t0 + 2 * hourNs, 600L),
+      graft.promql.PromQL.transpileInstant("cpu_usage", Some(t0 + hourNs)),
+      hourCounts(1),
+      s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0", // lower bound only
+      "SELECT COUNT(*) AS c FROM metrics WHERE timestamp >= TIMESTAMP '2024-01-01 01:00:00' " +
+        "AND timestamp < TIMESTAMP '2024-01-01 02:00:00'")
+    val notFixed = Seq(
+      "SELECT COUNT(*) AS c FROM metrics WHERE timestamp > now() - INTERVAL '5' MINUTE",
+      "SELECT COUNT(*) AS c FROM metrics", // default window
+      graft.promql.PromQL.transpileInstant("cpu_usage"), // no `time`
+      s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0 + $hourNs " +
+        s"AND timestamp_ns < $t0 + 2 * $hourNs") // literal arithmetic
+    (fixed ++ notFixed).foreach(q => assert(!eng.isTimeFixed(q), s"not served yet: $q"))
+    (fixed ++ notFixed).foreach(eng.serve(_))
+    fixed.foreach(q => assert(eng.isTimeFixed(q), s"must be time-fixed: $q"))
+    notFixed.foreach(q => assert(!eng.isTimeFixed(q), s"must not be time-fixed: $q"))
+    fixed.foreach(q => assert(eng.serve(q).mode == "l1", s"a time-fixed repeat must hit: $q"))
+    notFixed.foreach(q => assert(eng.serve(q).mode == "computed", s"must be planned again: $q"))
+  }
+
   test("schema drift across chunks: label-set union, null-fill, NULL-keeping !~") {
     val cat = new ChunkCatalog(Files.createTempDirectory("graft_drift_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)

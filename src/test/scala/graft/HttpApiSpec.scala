@@ -102,7 +102,7 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("r11 response-byte cache: repeat query_range serves identical cached " +
-    "bytes; a catalog commit invalidates; TTL 0 disables") {
+    "bytes; a catalog commit invalidates") {
     // dedicated warehouse + api: this test INGESTS (to prove invalidation),
     // which must not perturb the shared fixture's row counts
     val cat = new ChunkCatalog(Files.createTempDirectory("graft_bcache_"), cacheTtlMs = 0L)
@@ -125,7 +125,7 @@ class HttpApiSpec extends AnyFunSuite {
       val second = getA(path)
       assert(second.body() == first.body(), "cached bytes must equal the computed response")
       assert(graft.engine.Telemetry.httpByteCacheHits.sum() > h0,
-        "repeat within TTL must be a byte-cache hit")
+        "repeat must be a byte-cache hit")
       // a committed write bumps the manifest version → NEW key → fresh compute
       // that sees the new data (no stale bytes across commits)
       val pts = Seq(MetricPoint(t0 + 50L, "mem_usage", 42.0, Map("host" -> "server1")))
@@ -134,34 +134,26 @@ class HttpApiSpec extends AnyFunSuite {
       assert(third.statusCode() == 200)
       assert(third.body() != first.body(),
         "post-commit repeat must recompute (key carries the manifest version)")
-      // TTL 0 disables the tier entirely
-      val h1 = graft.engine.Telemetry.httpByteCacheHits.sum()
-      a.responseByteCacheTtlMs = 0L
-      getA(path); getA(path)
-      assert(graft.engine.Telemetry.httpByteCacheHits.sum() == h1,
-        "TTL 0 must disable byte-cache serving")
     } finally a.stop()
   }
 
-  test("response-byte cache TTL applies only to now-relative requests: " +
-    "time-fixed repeats hit past the TTL; a commit changes the key; TTL 0 disables") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bttl_"), cacheTtlMs = 0L)
+  test("response-byte cache stores only time-fixed requests: repeats hit with " +
+    "no sleep; a commit changes the key; /query without time and unbounded SQL never hit") {
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bfixed_"), cacheTtlMs = 0L)
     val pts0 = for (host <- Seq("server1", "server2"); i <- 0 until 6)
       yield MetricPoint(t0 + i * 600L * 1000000000L, "mem_usage",
         i / 10.0, Map("host" -> host))
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, pts0))
     val a = new HttpApi(new QueryEngine(spark, cat), port = 0).start()
-    a.responseByteCacheTtlMs = 50L
     def getA(path: String): HttpResponse[String] =
       client.send(HttpRequest.newBuilder(
         URI.create(s"http://127.0.0.1:${a.boundPort}$path")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
     def hits: Long = graft.engine.Telemetry.httpByteCacheHits.sum()
-    /** Compute once, wait past the TTL, repeat: (served as a hit, bodies equal). */
-    def repeatPastTtl(path: String): (Boolean, Boolean) = {
+    /** Compute once, repeat at once: (served as a hit, bodies equal). */
+    def repeat(path: String): (Boolean, Boolean) = {
       val first = getA(path)
       assert(first.statusCode() == 200, s"$path: ${first.body()}")
-      Thread.sleep(150L)
       val h0 = hits
       val second = getA(path)
       assert(second.statusCode() == 200, path)
@@ -175,12 +167,12 @@ class HttpApiSpec extends AnyFunSuite {
       val bounded = "/api/v1/sql?query=" + enc("SELECT host, COUNT(*) AS c FROM metrics " +
         s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs} GROUP BY host ORDER BY host")
       Seq(range, s"/api/v1/query?query=$promql&time=${startS + 3000L}", bounded).foreach { p =>
-        assert(repeatPastTtl(p) == ((true, true)), s"time-fixed request must stay a hit: $p")
+        assert(repeat(p) == ((true, true)), s"time-fixed request must be a hit: $p")
       }
-      // "now" moves between repeats of these: the TTL still applies
+      // "now" moves between repeats of these: their bytes are never stored
       val unbounded = "/api/v1/sql?query=" + enc("SELECT COUNT(*) AS c FROM metrics")
       Seq(s"/api/v1/query?query=$promql", unbounded).foreach { p =>
-        assert(!repeatPastTtl(p)._1, s"now-relative request must recompute past the TTL: $p")
+        assert(!repeat(p)._1, s"now-relative request must recompute: $p")
       }
       // a committed write bumps the manifest version → new key → recompute
       new ChunkWriter(cat).write(Converters.pointsToDf(spark,
@@ -189,9 +181,46 @@ class HttpApiSpec extends AnyFunSuite {
       val after = getA(bounded)
       assert(hits == h1 && after.body().contains("server3"),
         s"post-commit repeat must recompute: ${after.body()}")
-      a.responseByteCacheTtlMs = 0L
-      getA(range); getA(range)
-      assert(hits == h1, "TTL 0 must disable byte-cache serving")
+    } finally a.stop()
+  }
+
+  test("a now()-relative SQL count through /api/v1/sql is never a byte-cache " +
+    "hit and declines as time passes") {
+    // one sample per second from 10 s ago to 2 min ahead: a count over the
+    // last 10 s loses about one sample per second as the clock moves
+    val nowNs = System.currentTimeMillis() * 1000000L
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bnow_"), cacheTtlMs = 0L)
+    new ChunkWriter(cat).write(Converters.pointsToDf(spark, (-10 until 120).map(i =>
+      MetricPoint(nowNs + i * 1000000000L, "cpu_usage", 1.0, Map("host" -> "server1")))))
+    val a = new HttpApi(new QueryEngine(spark, cat), port = 0).start()
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val recent = "timestamp > now() - INTERVAL '10' SECOND"
+    val queries = Seq(s"SELECT COUNT(*) AS c FROM metrics WHERE $recent",
+      s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= ${nowNs - hourNs} " +
+        s"AND timestamp_ns < ${nowNs + hourNs} AND $recent")
+    def count(q: String): Long = {
+      val resp = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${a.boundPort}/api/v1/sql?query=${enc(q)}")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200, resp.body())
+      import org.json4s._
+      val JArray(List(JArray(List(JInt(c))))) =
+        org.json4s.jackson.JsonMethods.parse(resp.body()) \ "data"
+      c.toLong
+    }
+    try {
+      val h0 = graft.engine.Telemetry.httpByteCacheHits.sum()
+      val rounds = (0 until 4).map { i =>
+        if (i > 0) Thread.sleep(2500L)
+        queries.map(count)
+      }
+      queries.indices.foreach { qi =>
+        val counts = rounds.map(_(qi))
+        assert(counts.zip(counts.tail).forall { case (x, y) => y < x },
+          s"a count over the last 10 s must decline on every repeat: $counts (${queries(qi)})")
+      }
+      assert(graft.engine.Telemetry.httpByteCacheHits.sum() == h0,
+        "a now()-relative request must never be served from the byte cache")
     } finally a.stop()
   }
 

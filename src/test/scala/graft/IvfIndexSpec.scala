@@ -8,6 +8,16 @@ class IvfIndexSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
 
+  /** The probe route a `topK`/`topKPq` frame took, read from its own plan:
+    * the driver route joins a probe relation built from a driver-side RDD;
+    * the bulk route's plan has no RDD-backed relation.
+    */
+  private def probeRoute(df: org.apache.spark.sql.DataFrame): String = {
+    val rddBacked = df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    if (rddBacked) "driver" else "bulk"
+  }
+
   /** Deterministic clustered corpus: 3 well-separated direction clusters in R^8. */
   private def clustered(n: Int) = {
     import spark.implicits._
@@ -95,11 +105,11 @@ class IvfIndexSpec extends AnyFunSuite {
     // small panel routes to the driver probe
     val driver = IvfIndex.topK(spark, root, queries, k = 5, nProbe = 2)
     val driverRows = rows(driver)
-    assert(IvfIndex.lastProbeMode == "driver")
+    assert(probeRoute(driver) == "driver")
     // forced-bulk panel routes to the distributed probe; results identical
     // (same centroid tie order), including cosines bit-for-bit
     val bulk = IvfIndex.topK(spark, root, queries, k = 5, nProbe = 2, bulkThreshold = 8)
-    assert(IvfIndex.lastProbeMode == "bulk")
+    assert(probeRoute(bulk) == "bulk")
     assert(rows(bulk) == driverRows)
     // the bulk plan's probe side is a broadcast join over the centroid table —
     // no driver-materialized probe RDD anywhere in the plan
@@ -181,7 +191,7 @@ class IvfIndexSpec extends AnyFunSuite {
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     val got = IvfIndex.topKPq(spark, root, queries, k = 5, nProbe = nCells,
       rerankFactor = 8)
-    assert(IvfIndex.lastPqProbeMode == "driver")
+    assert(probeRoute(got) == "driver")
     val rows = (df: org.apache.spark.sql.DataFrame) =>
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(rows(got) == rows(Similarity.bruteForceTopK(corpus, queries, 5)))
@@ -228,13 +238,13 @@ class IvfIndexSpec extends AnyFunSuite {
         .sortBy(t => (t._1, t._4))
     val driver = IvfIndex.topKPq(spark, root, queries, k = 5, nProbe = 2,
       rerankFactor = 4)
-    assert(IvfIndex.lastPqProbeMode == "driver")
+    assert(probeRoute(driver) == "driver")
     val driverRows = rows(driver)
     // forced-bulk panel routes to the distributed probe; results identical
     // (same probe tie order, same exact-integer ADC, same rerank tie order)
     val bulk = IvfIndex.topKPq(spark, root, queries, k = 5, nProbe = 2,
       rerankFactor = 4, bulkThreshold = 8)
-    assert(IvfIndex.lastPqProbeMode == "bulk")
+    assert(probeRoute(bulk) == "bulk")
     assert(rows(bulk) == driverRows)
     // the bulk path must never materialize the query panel on the driver
     assert(!bulk.queryExecution.executedPlan.toString.contains("ExistingRDD"),
@@ -252,7 +262,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // with duplicate rows split row_number ranks across them)
     val dupBulk = IvfIndex.topKPq(spark, root, dupPanel, k = 5, nProbe = 2,
       rerankFactor = 4, bulkThreshold = 8)
-    assert(IvfIndex.lastPqProbeMode == "bulk")
+    assert(probeRoute(dupBulk) == "bulk")
     assert(rows(dupBulk) == driverRows, "bulk route: duplicate panel rows corrupted ranks")
     // the probe-all Quantize.pqTopK path dedups as well
     val cbs0 = IvfIndex.loadCodebooks(spark, root).get
@@ -323,12 +333,12 @@ class IvfIndexSpec extends AnyFunSuite {
     val auto = IvfIndex.topKPq(spark, root, queries, k = 3, nProbe = 2,
       rerankFactor = 4)
     val autoRows = rows(auto)
-    assert(IvfIndex.lastPqProbeMode == "bulk", "a 4200-query panel must auto-route to bulk")
+    assert(probeRoute(auto) == "bulk", "a 4200-query panel must auto-route to bulk")
     assert(!auto.queryExecution.executedPlan.toString.contains("ExistingRDD"),
       "auto-bulk must never collect the panel onto the driver")
     val driver = IvfIndex.topKPq(spark, root, queries, k = 3, nProbe = 2,
       rerankFactor = 4, bulkThreshold = 100000)
-    assert(IvfIndex.lastPqProbeMode == "driver")
+    assert(probeRoute(driver) == "driver")
     assert(rows(driver) == autoRows, "bulk and driver paths must agree bit-for-bit")
     assert(autoRows.size == 4200 * 3)
   }

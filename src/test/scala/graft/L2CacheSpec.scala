@@ -20,8 +20,7 @@ class L2CacheSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L
 
   /** Engine with the L2 tier on; [[demote]] puts an entry there. */
-  private def l2Engine(maxL2Bytes: Long = 256L << 20,
-                       graceMs: Long = 0L): (QueryEngine, ChunkCatalog, java.io.File) = {
+  private def l2Engine(maxL2Bytes: Long = 256L << 20): (QueryEngine, ChunkCatalog, java.io.File) = {
     val cat = new ChunkCatalog(Files.createTempDirectory("graft_l2_"), cacheTtlMs = 0L)
     val points = for {
       h <- 0 until 3; m <- Seq("cpu_usage", "mem_usage")
@@ -31,8 +30,7 @@ class L2CacheSpec extends AnyFunSuite {
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, points))
     val dir = Files.createTempDirectory("graft_l2c_").toFile
     val eng = new QueryEngine(spark, cat, QueryEngine.QueryLimits(
-      l2CacheDir = Some(dir.getAbsolutePath), maxL2CacheBytes = maxL2Bytes,
-      l2DeleteGraceMs = graceMs))
+      l2CacheDir = Some(dir.getAbsolutePath), maxL2CacheBytes = maxL2Bytes))
     (eng, cat, dir)
   }
 
@@ -57,8 +55,10 @@ class L2CacheSpec extends AnyFunSuite {
     rows
   }
 
-  private def l2Dirs(root: java.io.File): Seq[java.io.File] =
-    Option(root.listFiles()).map(_.toSeq.filter(_.isDirectory)).getOrElse(Nil)
+  /** The tier's entry files, one `l2-<id>.bin` per demoted result. */
+  private def l2Files(root: java.io.File): Seq[java.io.File] =
+    Option(root.listFiles()).map(_.toSeq.filter(f =>
+      f.isFile && f.getName.startsWith("l2-") && f.getName.endsWith(".bin"))).getOrElse(Nil)
 
   private val qA = s"SELECT metric_name, COUNT(*) AS c FROM metrics " +
     s"WHERE timestamp_ns >= $t0 GROUP BY metric_name ORDER BY metric_name"
@@ -68,10 +68,10 @@ class L2CacheSpec extends AnyFunSuite {
   test("L1 eviction demotes to disk; repeat serves from L2 as a LocalRelation") {
     val (eng, _, dir) = l2Engine()
     val expected = demote(eng, qA)
-    assert(l2Dirs(dir).nonEmpty, "demoted entry dir must exist")
-    // localized rows demote driver-serialized (no Spark job on promote)
-    assert(l2Dirs(dir).exists(d => new java.io.File(d, "rows.bin").isFile),
-      "a demoted result must use the serialized-rows form")
+    // localized rows demote driver-serialized into one file (no Spark job
+    // on promote), and nothing else is left in the tier's directory
+    assert(l2Files(dir).size == 1, "a demoted result must be one l2-*.bin file")
+    assert(dir.listFiles().length == 1, s"unexpected entries: ${dir.listFiles().toSeq}")
     val h0 = Telemetry.l2Hits.sum()
     val promoted = eng.serve(qA)
     assert(Telemetry.l2Hits.sum() == h0 + 1, "repeat must be an L2 hit")
@@ -89,15 +89,15 @@ class L2CacheSpec extends AnyFunSuite {
     assert(Telemetry.l2Hits.sum() == h1, "promoted entry must hit L1, not L2 again")
   }
 
-  test("L2 byte budget LRU-evicts demoted files (grace-deferred delete)") {
-    val (eng, _, dir) = l2Engine(maxL2Bytes = 1L, graceMs = 0L)
+  test("L2 byte budget LRU-evicts demoted files and deletes them at once") {
+    val (eng, _, dir) = l2Engine(maxL2Bytes = 1L)
     demote(eng, qA)
     // a second demote exceeds the 1-byte L2 budget, which then LRU-evicts
     // qA's file
     demote(eng, qB)
     // budget of 1 byte keeps only the most recent demoted entry; the evicted
-    // file is physically deleted (grace 0)
-    eventually() { l2Dirs(dir).size == 1 }
+    // file is gone by the time the demote that evicted it is counted
+    assert(l2Files(dir).size == 1, s"evicted file not deleted: ${l2Files(dir)}")
   }
 
   test("staleness: new ingest changes the key, so L2 is never consulted") {
@@ -116,15 +116,12 @@ class L2CacheSpec extends AnyFunSuite {
     val (eng, _, dir) = l2Engine()
     val expected = demote(eng, qA)
     // corrupt every demoted payload
-    l2Dirs(dir).foreach { d =>
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName == "rows.bin")
-        .foreach { f => val w = new java.io.FileOutputStream(f); w.write(1); w.close() }
-    }
+    l2Files(dir).foreach { f => val w = new java.io.FileOutputStream(f); w.write(1); w.close() }
     val h0 = Telemetry.l2Hits.sum()
     val served = eng.sql(qA).collect().map(_.toSeq).toSeq
     assert(served == expected, "corrupt L2 entry must recompute, not fail or mis-serve")
     assert(Telemetry.l2Hits.sum() == h0, "a failed promote is not a hit")
+    assert(l2Files(dir).isEmpty, "an unreadable entry's file is deleted")
   }
 
   test("plan-only entries (never materialized) do not demote") {
@@ -139,6 +136,6 @@ class L2CacheSpec extends AnyFunSuite {
     eng.evictL1(qB)
     Thread.sleep(500)
     assert(Telemetry.l2Demotions.sum() == d0, "plan-only entries must not demote")
-    assert(l2Dirs(dir).isEmpty)
+    assert(l2Files(dir).isEmpty)
   }
 }
