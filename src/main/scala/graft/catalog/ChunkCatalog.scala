@@ -111,28 +111,23 @@ final case class RollupMeta(
   * recomputed against the fresh state and retried with backoff. This is the
   * reference's ETag-CAS commit loop (s3.rs:181-339) on a filesystem: safe for
   * MULTIPLE writer processes sharing the directory (multi-driver maintenance),
-  * all-or-nothing per mutation. A crash after shard writes but before the
-  * manifest link leaves unreferenced orphan files and a fully consistent old
-  * catalog. Superseded manifest/shard files are deleted after the commit
-  * (best-effort; orphans are never read because loads resolve files strictly
-  * through the newest manifest, and a reader that races the cleanup re-lists).
+  * all-or-nothing per mutation. Every mutation takes the same path: the
+  * JVM-wide per-root [[ChunkCatalog.GroupCommitter]] chains the mutations
+  * queued in this JVM and lands them as one CAS link ([[commitGroup]]); other
+  * processes contend with it through the link alone. A crash after shard
+  * writes but before the manifest link leaves unreferenced orphan files and a
+  * fully consistent old catalog. Superseded manifest/shard files are deleted
+  * after the commit (best-effort; orphans are never read because loads
+  * resolve files strictly through the newest manifest, and a reader that
+  * races the cleanup re-lists).
   *
   * The global hour-bucket time_index is derived in memory from the chunk set
   * (it is no longer persisted — it cannot diverge). Reads go through a TTL
   * cache (reference uses 60 s, s3.rs:427-450); revalidation compares the
   * manifest version and re-parses only shards whose version changed, so a
   * foreign writer costs proportional-to-delta, not proportional-to-catalog.
-  * A legacy single-document `catalog.json` is read transparently and migrated
-  * to the sharded layout on the first mutation.
   */
 final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
-    val shardSpanHours: Int = 24,
-    // CAS conflict budget per mutation (reference uses 5, s3.rs:30). The
-    // default suits a handful of writers; a deliberately contended fleet
-    // (many concurrent maintenance drivers) should raise it — full-jitter
-    // backoff makes progress certain, but a fixed small budget can starve
-    // the unluckiest writer under sustained contention.
-    casMaxRetries: Int = 10,
     // Time travel (Delta/Iceberg AS OF analog, flagged extension): keep this
     // many SUPERSEDED manifests on disk besides the current one; [[stateAt]]
     // reassembles any retained version. 0 (default) = today's delete-on-
@@ -143,22 +138,10 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     // retain=0 writer's post-commit cleanup deletes the manifests a
     // retain=N writer is keeping (the setting is a warehouse policy, not a
     // per-process preference).
-    val manifestRetain: Int = 0,
-    // r10 group commit (VERDICT "Next round #7"): coalesce concurrent mutate
-    // calls from THIS JVM (any instance on the same root — an ingester
-    // process's flush threads + maintenance loops) into ONE CAS link. Deltas
-    // chain against the projected state, so semantics are identical to
-    // back-to-back commits; the version bumps once per GROUP (numbers stay
-    // dense — the SpentVersions floor requires that). Cross-process writers
-    // still contend through the raw CAS — set false to measure that floor
-    // (`concurrent_commits_per_sec_nogroup` in CATALOG_SCALE.json).
-    val groupCommit: Boolean = true) {
+    val manifestRetain: Int = 0) {
 
   import ChunkCatalog._
 
-  // pre-CAS layouts, read transparently and migrated on first mutation
-  private val legacyManifestFile = root.resolve("manifest.json")
-  private val legacyFile = root.resolve("catalog.json")
   private val shardDir = root.resolve("shards")
   // spent-version ledger: proof a version number was used, so GC'd manifests
   // can't be resurrected (see tryCommit). Kept bounded by SpentVersions floor
@@ -166,11 +149,11 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
   private val versionMarkers = root.resolve(".versions")
   private val lock = new Object
   // r13 (serve-tail audit): reader revalidation must NEVER wait behind a
-  // writer's commit — mutateUngrouped/commitGroup hold `lock` through delta
-  // evaluation, shard/manifest writes AND the jittered CAS-retry sleeps (up
-  // to 128 ms each), and the soak measured warm-serve p99 inheriting exactly
-  // those stalls (zero-work L1 hits tailing at ~400 ms with idle cores and
-  // GC < 4%, because their catalog TTL refresh queued behind commits).
+  // writer's commit — commitGroup holds `lock` through delta evaluation,
+  // shard/manifest writes AND the jittered CAS-retry sleeps (up to 128 ms
+  // each), and the soak measured warm-serve p99 inheriting exactly those
+  // stalls (zero-work L1 hits tailing at ~400 ms with idle cores and GC < 4%,
+  // because their catalog TTL refresh queued behind commits).
   // Loads are read-only against atomically-committed manifests (readers
   // already tolerate racing deletions via the loadOrDiff spin), so they only
   // need to serialize against EACH OTHER (single-flight), not against
@@ -216,7 +199,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     */
   def hasActiveSplit: Boolean = state.activeSplits.nonEmpty
 
-  // --- writes (all single-writer, manifest-rename committed) ---------------
+  // --- writes (all through [[mutate]], manifest-link committed) -----------
 
   def register(chunk: ChunkMeta): Unit = registerAll(Seq(chunk))
 
@@ -330,7 +313,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     * synchronizing on that same lock while holding the JVM-wide per-root
     * leaderLock stalled every grouped flush on the root. The manifest
     * mutation that follows is pending-list-only (microseconds under the
-    * lock) and routes through the NORMAL — possibly grouped — commit path.
+    * lock) and routes through the same group commit as every mutation.
     * Safety: deletion is exists-checked idempotent, so a concurrent gc
     * double-delete is harmless, and a failed/crashed commit leaves the paths
     * pending for a later retry against already-deleted files. The mutation
@@ -384,66 +367,26 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
   private def shardKeyOf(span: Int, c: ChunkMeta): Long =
     Math.floorDiv(hourBucket(c.minTimestampNs), span.toLong)
 
-  /** Load-mutate-commit. With [[groupCommit]] (default), the call routes
-    * through the JVM-wide per-root [[ChunkCatalog.GroupCommitter]]: whatever
-    * mutations are queued when a leader takes over are chained (each delta
-    * evaluated against the previous one's PROJECTED state — identical
-    * semantics to back-to-back commits) and land as ONE manifest version /
-    * ONE CAS link. With groupCommit = false the old per-instance loop runs —
-    * the cross-process contention floor CATALOG_SCALE.json records.
+  /** Load-mutate-commit, always through the JVM-wide per-root
+    * [[ChunkCatalog.GroupCommitter]]: whatever mutations are queued when a
+    * leader takes over are chained (each delta evaluated against the previous
+    * one's PROJECTED state — identical semantics to back-to-back commits) and
+    * land as ONE manifest version / ONE CAS link ([[commitGroup]]).
     */
   private def mutate[A](delta: Store => Plan[A]): A =
-    if (groupCommit)
-      ChunkCatalog.committerFor(root)
-        .run(this, delta.asInstanceOf[Store => Plan[Any]]).asInstanceOf[A]
-    else mutateUngrouped(delta)
-
-  /** CAS conflict retries (the reference's atomic-update loop,
-    * s3.rs:30-60,181-339: 5 attempts, exponential backoff from 100 ms). The
-    * delta is RECOMPUTED against freshly-validated state on every attempt, so
-    * a conflicting foreign commit can never be clobbered. The in-JVM lock
-    * only serializes this instance's writers; cross-instance and
-    * cross-process safety comes from the manifest link CAS.
-    */
-  private def mutateUngrouped[A](delta: Store => Plan[A]): A = lock.synchronized {
-    var attempt = 0
-    while (true) {
-      val s = freshStore()
-      val plan = delta(s)
-      if (tryCommit(s, Seq(plan)))
-        return plan.result
-      attempt += 1
-      if (attempt >= casMaxRetries)
-        throw new IllegalStateException(s"catalog commit: too many CAS conflicts ($attempt)")
-      // Do NOT invalidate the cache on a lost race: the next freshStore()
-      // diffs from the cached store — loadFromManifest reuses every shard
-      // whose (key, version) is unchanged, so the retry reads the new
-      // manifest plus O(shards the winner touched), typically one. The old
-      // invalidateCache() here forced a FULL cold load per retry (~1.6 s at
-      // 10⁶ chunks) and capped 8-writer throughput at 4.3 commits/s; with
-      // the diff it is the ~8 ms commit itself that dominates. (Orphan shard
-      // files from our failed attempt are invisible — loads only read shards
-      // the committed manifest lists.)
-      //
-      // FULL-jitter backoff: deterministic sleeps keep a herd of losers in
-      // lockstep, re-colliding every round (the reference's S3 round-trip
-      // latency jitters for free; a local FS needs it explicitly). The window
-      // is sized to the ~8 ms critical section, capped at 128 ms — the old
-      // 1.6 s cap was sized to the cold-load retry cost that no longer exists.
-      Thread.sleep(1L + java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(8L * (1L << math.min(attempt, 4))))
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    ChunkCatalog.committerFor(root)
+      .run(this, delta.asInstanceOf[Store => Plan[Any]]).asInstanceOf[A]
 
   /** Leader body of a group commit: evaluate every queued delta against the
     * PREVIOUS delta's projected state (identical semantics to back-to-back
     * commits — a delta that inspects the store sees its predecessors'
     * effects), then CAS-commit the whole chain as one manifest version. On a
-    * lost CAS the entire group re-evaluates against fresh state, exactly as
-    * individual retries would. A delta that throws fails only ITS caller
-    * (completed with the error, excluded from the chain). After a successful
-    * commit every participating instance's cache gets the committed store.
+    * lost CAS the entire group re-evaluates against fresh state — the
+    * reference's atomic-update loop (s3.rs:30-60,181-339), so a conflicting
+    * foreign commit can never be clobbered. A delta that throws fails only ITS
+    * caller (completed with the error, excluded from the chain). After a
+    * successful commit every participating instance's cache gets the
+    * committed store.
     */
   private[catalog] def commitGroup(ops: Seq[ChunkCatalog.PendingOp]): Unit =
     lock.synchronized {
@@ -476,10 +419,19 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
             }
             return
           }
+          // Lost the CAS to another writer. Do NOT invalidate the cache: the
+          // next freshStore() diffs from the cached store, so the retry reads
+          // the new manifest plus only the shards the winner touched (a full
+          // cold reload per retry costs ~1.6 s at 10⁶ chunks). Our orphaned
+          // shard files are invisible — loads only read what a manifest lists.
           attempt += 1
-          if (attempt >= casMaxRetries)
+          if (attempt >= CasMaxRetries)
             throw new IllegalStateException(
               s"catalog commit: too many CAS conflicts ($attempt)")
+          // FULL-jitter backoff: deterministic sleeps keep a herd of losers in
+          // lockstep, re-colliding every round (the reference's S3 round-trip
+          // latency jitters for free; a local FS needs it explicitly). The
+          // window is sized to the ~8 ms critical section, capped at 128 ms.
           Thread.sleep(1L + java.util.concurrent.ThreadLocalRandom.current()
             .nextLong(8L * (1L << math.min(attempt, 4))))
         }
@@ -548,32 +500,14 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
 
   private def loadOnce(prior: Option[Store]): Store = {
     val ver = currentManifestVersion()
-    if (ver > 0L) {
+    if (ver == 0L) Store(ShardSpanHours, Map.empty, Map.empty, Map.empty, CatalogState.empty)
+    else {
       val m = parseManifest(readUtf8(root.resolve(manifestFileName(ver))))
       prior match {
-        case Some(s) if !s.legacy && s.assembled.version == m.version => s
-        case p => loadFromManifest(m, p.filterNot(_.legacy))
+        case Some(s) if s.assembled.version == m.version => s
+        case p => loadFromManifest(m, p)
       }
-    } else if (Files.exists(legacyManifestFile)) {
-      // pre-CAS layout (unversioned manifest.json): read it as-is; the first
-      // mutation commits a versioned manifest and deletes it
-      val m = parseManifest(readUtf8(legacyManifestFile))
-      prior match {
-        case Some(s) if !s.legacy && s.assembled.version == m.version => s
-        case p => loadFromManifest(m, p.filterNot(_.legacy))
-      }
-    } else if (Files.exists(legacyFile)) {
-      val st = parse(readUtf8(legacyFile))
-      val shards = st.chunks.values.toSeq.groupBy(shardKeyOf(shardSpanHours, _))
-        .map { case (k, cs) => k -> cs.map(c => c.path -> c).toMap }
-      Store(shardSpanHours, shards.keys.map(_ -> 0L).toMap, Map.empty, shards, st,
-        legacy = true)
-    } else if (currentManifestVersion() > 0L) {
-      // a foreign writer migrated the legacy layout between our two checks —
-      // its versioned manifest is the truth now
-      loadOnce(prior)
-    } else Store(shardSpanHours, Map.empty, Map.empty, Map.empty, CatalogState.empty,
-      legacy = false)
+    }
   }
 
   private def loadFromManifest(m: Manifest, prior: Option[Store]): Store = {
@@ -604,7 +538,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     // only: O(changed chunks), not O(catalog). Order inside timeIndex lists
     // is immaterial (chunksInRange sets+sorts; allChunks sorts).
     val assembled = prior match {
-      case Some(s) if !s.legacy =>
+      case Some(s) =>
         val newKeys = m.shards.map(_.key).toSet
         val removedKeys = s.shards.keysIterator.filterNot(newKeys.contains)
         val changedKeys = toLoad.iterator.map(_.key)
@@ -613,8 +547,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
       case _ => assemble(m, shards)
     }
     Store(m.spanHours, m.shards.map(e => e.key -> e.ver).toMap,
-      m.shards.map(e => e.key -> e.file).toMap, shards,
-      assembled, legacy = false)
+      m.shards.map(e => e.key -> e.file).toMap, shards, assembled)
   }
 
   /** Patch a prior assembled state with the delta of changed shards: drop the
@@ -665,12 +598,6 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
       m.activeSplits, m.pendingDeletes, m.rollups, m.tableStats)
   }
 
-  /** Apply one mutation delta and try to commit it: write dirty shard files
-    * under new uniquely-named versions, then hard-link the manifest to the
-    * next version number — the atomic CAS commit point. Returns false (after
-    * cleaning up its orphaned shard files) when another writer committed that
-    * version first; the caller recomputes and retries.
-    */
   /** Apply one plan to an in-memory store (no I/O): the state fold shared by
     * [[tryCommit]] and the group-commit delta chaining. Re-registering an
     * existing path OVERWRITES it (reference semantics,
@@ -702,6 +629,12 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     (s.copy(shards = shards, assembled = assembled), dirty)
   }
 
+  /** Fold a group's plans into one state and try to commit it: write dirty
+    * shard files under new uniquely-named versions, then hard-link the
+    * manifest to the next version number — the atomic CAS commit point.
+    * Returns false (after cleaning up its orphaned shard files) when another
+    * writer committed that version first; the caller recomputes and retries.
+    */
   private def tryCommit(s0: Store, plans: Seq[Plan[_]]): Boolean = {
     // chain every plan's fold; ONE version bump for the whole group
     var folded = s0
@@ -713,13 +646,7 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
     val version = s0.assembled.version + 1
     val assembled = folded.assembled.copy(version = version)
     val shards = folded.shards
-    // Legacy migration rewrites every shard once; steady state touches only
-    // the shards the deltas landed in.
-    val dirty =
-      if (s0.legacy) shards.keySet ++ s0.shards.keySet
-      else dirtyAcc
-
-    val (dropped, kept) = dirty.partition(k => shards.getOrElse(k, Map.empty).isEmpty)
+    val (dropped, kept) = dirtyAcc.partition(k => shards.getOrElse(k, Map.empty).isEmpty)
     val nextShards = shards -- dropped
     val nextVers = (s0.shardVers -- dropped) ++ kept.map(_ -> version)
 
@@ -776,11 +703,11 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
       return false
     }
 
-    // Post-commit cleanup: superseded manifest versions + shard files, emptied
-    // shards, and the legacy documents. Failures leave orphans that are never
-    // read (loads resolve strictly through the newest manifest). A version is
-    // marked before deletion in case its committer crashed pre-marker, so it
-    // can never be resurrected as a zombie.
+    // Post-commit cleanup: superseded manifest versions + shard files and
+    // emptied shards. Failures leave orphans that are never read (loads
+    // resolve strictly through the newest manifest). A version is marked
+    // before deletion in case its committer crashed pre-marker, so it can
+    // never be resurrected as a zombie.
     try {
       var v = version - 1 - math.max(0, manifestRetain)
       while (v > 0L && {
@@ -799,12 +726,10 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
         // age guard so a racing writer's just-written (not yet linked) shard
         // files survive
         sweepUnreferencedShards()
-      Files.deleteIfExists(legacyManifestFile)
-      if (s0.legacy) Files.deleteIfExists(legacyFile)
     } catch { case scala.util.control.NonFatal(_) => () }
 
     offerCached(System.currentTimeMillis(),
-      Store(s0.spanHours, nextVers, nextFiles, nextShards, assembled, legacy = false))
+      Store(s0.spanHours, nextVers, nextFiles, nextShards, assembled))
     true
   }
 
@@ -863,6 +788,17 @@ final class ChunkCatalog(val root: Path, cacheTtlMs: Long = 60000L,
 
 object ChunkCatalog {
 
+  /** Hours of chunk min-timestamps per shard of a new catalog. An existing
+    * catalog keeps the span its manifest records.
+    */
+  private val ShardSpanHours = 24
+
+  /** CAS conflicts one group commit absorbs before failing its callers
+    * (reference uses 5, s3.rs:30). Full-jitter backoff makes progress
+    * certain; the budget only bounds the unluckiest writer's wait.
+    */
+  private val CasMaxRetries = 10
+
   /** In-memory store: per-shard chunk maps + the assembled global view.
     * Authoritative only between revalidations — any writer (this instance or
     * a foreign process) may advance the on-disk version at any time; every
@@ -875,8 +811,7 @@ object ChunkCatalog {
       shardVers: Map[Long, Long],
       shardFiles: Map[Long, String],
       shards: Map[Long, Map[String, ChunkMeta]],
-      assembled: CatalogState,
-      legacy: Boolean)
+      assembled: CatalogState)
 
   /** One mutation expressed as a delta against a fresh store: chunk paths to
     * remove, chunks to add, a patch over the small manifest fields, and the
@@ -1103,21 +1038,6 @@ object ChunkCatalog {
       case (k, v) => k -> (JLong(v): JValue)
     }))
 
-  /** Legacy single-document codec — still the migration read path, and a
-    * convenient whole-state serialization for tests.
-    */
-  def render(st: CatalogState): String = {
-    val doc = JObject(List[(String, JValue)](
-      "version" -> JLong(st.version),
-      "chunks" -> JObject(st.chunks.toList.sortBy(_._1).map {
-        case (k, v) => k -> (chunkToJson(v): JValue)
-      }),
-      "time_index" -> JObject(st.timeIndex.toList.map {
-        case (k, v) => k.toString -> (JArray(v.sorted.map(JString(_): JValue)): JValue)
-      })) ++ smallFieldsJson(st.activeSplits, st.pendingDeletes, st.rollups, st.tableStats))
-    JsonMethods.pretty(JsonMethods.render(doc))
-  }
-
   def renderShard(chunks: Map[String, ChunkMeta]): String =
     JsonMethods.compact(JsonMethods.render(JObject(
       "chunks" -> JObject(chunks.toList.sortBy(_._1).map {
@@ -1220,28 +1140,6 @@ object ChunkCatalog {
       case _ => Map.empty[String, Long]
     }
     (splits, pending, rollupsFromJson(doc), tableStats)
-  }
-
-  /** Legacy single-document parse (also the migration read path). */
-  def parse(json: String): CatalogState = {
-    val doc = JsonMethods.parse(json)
-    val chunks = (doc \ "chunks") match {
-      case JObject(fields) => fields.map { case (path, j) => path -> chunkFromJson(path, j) }.toMap
-      case _ => Map.empty[String, ChunkMeta]
-    }
-    val timeIndex = (doc \ "time_index") match {
-      case JObject(fields) =>
-        scala.collection.immutable.TreeMap.from(fields.map { case (k, v) =>
-          k.toLong -> (v match {
-            case JArray(a) => a.collect { case JString(s) => s }
-            case _ => Nil
-          })
-        })
-      case _ => scala.collection.immutable.TreeMap.empty[Long, List[String]]
-    }
-    val (splits, pending, rollups, tableStats) = smallFieldsFromJson(doc)
-    CatalogState(long(doc \ "version"), chunks, timeIndex, splits, pending, rollups,
-      tableStats)
   }
 
   def parseShard(json: String): Map[String, ChunkMeta] =

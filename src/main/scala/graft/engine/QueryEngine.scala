@@ -285,21 +285,20 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   }
 
   /** True iff `query`'s range and predicates are memoized as coming from
-    * literals (extraction gave the same result at two values of nowNs, and
-    * the range is neither the default window nor the full range) and the
-    * serve that first planned it found no clock call ([[callsClock]]). Such
-    * a query's answer depends only on the data the manifest version names,
-    * not on when it runs, so it is the only kind any cache tier reuses. A
-    * query not yet served, now-relative, or evicted from the text cache, is
-    * false.
+    * literals (parse-only extraction found a time bound, so the range is
+    * neither the default window nor the full range) and the serve that first
+    * planned it found no clock call ([[callsClock]]). Such a query's answer
+    * depends only on the data the manifest version names, not on when it
+    * runs, so it is the only kind any cache tier reuses. A query not yet
+    * served, now-relative, or evicted from the text cache, is false.
     */
   def isTimeFixed(query: String): Boolean =
     textCache.synchronized(Option(textCache.get(query)).exists(_.timeFixed.contains(true)))
 
   /** `query`'s parse and its (range, preds) at `nowNs`. A first sighting
-    * parses ONCE, then runs the (pure tree-walk, ~free) extraction at two
-    * distant nowNs values: identical non-fallback results ⇒ the range comes
-    * from literals only ⇒ safe to memoize with the parse.
+    * parses ONCE and runs the parse-only extraction, which reads `nowNs`
+    * only to build the default window: any other result comes from literals
+    * alone and is memoized with the parse.
     */
   private def textOf(query: String,
                      nowNs: Long): (Text, (TimeRange, Seq[ColumnPredicate])) =
@@ -310,8 +309,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       case null =>
         val plan = spark.sessionState.sqlParser.parsePlan(query)
         val a = extractFromParsed(plan, nowNs)
-        val fixed = !isFallback(a._1, nowNs) &&
-          a == extractFromParsed(plan, nowNs + 7200L * 1000000000L)
+        val fixed = !isFallback(a._1, nowNs)
         val full = withOptimizedFallback(a, plan, nowNs)
         val text = Text(plan, if (fixed) Some(full) else None)
         textCache.synchronized(textCache.put(query, text))
@@ -773,7 +771,9 @@ object QueryEngine {
                           route: Route, paths: Seq[String])
 
   /** One text-cache entry: the parse, and the memoized (range, preds) of a
-    * query whose time bounds are literals (None when they depend on nowNs).
+    * query whose parse shows literal time bounds (None when parse-only
+    * extraction fell back to the default window or the full range, where
+    * the bounds may come from now() and are found again on every call).
     * `timeFixed` ([[QueryEngine.isTimeFixed]]) is None until the first serve
     * of a literal-bounded text plans it.
     */

@@ -19,7 +19,7 @@ object ResultFormat {
 
   /** One cell → JSON with the reference's per-type conversions (timestamps as
     * unix NANOSECONDS, sql_http.rs:269-287). Shared by the buffered JSON
-    * response and the SSE streaming frames.
+    * response and the streaming frames.
     */
   def jsonValue(row: org.apache.spark.sql.Row, i: Int, dt: DataType): JValue =
     if (row.isNullAt(i)) JNull
@@ -41,6 +41,34 @@ object ResultFormat {
         JString(java.util.Base64.getEncoder.encodeToString(row.getAs[Array[Byte]](i)))
       case _ => JString(String.valueOf(row.get(i)))
     }
+
+  /** Streams `df` as `{type: "data", rows, [columns]}` frames of at most
+    * `batchRows` rows, hands each frame to `emit` and returns the row count —
+    * the SSE and WebSocket streams share it. Partition-at-a-time delivery:
+    * toLocalIterator never materializes the whole result on the driver (the
+    * reference streams RecordBatches the same way). `withColumns` adds the
+    * column list: live-tail frames carry their own, since the tail's schema
+    * is the flushed chunks', not the query result's (the reference's
+    * batch_to_json is self-describing the same way).
+    */
+  def streamFrames(df: DataFrame, batchRows: Int, withColumns: Boolean)(
+      emit: JObject => Unit): Long = {
+    import scala.jdk.CollectionConverters._
+    val schema = df.schema
+    val columns = List[(String, JValue)](
+      "columns" -> JArray(schema.fieldNames.toList.map(JString(_))))
+    var n = 0L
+    df.toLocalIterator().asScala.grouped(batchRows).foreach { rows =>
+      n += rows.size
+      emit(JObject(List[(String, JValue)](
+        "type" -> JString("data"),
+        "rows" -> JArray(rows.toList.map(r =>
+          JArray(schema.fields.toList.zipWithIndex.map { case (f, i) =>
+            jsonValue(r, i, f.dataType)
+          })))) ++ (if (withColumns) columns else Nil)))
+    }
+    n
+  }
 
   /** `maxRows` bounds the driver-side collect: the limit is planned (Spark
     * CollectLimit — executors stop producing past it), and a clipped result

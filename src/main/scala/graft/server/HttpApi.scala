@@ -517,26 +517,8 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
       os.flush()
     }
     var n = 0L
-    def streamRows(df: DataFrame, withColumns: Boolean): Unit = {
-      val schema = df.schema
-      // partition-at-a-time delivery: toLocalIterator never materializes the
-      // whole result on the driver (the reference streams RecordBatches the
-      // same way)
-      import scala.jdk.CollectionConverters._
-      df.toLocalIterator().asScala.grouped(batchRows).foreach { rows =>
-        n += rows.size
-        val base = List[(String, JValue)](
-          "type" -> JString("data"),
-          "rows" -> JArray(rows.toList.map(r =>
-            JArray(schema.fields.toList.zipWithIndex.map { case (f, i) =>
-              ResultFormat.jsonValue(r, i, f.dataType)
-            }))))
-        frame(JObject(if (withColumns)
-          base :+ ("columns" -> (JArray(schema.fieldNames.toList
-            .map(JString(_))): JValue))
-        else base))
-      }
-    }
+    def streamRows(df: DataFrame, withColumns: Boolean): Unit =
+      n += ResultFormat.streamFrames(df, batchRows, withColumns)(frame)
     // subscribe BEFORE the historical phase (no flush can fall in the gap);
     // merge_timestamp fixed at query start, live rows before it are dropped
     val tail = if (live)

@@ -205,26 +205,8 @@ final class WsApi(engine: QueryEngine, port: Int = 0) {
             }
             var n = 0L
             def streamRows(df: org.apache.spark.sql.DataFrame,
-                           withColumns: Boolean): Unit = {
-              val schema = df.schema
-              import scala.jdk.CollectionConverters._
-              df.toLocalIterator().asScala.grouped(batchRows).foreach { rows =>
-                n += rows.size
-                val base = List[(String, JValue)](
-                  "type" -> JString("data"),
-                  "rows" -> JArray(rows.toList.map(r =>
-                    JArray(schema.fields.toList.zipWithIndex.map { case (f, i) =>
-                      ResultFormat.jsonValue(r, i, f.dataType)
-                    }))))
-                // live frames carry their own column list: the tail's schema is
-                // the flushed chunks', not the query result's (the reference's
-                // batch_to_json is self-describing the same way)
-                frame(JObject(if (withColumns)
-                  base :+ ("columns" -> (JArray(schema.fieldNames.toList
-                    .map(JString(_))): JValue))
-                else base))
-              }
-            }
+                           withColumns: Boolean): Unit =
+              n += ResultFormat.streamFrames(df, batchRows, withColumns)(frame)
             // merge_timestamp fixed at query start; subscribe BEFORE the
             // historical phase so no flush falls between snapshot and tail
             // (reference src/api/query/streaming.rs:34-125 order of phases)

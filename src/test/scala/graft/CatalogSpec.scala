@@ -159,7 +159,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("sharded layout: commit writes shards under a manifest, readable by a fresh instance") {
     val dir = Files.createTempDirectory("graft_cat_")
-    val cat = new ChunkCatalog(dir, cacheTtlMs = 0L, shardSpanHours = 24)
+    val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     // hours 0 and 1000 land in different 24-h shards
     cat.registerAll(Seq(chunk("a", 0, 0), chunk("b", 1000, 1000)))
     cat.setTableStat("stat", 7L)
@@ -172,27 +172,6 @@ class CatalogSpec extends AnyFunSuite {
     assert(fresh.allChunks.map(_.path) == Seq("a", "b"))
     assert(fresh.tableStat("stat").contains(7L))
     assert(fresh.chunksInRange(1000 * hourNs, 1001 * hourNs).map(_.path) == Seq("b"))
-  }
-
-  test("sharded layout: legacy catalog.json is read and migrated on first mutation") {
-    val dir = Files.createTempDirectory("graft_cat_")
-    // hand-write a legacy single-document catalog (the pre-shard format)
-    val legacy = ChunkCatalog.CatalogState(1L,
-      Map("old1" -> chunk("old1", 0, 0), "old2" -> chunk("old2", 30, 30)),
-      scala.collection.immutable.TreeMap(0L -> List("old1"), 30L -> List("old2")),
-      Nil, Nil)
-    Files.write(dir.resolve("catalog.json"),
-      ChunkCatalog.render(legacy).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
-    // read path works before any mutation
-    assert(cat.allChunks.map(_.path) == Seq("old1", "old2"))
-    // first mutation migrates: shards + manifest written, legacy doc removed
-    cat.register(chunk("new", 50, 50))
-    assert(manifestCount(dir) == 1)
-    assert(!Files.exists(dir.resolve("catalog.json")))
-    val fresh = new ChunkCatalog(dir, cacheTtlMs = 0L)
-    assert(fresh.allChunks.map(_.path) == Seq("new", "old1", "old2"))
-    assert(fresh.chunksInRange(30 * hourNs, 31 * hourNs).map(_.path) == Seq("old2"))
   }
 
   test("sharded layout: manifest rename is the commit point — orphan shard files are never read") {
@@ -214,7 +193,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("sharded layout: re-registering a path in a different hour moves it across shards") {
     val dir = Files.createTempDirectory("graft_cat_")
-    val cat = new ChunkCatalog(dir, cacheTtlMs = 0L, shardSpanHours = 24)
+    val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     cat.register(chunk("mover", 0, 0))
     cat.register(chunk("mover", 1000, 1000)) // same path, different shard
     assert(cat.allChunks.map(_.path) == Seq("mover"))
@@ -249,30 +228,31 @@ class CatalogSpec extends AnyFunSuite {
   test("manifest CAS: concurrent writers on separate instances lose no updates") {
     // The reference commits its document by ETag CAS (s3.rs:181-339); the
     // sharded layout commits by hard-linking manifest.<N+1>.json. N writers —
-    // each its own instance, nothing shared in memory — race registrations
-    // into the SAME 24-h shard (max filename contention) and into distinct
-    // shards; every chunk must survive. groupCommit = false: this test pins
-    // the RAW cross-process CAS protocol (the r10 group committer would
-    // coalesce same-JVM writers — covered by its own test below).
+    // each its own child JVM, so no group committer sees two of them — race
+    // registrations into the SAME 24-h shard (max filename contention) and
+    // into distinct shards, plus a pending delete each; every mutation must
+    // survive. A child is single-threaded, so nothing coalesces: the version
+    // advances once per mutation, and evaluations beyond one per mutation
+    // are lost CASes that the production retry absorbed.
     val dir = Files.createTempDirectory("graft_cat_cas_")
     val n = 8
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val threads = (0 until n).map { i =>
-      val t = new Thread(() => {
-        val cat = new ChunkCatalog(dir, cacheTtlMs = 0L, groupCommit = false)
-        start.await()
-        try {
-          cat.register(chunk(s"same-shard-$i", 0, 0))
-          cat.register(chunk(s"own-shard-$i", (i + 1) * 100L, (i + 1) * 100L))
-          cat.deferDelete(Seq(s"/pending-$i"), nowMs = 0L, graceMs = 3600000L)
-        } catch { case e: Throwable => errors.add(e) }
-      })
-      t.start(); t
-    }
-    start.countDown()
-    threads.foreach(_.join(60000))
-    assert(errors.isEmpty, s"CAS retries must absorb all conflicts: $errors")
+    val mutations = 3
+    val v0 = new ChunkCatalog(dir, cacheTtlMs = 0L).state.version
+    val go = dir.resolve("go")
+    val children = scala.collection.mutable.ArrayBuffer[graft.ChildJvm.Child]()
+    val evals = try {
+      (0 until n).foreach { i =>
+        children += graft.ChildJvm.start("graft.catalog.CommitChild", dir.toString,
+          dir.resolve(s"ready-$i").toString, go.toString,
+          s"chunk:same-shard-$i:0", s"chunk:own-shard-$i:${(i + 1) * 100}",
+          s"defer:/pending-$i")
+      }
+      children.zipWithIndex.foreach { case (c, i) => c.awaitFile(dir.resolve(s"ready-$i"), 120) }
+      Files.createFile(go)
+      children.map(c => c.await(120).linesIterator.collect {
+        case s"evals $k" => k.toInt
+      }.toSeq.last).sum
+    } finally children.foreach(_.close())
     val fresh = new ChunkCatalog(dir, cacheTtlMs = 0L)
     val paths = fresh.allChunks.map(_.path).toSet
     assert(paths == (0 until n).flatMap(i =>
@@ -280,6 +260,8 @@ class CatalogSpec extends AnyFunSuite {
     assert(fresh.state.pendingDeletes.map(_._1).toSet ==
       (0 until n).map(i => s"/pending-$i").toSet)
     assert(fresh.state.version >= 3L * n, "every mutation advanced the version")
+    assert(fresh.state.version - v0 == mutations * n, "one version per mutation")
+    assert(evals > mutations * n, s"premise: some CAS was lost ($evals evaluations)")
     assert(manifestCount(dir) == 1, "superseded manifests cleaned up")
     // shard content must match the assembled view when re-read cold
     assert(fresh.chunksInRange(0, hourNs - 1).map(_.path).toSet ==
@@ -398,9 +380,8 @@ class CatalogSpec extends AnyFunSuite {
     cat.replaceChunks(Seq("old", "new2"), Seq(chunk("merged", 0, 48, level = 2)))
     cat.invalidateCache()
     assert(cat.rollups.head.staleForExtension)
-    // the flag also survives a JSON round-trip
-    val reparsed = ChunkCatalog.parse(ChunkCatalog.render(cat.state))
-    assert(reparsed.rollups.head.staleForExtension)
+    // the flag also survives a cold load from disk (manifest JSON round-trip)
+    assert(new ChunkCatalog(cat.root, cacheTtlMs = 0L).state.rollups.head.staleForExtension)
     // splitting a live chunk BELOW the cutoff also flags: the aged-looking
     // half carries never-rolled rows that would otherwise escape extension
     val cat2 = freshCatalog()

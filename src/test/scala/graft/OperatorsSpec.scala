@@ -206,9 +206,8 @@ class OperatorsSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_stat_"), cacheTtlMs = 0L)
     val derived = Operators.deriveBinStat(cat, "events.win_len", intervals, "s", "e")
     assert(derived == 10L && cat.tableStat("events.win_len").contains(10L))
-    // the stat survives a JSON round-trip (it is catalog state, not JVM state)
-    val reread = graft.catalog.ChunkCatalog.parse(
-      graft.catalog.ChunkCatalog.render(cat.state))
+    // the stat survives a cold load from disk (it is catalog state, not JVM state)
+    val reread = new graft.catalog.ChunkCatalog(cat.root, cacheTtlMs = 0L).state
     assert(reread.tableStats.get("events.win_len").contains(10L))
     // query-time: the persisted stat is used verbatim
     val viaStat = Operators.rangeJoinAuto(points, intervals, "ts", "s", "e",

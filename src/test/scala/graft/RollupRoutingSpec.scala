@@ -230,7 +230,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     val (_, cat, _) = freshEngine()
     val meta = Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
       labelCols = Seq("host"))
-    val reread = ChunkCatalog.parse(ChunkCatalog.render(cat.state))
+    val reread = new ChunkCatalog(cat.root, cacheTtlMs = 0L).state
     assert(reread.rollups == List(meta))
   }
 }
