@@ -154,31 +154,26 @@ object PromQL {
     }
   }
 
-  /** Instant-path aggregation match (prometheus_api.rs:899-907): includes STDDEV;
-    * stdvar/topk/bottomk are PARSED but fall through to AVG — topk/bottomk thus
-    * degrade to a plain ORDER BY value DESC with no k-limit.
+  /** Aggregation match over `arg` (instant path, prometheus_api.rs:899-907;
+    * the series-agg outer level): includes STDDEV; stdvar/topk/bottomk are
+    * PARSED but fall through to AVG — topk/bottomk thus degrade to a plain
+    * ORDER BY value DESC with no k-limit.
     */
-  private def aggSql(agg: String): String = agg match {
-    case "sum" => s"SUM($ValueExpr)"
-    case "avg" => s"AVG($ValueExpr)"
+  private def aggSql(agg: String, arg: String): String = agg match {
+    case "sum" => s"SUM($arg)"
+    case "avg" => s"AVG($arg)"
     case "count" => "COUNT(*)"
-    case "min" => s"MIN($ValueExpr)"
-    case "max" => s"MAX($ValueExpr)"
-    case "stddev" => s"STDDEV($ValueExpr)"
-    case _ => s"AVG($ValueExpr)"
+    case "min" => s"MIN($arg)"
+    case "max" => s"MAX($arg)"
+    case "stddev" => s"STDDEV($arg)"
+    case _ => s"AVG($arg)"
   }
 
   /** Range-path aggregation match (prometheus_api.rs:1018-1026): NO stddev — it
     * falls to AVG here, unlike the instant path. Ported quirk.
     */
-  private def rangeAggSql(agg: String): String = agg match {
-    case "sum" => s"SUM($ValueExpr)"
-    case "avg" => s"AVG($ValueExpr)"
-    case "count" => "COUNT(*)"
-    case "min" => s"MIN($ValueExpr)"
-    case "max" => s"MAX($ValueExpr)"
-    case _ => s"AVG($ValueExpr)"
-  }
+  private def rangeAggSql(agg: String): String =
+    if (agg == "stddev") s"AVG($ValueExpr)" else aggSql(agg, ValueExpr)
 
   /** Label columns = matcher labels ∪ group_by, first-seen order (reference
     * discover_label_columns, prometheus_api.rs:856-874).
@@ -207,6 +202,20 @@ object PromQL {
     val conds = Seq(s"metric_name = '${p.metricName.replace("'", "''")}'") ++
       p.labelMatchers.map(matcherToSql) ++ extra
     conds.mkString(" AND ")
+  }
+
+  /** A range query's (bucket expression, WHERE clause). offset (extension):
+    * scan [start-off, end-off] and bucket on ts+off, so each bucket lands at
+    * its evaluation-time position (Prometheus reporting); offset 0 emits the
+    * pre-offset SQL byte for byte.
+    */
+  private def window(p: ParsedPromQL, startNs: Long, endNs: Long,
+                     stepSeconds: Long): (String, String) = {
+    val stepNs = stepSeconds * 1000000000L
+    val offNs = p.offsetSeconds.getOrElse(0L) * 1000000000L
+    val shiftedTs = if (offNs == 0L) "timestamp_ns" else s"(timestamp_ns + $offNs)"
+    (s"($shiftedTs DIV $stepNs) * $stepNs", whereClause(p,
+      Seq(s"timestamp_ns >= ${startNs - offNs}", s"timestamp_ns <= ${endNs - offNs}")))
   }
 
   /** Instant query → SQL (reference prometheus_api.rs:877-935). `timeNs` bounds the
@@ -252,7 +261,7 @@ object PromQL {
            |GROUP BY $groupCols ORDER BY value DESC""".stripMargin.replace("\n", " ")
       case Some(agg) =>
         val groupCols = ("metric_name" +: p.groupBy.map(g => s"`$g`")).mkString(", ")
-        s"""SELECT $groupCols, ${aggSql(agg)} AS value, $tsExpr AS timestamp_ns
+        s"""SELECT $groupCols, ${aggSql(agg, ValueExpr)} AS value, $tsExpr AS timestamp_ns
            |FROM metrics WHERE ${whereClause(p, timeCond)}
            |GROUP BY $groupCols ORDER BY value DESC""".stripMargin.replace("\n", " ")
       case None =>
@@ -264,165 +273,44 @@ object PromQL {
   /** Range query → SQL with integer-division time bucketing
     * `(timestamp_ns / step) * step AS time_bucket` (reference
     * prometheus_api.rs:938-1087). stepSeconds buckets; ns bounds inclusive.
+    *
+    * Two EXTENSION shapes come first: `histogram_quantile`
+    * ([[transpileHistogramQuantile]]) and, when `q` has a top-level operator,
+    * the binary expression ([[transpileRangeBinaryChained]]). When neither
+    * applies or its interpretation fails (unparseable operand, sides with
+    * different labels and no on(...), scalar∘scalar, …) `q` gets the
+    * reference's whole-string treatment below, so the transpiler stays total.
     */
-  def transpileRange(q: String, startNs: Long, endNs: Long, stepSeconds: Long): String = {
-    // EXTENSION: histogram_quantile over le-bucketed series — see
-    // [[transpileHistogramQuantile]]. Failure falls through to the binary /
-    // whole-string treatments (parser totality).
-    val hqSql = scala.util.Try(
-      transpileHistogramQuantile(q, startNs, endNs, stepSeconds)).toOption.flatten
-    if (hqSql.isDefined) return hqSql.get
-    // EXTENSION: vector binary operator between two range vectors — see
-    // [[transpileRangeBinary]]. Any failure of the binary interpretation
-    // (unparseable side, mismatched matching labels without on(...)) falls
-    // back to the reference's whole-string treatment below, preserving the
-    // parser-totality contract. A single vector-op-vector query routes
-    // through the r10 single-op transpiler UNCHANGED (byte-identity,
-    // spec-pinned); chains, scalar operands, and the r12 comparison tier
-    // (`== != > < >= <=`, optional `bool`) take the precedence-aware tree
-    // path ([[transpileRangeBinaryChained]]).
-    val hasCmp = scala.util.Try(hasTopLevelComparison(q)).getOrElse(false)
-    if (hasCmp) {
-      val cmpSql = scala.util.Try(
-        transpileRangeBinaryChained(q, startNs, endNs, stepSeconds)).toOption
-      if (cmpSql.isDefined) return cmpSql.get
-    }
-    val binSql = binarySplit(q).flatMap { case (l, op, on, r) =>
-      scala.util.Try(
-        if (binarySplit(r).isDefined || isScalarLiteral(l) || isScalarLiteral(r))
-          transpileRangeBinaryChained(q, startNs, endNs, stepSeconds)
-        else transpileRangeBinary(l, op, on, r, startNs, endNs, stepSeconds)
-      ).toOption
-    }
-    if (binSql.isDefined) return binSql.get
-    val p = parse(q)
-    val stepNs = stepSeconds * 1000000000L
-    // offset (extension): scan [start-off, end-off], bucket on ts+off so each
-    // bucket lands at its evaluation-time position (Prometheus reporting).
-    // offset 0 emits byte-identical SQL to the pre-offset transpiler.
-    val offNs = p.offsetSeconds.getOrElse(0L) * 1000000000L
-    val shiftedTs = if (offNs == 0L) "timestamp_ns" else s"(timestamp_ns + $offNs)"
-    val bucket = s"($shiftedTs DIV $stepNs) * $stepNs"
-    val timeConds = Seq(s"timestamp_ns >= ${startNs - offNs}", s"timestamp_ns <= ${endNs - offNs}")
-    // Faithful column sets (prometheus_api.rs:938-1087): range FUNCTIONS and the
-    // no-agg default group by discover_label_columns (matcher labels ∪ by-labels);
-    // AGGREGATIONS group by the by-labels only.
-    val labelCols = p.aggregation match {
-      case Some(_) if p.function.isEmpty => p.groupBy
-      case _ => discoverLabelColumns(p)
-    }
-    val valueExpr = (p.function, p.aggregation) match {
-      case (Some(fn), _) => rangeFnSql(fn, p.rangeSeconds.getOrElse(stepSeconds))
-      case (None, Some(agg)) => rangeAggSql(agg)
-      case (None, None) => s"AVG($ValueExpr)" // default per-bucket AVG
-    }
-    val groupCols = ("metric_name" +: labelCols.map(g => s"`$g`")).mkString(", ")
-    s"""SELECT $bucket AS time_bucket, $groupCols, $valueExpr AS value
-       |FROM metrics WHERE ${whereClause(p, timeConds)}
-       |GROUP BY time_bucket, $groupCols
-       |ORDER BY time_bucket""".stripMargin.replace("\n", " ")
-  }
-
-  /** Split `q` at a top-level vector binary operator (+ − * /) outside
-    * parens/brackets/braces/quotes, with an optional `on(l1,l2)` matching
-    * modifier after the operator. Returns (lhs, op, onLabels, rhs); None when
-    * no top-level operator exists. A leading '-' is a sign, not an operator.
-    */
-  def binarySplit(q: String)
-      : Option[(String, Char, Option[Seq[String]], String)] = {
-    var depth = 0; var inQ = false; var i = 0; var found = -1
-    while (i < q.length && found < 0) {
-      val c = q.charAt(i)
-      if (inQ) { if (c == '"' && (i == 0 || q.charAt(i - 1) != '\\')) inQ = false }
-      else c match {
-        case '"' => inQ = true
-        case '(' | '[' | '{' => depth += 1
-        case ')' | ']' | '}' => depth -= 1
-        case '+' | '*' | '/' if depth == 0 => found = i
-        case '-' if depth == 0 && q.substring(0, i).trim.nonEmpty => found = i
-        case _ => ()
-      }
-      i += 1
-    }
-    if (found < 0) None
-    else {
-      val l = q.substring(0, found).trim
-      var r = q.substring(found + 1).trim
-      if (l.isEmpty || r.isEmpty) None
-      else {
-        val onRe = """^on\s*\(([^)]*)\)\s*(.+)$""".r
-        val (on, rhs) = r match {
-          case onRe(labels, rest) =>
-            (Some(labels.split(",").map(_.trim).filter(_.nonEmpty).toSeq), rest.trim)
-          case _ => (None, r)
+  def transpileRange(q: String, startNs: Long, endNs: Long, stepSeconds: Long): String =
+    scala.util.Try(transpileHistogramQuantile(q, startNs, endNs, stepSeconds)).toOption.flatten
+      .orElse(if (topLevelOps(q).isEmpty) None else scala.util.Try(
+        transpileRangeBinaryChained(q, startNs, endNs, stepSeconds)).toOption)
+      .getOrElse {
+        val p = parse(q)
+        val (bucket, where) = window(p, startNs, endNs, stepSeconds)
+        val valueExpr = (p.function, p.aggregation) match {
+          case (Some(fn), _) => rangeFnSql(fn, p.rangeSeconds.getOrElse(stepSeconds))
+          case (None, Some(agg)) => rangeAggSql(agg)
+          case (None, None) => s"AVG($ValueExpr)" // default per-bucket AVG
         }
-        Some((l, q.charAt(found), on, rhs))
+        val groupCols = ("metric_name" +: rangeLabelCols(p).map(g => s"`$g`")).mkString(", ")
+        s"""SELECT $bucket AS time_bucket, $groupCols, $valueExpr AS value
+           |FROM metrics WHERE $where
+           |GROUP BY time_bucket, $groupCols
+           |ORDER BY time_bucket""".stripMargin.replace("\n", " ")
       }
-    }
-  }
 
-  /** The label columns a range query's rows carry, shared by
-    * [[transpileRange]] and the binary-operator matcher. */
+  /** The label columns a range query's rows carry (prometheus_api.rs:938-1087):
+    * range FUNCTIONS and the no-agg default group by discover_label_columns
+    * (matcher labels ∪ by-labels); AGGREGATIONS group by the by-labels only.
+    * A binary expression matches its operands on the same set.
+    */
   private def rangeLabelCols(p: ParsedPromQL): Seq[String] = p.aggregation match {
     case Some(_) if p.function.isEmpty => p.groupBy
     case _ => discoverLabelColumns(p)
   }
 
-  /** EXTENSION — vector binary operator between two range vectors (the
-    * Grafana ratio/difference panel: `sum by (host) (a) / sum by (host)
-    * (b)`), a real-Prometheus feature the reference's regex grammar lacks.
-    * Each side transpiles through [[transpileRange]] (so offsets, range
-    * functions and aggregations nest freely), and the sides join on
-    * (time_bucket, matching labels) — the matching labels default to the
-    * sides' shared result label set (which must agree — use `on(...)` to
-    * override, mirroring Prometheus vector matching). INNER join = Prometheus
-    * drop-if-unmatched. Divergences (documented): `metric_name` is dropped
-    * from the result exactly as Prometheus drops `__name__` on arithmetic;
-    * division by zero yields NULL (deterministic in every engine) where
-    * Prometheus yields ±Inf; scalar operands are not supported.
-    */
-  def transpileRangeBinary(lhs: String, op: Char, onLabels: Option[Seq[String]],
-                           rhs: String, startNs: Long, endNs: Long,
-                           stepSeconds: Long): String = {
-    require("+-*/".contains(op), s"unsupported operator $op")
-    // exactly ONE operator: a chained expression would need real precedence
-    // handling (this split is first-op) — refuse so the fallback treats it
-    // as the reference would, instead of silently mis-associating a*b+c
-    require(binarySplit(rhs).isEmpty, "chained binary operators not supported")
-    val lp = parse(lhs); val rp = parse(rhs)
-    // refuse degenerate sides (binarySplit over-matching garbage): both must
-    // at least be valid metric identifiers
-    require(isValidIdentifier(lp.metricName) && isValidIdentifier(rp.metricName),
-      s"binary operands must be vector expressions: $lhs $op $rhs")
-    val labels = onLabels.getOrElse {
-      val ll = rangeLabelCols(lp); val rl = rangeLabelCols(rp)
-      require(ll == rl,
-        s"sides carry different labels (${ll.mkString(",")} vs ${rl.mkString(",")}); use on(...)")
-      ll
-    }
-    labels.foreach(l => require(isValidIdentifier(l), s"invalid matching label: $l"))
-    // every on(...) label must be a column BOTH sides' subqueries actually
-    // project — otherwise the emitted SQL would reference a nonexistent
-    // column and throw at EXECUTION time, past the transpile-time fallback
-    labels.foreach(l => require(
-      rangeLabelCols(lp).contains(l) && rangeLabelCols(rp).contains(l),
-      s"on($l) not in both sides' result labels"))
-    val lSql = transpileRange(lhs, startNs, endNs, stepSeconds)
-    val rSql = transpileRange(rhs, startNs, endNs, stepSeconds)
-    val joinCond = ("l.time_bucket = r.time_bucket" +:
-      labels.map(l => s"l.`$l` = r.`$l`")).mkString(" AND ")
-    val outCols = ("l.time_bucket" +: labels.map(l => s"l.`$l`")).mkString(", ")
-    val valueExpr = op match {
-      case '/' => "l.value / NULLIF(r.value, 0)"
-      case _ => s"l.value $op r.value"
-    }
-    val orderCols = ("time_bucket" +: labels.map(l => s"`$l`")).mkString(", ")
-    s"""SELECT $outCols, $valueExpr AS value
-       |FROM ($lSql) l JOIN ($rSql) r ON $joinCond
-       |ORDER BY $orderCols""".stripMargin.replace("\n", " ")
-  }
-
-  // ---- r11 EXTENSION: chained binary expressions with real precedence ------
+  // ---- EXTENSION: binary expressions over range vectors ---------------------
 
   private[graft] sealed trait VecNode
   private[graft] final case class VecLeaf(expr: String) extends VecNode
@@ -430,19 +318,15 @@ object PromQL {
   private[graft] final case class VecBin(l: VecNode, op: String,
       on: Option[Seq[String]], r: VecNode, bool: Boolean = false) extends VecNode
 
-  private[graft] def isScalarLiteral(s: String): Boolean =
-    s.trim.matches("[0-9]+(\\.[0-9]+)?")
-
   private val CmpOps = Set("==", "!=", ">", "<", ">=", "<=")
 
   /** Every top-level (depth-0, outside quotes) binary operator position in
-    * `q`, arithmetic (`+ - * /`) and comparison (`== != > < >= <=` — r12
-    * tier). A '-' whose left side is blank (string start or directly after
-    * another operator) is a SIGN, not an operator — same rule as
-    * [[binarySplit]]. Two-char operators are recorded once at their start
-    * index. Label-matcher `=`/`!~`/`=~` forms never reach depth 0 (they live
-    * inside `{...}`), so a depth-0 `=`/`!` is only an operator when it forms
-    * `==`/`!=`.
+    * `q`, arithmetic (`+ - * /`) and comparison (`== != > < >= <=`). A '-'
+    * whose left side is blank (string start or directly after another
+    * operator) is a SIGN, not an operator. Two-char operators are recorded
+    * once at their start index. Label-matcher `=`/`!~`/`=~` forms never
+    * reach depth 0 (they live inside `{...}`), so a depth-0 `=`/`!` is only
+    * an operator when it forms `==`/`!=`.
     */
   private def topLevelOps(q: String): Seq[(Int, String)] = {
     val ops = scala.collection.mutable.ArrayBuffer[(Int, String)]()
@@ -475,26 +359,20 @@ object PromQL {
   private val onModRe = """^on\s*\(([^)]*)\)\s*(.+)$""".r
   private val boolModRe = """^bool\b\s*(.+)$""".r
 
-  /** True when `q` carries a depth-0 comparison operator — the r12 routing
-    * signal into the precedence tree (arithmetic-only queries keep their
-    * r10/r11 byte-identical routes). */
-  private[graft] def hasTopLevelComparison(q: String): Boolean =
-    topLevelOps(q).exists(o => CmpOps(o._2))
-
-  /** Precedence-aware parse of a chained vector expression: `*`/`/` bind
-    * tighter than `+`/`-`, which bind tighter than the comparison tier
-    * (`== != > < >= <=`, r12), all left-associative (the Prometheus table,
-    * minus the ^/set tiers its grammar also carries). Left associativity
-    * falls out of splitting at the RIGHTMOST operator of the LOWEST present
-    * precedence. Numeric literals become [[ScalarLeaf]]s. A comparison
-    * operator may carry the `bool` modifier (then optionally `on(...)`),
-    * in Prometheus's `op bool on(...)` order.
+  /** Precedence-aware parse of a binary expression: `*`/`/` bind tighter
+    * than `+`/`-`, which bind tighter than the comparison tier
+    * (`== != > < >= <=`), all left-associative (the Prometheus table, minus
+    * the ^/set tiers its grammar also carries). Left associativity falls out
+    * of splitting at the RIGHTMOST operator of the LOWEST present
+    * precedence. Numeric literals become [[ScalarLeaf]]s. An operator may be
+    * followed by an `on(...)` matching modifier; a comparison may carry the
+    * `bool` modifier first, in Prometheus's `op bool on(...)` order.
     */
   private[graft] def parseVecTree(q: String): VecNode = {
     val s = q.trim
     val ops = topLevelOps(s)
     if (ops.isEmpty) {
-      if (isScalarLiteral(s)) ScalarLeaf(s) else VecLeaf(s)
+      if (s.matches("[0-9]+(\\.[0-9]+)?")) ScalarLeaf(s) else VecLeaf(s)
     } else {
       val cmps = ops.filter(o => CmpOps(o._2))
       val addSub = ops.filter(o => o._2 == "+" || o._2 == "-")
@@ -518,151 +396,98 @@ object PromQL {
     }
   }
 
-  /** EXTENSION (r11) — chained vector binary expressions with real precedence
-    * (`sum by (host)(click) / sum by (host)(view) * 100`): the expression
-    * parses into a left-assoc precedence tree ([[parseVecTree]]) and
-    * transpiles bottom-up — vector∘vector as the [[transpileRangeBinary]]
-    * INNER join on (time_bucket, matching labels), vector∘scalar as plain
-    * arithmetic on the value column (no join). Same divergences as the
-    * single-op form: metric_name/`__name__` dropped, ÷0 → NULL. A
-    * scalar∘scalar expression is refused (falls back to the reference's
-    * whole-string treatment, keeping the parser total).
+  /** EXTENSION — binary expressions over range vectors, a real-Prometheus
+    * feature the reference's regex grammar lacks: the Grafana ratio panel
+    * (`sum by (host) (click) / sum by (host) (view)`), chains with scalars
+    * (`… * 100`) and comparisons (`… > 0.5`, `… >= bool 1`). The expression
+    * parses into a precedence tree ([[parseVecTree]]) and transpiles bottom
+    * up. Each vector leaf is a [[transpileRange]] subquery, so offsets,
+    * range functions and aggregations nest freely; a leaf text that occurs
+    * more than once becomes one `__leafN` CTE and is scanned once.
+    * vector∘vector is an INNER join on (time_bucket, matching labels) —
+    * Prometheus drop-if-unmatched; the matching labels are the sides' shared
+    * label set (which must agree) or `on(...)`. vector∘scalar applies the
+    * scalar to the value column, with no join. Divergences (documented):
+    * `metric_name` is dropped as Prometheus drops `__name__` on arithmetic;
+    * ÷0 yields NULL (deterministic in every engine) where Prometheus yields
+    * ±Inf. scalar∘scalar is refused.
     */
-  def transpileRangeBinaryChained(q: String, startNs: Long, endNs: Long,
-                                  stepSeconds: Long): String = {
+  private def transpileRangeBinaryChained(q: String, startNs: Long, endNs: Long,
+                                          stepSeconds: Long): String = {
     val root = parseVecTree(q)
     require(root.isInstanceOf[VecBin], s"not a binary expression: $q")
-    // r12 (r11 VERDICT "What's wrong #4"): a leaf repeated across the chain
-    // (`a/b + a/c`) previously re-transpiled — and re-SCANNED — per
-    // occurrence. Repeated leaf texts become ONE named CTE each; chains
-    // with all-distinct leaves emit byte-identical SQL to the r11 form.
-    def leafTexts(n: VecNode): Seq[String] = n match {
-      case VecLeaf(e) => Seq(e.trim)
-      case VecBin(l, _, _, r, _) => leafTexts(l) ++ leafTexts(r)
+    def leaves(n: VecNode): Seq[String] = n match {
+      case VecLeaf(e) => Seq(e)
+      case VecBin(l, _, _, r, _) => leaves(l) ++ leaves(r)
       case _ => Nil
     }
-    val all = leafTexts(root)
+    val all = leaves(root)
     val repeated = all.distinct.filter(e => all.count(_ == e) > 1)
-    val cte: Map[String, (String, Seq[String])] =
-      repeated.zipWithIndex.map { case (e, i) =>
+    // (SQL producing (time_bucket, labels..., value), its label columns)
+    def node(n: VecNode): (String, Seq[String]) = n match {
+      case ScalarLeaf(v) => throw new IllegalArgumentException(s"scalar-only expression: $v")
+      case VecLeaf(e) =>
         val p = parse(e)
         require(isValidIdentifier(p.metricName),
           s"binary operand must be a vector expression: $e")
-        e -> ((s"__leaf$i", rangeLabelCols(p)))
-      }.toMap
-    val (sql, labels) = transpileNode(root, startNs, endNs, stepSeconds, cte)
-    val withClause =
-      if (repeated.isEmpty) ""
-      else "WITH " + repeated.zipWithIndex.map { case (e, i) =>
-        s"__leaf$i AS (${transpileRange(e, startNs, endNs, stepSeconds)})"
-      }.mkString(", ") + " "
-    val orderCols = ("time_bucket" +: labels.map(l => s"`$l`")).mkString(", ")
+        val i = repeated.indexOf(e)
+        (if (i < 0) transpileRange(e, startNs, endNs, stepSeconds) else s"SELECT * FROM __leaf$i",
+          rangeLabelCols(p))
+      case VecBin(l, op, on, r, bool) =>
+        def scalarWith(vec: VecNode): (String, Seq[String]) = {
+          require(on.isEmpty, "on(...) is meaningless with a scalar operand")
+          val (sql, labels) = node(vec)
+          (s"($sql) l", labels)
+        }
+        val ((from, labels), a, b) = (l, r) match {
+          case (_: ScalarLeaf, _: ScalarLeaf) =>
+            throw new IllegalArgumentException("scalar-scalar expression")
+          case (ScalarLeaf(v), vec) => (scalarWith(vec), v, "l.value")
+          case (vec, ScalarLeaf(v)) => (scalarWith(vec), "l.value", v)
+          case _ =>
+            val (lSql, lLabels) = node(l)
+            val (rSql, rLabels) = node(r)
+            val labels = on.getOrElse {
+              require(lLabels == rLabels,
+                s"sides carry different labels (${lLabels.mkString(",")} vs " +
+                  s"${rLabels.mkString(",")}); use on(...)")
+              lLabels
+            }
+            labels.foreach(m => require(
+              isValidIdentifier(m) && lLabels.contains(m) && rLabels.contains(m),
+              s"on($m) is not a label both sides carry"))
+            val joinCond = ("l.time_bucket = r.time_bucket" +:
+              labels.map(m => s"l.`$m` = r.`$m`")).mkString(" AND ")
+            ((s"($lSql) l JOIN ($rSql) r ON $joinCond", labels), "l.value", "r.value")
+        }
+        (binarySql(op, bool, from, labels, a, b), labels)
+    }
+    val (sql, labels) = node(root)
+    val ctes = repeated.zipWithIndex.map { case (e, i) =>
+      s"__leaf$i AS (${transpileRange(e, startNs, endNs, stepSeconds)})"
+    }
+    val withClause = if (ctes.isEmpty) "" else ctes.mkString("WITH ", ", ", " ")
+    val orderCols = ("time_bucket" +: labels.map(m => s"`$m`")).mkString(", ")
     s"$withClause$sql ORDER BY $orderCols"
   }
 
-  /** Bottom-up transpile of a [[VecNode]]: returns (SQL producing
-    * (time_bucket, labels..., value), the label column set). Scalar leaves
-    * never reach here directly — their parents inline them. `cte` maps a
-    * repeated leaf's text to its CTE name + label columns (the WITH clause
-    * is emitted by [[transpileRangeBinaryChained]]).
+  /** One binary node over `from`, whose vector side is named `l`, with
+    * operands `a op b`. Arithmetic sets the value (÷ guarded by NULLIF); a
+    * comparison keeps the `l` sample where it holds (filter semantics), or
+    * with `bool` keeps every sample as 0/1.
     */
-  private def transpileNode(n: VecNode, startNs: Long, endNs: Long,
-                            stepSeconds: Long,
-                            cte: Map[String, (String, Seq[String])] = Map.empty)
-      : (String, Seq[String]) = n match {
-    case ScalarLeaf(v) =>
-      throw new IllegalArgumentException(s"scalar-only expression: $v")
-    case VecLeaf(e) if cte.contains(e.trim) =>
-      val (name, labels) = cte(e.trim)
-      (s"SELECT * FROM $name", labels)
-    case VecLeaf(e) =>
-      val p = parse(e)
-      require(isValidIdentifier(p.metricName),
-        s"binary operand must be a vector expression: $e")
-      (transpileRange(e, startNs, endNs, stepSeconds), rangeLabelCols(p))
-    case VecBin(lNode, op, on, rNode, bool) =>
-      require(Seq("+", "-", "*", "/").contains(op) || CmpOps(op),
-        s"unsupported operator $op")
-      require(!bool || CmpOps(op), s"bool modifier only applies to comparisons: $op")
-      // == / != in SQL spelling (the other four are shared)
-      def cmpSql(a: String, b: String): String = op match {
-        case "==" => s"$a = $b"
-        case "!=" => s"$a <> $b"
-        case o => s"$a $o $b"
-      }
-      (lNode, rNode) match {
-        case (_: ScalarLeaf, _: ScalarLeaf) =>
-          throw new IllegalArgumentException("scalar-scalar expression")
-        case (ScalarLeaf(v), rv) =>
-          require(on.isEmpty, "on(...) is meaningless with a scalar operand")
-          val (rSql, rLabels) = transpileNode(rv, startNs, endNs, stepSeconds, cte)
-          val outCols = ("l.time_bucket" +: rLabels.map(l => s"l.`$l`")).mkString(", ")
-          if (CmpOps(op)) {
-            // scalar CMP vector: result elements come from the VECTOR side
-            // (Prometheus keeps the sample, the scalar is just the operand)
-            val cond = cmpSql(v, "l.value")
-            if (bool)
-              (s"SELECT $outCols, CAST(CASE WHEN $cond THEN 1 ELSE 0 END AS DOUBLE) AS value " +
-                s"FROM ($rSql) l", rLabels)
-            else
-              (s"SELECT $outCols, l.value AS value FROM ($rSql) l WHERE $cond", rLabels)
-          } else {
-            val valueExpr =
-              if (op == "/") s"$v / NULLIF(l.value, 0)" else s"$v $op l.value"
-            (s"SELECT $outCols, $valueExpr AS value FROM ($rSql) l", rLabels)
-          }
-        case (lv, ScalarLeaf(v)) =>
-          require(on.isEmpty, "on(...) is meaningless with a scalar operand")
-          val (lSql, lLabels) = transpileNode(lv, startNs, endNs, stepSeconds, cte)
-          val outCols = ("l.time_bucket" +: lLabels.map(l => s"l.`$l`")).mkString(", ")
-          if (CmpOps(op)) {
-            val cond = cmpSql("l.value", v)
-            if (bool)
-              (s"SELECT $outCols, CAST(CASE WHEN $cond THEN 1 ELSE 0 END AS DOUBLE) AS value " +
-                s"FROM ($lSql) l", lLabels)
-            else
-              (s"SELECT $outCols, l.value AS value FROM ($lSql) l WHERE $cond", lLabels)
-          } else {
-            val valueExpr =
-              if (op == "/") s"l.value / NULLIF($v, 0)" else s"l.value $op $v"
-            (s"SELECT $outCols, $valueExpr AS value FROM ($lSql) l", lLabels)
-          }
-        case (lv, rv) =>
-          val (lSql, lLabels) = transpileNode(lv, startNs, endNs, stepSeconds, cte)
-          val (rSql, rLabels) = transpileNode(rv, startNs, endNs, stepSeconds, cte)
-          val labels = on.getOrElse {
-            require(lLabels == rLabels,
-              s"sides carry different labels (${lLabels.mkString(",")} vs " +
-                s"${rLabels.mkString(",")}); use on(...)")
-            lLabels
-          }
-          labels.foreach(l => require(isValidIdentifier(l), s"invalid matching label: $l"))
-          labels.foreach(l => require(lLabels.contains(l) && rLabels.contains(l),
-            s"on($l) not in both sides' result labels"))
-          val joinCond = ("l.time_bucket = r.time_bucket" +:
-            labels.map(l => s"l.`$l` = r.`$l`")).mkString(" AND ")
-          val outCols = ("l.time_bucket" +: labels.map(l => s"l.`$l`")).mkString(", ")
-          if (CmpOps(op)) {
-            // vector CMP vector: inner join on (bucket, matching labels);
-            // without bool the LHS sample survives where the comparison
-            // holds (filter semantics, value = l.value); with bool every
-            // matched pair yields 0/1
-            val cond = cmpSql("l.value", "r.value")
-            if (bool)
-              (s"SELECT $outCols, CAST(CASE WHEN $cond THEN 1 ELSE 0 END AS DOUBLE) AS value " +
-                s"FROM ($lSql) l JOIN ($rSql) r ON $joinCond", labels)
-            else
-              (s"SELECT $outCols, l.value AS value FROM ($lSql) l JOIN ($rSql) r " +
-                s"ON $joinCond WHERE $cond", labels)
-          } else {
-            val valueExpr = op match {
-              case "/" => "l.value / NULLIF(r.value, 0)"
-              case _ => s"l.value $op r.value"
-            }
-            (s"SELECT $outCols, $valueExpr AS value FROM ($lSql) l JOIN ($rSql) r ON $joinCond",
-              labels)
-          }
-      }
+  private def binarySql(op: String, bool: Boolean, from: String, labels: Seq[String],
+                        a: String, b: String): String = {
+    val outCols = ("l.time_bucket" +: labels.map(m => s"l.`$m`")).mkString(", ")
+    val expr = op match {
+      case "==" => s"$a = $b"
+      case "!=" => s"$a <> $b"
+      case "/" => s"$a / NULLIF($b, 0)"
+      case o => s"$a $o $b"
+    }
+    if (!CmpOps(op)) s"SELECT $outCols, $expr AS value FROM $from"
+    else if (bool) s"SELECT $outCols, CAST(CASE WHEN $expr THEN 1 ELSE 0 END AS DOUBLE) AS value FROM $from"
+    else s"SELECT $outCols, l.value AS value FROM $from WHERE $expr"
   }
 
   // ---- r11 EXTENSION: histogram_quantile ------------------------------------
@@ -751,28 +576,15 @@ object PromQL {
     val p = parse(q)
     require(p.aggregation.isDefined && p.function.isDefined,
       s"expected agg(rangefn(selector[w])), got: $q")
-    val stepNs = stepSeconds * 1000000000L
-    val offNs = p.offsetSeconds.getOrElse(0L) * 1000000000L
-    val shiftedTs = if (offNs == 0L) "timestamp_ns" else s"(timestamp_ns + $offNs)"
-    val bucket = s"($shiftedTs DIV $stepNs) * $stepNs"
-    val timeConds = Seq(s"timestamp_ns >= ${startNs - offNs}", s"timestamp_ns <= ${endNs - offNs}")
+    val (bucket, where) = window(p, startNs, endNs, stepSeconds)
     val q1 = (s: String) => s"`${s.replace("`", "``")}`"
     val seriesCols = (discoverLabelColumns(p) ++ seriesLabels).distinct
     val innerGroup = ("metric_name" +: seriesCols.map(q1)).mkString(", ")
     val outerGroup = ("metric_name" +: p.groupBy.map(q1)).mkString(", ")
     val fnExpr = rangeFnSql(p.function.get, p.rangeSeconds.getOrElse(stepSeconds))
-    val outerAgg = p.aggregation.get match {
-      case "sum" => "SUM(value)"
-      case "avg" => "AVG(value)"
-      case "count" => "COUNT(*)"
-      case "min" => "MIN(value)"
-      case "max" => "MAX(value)"
-      case "stddev" => "STDDEV(value)"
-      case _ => "AVG(value)"
-    }
-    s"""SELECT time_bucket, $outerGroup, $outerAgg AS value FROM (
+    s"""SELECT time_bucket, $outerGroup, ${aggSql(p.aggregation.get, "value")} AS value FROM (
        |SELECT $bucket AS time_bucket, $innerGroup, $fnExpr AS value
-       |FROM metrics WHERE ${whereClause(p, timeConds)}
+       |FROM metrics WHERE $where
        |GROUP BY time_bucket, $innerGroup)
        |GROUP BY time_bucket, $outerGroup
        |ORDER BY time_bucket""".stripMargin.replace("\n", " ")

@@ -105,7 +105,7 @@ final case class TimeRange(startNs: Long, endNs: Long)
 object PredicateExtraction {
 
   import org.apache.spark.sql.catalyst.{expressions => cx}
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnresolvedWith}
 
   val DefaultWindowNs: Long = 3600L * 1000000000L
 
@@ -118,9 +118,26 @@ object PredicateExtraction {
     * the LAST ONE HOUR ending at `nowNs` (engine.rs:378-385).
     */
   def extract(plan: LogicalPlan, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) = {
-    val conjuncts = plan.collect { case Filter(cond, _) => splitConjuncts(cond) }.flatten
-    extractFromConjuncts(conjuncts, nowNs)
+    val own = filterConjuncts(plan)
+    val found = extractFromConjuncts(own, nowNs)
+    if (found._1 != TimeRange(nowNs - DefaultWindowNs, nowNs)) found
+    else extractFromConjuncts(own ++ cteBodies(plan).flatMap(filterConjuncts), nowNs)
   }
+
+  private def filterConjuncts(plan: LogicalPlan): Seq[cx.Expression] =
+    plan.collect { case Filter(cond, _) => splitConjuncts(cond) }.flatten
+
+  /** A parsed plan keeps its `WITH` definitions beside the query
+    * (`UnresolvedWith.cteRelations`), not among its children, so `collect`
+    * never visits them. [[extract]] reads them only when the rest of the
+    * statement has no time bound: a CTE narrower than a bounded main scan
+    * would otherwise narrow that scan's prune too. A statement whose every
+    * scan sits in a CTE body then takes its literal window from them, the
+    * window the optimized-plan fallback would find.
+    */
+  private def cteBodies(plan: LogicalPlan): Seq[LogicalPlan] =
+    plan.collect { case w: UnresolvedWith => w.cteRelations.map(_._2) }.flatten
+      .flatMap(body => body +: cteBodies(body))
 
   def extractFromExpression(cond: cx.Expression, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
     extractFromConjuncts(splitConjuncts(cond), nowNs)

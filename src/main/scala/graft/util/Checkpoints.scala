@@ -15,7 +15,8 @@ import org.apache.spark.sql.DataFrame
   * RELIABLE `checkpoint` instead — data lands in the (HDFS/S3-capable)
   * directory named by `spark.graft.checkpoint.dir`, surviving executor loss.
   * Values are identical either way: both forms materialize the same plan and
-  * replay stored rows.
+  * replay stored rows. Any value of the flag other than `true`/`false` fails
+  * the call rather than quietly meaning local.
   *
   * Production notes for the reliable mode: set `spark.graft.checkpoint.dir`
   * to durable shared storage (the lazy default below is a LOCAL temp dir —
@@ -31,10 +32,10 @@ object Checkpoints {
 
   def cut(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
-    def flag(key: String) =
-      try spark.conf.get(key, "false").toBoolean
-      catch { case _: IllegalArgumentException => false }
-    if (!flag(ReliableKey)) df.localCheckpoint(eager)
+    val value = spark.conf.get(ReliableKey, "false")
+    val reliable = value.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$ReliableKey must be true or false, got: $value"))
+    if (!reliable) df.localCheckpoint(eager)
     else {
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(

@@ -8,7 +8,7 @@ import graft.catalog.ChunkCatalog
 import graft.compact.{ColumnPromoter, ShardSplitter}
 import graft.engine.ResultFormat
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 class AdaptiveSplitFormatSpec extends AnyFunSuite {
 
@@ -73,7 +73,7 @@ class AdaptiveSplitFormatSpec extends AnyFunSuite {
   }
 
   test("shard split: rewrite at split point, dedup during, atomic swap, no loss") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_split_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_split_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val points = (0 until 60).map(i =>
       MetricPoint(t0 + i * 60L * 1000000000L, "cpu", i.toDouble, Map("host" -> "a")))
@@ -95,7 +95,7 @@ class AdaptiveSplitFormatSpec extends AnyFunSuite {
   }
 
   test("column promotion rewrites chunks with the derived column") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_promo_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_promo_"), cacheTtlMs = 0L)
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, Seq(
       MetricPoint(t0, "cpu", 1.0, Map("host" -> "a-1")))))
     val metas = new ColumnPromoter(spark, cat).promote("host_prefix",

@@ -3,11 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{ChunkCatalog, ChunkMeta, ColumnStats}
 import java.nio.file.Files
+import graft.util.ShmDirs
 
 class CatalogSpec extends AnyFunSuite {
 
   private def freshCatalog() =
-    new ChunkCatalog(Files.createTempDirectory("graft_cat_"), cacheTtlMs = 0L)
+    new ChunkCatalog(ShmDirs.tempDir("graft_cat_"), cacheTtlMs = 0L)
 
   private val hourNs = 3600L * 1000000000L
 
@@ -158,7 +159,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("sharded layout: commit writes shards under a manifest, readable by a fresh instance") {
-    val dir = Files.createTempDirectory("graft_cat_")
+    val dir = ShmDirs.tempDir("graft_cat_")
     val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     // hours 0 and 1000 land in different 24-h shards
     cat.registerAll(Seq(chunk("a", 0, 0), chunk("b", 1000, 1000)))
@@ -175,7 +176,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("sharded layout: manifest rename is the commit point — orphan shard files are never read") {
-    val dir = Files.createTempDirectory("graft_cat_")
+    val dir = ShmDirs.tempDir("graft_cat_")
     val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     cat.register(chunk("committed", 0, 0))
     // simulate a crash AFTER shard writes but BEFORE the manifest rename:
@@ -192,7 +193,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("sharded layout: re-registering a path in a different hour moves it across shards") {
-    val dir = Files.createTempDirectory("graft_cat_")
+    val dir = ShmDirs.tempDir("graft_cat_")
     val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     cat.register(chunk("mover", 0, 0))
     cat.register(chunk("mover", 1000, 1000)) // same path, different shard
@@ -210,7 +211,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("sharded layout: a foreign writer's commit is visible after cache revalidation") {
-    val dir = Files.createTempDirectory("graft_cat_")
+    val dir = ShmDirs.tempDir("graft_cat_")
     val writer = new ChunkCatalog(dir, cacheTtlMs = 0L)
     val reader = new ChunkCatalog(dir, cacheTtlMs = 0L)
     writer.register(chunk("w1", 0, 0))
@@ -234,7 +235,7 @@ class CatalogSpec extends AnyFunSuite {
     // survive. A child is single-threaded, so nothing coalesces: the version
     // advances once per mutation, and evaluations beyond one per mutation
     // are lost CASes that the production retry absorbed.
-    val dir = Files.createTempDirectory("graft_cat_cas_")
+    val dir = ShmDirs.tempDir("graft_cat_cas_")
     val n = 8
     val mutations = 3
     val v0 = new ChunkCatalog(dir, cacheTtlMs = 0L).state.version
@@ -278,7 +279,7 @@ class CatalogSpec extends AnyFunSuite {
     // mutations were read under load), so the amount of coalescing is pinned
     // in graft.catalog.GroupCommitSpec instead, which holds the first leader
     // until the round's other ops are queued: exactly 2 commits per round.
-    val dir = Files.createTempDirectory("graft_cat_group_")
+    val dir = ShmDirs.tempDir("graft_cat_group_")
     val seed = new ChunkCatalog(dir, cacheTtlMs = 0L)
     seed.register(chunk("seed", 0, 0))
     val v0 = seed.state.version
@@ -325,7 +326,7 @@ class CatalogSpec extends AnyFunSuite {
     // both instances) nor an invalidation may leave the follower serving its
     // pre-commit state. The long TTL makes `state` a pure cache read, so any
     // pre-commit store left behind would show.
-    val dir = Files.createTempDirectory("graft_cat_follow_")
+    val dir = ShmDirs.tempDir("graft_cat_follow_")
     val cats = Seq.fill(2)(new ChunkCatalog(dir, cacheTtlMs = 3600000L))
     val rounds = 20
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -396,7 +397,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("incremental diff assembly == cold load after every mutation kind") {
-    val dir = Files.createTempDirectory("graft_cat_diff_")
+    val dir = ShmDirs.tempDir("graft_cat_diff_")
     val writer = new ChunkCatalog(dir, cacheTtlMs = 0L)
     // reader with a long TTL BUT explicit revalidation via the writer's own
     // mutations is what exercises the diff path (ttl=0 re-diffs every read)
@@ -429,7 +430,7 @@ class CatalogSpec extends AnyFunSuite {
   test("time travel: manifestRetain keeps a window of versions, stateAt " +
     "reassembles each exactly, eviction past the window, shard files survive " +
     "while referenced") {
-    val root = Files.createTempDirectory("graft_tt_")
+    val root = ShmDirs.tempDir("graft_tt_")
     val cat = new ChunkCatalog(root, cacheTtlMs = 0L, manifestRetain = 3)
     val seen = scala.collection.mutable.Map[Long, Set[String]]()
     (0 until 6).foreach { i =>

@@ -5,6 +5,7 @@ import graft.catalog.{ChunkCatalog, ChunkMeta}
 import graft.compact.Compactor
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import java.nio.file.Files
+import graft.util.ShmDirs
 
 class CompactorSpec extends AnyFunSuite {
 
@@ -13,7 +14,7 @@ class CompactorSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L
 
   test("L0 candidate selection: hour groups at threshold") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp_"), cacheTtlMs = 0L)
     def c(p: String, hour: Long) =
       ChunkMeta(p, hour * hourNs, hour * hourNs + 1, 10, 100)
     cat.registerAll(Seq(c("a", 0), c("b", 0), c("c", 0), c("d", 1)))
@@ -52,7 +53,7 @@ class CompactorSpec extends AnyFunSuite {
   }
 
   test("merger error paths: empty group and nonexistent chunk fail loudly (ref coverage_gap_tests.rs:551-583)") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp_err_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp_err_"), cacheTtlMs = 0L)
     val comp = new Compactor(spark, cat)
     intercept[IllegalArgumentException] { comp.compactGroup(Nil) }
     intercept[Exception] {
@@ -63,14 +64,14 @@ class CompactorSpec extends AnyFunSuite {
   }
 
   test("candidate selection on an empty catalog is empty (ref error_path_tests.rs:650-722)") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp_empty_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp_empty_"), cacheTtlMs = 0L)
     val comp = new Compactor(spark, cat)
     assert(comp.l0Candidates().isEmpty)
     assert(comp.leveledCandidates(99).isEmpty) // nonexistent level: empty, no error
   }
 
   test("leveled candidate selection: greedy size grouping") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp2_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp2_"), cacheTtlMs = 0L)
     def c(p: String, hour: Long, size: Long) =
       ChunkMeta(p, hour * hourNs, hour * hourNs + 1, 10, size, level = 1)
     cat.registerAll(Seq(c("a", 0, 400), c("b", 1, 400), c("c", 2, 400), c("d", 3, 900)))
@@ -81,7 +82,7 @@ class CompactorSpec extends AnyFunSuite {
   }
 
   test("compactGroup merges, sorts, bumps level, swaps catalog, defers GC") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp3_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp3_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val mk = (offset: Long) => (0 until 10).map(i =>
       MetricPoint(t0 + i * 60L * 1000000000L + offset, "cpu", i.toDouble, Map("h" -> "x")))
@@ -104,7 +105,7 @@ class CompactorSpec extends AnyFunSuite {
   }
 
   test("compactGroups: many groups in one sweep — one sorted chunk each, atomic swap") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp4_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp4_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     // 3 hours × 2 interleaved L0 writes per hour
     val mk = (hour: Int, offset: Long) => (0 until 10).map(i =>
@@ -140,7 +141,7 @@ class CompactorSpec extends AnyFunSuite {
   }
 
   test("retention removes wholly-expired chunks with skew margin") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_cmp4_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp4_"), cacheTtlMs = 0L)
     cat.registerAll(Seq(
       ChunkMeta("old", 0, 1000, 10, 100),
       ChunkMeta("new", 5000L * 1000000000L, 6000L * 1000000000L, 10, 100)))
@@ -153,7 +154,7 @@ class CompactorSpec extends AnyFunSuite {
 
   test("maintenance downsample loop: aged chunks roll up, live ingest survives, idempotent") {
     import graft.compact.Maintenance
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_mnt_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_mnt_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val mk = (base: Long) => (0 until 10).map(i =>
       MetricPoint(base + i * 60L * 1000000000L, "cpu", i.toDouble, Map("h" -> "x")))
@@ -226,7 +227,7 @@ class CompactorSpec extends AnyFunSuite {
 
   test("compaction across the age boundary: extension full-rebuilds, never double-counts") {
     import graft.compact.Maintenance
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_mnt_str_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_mnt_str_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val mk = (base: Long) => (0 until 10).map(i =>
       MetricPoint(base + i * 60L * 1000000000L, "cpu", i.toDouble, Map("h" -> "x")))
@@ -276,7 +277,7 @@ class CompactorSpec extends AnyFunSuite {
     // Without leases both would select the same ripe L0 group before either
     // commits, merge it twice, and register duplicate rows. The lease makes
     // one of them skip (reference mod.rs:567-575).
-    val dir = Files.createTempDirectory("graft_cmp_lease_")
+    val dir = ShmDirs.tempDir("graft_cmp_lease_")
     val seedCat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     val writer = new ChunkWriter(seedCat)
     val mk = (offset: Long) => (0 until 10).map(i =>
@@ -284,7 +285,7 @@ class CompactorSpec extends AnyFunSuite {
     (0 until 4).foreach(i => writer.write(Converters.pointsToDf(spark, mk(i * 1000L))))
     assert(seedCat.allChunks.size == 4)
 
-    val leaseDir = Files.createTempDirectory("graft_cmp_lease_doc_")
+    val leaseDir = ShmDirs.tempDir("graft_cmp_lease_doc_")
     def compactor(node: String) = new Compactor(spark,
       new ChunkCatalog(dir, cacheTtlMs = 0L), l0FileThreshold = 2,
       leases = Some(new LeaseStore(leaseDir, baseBackoffMs = 5L)), nodeId = node)

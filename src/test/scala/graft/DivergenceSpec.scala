@@ -6,7 +6,7 @@ import graft.catalog.ChunkCatalog
 import graft.engine.QueryEngine
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import graft.promql.PromQL
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** THE DIVERGENCE LEDGER — every deliberate, reference-faithful divergence
   * from true Prometheus / standard semantics, each pinned by a golden test.
@@ -72,7 +72,7 @@ class DivergenceSpec extends AnyFunSuite {
   // src/query/dedup.rs:61-113 builds its composite key from timestamp +
   // metric_name alone). Faithful data loss, pinned here.
   test("D3: active-split dedup ignores label columns (timestamp+metric key only)") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_div_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_div_"), cacheTtlMs = 0L)
     val pts = Seq(
       MetricPoint(t0, "cpu_usage", 1.0, Map("host" -> "a")),
       MetricPoint(t0, "cpu_usage", 2.0, Map("host" -> "b")), // same ts+name, other host
@@ -140,7 +140,7 @@ class DivergenceSpec extends AnyFunSuite {
   // a full scan (reference src/query/mod.rs:140-152 injects now()-1h..now()).
   // Standard SQL semantics would return all rows.
   test("D7: missing time predicate defaults to the last hour, not a full scan") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_div7_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_div7_"), cacheTtlMs = 0L)
     val pts = Seq(
       MetricPoint(t0, "cpu_usage", 1.0, Map("host" -> "a")), // "old" data
       MetricPoint(t0 + 48 * hourNs, "cpu_usage", 2.0, Map("host" -> "a")))

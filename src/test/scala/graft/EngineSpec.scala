@@ -6,7 +6,7 @@ import graft.catalog.ChunkCatalog
 import graft.engine.QueryEngine
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import graft.prune.TimeRange
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** End-to-end engine slice (SURVEY.md §7.2): ingest points → hour chunks → catalog
   * prune → spark.sql, with provable chunk skipping and the reference's semantic
@@ -20,7 +20,7 @@ class EngineSpec extends AnyFunSuite {
 
   /** 3 hours × 2 metrics × 2 hosts, 1 point/10min → 36 points/hour-chunk. */
   private def freshEngine(): (QueryEngine, ChunkCatalog) = {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_eng_"), cacheTtlMs = 0L)
     val points = for {
       h <- 0 until 3
       m <- Seq("cpu_usage", "mem_usage")
@@ -86,7 +86,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("empty store: metrics resolvable, 0 rows, default schema (engine.rs:189-205)") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_empty_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_empty_"), cacheTtlMs = 0L)
     val eng = new QueryEngine(spark, cat)
     val df = eng.sql("SELECT COUNT(*) AS c, MIN(timestamp) AS mn, MAX(timestamp) AS mx FROM metrics")
     val r = df.collect()(0)
@@ -137,7 +137,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("filtered label values: matchers and time bounds narrow values AND prune the scan") {
     // host is hour-distinct here (serverH in hour H) so filters change results
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_lv_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_eng_lv_"), cacheTtlMs = 0L)
     val points = for {
       h <- 0 until 3
       m <- Seq("cpu_usage", "mem_usage")
@@ -234,7 +234,7 @@ class EngineSpec extends AnyFunSuite {
     // one sample per second from 10 s ago to 2 min ahead: a count over the
     // last 10 s loses about one sample per second as the clock moves
     val nowNs = System.currentTimeMillis() * 1000000L
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_now_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_eng_now_"), cacheTtlMs = 0L)
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, (-10 until 120).map(i =>
       MetricPoint(nowNs + i * 1000000000L, "cpu_usage", 1.0, Map("host" -> "server1")))))
     val cached = new QueryEngine(spark, cat)
@@ -287,8 +287,53 @@ class EngineSpec extends AnyFunSuite {
     notFixed.foreach(q => assert(eng.serve(q).mode == "computed", s"must be planned again: $q"))
   }
 
+  test("a text that reads metrics only inside WITH bodies takes its literal " +
+    "window from them: time-fixed, reused, pruned to that window") {
+    val (eng, _) = freshEngine()
+    val (lo, hi) = (t0 + hourNs, t0 + 2 * hourNs - 1)
+    // `x op x` chains read their one leaf through a CTE: every scan of
+    // `metrics` sits in the WITH body
+    val q = graft.promql.PromQL.transpileRange("cpu_usage * cpu_usage + cpu_usage", lo, hi, 600L)
+    assert(q.startsWith("WITH __leaf0 AS ("), q)
+    val first = eng.serve(q)
+    assert(eng.isTimeFixed(q), "the CTE body's literal bounds make the text time-fixed")
+    val repeat = eng.serve(q)
+    assert(repeat.mode == "l1", s"a time-fixed repeat must hit, got ${repeat.mode}")
+    val literal = eng.prune(TimeRange(lo, hi), Seq(graft.prune.ColumnPredicate.Eq(
+      "metric_name", graft.prune.PValue.S("cpu_usage"))))
+    assert(literal.size == 1)
+    assert(first.paths == literal && repeat.paths == literal)
+    assert(repeat.df.collect().toSeq == first.df.collect().toSeq)
+  }
+
+  test("a WITH body narrower than a bounded main scan leaves the main scan's prune " +
+    "alone, rows equal a spark.read.parquet reference") {
+    val (eng, cat) = freshEngine()
+    val main = s"timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}"
+    val hour1 = s"timestamp_ns >= ${t0 + hourNs} AND timestamp_ns < ${t0 + 2 * hourNs}"
+    // a narrower CTE window, and a CTE label filter no chunk holds (LEFT JOIN
+    // keeps every main row)
+    val narrower = Seq(
+      s"""WITH recent AS (SELECT host, MAX(value_f64) AS mx FROM metrics WHERE $hour1 GROUP BY host)
+         |SELECT m.host, COUNT(*) AS cnt, MAX(recent.mx) AS mx
+         |FROM metrics m JOIN recent ON m.host = recent.host
+         |WHERE $main GROUP BY m.host ORDER BY m.host""".stripMargin,
+      s"""WITH odd AS (SELECT host, MAX(value_f64) AS mx FROM metrics
+         |  WHERE $hour1 AND host = 'server9' GROUP BY host)
+         |SELECT m.host, COUNT(*) AS cnt, MAX(odd.mx) AS mx
+         |FROM metrics m LEFT JOIN odd ON m.host = odd.host
+         |WHERE $main GROUP BY m.host ORDER BY m.host""".stripMargin)
+    narrower.foreach { q =>
+      val served = eng.serve(q)
+      val got = served.df.collect().map(_.toSeq).toSeq
+      assert(served.paths.size == 2, s"the main scan's two hours: ${served.paths}")
+      val want = SparkTestBase.referenceRows(cat, q)
+      assert(got == want && got.map(_(1)) == Seq(24L, 24L), s"$got vs $want")
+    }
+  }
+
   test("schema drift across chunks: label-set union, null-fill, NULL-keeping !~") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_drift_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_drift_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     // batch 1 has {host}, batch 2 has {zone} — mirrors per-payload dynamic schemas
     // (otlp.rs:249-295) with schema-homogeneous chunks (ingester/mod.rs:585-630)
@@ -323,7 +368,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("empty batch write is a no-op") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_empty2_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_empty2_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val metas = writer.write(Converters.pointsToDf(spark, Seq.empty))
     assert(metas.isEmpty)
@@ -515,7 +560,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("time travel: serve asOf a retained version sees exactly the rows committed " +
     "by then; the live query sees everything; rollup routing stays off") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_tt_"),
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_eng_tt_"),
       cacheTtlMs = 0L, manifestRetain = 8)
     val writer = new ChunkWriter(cat)
     def batch(h: Int, n: Int) = Converters.pointsToDf(spark, (0 until n).map(i =>

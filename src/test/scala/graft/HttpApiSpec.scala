@@ -6,9 +6,9 @@ import graft.catalog.ChunkCatalog
 import graft.engine.QueryEngine
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import graft.server.HttpApi
-import java.nio.file.Files
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URI
+import graft.util.ShmDirs
 
 /** HTTP front door roundtrips (reference src/api/mod.rs:53-76 route table):
   * real sockets, real engine, real warehouse — one SQL and one PromQL query
@@ -21,7 +21,7 @@ class HttpApiSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L // 2024-01-01T00:00:00Z
 
   private lazy val engine = {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_http_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_http_"), cacheTtlMs = 0L)
     val points = for {
       h <- 0 until 2
       m <- Seq("cpu_usage", "mem_usage")
@@ -105,7 +105,7 @@ class HttpApiSpec extends AnyFunSuite {
     "bytes; a catalog commit invalidates") {
     // dedicated warehouse + api: this test INGESTS (to prove invalidation),
     // which must not perturb the shared fixture's row counts
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bcache_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_bcache_"), cacheTtlMs = 0L)
     val pts0 = for (host <- Seq("server1", "server2"); i <- 0 until 6)
       yield MetricPoint(t0 + i * 600L * 1000000000L, "mem_usage",
         i / 10.0, Map("host" -> host))
@@ -139,7 +139,7 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("response-byte cache stores only time-fixed requests: repeats hit with " +
     "no sleep; a commit changes the key; /query without time and unbounded SQL never hit") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bfixed_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_bfixed_"), cacheTtlMs = 0L)
     val pts0 = for (host <- Seq("server1", "server2"); i <- 0 until 6)
       yield MetricPoint(t0 + i * 600L * 1000000000L, "mem_usage",
         i / 10.0, Map("host" -> host))
@@ -189,7 +189,7 @@ class HttpApiSpec extends AnyFunSuite {
     // one sample per second from 10 s ago to 2 min ahead: a count over the
     // last 10 s loses about one sample per second as the clock moves
     val nowNs = System.currentTimeMillis() * 1000000L
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bnow_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_bnow_"), cacheTtlMs = 0L)
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, (-10 until 120).map(i =>
       MetricPoint(nowNs + i * 1000000000L, "cpu_usage", 1.0, Map("host" -> "server1")))))
     val a = new HttpApi(new QueryEngine(spark, cat), port = 0).start()
@@ -634,7 +634,7 @@ class HttpApiSpec extends AnyFunSuite {
   test("WebSocket live tail: chunks flushed mid-stream arrive as data frames after the historical phase") {
     import org.json4s._
     // dedicated engine: the tail polls ITS catalog, and we append to it mid-test
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_live_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_live_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     writer.write(Converters.pointsToDf(spark,
       (0 until 5).map(i => MetricPoint(t0 + i * 1000L, "cpu_usage", i * 1.0,
@@ -697,7 +697,7 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("SSE live tail: duration-bounded tail forwards a mid-stream flush") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_live_sse_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_live_sse_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     writer.write(Converters.pointsToDf(spark,
       Seq(MetricPoint(t0, "cpu_usage", 1.0, Map("host" -> "h1")))))
@@ -748,7 +748,7 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("time travel over HTTP: X-Graft-As-Of-Version pins the chunk set; " +
     "evicted version is a 400, not a 500") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_http_tt_"),
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_http_tt_"),
       cacheTtlMs = 0L, manifestRetain = 8)
     val writer = new ChunkWriter(cat)
     def pts(h: Int, n: Int) = Converters.pointsToDf(spark, (0 until n).map(i =>

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sim.{IvfIndex, Similarity}
+import graft.util.ShmDirs
 
 class IvfIndexSpec extends AnyFunSuite {
 
@@ -32,7 +33,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("probe-all query equals brute force exactly") {
     val corpus = clustered(120).repartition(6)
-    val root = java.nio.file.Files.createTempDirectory("ivf_idx_").toString
+    val root = ShmDirs.tempDir("ivf_idx_").toString
     val nCells = IvfIndex.build(corpus, root, nCentroids = 6)
     val queries = corpus.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -45,7 +46,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("probe-1 equals brute force restricted to the query's nearest cell") {
     val corpus = clustered(120)
-    val root = java.nio.file.Files.createTempDirectory("ivf_idx1_").toString
+    val root = ShmDirs.tempDir("ivf_idx1_").toString
     IvfIndex.build(corpus, root, nCentroids = 6)
     val cents = spark.read.parquet(s"$root/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
@@ -76,7 +77,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("append assigns to existing centroids; probe-all over the union stays exact") {
     import spark.implicits._
     val corpus = clustered(120)
-    val root = java.nio.file.Files.createTempDirectory("ivf_idx4_").toString
+    val root = ShmDirs.tempDir("ivf_idx4_").toString
     val nCells = IvfIndex.build(corpus.filter(col("vec_id") < 90), root, nCentroids = 6)
     IvfIndex.append(corpus.filter(col("vec_id") >= 90), root)
     val queries = corpus.filter(col("vec_id") < 4)
@@ -94,7 +95,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("bulk probe: distributed probe equals the driver path exactly, no driver RDD in plan") {
     val corpus = clustered(120).repartition(6)
-    val root = java.nio.file.Files.createTempDirectory("ivf_idx5_").toString
+    val root = ShmDirs.tempDir("ivf_idx5_").toString
     val nCells = IvfIndex.build(corpus, root, nCentroids = 6)
     val queries = corpus.filter(col("vec_id") < 40)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -123,7 +124,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("needsRebuild: balanced index no, drifted (appended-skew) index yes") {
     import spark.implicits._
     val corpus = clustered(120)
-    val root = java.nio.file.Files.createTempDirectory("ivf_idx3_").toString
+    val root = ShmDirs.tempDir("ivf_idx3_").toString
     IvfIndex.build(corpus, root, nCentroids = 6)
     assert(!IvfIndex.needsRebuild(spark, root, maxImbalance = 4.0))
     // simulate post-build ingest drift: a flood of rows landing in one cell
@@ -185,7 +186,7 @@ class IvfIndexSpec extends AnyFunSuite {
     "without the embedding column; append encodes with the frozen codebooks") {
     import graft.sim.Quantize
     val corpus = clustered(120)
-    val root = java.nio.file.Files.createTempDirectory("ivfpq_").toString
+    val root = ShmDirs.tempDir("ivfpq_").toString
     val nCells = IvfIndex.build(corpus, root, nCentroids = 6, pqM = 4, pqK = 8)
     val queries = corpus.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -229,7 +230,7 @@ class IvfIndexSpec extends AnyFunSuite {
     "no driver RDD in plan") {
     import graft.sim.Quantize
     val corpus = clustered(120)
-    val root = java.nio.file.Files.createTempDirectory("ivfpq_bulk_").toString
+    val root = ShmDirs.tempDir("ivfpq_bulk_").toString
     val nCells = IvfIndex.build(corpus, root, nCentroids = 6, pqM = 4, pqK = 8)
     val queries = corpus.filter(col("vec_id") < 12)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -323,7 +324,7 @@ class IvfIndexSpec extends AnyFunSuite {
       val v = base.zipWithIndex.map { case (x, d) => x + ((i * 31 + d * 17) % 7) * 0.01f }
       (i.toLong, v.toSeq)
     }.toDF("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("ivfpq_auto_").toString
+    val root = ShmDirs.tempDir("ivfpq_auto_").toString
     IvfIndex.build(corpus, root, nCentroids = 6, pqM = 4, pqK = 8)
     val queries = corpus.filter(col("vec_id") < 4200)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -391,7 +392,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("probed read touches only the probed cell partitions (pruned scan)") {
     val corpus = clustered(120)
-    val root = java.nio.file.Files.createTempDirectory("ivf_idx2_").toString
+    val root = ShmDirs.tempDir("ivf_idx2_").toString
     IvfIndex.build(corpus, root, nCentroids = 6)
     val all = spark.read.parquet(s"$root/data")
       .select(input_file_name()).distinct().count()
@@ -427,8 +428,8 @@ class IvfIndexSpec extends AnyFunSuite {
           col("embedding"), col("cvec"))).as("m"))
         .collect()(0).getDouble(0)
     }
-    val rootS = java.nio.file.Files.createTempDirectory("ivf_samp_").toString
-    val rootT = java.nio.file.Files.createTempDirectory("ivf_train_").toString
+    val rootS = ShmDirs.tempDir("ivf_samp_").toString
+    val rootT = ShmDirs.tempDir("ivf_train_").toString
     val nS = IvfIndex.build(rows, rootS, nCentroids = 4)
     val nT = IvfIndex.build(rows, rootT, nCentroids = 4, trainIters = 3)
     assert(nT == nS)

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.ChunkCatalog
 import graft.engine.{QueryEngine, Telemetry}
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** L2 disk result-cache tier (reference foyer NVMe layer,
   * src/query/cached_store.rs:49-181): L1 evictions demote localized result
@@ -21,14 +21,14 @@ class L2CacheSpec extends AnyFunSuite {
 
   /** Engine with the L2 tier on; [[demote]] puts an entry there. */
   private def l2Engine(maxL2Bytes: Long = 256L << 20): (QueryEngine, ChunkCatalog, java.io.File) = {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_l2_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_l2_"), cacheTtlMs = 0L)
     val points = for {
       h <- 0 until 3; m <- Seq("cpu_usage", "mem_usage")
       host <- Seq("server1", "server2"); i <- 0 until 6
     } yield MetricPoint(t0 + h * hourNs + i * 600L * 1000000000L,
       m, (i % 100) / 100.0 + h, Map("host" -> host))
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, points))
-    val dir = Files.createTempDirectory("graft_l2c_").toFile
+    val dir = ShmDirs.tempDir("graft_l2c_").toFile
     val eng = new QueryEngine(spark, cat, QueryEngine.QueryLimits(
       l2CacheDir = Some(dir.getAbsolutePath), maxL2CacheBytes = maxL2Bytes))
     (eng, cat, dir)

@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{ChunksAlreadyLeasedException, CompactionLease, LeaseStatus, LeaseStore}
+import graft.util.ShmDirs
 
 /** Compaction-lease mutual exclusion, porting the reference's
   * tests/compaction_lease_tests.rs shapes (acquire/conflict/partial-overlap/
@@ -15,7 +15,7 @@ class LeaseSpec extends AnyFunSuite {
 
   private def store(clock: () => Long = () => System.currentTimeMillis(),
       ttlMs: Long = 300000L): LeaseStore =
-    new LeaseStore(Files.createTempDirectory("graft_lease_"), ttlMs = ttlMs,
+    new LeaseStore(ShmDirs.tempDir("graft_lease_"), ttlMs = ttlMs,
       clock = clock)
 
   test("acquire succeeds and records holder, chunks, level, active status") {
@@ -117,7 +117,7 @@ class LeaseSpec extends AnyFunSuite {
   }
 
   test("CAS race: concurrent acquirers of the SAME chunks -> exactly one winner") {
-    val dir = Files.createTempDirectory("graft_lease_")
+    val dir = ShmDirs.tempDir("graft_lease_")
     // separate store instances: nothing shared in memory, like separate JVMs
     val n = 6
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, CompactionLease]]()
@@ -142,7 +142,7 @@ class LeaseSpec extends AnyFunSuite {
   }
 
   test("CAS race: concurrent acquirers of DISJOINT chunks -> all succeed") {
-    val dir = Files.createTempDirectory("graft_lease_")
+    val dir = ShmDirs.tempDir("graft_lease_")
     val n = 6
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val start = new java.util.concurrent.CountDownLatch(1)
@@ -163,7 +163,7 @@ class LeaseSpec extends AnyFunSuite {
   }
 
   test("leases are visible across store instances (document on disk, not memory)") {
-    val dir = Files.createTempDirectory("graft_lease_")
+    val dir = ShmDirs.tempDir("graft_lease_")
     val a = new LeaseStore(dir)
     val b = new LeaseStore(dir)
     val l = a.acquire("node-a", Seq("x"), 0)

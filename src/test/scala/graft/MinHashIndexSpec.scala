@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, MinHashIndex}
+import graft.util.ShmDirs
 
 class MinHashIndexSpec extends AnyFunSuite {
 
@@ -34,7 +35,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     val all = corpus(70)
     val batch = all.filter(col("doc_id") % 5 === 0)
     val rest = all.filter(col("doc_id") % 5 =!= 0)
-    val root = java.nio.file.Files.createTempDirectory("mh_idx_").toString
+    val root = ShmDirs.tempDir("mh_idx_").toString
     MinHashIndex.build(rest, root, numHashes = 32, bands = 16, nParts = 16)
 
     val got = MinHashIndex.probe(spark, root, batch, rest, threshold = 0.5)
@@ -53,7 +54,7 @@ class MinHashIndexSpec extends AnyFunSuite {
 
   test("probing a corpus-drawn batch reports no identity pairs") {
     val all = corpus(40)
-    val root = java.nio.file.Files.createTempDirectory("mh_idx_id_").toString
+    val root = ShmDirs.tempDir("mh_idx_id_").toString
     MinHashIndex.build(all, root, numHashes = 32, bands = 16, nParts = 16)
     val got = MinHashIndex.probe(spark, root, all.filter(col("doc_id") < 10),
       all, threshold = 0.5).collect()
@@ -62,7 +63,7 @@ class MinHashIndexSpec extends AnyFunSuite {
 
   test("probe reads only the batch's bucket partitions (pruned scan)") {
     val all = corpus(80)
-    val root = java.nio.file.Files.createTempDirectory("mh_idx_pr_").toString
+    val root = ShmDirs.tempDir("mh_idx_pr_").toString
     MinHashIndex.build(all, root, numHashes = 32, bands = 16, nParts = 64)
     val allParts = spark.read.parquet(s"$root/buckets")
       .select("bh_part").distinct().count()
@@ -88,13 +89,13 @@ class MinHashIndexSpec extends AnyFunSuite {
     val batch = docs((5000L, "the quick brown fox jumps over the lazy dog again and again variant1"),
       (5001L, "spark catalyst optimizer rewrites logical plans into physical plans variant2"))
 
-    val rootA = java.nio.file.Files.createTempDirectory("mh_idx_app_").toString
+    val rootA = ShmDirs.tempDir("mh_idx_app_").toString
     MinHashIndex.build(old, rootA, numHashes = 32, bands = 16, nParts = 16)
     MinHashIndex.append(added, rootA)
     val viaAppend = MinHashIndex.probe(spark, rootA, batch, all, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-    val rootB = java.nio.file.Files.createTempDirectory("mh_idx_reb_").toString
+    val rootB = ShmDirs.tempDir("mh_idx_reb_").toString
     MinHashIndex.build(all, rootB, numHashes = 32, bands = 16, nParts = 16)
     val viaRebuild = MinHashIndex.probe(spark, rootB, batch, all, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -114,14 +115,14 @@ class MinHashIndexSpec extends AnyFunSuite {
     val added = docs(((200L until 205).map(i => (i, boiler)) :+ (300L, s"$normal variant0")): _*)
     val union = old.unionByName(added)
 
-    val rootA = java.nio.file.Files.createTempDirectory("mh_idx_tomb_").toString
+    val rootA = ShmDirs.tempDir("mh_idx_tomb_").toString
     MinHashIndex.build(old, rootA, numHashes = 32, bands = 16, nParts = 16, maxBucket = 10)
     MinHashIndex.append(added, rootA)
     val batch = docs((9000L, boiler), (9001L, normal))
     val viaAppend = MinHashIndex.probe(spark, rootA, batch, union, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val rootB = java.nio.file.Files.createTempDirectory("mh_idx_tomb2_").toString
+    val rootB = ShmDirs.tempDir("mh_idx_tomb2_").toString
     MinHashIndex.build(union, rootB, numHashes = 32, bands = 16, nParts = 16, maxBucket = 10)
     val viaRebuild = MinHashIndex.probe(spark, rootB, batch, union, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -133,7 +134,7 @@ class MinHashIndexSpec extends AnyFunSuite {
 
   test("re-appending already-indexed docs is a no-op: no duplicate probe pairs") {
     val all = corpus(60)
-    val root = java.nio.file.Files.createTempDirectory("mh_idx_reapp_").toString
+    val root = ShmDirs.tempDir("mh_idx_reapp_").toString
     MinHashIndex.build(all, root, numHashes = 32, bands = 16, nParts = 16)
     val batch = docs((5000L, "the quick brown fox jumps over the lazy dog again and again variant1"))
     val before = MinHashIndex.probe(spark, root, batch, all, threshold = 0.5)
@@ -152,7 +153,7 @@ class MinHashIndexSpec extends AnyFunSuite {
   test("build drops oversized (degenerate) buckets; probe misses only those") {
     // 30 empty-text docs all collide into one degenerate bucket family
     val degenerate = docs((0L until 30).map(i => (i, "")): _*)
-    val root = java.nio.file.Files.createTempDirectory("mh_idx_deg_").toString
+    val root = ShmDirs.tempDir("mh_idx_deg_").toString
     MinHashIndex.build(degenerate, root, numHashes = 32, bands = 16,
       nParts = 16, maxBucket = 10)
     assert(MinHashIndex.probedBuckets(spark, root, 0 until 16).count() == 0)

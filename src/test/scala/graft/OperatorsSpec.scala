@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Operators
+import graft.util.ShmDirs
 
 class OperatorsSpec extends AnyFunSuite {
 
@@ -43,7 +44,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("maintenance sweep: compaction + retention + GC in one pass") {
     val spark2 = spark
     val cat = new graft.catalog.ChunkCatalog(
-      java.nio.file.Files.createTempDirectory("graft_maint_"), cacheTtlMs = 0L)
+      ShmDirs.tempDir("graft_maint_"), cacheTtlMs = 0L)
     val writer = new graft.ingest.ChunkWriter(cat)
     val t0 = 1704067200L * 1000000000L
     val mk = (off: Long) => (0 until 5).map(i =>
@@ -61,7 +62,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(cat.allChunks.isEmpty)
     // with a horizon that still covers the data, the compacted chunk survives
     val cat2 = new graft.catalog.ChunkCatalog(
-      java.nio.file.Files.createTempDirectory("graft_maint2_"), cacheTtlMs = 0L)
+      ShmDirs.tempDir("graft_maint2_"), cacheTtlMs = 0L)
     val w2 = new graft.ingest.ChunkWriter(cat2)
     w2.write(graft.ingest.Converters.pointsToDf(spark2, mk(0)))
     w2.write(graft.ingest.Converters.pointsToDf(spark2, mk(500)))
@@ -203,7 +204,7 @@ class OperatorsSpec extends AnyFunSuite {
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     // write/compact-time derivation persists the stat into the catalog
     val cat = new graft.catalog.ChunkCatalog(
-      java.nio.file.Files.createTempDirectory("graft_stat_"), cacheTtlMs = 0L)
+      ShmDirs.tempDir("graft_stat_"), cacheTtlMs = 0L)
     val derived = Operators.deriveBinStat(cat, "events.win_len", intervals, "s", "e")
     assert(derived == 10L && cat.tableStat("events.win_len").contains(10L))
     // the stat survives a cold load from disk (it is catalog state, not JVM state)

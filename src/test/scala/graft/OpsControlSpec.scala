@@ -5,7 +5,7 @@ import graft.sharding.{HotShardConfig, RollingAverage, ShardAction, ShardMonitor
 import graft.catalog.{ChunkCatalog, ChunkMeta}
 import graft.compact.Compactor
 import graft.engine.QueryEngine
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** Operational control surfaces ported from the reference: hot-shard detection
   * (src/sharding/monitor.rs), compaction backpressure (src/compactor/mod.rs:
@@ -55,7 +55,7 @@ class OpsControlSpec extends AnyFunSuite {
   }
 
   test("compaction backpressure: 0 / 50 / 100 ms bands at 3x and 6x the L0 threshold") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_bp_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_bp_"), cacheTtlMs = 0L)
     val compactor = new Compactor(SparkTestBase.spark, cat, l0FileThreshold = 2)
     def addL0(n: Int, from: Int): Unit = (from until (from + n)).foreach(i =>
       cat.register(ChunkMeta(s"c$i", i * 1000L, i * 1000L + 1, 1, 1, level = 0)))
@@ -74,7 +74,7 @@ class OpsControlSpec extends AnyFunSuite {
 
   test("query timeout cancels the job group and surfaces QueryTimeoutException") {
     val spark = SparkTestBase.spark
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_qt_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_qt_"), cacheTtlMs = 0L)
     val eng = new QueryEngine(spark, cat,
       QueryEngine.QueryLimits(maxConcurrent = 4, timeoutMs = 800L))
     // interruptible slow tasks (sleep responds to interruptOnCancel; a tight
@@ -91,7 +91,7 @@ class OpsControlSpec extends AnyFunSuite {
 
   test("query concurrency gate serializes beyond maxConcurrent") {
     val spark = SparkTestBase.spark
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_qc_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_qc_"), cacheTtlMs = 0L)
     val eng = new QueryEngine(spark, cat,
       QueryEngine.QueryLimits(maxConcurrent = 1, timeoutMs = 60000L))
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -114,7 +114,7 @@ class OpsControlSpec extends AnyFunSuite {
   test("adaptive clustering: query log → recommendation → lifecycle → clustered sweep prunes the column") {
     import org.apache.spark.sql.functions._
     val spark = SparkTestBase.spark
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_ac_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_ac_"), cacheTtlMs = 0L)
     val writer = new graft.ingest.ChunkWriter(cat)
     val t0ns = 1704067200L * 1000000000L
     // 1 h of 8-host data, two interleaved flushes (L0 ripens at threshold 2);

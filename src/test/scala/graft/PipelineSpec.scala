@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.Pipeline
+import graft.util.ShmDirs
 
 /** Deterministic-randomness pipeline ops: portable hash, splits, stratified
   * sampling, mixture weights, KMV distinct sketch.
@@ -313,6 +314,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(again == out)
   }
 
+  test("a malformed reliable-checkpoint flag fails loudly, naming the key and value") {
+    import graft.util.Checkpoints._
+    spark.conf.set(ReliableKey, "yes")
+    try {
+      val e = intercept[IllegalArgumentException](spark.range(3).toDF().cutLineage())
+      assert(e.getMessage.contains(ReliableKey) && e.getMessage.contains("yes"), e.getMessage)
+    } finally spark.conf.unset(ReliableKey)
+  }
+
   test("reliable-checkpoint mode: identical classifier/dedup results, files in the dir") {
     // r13 scale-safety flag (guide §5): spark.graft.checkpoint.reliable routes
     // every operator cutLineage site from executor-local blocks to reliable
@@ -339,7 +349,7 @@ class PipelineSpec extends AnyFunSuite {
       finally ls.close()
     }
     val fallbackBefore = fallbackDirs()
-    val dir = java.nio.file.Files.createTempDirectory("graft_test_rckpt_")
+    val dir = ShmDirs.tempDir("graft_test_rckpt_")
     spark.conf.set(graft.util.Checkpoints.ReliableKey, "true")
     spark.conf.set(graft.util.Checkpoints.DirKey, dir.toString)
     try {

@@ -45,7 +45,18 @@ class PromQLSpec extends AnyFunSuite {
       sel <- Gen.oneOf("cpu", "cpu{host=\"a\"}", "cpu{host=~\"h[0-", "{", "}", "")
       tail <- Gen.oneOf(")", "", "[5m])", ") by (host", ") by (host)")
     } yield s"$agg$sel$tail"
-    val gen = Gen.oneOf(noise, promish)
+    // operator expressions: 1-4 promish atoms joined by every operator
+    // spelling, with the bool and on(...) modifiers
+    val opSpelling = for {
+      op <- Gen.oneOf("+", "-", "*", "/", "==", "!=", ">", "<", ">=", "<=")
+      mod <- Gen.oneOf("", "", "bool ", "on(host) ", "bool on(host, env) ", "on() ")
+    } yield s" $op $mod"
+    val chain = for {
+      n <- Gen.choose(1, 4)
+      atoms <- Gen.listOfN(n, Gen.oneOf(promish, Gen.oneOf("cpu", "1", "0.5", "-cpu")))
+      ops <- Gen.listOfN(n - 1, opSpelling)
+    } yield atoms.head + ops.zip(atoms.tail).map { case (o, a) => o + a }.mkString
+    val gen = Gen.oneOf(noise, promish, chain)
     val prop = Prop.forAll(gen) { q =>
       // every entry point must TOTALLY handle garbage: fall back per the
       // reference (whole string = metric name), never throw
@@ -89,15 +100,17 @@ class PromQLSpec extends AnyFunSuite {
   }
 
   test("EXTENSION: vector binary operator — split positions, matching labels, on(), fallbacks") {
+    import graft.promql.PromQL.{VecBin, VecLeaf}
     // top-level split, parens/quotes respected
-    assert(PromQL.binarySplit("sum by (h) (a) / sum by (h) (b)")
-      .contains(("sum by (h) (a)", '/', None, "sum by (h) (b)")))
-    assert(PromQL.binarySplit("""a{job="x/y"}""").isEmpty, "op inside quotes is not a split")
-    assert(PromQL.binarySplit("rate(a[5m])").isEmpty, "ops only at depth 0")
-    assert(PromQL.binarySplit("-a").isEmpty, "leading minus is a sign")
+    assert(PromQL.parseVecTree("sum by (h) (a) / sum by (h) (b)") ==
+      VecBin(VecLeaf("sum by (h) (a)"), "/", None, VecLeaf("sum by (h) (b)")))
+    assert(PromQL.parseVecTree("""a{job="x/y"}""") == VecLeaf("""a{job="x/y"}"""),
+      "op inside quotes is not a split")
+    assert(PromQL.parseVecTree("rate(a[5m])") == VecLeaf("rate(a[5m])"), "ops only at depth 0")
+    assert(PromQL.parseVecTree("-a") == VecLeaf("-a"), "leading minus is a sign")
     // on(...) modifier
-    val withOn = PromQL.binarySplit("a / on(host, region) b")
-    assert(withOn.contains(("a", '/', Some(Seq("host", "region")), "b")))
+    assert(PromQL.parseVecTree("a / on(host, region) b") ==
+      VecBin(VecLeaf("a"), "/", Some(Seq("host", "region")), VecLeaf("b")))
     // transpiled shape: join on (bucket, labels), NULLIF guard on division,
     // metric_name dropped from the result (Prometheus __name__ semantics)
     val sql = PromQL.transpileRange(
@@ -109,8 +122,8 @@ class PromQLSpec extends AnyFunSuite {
     // whole-string treatment (metric-name fallback — never a throw)
     val fb = PromQL.transpileRange("sum by (a) (x) / sum by (b) (y)", 0L, 1L, 60L)
     assert(fb.contains("FROM metrics"), fb)
-    // chained operators (r11): no longer refused — transpiled with real
-    // precedence as nested joins (see the dedicated chained test below)
+    // chained operators: transpiled with real precedence as nested joins
+    // (see the dedicated chained test below)
     val chain = PromQL.transpileRange("a * b + c", 0L, 1L, 60L)
     assert(chain.contains(") l JOIN (") && chain.contains("l.value + r.value"), chain)
     // plain queries: byte-identical to the non-binary transpiler
@@ -149,12 +162,18 @@ class PromQLSpec extends AnyFunSuite {
     // scalar-scalar refused → whole-string fallback (parser totality)
     val ss = PromQL.transpileRange("1 + 2", 0L, 1L, 60L)
     assert(ss.contains("metric_name = '1 + 2'"), ss)
-    // SINGLE vector-op-vector queries route through the r10 transpiler
-    // byte-identically (spec-pinned byte identity, VERDICT r11 #4)
-    val single = "sum by (host) (click) / sum by (host) (view)"
-    assert(PromQL.transpileRange(single, 0L, 1000000000L, 60L) ==
-      PromQL.transpileRangeBinary("sum by (host) (click)", '/', None,
-        "sum by (host) (view)", 0L, 1000000000L, 60L))
+    // a SINGLE vector-op-vector query (the q_promql_binary shape) emits the
+    // SQL the single-operator transpiler emitted, byte for byte
+    def leaf(m: String) = "SELECT (timestamp_ns DIV 60000000000) * 60000000000 AS time_bucket, " +
+      "metric_name, `host`, SUM(COALESCE(value_f64, CAST(value_i64 AS DOUBLE), " +
+      s"CAST(value_u64 AS DOUBLE))) AS value FROM metrics WHERE metric_name = '$m' AND " +
+      "timestamp_ns >= 0 AND timestamp_ns <= 1000000000 GROUP BY time_bucket, metric_name, " +
+      "`host` ORDER BY time_bucket"
+    assert(PromQL.transpileRange("sum by (host) (click) / sum by (host) (view)",
+      0L, 1000000000L, 60L) ==
+      "SELECT l.time_bucket, l.`host`, l.value / NULLIF(r.value, 0) AS value FROM " +
+        s"(${leaf("click")}) l JOIN (${leaf("view")}) r ON l.time_bucket = r.time_bucket " +
+        "AND l.`host` = r.`host` ORDER BY time_bucket, `host`")
   }
 
   test("EXTENSION r12: comparison tier — below arithmetic, filter vs bool " +
@@ -195,7 +214,7 @@ class PromQLSpec extends AnyFunSuite {
     assert(run("sum by (host) (click) == sum by (host) (view)") == Nil, "==")
     // scalar CMP vector: elements come from the vector side
     assert(run("5 < sum by (host) (click)") == Seq(("h2", 6.0)), "scalar-lhs")
-    // arithmetic-only queries route byte-identically (no comparison present)
+    // all-distinct leaves need no CTE
     val arith = "sum by (host) (click) / sum by (host) (view) * 100"
     assert(!PromQL.transpileRange(arith, 0L, 1L, 60L).contains("__leaf"), "no CTE")
     // repeated leaf → ONE CTE, scanned once: a/b + a/c scans `a` once
@@ -208,6 +227,20 @@ class PromQLSpec extends AnyFunSuite {
     val cteGot = spark.sql(cteSql).collect()
       .map(r => (r.getString(1), r.getDouble(2))).toSeq.sortBy(_._1)
     assert(cteGot == Seq(("h1", 1.25), ("h2", 1.75)), cteGot.toString)
+    // x op x reads its one leaf through one CTE, and returns the rows of the
+    // two-subquery join form that distinct leaves get
+    val x = "sum by (host) (click)"
+    val xx = PromQL.transpileRange(s"$x / $x", 0L, 59L * t, 60L)
+    assert(xx.startsWith("WITH __leaf0 AS (") && !xx.contains("__leaf1"), xx)
+    assert("metric_name = 'click'".r.findAllIn(xx).size == 1, xx)
+    val leaf = PromQL.transpileRange(x, 0L, 59L * t, 60L)
+    val twoSubqueries = "SELECT l.time_bucket, l.`host`, l.value / NULLIF(r.value, 0) " +
+      s"AS value FROM ($leaf) l JOIN ($leaf) r ON l.time_bucket = r.time_bucket AND " +
+      "l.`host` = r.`host` ORDER BY time_bucket, `host`"
+    def rows(q: String) = spark.sql(q).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+    assert(rows(xx) == rows(twoSubqueries))
+    assert(rows(xx) == Seq((0L, "h1", 1.0), (0L, "h2", 1.0)), rows(xx).toString)
   }
 
   test("EXTENSION r11: chained binary — executed semantics on a fixture " +

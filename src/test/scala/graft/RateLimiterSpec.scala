@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.RateLimiter
 import graft.server.RateLimiter._
+import graft.util.ShmDirs
 
 /** Per-tenant rate limiting (reference src/rate_limit.rs — its unit tests
   * ported 1:1, plus the two refill quirks the reference's tests don't pin)
@@ -88,7 +89,7 @@ class RateLimiterSpec extends AnyFunSuite {
     import java.net.URI
     val spark = SparkTestBase.spark
     val cat = new graft.catalog.ChunkCatalog(
-      java.nio.file.Files.createTempDirectory("graft_rl_"), cacheTtlMs = 0L)
+      ShmDirs.tempDir("graft_rl_"), cacheTtlMs = 0L)
     val t0 = 1704067200L * 1000000000L
     new graft.ingest.ChunkWriter(cat).write(graft.ingest.Converters.pointsToDf(spark,
       Seq(graft.ingest.MetricPoint(t0, "m", 1.0, Map("host" -> "h")))))

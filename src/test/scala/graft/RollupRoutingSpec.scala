@@ -5,7 +5,7 @@ import graft.catalog.ChunkCatalog
 import graft.compact.Downsampler
 import graft.engine.QueryEngine
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** Engine-integrated rollup routing (graft.plans.RollupRouting): the SAME SQL
   * text answers from the registered rollup when it qualifies and from raw
@@ -21,7 +21,7 @@ class RollupRoutingSpec extends AnyFunSuite {
 
   /** 4 hours × 2 metrics × 2 hosts × 12 points/hour, integer values. */
   private def freshEngine(): (QueryEngine, ChunkCatalog, ChunkWriter) = {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_rollup_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_rollup_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val points = for {
       h <- 0 until 4
@@ -80,7 +80,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     // a user-visible parquet table with IDENTICAL column names but its own
     // data — a bucketed aggregate over it must answer from ITS rows, never
     // be silently rewritten onto this warehouse's rollup
-    val foreign = Files.createTempDirectory("graft_foreign_").resolve("t").toString
+    val foreign = ShmDirs.tempDir("graft_foreign_").resolve("t").toString
     Converters.pointsToDf(spark,
         Seq(MetricPoint(t0, "cpu_usage", 999.0, Map("host" -> "server1"))))
       .write.parquet(foreign)

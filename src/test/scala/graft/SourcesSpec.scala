@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.MetricSources
+import graft.util.ShmDirs
 
 class SourcesSpec extends AnyFunSuite {
 
@@ -34,7 +35,7 @@ class SourcesSpec extends AnyFunSuite {
       (3L, "line1\nline2\ttab \"quoted\" back\\slash", "en", "books", 35L),
       (4L, null, null, "crawl", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val path = java.nio.file.Files.createTempDirectory("graft_jsonl_spec_").toString
+    val path = ShmDirs.tempDir("graft_jsonl_spec_").toString
     DocumentSources.writeJsonl(docs, path)
     val back = DocumentSources.readDocumentsJsonl(spark, path)
       .orderBy("doc_id").collect()
@@ -94,7 +95,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("fromCsv end-to-end into the engine") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_src_")
+    val dir = ShmDirs.tempDir("graft_src_")
     val csv = dir.resolve("in.csv")
     java.nio.file.Files.writeString(csv,
       "t,name,v,host\n1704067200,cpu,1.5,a\n1704067260,cpu,2.5,b\n")

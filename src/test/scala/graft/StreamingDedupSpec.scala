@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingDedup
+import graft.util.ShmDirs
 
 /** Top-level (not spec-nested) so the encoder's codegen can reference it —
   * a class nested in a test instance makes Janino's generated code fall back
@@ -78,7 +79,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     val fresh3 = (1 to 20).map(i => s"y$i").mkString(" ")
 
     def setup(tag: String): (String, String) = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_sni_$tag").toString
+      val root = ShmDirs.tempDir(s"graft_sni_$tag").toString
       val corpusPath = s"$root/corpus"
       val indexRoot = s"$root/index"
       val corpus0 = Seq((100L, 0L, base)).toDF("doc_id", "ts_us", "text")
@@ -97,7 +98,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
     // ---- stream path ----
     val (sCorpus, sIndex) = setup("s")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sni_ckpt").toString
+    val ckpt = ShmDirs.tempDir("graft_sni_ckpt").toString
     val input = MemoryStream[Doc]
     val q = StreamingDedup.nearDupIngestStream(
       input.toDF().withColumnRenamed("id", "doc_id"), sIndex, sCorpus, ckpt)

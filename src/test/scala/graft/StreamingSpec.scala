@@ -6,6 +6,7 @@ import graft.catalog.ChunkCatalog
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
 import graft.streaming.LiveMerge
 import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** Historical+live merge semantics (reference src/query/streaming.rs:73-202):
   * live rows with timestamp < merge_timestamp are dropped; WHERE filters apply per
@@ -17,7 +18,7 @@ class StreamingSpec extends AnyFunSuite {
   private val t0 = 1704067200L * 1000000000L
 
   test("liveTail drops rows before merge_timestamp and applies WHERE") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_stream_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_stream_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     // historical chunk: before merge timestamp
     writer.write(Converters.pointsToDf(spark, Seq(
@@ -52,7 +53,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("CatalogTail: new flushes forwarded post-cutoff; compacted chunks never re-forwarded") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_tail_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_tail_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     writer.write(Converters.pointsToDf(spark, Seq(
       MetricPoint(t0, "cpu", 1.0, Map("host" -> "a")),
@@ -82,7 +83,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("CatalogTail: flush compacted away between polls is recovered exactly once (lineage)") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_tailrec_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_tailrec_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     writer.write(Converters.pointsToDf(spark, Seq(
       MetricPoint(t0, "cpu", 0.5, Map("host" -> "a")))))
@@ -114,10 +115,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ingestSink: stream flushes through the production chunk path, queryable mid-stream") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_sink_"), cacheTtlMs = 0L)
-    val ckpt = Files.createTempDirectory("graft_sink_ckpt_").toString
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_sink_"), cacheTtlMs = 0L)
+    val ckpt = ShmDirs.tempDir("graft_sink_ckpt_").toString
     // a one-chunk "upstream" dir acts as the stream source
-    val srcCat = new ChunkCatalog(Files.createTempDirectory("graft_sink_src_"), cacheTtlMs = 0L)
+    val srcCat = new ChunkCatalog(ShmDirs.tempDir("graft_sink_src_"), cacheTtlMs = 0L)
     new ChunkWriter(srcCat).write(Converters.pointsToDf(spark, (0 until 50).map(i =>
       MetricPoint(t0 + i * 1000000000L, "cpu", i.toDouble, Map("host" -> "a")))))
     val schema = spark.read.parquet(srcCat.allChunks.head.path).schema
@@ -148,7 +149,7 @@ class StreamingSpec extends AnyFunSuite {
     // the write on batchId, so the replay must be a no-op (no duplicate chunks,
     // unchanged query results), and a half-written never-registered dir from a
     // crashed attempt must be overwritten, not doubled.
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_replay_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_replay_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val batch = Converters.pointsToDf(spark, (0 until 20).map(i =>
       MetricPoint(t0 + i * 1000000000L, "cpu", i.toDouble, Map("host" -> "a"))))
@@ -191,7 +192,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed agg extension produces per-window counts under watermark") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_stream2_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_stream2_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     writer.write(Converters.pointsToDf(spark, (0 until 20).map(i =>
       MetricPoint(t0 + i * 30L * 1000000000L, "cpu", i.toDouble, Map("host" -> "a")))))

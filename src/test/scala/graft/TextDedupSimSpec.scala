@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.text.TextFunctions
 import graft.dedup.Dedup
 import graft.sim.Similarity
+import graft.util.ShmDirs
 
 class TextDedupSimSpec extends AnyFunSuite {
 
@@ -159,7 +160,7 @@ class TextDedupSimSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((10L, 1L)))
     // persisted-index path: same result without touching corpus text again
-    val idx = java.nio.file.Files.createTempDirectory("neardup_idx_").toString
+    val idx = ShmDirs.tempDir("neardup_idx_").toString
     Dedup.writeNearDupIndex(corpus, idx, numHashes = 32)
     val viaIdx = Dedup.incrementalNearDupAgainstIndex(batch, idx,
         threshold = 0.5, numHashes = 32, bands = 16)
@@ -846,7 +847,7 @@ class TextDedupSimSpec extends AnyFunSuite {
     val media = Multimodal.documentsAsMedia(
       docs((1L, "short"), (2L, "a much longer payload body"), (3L, "x"))
         .withColumn("n_chars", length(col("text"))))
-    val dir = java.nio.file.Files.createTempDirectory("media_prune_").toString + "/t"
+    val dir = ShmDirs.tempDir("media_prune_").toString + "/t"
     media.write.parquet(dir)
     val stats = Multimodal.mediaStats(spark.read.parquet(dir))
     val rows = stats.collect()

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.ChunkCatalog
 import graft.engine.QueryEngine
 import graft.ingest.{ChunkWriter, Converters, MetricPoint}
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** Engine-integrated naive-top-k rewrite (graft.plans.TopKRouting): the SAME
   * SQL text — row_number() ≤ k over the engine's `metrics` relation — re-plans as
@@ -21,7 +21,7 @@ class TopKRoutingSpec extends AnyFunSuite {
   private def freshEngine(): QueryEngine = new QueryEngine(spark, freshCatalog())
 
   private def freshCatalog(): ChunkCatalog = {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_topk_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_topk_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val points = for {
       m <- Seq("cpu_usage", "mem_usage")
@@ -101,7 +101,7 @@ class TopKRoutingSpec extends AnyFunSuite {
         s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}" +
         ") WHERE rn <= 5 ORDER BY metric_name, rn"))
     // a foreign table mimicking the schema must not be rewritten
-    val foreign = Files.createTempDirectory("graft_topk_f_").resolve("t").toString
+    val foreign = ShmDirs.tempDir("graft_topk_f_").resolve("t").toString
     Converters.pointsToDf(spark,
         Seq(MetricPoint(t0, "cpu_usage", 999.0, Map("host" -> "server1"))))
       .write.parquet(foreign)

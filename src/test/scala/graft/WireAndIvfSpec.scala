@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{Converters, PromWire}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import java.io.ByteArrayOutputStream
+import graft.util.ShmDirs
 
 /** Prometheus remote-write wire parsing (F4) + IVF ANN + concurrency/atomicity. */
 class WireAndIvfSpec extends AnyFunSuite {
@@ -148,7 +149,7 @@ class WireAndIvfSpec extends AnyFunSuite {
 
   test("catalog: concurrent register/replace keeps every committed chunk (atomicity)") {
     val cat = new graft.catalog.ChunkCatalog(
-      java.nio.file.Files.createTempDirectory("graft_conc_"), cacheTtlMs = 0L)
+      ShmDirs.tempDir("graft_conc_"), cacheTtlMs = 0L)
     val hourNs = 3600L * 1000000000L
     val threads = (0 until 8).map { t =>
       new Thread(() => {

@@ -8,7 +8,7 @@ import graft.functions.ZOrderExpressions._
 import graft.catalog.ChunkCatalog
 import graft.compact.Compactor
 import graft.ingest.ChunkWriter
-import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** Z-order clustering: the Morton-key expression's bit-level contract, and
   * the clustered compaction path end-to-end — data preserved exactly, output
@@ -149,7 +149,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   private def compacted(cluster: Boolean): (ChunkCatalog, Seq[graft.catalog.ChunkMeta]) = {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_zorder_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_zorder_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val df = mkMetrics(20000)
     // two interleaved L0 writes per hour → ripe L0 groups
@@ -202,7 +202,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("numeric cluster columns: DoubleRange/LongRange norms from catalog stats, value predicates prune") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_zorder_num_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_zorder_num_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val df = mkMetrics(20000) // value_f64 = row index → wide observed range
     writer.write(df.filter(col("value_f64") % 2 === 0))
@@ -231,7 +231,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("clustered compactor composes with the maintenance sweep: downsample and retention stay exact") {
     import graft.compact.{Compactor, Maintenance}
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_zorder_mnt_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_zorder_mnt_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val df = mkMetrics(20000) // hours 0 and 1, value_f64 = 0..19999
     writer.write(df.filter(col("value_f64") % 2 === 0))
@@ -275,7 +275,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("maxMergeSpanNs bounds leveled merges so retention reclaims at the configured granularity") {
     import graft.compact.Compactor
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_zorder_span_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_zorder_span_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val df = mkMetrics(20000) // hours 0 and 1
     writer.write(df.filter(col("value_f64") % 2 === 0))
@@ -300,7 +300,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("sweep mixing eligible and ineligible groups clusters only the cold ones") {
-    val cat = new ChunkCatalog(Files.createTempDirectory("graft_zorder_mix_"), cacheTtlMs = 0L)
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_zorder_mix_"), cacheTtlMs = 0L)
     val writer = new ChunkWriter(cat)
     val df = mkMetrics(8000)
     writer.write(df.filter(col("value_f64") % 2 === 0))

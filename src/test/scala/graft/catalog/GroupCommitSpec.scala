@@ -3,6 +3,7 @@ package graft.catalog
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import graft.util.ShmDirs
 
 /** Group-commit coalescing and the lost-CAS retry, observed without a timing
   * race: the first writer's delta holds its leader inside the commit until
@@ -34,7 +35,7 @@ class GroupCommitSpec extends AnyFunSuite {
 
   test("a child process commits while the leader is held: the leader loses the " +
     "CAS, re-evaluates its delta once against the child's commit and lands both") {
-    val dir = Files.createTempDirectory("graft_group_commit_xproc_")
+    val dir = ShmDirs.tempDir("graft_group_commit_xproc_")
     val cat = new ChunkCatalog(dir, cacheTtlMs = 0L)
     cat.register(chunk("seed", 0))
     val v0 = cat.state.version
@@ -78,7 +79,7 @@ class GroupCommitSpec extends AnyFunSuite {
 
   test("a round of 8 writers lands in exactly 2 commits: the held leader's, " +
     "then one for the 7 ops queued behind it") {
-    val dir = Files.createTempDirectory("graft_group_commit_")
+    val dir = ShmDirs.tempDir("graft_group_commit_")
     val n = 8
     val rounds = 5
     val cats = (0 until n).map(_ => new ChunkCatalog(dir, cacheTtlMs = 0L))

@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import graft.util.ShmDirs
 
 /** The spent-version ledger keeps the manifest/lease CAS resurrection guard
   * while staying bounded (floor compaction) — the r8 fix for the
@@ -13,7 +14,7 @@ import java.nio.file.Files
   */
 class SpentVersionsSpec extends AnyFunSuite {
 
-  private def freshDir() = Files.createTempDirectory("graft_spent_")
+  private def freshDir() = ShmDirs.tempDir("graft_spent_")
 
   private def entryCount(dir: java.nio.file.Path): Long = {
     val s = Files.list(dir)
@@ -119,7 +120,7 @@ class SpentVersionsSpec extends AnyFunSuite {
   }
 
   test("catalog end-to-end: 1100 commits cross the compaction point and stay bounded") {
-    val root = Files.createTempDirectory("graft_cat_spent_")
+    val root = ShmDirs.tempDir("graft_cat_spent_")
     val cat = new ChunkCatalog(root, cacheTtlMs = 0L)
     val hourNs = 3600L * 1000000000L
     (1 to 1100).foreach { i =>
@@ -139,7 +140,7 @@ class SpentVersionsSpec extends AnyFunSuite {
   }
 
   test("lease store end-to-end: commit churn crosses compaction and stays bounded") {
-    val root = Files.createTempDirectory("graft_lease_spent_")
+    val root = ShmDirs.tempDir("graft_lease_spent_")
     val store = new LeaseStore(root)
     (1 to 360).foreach { i =>
       val l = store.acquire("n1", Seq(s"chunks/x$i"), 0)
