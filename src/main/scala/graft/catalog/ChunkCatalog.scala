@@ -940,15 +940,16 @@ object ChunkCatalog {
     * falls back to mergeSchema footer inference). Field order: first seen.
     * Keeping the schema in metadata lets every read skip the distributed
     * parquet-footer inference job, the same way the reference serves schema
-    * from its metadata store rather than from S3 object footers.
+    * from its metadata store rather than from S3 object footers. Each
+    * distinct DDL is parsed once: one writer's chunks share theirs.
     */
   def mergedSchema(chunks: Seq[ChunkMeta]): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types.{StructField, StructType}
     if (chunks.isEmpty || chunks.exists(_.schemaDdl.isEmpty)) return None
     try {
       val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-      chunks.foreach { c =>
-        StructType.fromDDL(c.schemaDdl.get).fields.foreach { f =>
+      chunks.iterator.map(_.schemaDdl.get).distinct.foreach { ddl =>
+        StructType.fromDDL(ddl).fields.foreach { f =>
           fields.get(f.name) match {
             case None => fields(f.name) = f.copy(nullable = true)
             case Some(prev) if prev.dataType != f.dataType => return None

@@ -2,9 +2,13 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.{And, CurrentDate, CurrentTime, CurrentTimestampLike}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.expressions.{And, CurrentDate, CurrentTime,
+  CurrentTimestampLike, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias,
+  UnresolvedWith}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 import graft.catalog.ChunkCatalog
 import graft.prune.{ColumnPredicate, PredicateExtraction, TimeRange}
@@ -12,8 +16,12 @@ import graft.schema.MetricSchema
 
 /** The query pipeline of the reference (src/query/mod.rs:158-241), Spark-first:
   *
-  *  1. PARSE/ANALYZE — parse the SQL's WHERE via Catalyst and extract the time range
-  *     (default: last 1 hour) + column predicates (engine.rs:368-487, 493-650).
+  *  1. PARSE/ANALYZE — parse the SQL, bind every `metrics` reference to a
+  *     schema-only stand-in (an empty scan with the catalog's union schema),
+  *     analyze + optimize, and extract each scan's time range (default: last
+  *     1 hour) + column predicates from the Filters Catalyst pushed onto it
+  *     (engine.rs:368-487, 493-650; the reference walks its resolved plan
+  *     the same way). The statement selects the union of its scans' chunks.
   *  2. METADATA PRUNE — hour-bucket time-index range scan + zone-map filter over the
   *     catalog (s3.rs:1075-1136). This is the layer Spark doesn't give us for free.
   *     It is the engine's only chunk selection: [[serve]] (under `sql`,
@@ -272,49 +280,53 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** One entry per query TEXT, access-ordered, at most 256: its ANTLR parse,
     * shared by predicate extraction and execution (each call binds and
     * analyzes its own copy, so reusing the unresolved tree across path sets
-    * is safe), and its (range, preds) when extraction is provably independent
-    * of `nowNs` (explicit literal time bounds — the dashboard-repeat shape).
-    * A warm repeat of a time-fixed text skips Catalyst entirely: hash probe →
-    * catalog prune (TTL-cached metadata) → plan cache hit. `fixed = None`
-    * marks a text whose range DOES depend on nowNs (now()-relative or
-    * default window): it is re-extracted from the cached parse on every call.
+    * is safe), and its scans' conjuncts from the optimized stand-in plan.
+    * A warm repeat skips Catalyst entirely: hash probe → extraction from the
+    * memoized conjuncts → catalog prune → plan cache hit. A text that calls
+    * a clock is optimized again on every call, since the optimizer folds the
+    * clock's value into its bounds.
     */
   private val textCache = new java.util.LinkedHashMap[String, Text](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, Text]): Boolean =
       size() > 256
   }
 
-  /** True iff `query`'s range and predicates are memoized as coming from
-    * literals (parse-only extraction found a time bound, so the range is
-    * neither the default window nor the full range) and the serve that first
-    * planned it found no clock call ([[callsClock]]). Such a query's answer
-    * depends only on the data the manifest version names, not on when it
-    * runs, so it is the only kind any cache tier reuses. A query not yet
-    * served, now-relative, or evicted from the text cache, is false.
+  /** True iff `query`, when first seen, had no clock call in its analyzed
+    * stand-in plan ([[callsClock]]) and every scan of `metrics` had a time
+    * bound (none read the default window). Such a query's answer depends
+    * only on the data the manifest version names, not on when it runs, so
+    * it is the only kind any cache tier reuses. A query not yet served or
+    * evicted from the text cache is false.
     */
   def isTimeFixed(query: String): Boolean =
-    textCache.synchronized(Option(textCache.get(query)).exists(_.timeFixed.contains(true)))
+    textCache.synchronized(Option(textCache.get(query)).exists(_.timeFixed))
 
-  /** `query`'s parse and its (range, preds) at `nowNs`. A first sighting
-    * parses ONCE and runs the parse-only extraction, which reads `nowNs`
-    * only to build the default window: any other result comes from literals
-    * alone and is memoized with the parse.
+  /** `query`'s text entry and its (range, preds) at `nowNs`, extracted from
+    * the plan bound to `st`'s stand-in. A first sighting parses ONCE.
     */
-  private def textOf(query: String,
-                     nowNs: Long): (Text, (TimeRange, Seq[ColumnPredicate])) =
-    textCache.synchronized(textCache.get(query)) match {
-      case text @ Text(_, Some(fixed)) => (text, fixed)
-      case text @ Text(plan, None) =>
-        (text, withOptimizedFallback(extractFromParsed(plan, nowNs), plan, nowNs))
-      case null =>
-        val plan = spark.sessionState.sqlParser.parsePlan(query)
-        val a = extractFromParsed(plan, nowNs)
-        val fixed = !isFallback(a._1, nowNs)
-        val full = withOptimizedFallback(a, plan, nowNs)
-        val text = Text(plan, if (fixed) Some(full) else None)
-        textCache.synchronized(textCache.put(query, text))
-        (text, full)
-    }
+  private def textOf(query: String, st: ChunkCatalog.CatalogState,
+                     nowNs: Long): (Text, (TimeRange, Seq[ColumnPredicate])) = {
+    val seen = textCache.synchronized(textCache.get(query))
+    val text =
+      if (seen != null && !seen.callsClock) seen
+      else {
+        val plan = if (seen != null) seen.plan else spark.sessionState.sqlParser.parsePlan(query)
+        val fresh = textFor(plan, st)
+        textCache.synchronized(textCache.put(query, fresh))
+        fresh
+      }
+    (text, PredicateExtraction.extract(text.scans, nowNs))
+  }
+
+  /** The text entry of `parsed`: bound to `st`'s stand-in, analyzed and
+    * optimized, each scan's conjuncts and whether it calls a clock.
+    */
+  private def textFor(parsed: LogicalPlan, st: ChunkCatalog.CatalogState): Text = {
+    val leaf = standIn(st)
+    val analyzed = GraftBridge.ofRows(spark, withMetrics(parsed, leaf)).queryExecution.analyzed
+    Text(parsed, PredicateExtraction.scanConjuncts(spark.sessionState.optimizer.execute(analyzed),
+      { case r: LogicalRDD => r.rdd eq leaf.rdd; case _ => false }), callsClock(analyzed))
+  }
 
   /** True iff an analyzed plan, subqueries included, calls a clock function:
     * one of the expressions Spark's `ComputeCurrentTime` fixes when a plan is
@@ -327,24 +339,6 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         case _ => false
       })
     }.contains(true)
-
-  /** The ranges extraction falls back to when the parse shows no time bound. */
-  private def isFallback(range: TimeRange, nowNs: Long): Boolean =
-    range == TimeRange(nowNs - PredicateExtraction.DefaultWindowNs, nowNs) ||
-      range == TimeRange(Long.MinValue, Long.MaxValue)
-
-  /** Fallback leg of the two-phase extraction: when the parse-only result is
-    * the default window or the full range, the WHERE may still carry foldable
-    * time expressions (now() - interval, literal arithmetic). Mirror the
-    * reference's two-phase trick (bootstrap-register then analyze the RESOLVED
-    * plan, mod.rs:163-184): bind every chunk, let the optimizer
-    * constant-fold, and re-extract from the optimized plan.
-    */
-  private def withOptimizedFallback(found: (TimeRange, Seq[ColumnPredicate]),
-                                    parsed: LogicalPlan,
-                                    nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
-    if (isFallback(found._1, nowNs)) analyzeOptimized(parsed, nowNs).getOrElse(found)
-    else found
 
   def sql(query: String, nowNs: Long = System.currentTimeMillis() * 1000000L): DataFrame =
     serve(query, nowNs).df
@@ -377,8 +371,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     */
   def serve(query: String, nowNs: Long = System.currentTimeMillis() * 1000000L,
             tenant: Option[String] = None, asOf: Option[Long] = None): Served = {
-    val (text, (range, preds)) = textOf(query, nowNs)
-    val basePaths = pruneIn(asOf.fold(catalog.state)(catalog.stateAt), range, preds)
+    val st = asOf.fold(catalog.state)(catalog.stateAt)
+    val (text, (range, preds)) = textOf(query, st, nowNs)
+    val basePaths = pruneIn(st, range, preds)
     val paths = tenant.fold(basePaths)(t =>
       basePaths.filter(p => ChunkCatalog.tenantOf(catalog.root, p) == t))
     val split = catalog.hasActiveSplit
@@ -388,7 +383,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val key = (query, paths ++ rollups.map("rollup:" + _.path), split)
     def served(df: DataFrame, mode: String, route: Route = Raw,
                rows: Option[Array[Row]] = None) = Served(df, rows, mode, route, paths)
-    val reuse = text.timeFixed.contains(true)
+    val reuse = text.timeFixed
     var toLocalize: DataFrame = null
     if (reuse) planCache.synchronized {
       val hit = planCache.get(key)
@@ -415,7 +410,6 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     // Reuse the cached PARSED tree — the ANTLR parse is paid once per text —
     // bound to THIS query's path set; ofRows analyzes it eagerly.
     val raw = GraftBridge.ofRows(spark, withMetrics(text.plan, relationOf(paths)))
-    if (text.timeFixed.isEmpty) text.timeFixed = Some(!callsClock(raw.queryExecution.analyzed))
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
     // aggregate the registered rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
@@ -452,7 +446,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         (raw.dropDuplicates(dedupCols), Raw)
       else (raw, Raw)
     }
-    if (text.timeFixed.contains(true))
+    if (reuse)
       planCache.synchronized { planCache.put(key, Planned(df, route)) }
     served(df, "computed", route)
   }
@@ -542,40 +536,12 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     s.rows.getOrElse(s.df.collect())
   }
 
-  private def analyzeOptimized(parsed: LogicalPlan,
-                               nowNs: Long): Option[(TimeRange, Seq[ColumnPredicate])] =
-    try {
-      // Optimize the ANALYZED plan directly — queryExecution.optimizedPlan
-      // first substitutes any plan persisted on the session as an
-      // InMemoryRelation, which erases the Filter nodes: a query matching
-      // one would re-extract NO bounds, fall to the default window, and
-      // prune to the wrong chunk set.
-      val analyzed = GraftBridge.ofRows(spark,
-        withMetrics(parsed, relationOf(catalog.allChunks.map(_.path))))
-        .queryExecution.analyzed
-      val optimized = spark.sessionState.optimizer.execute(analyzed)
-      val extracted = PredicateExtraction.extract(optimized, nowNs)
-      Some(extracted)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Step 1: extract time range + column predicates from the query's WHERE clauses.
-    * We parse the full statement and walk its Filter conditions (unresolved is fine —
-    * we only need column names and literals).
+  /** Step 1: the time range + column predicates [[serve]] prunes `query`
+    * with at `nowNs` over the live catalog, so `prune(analyze(q, n))` is the
+    * path set `serve(q, n)` reads. Memoized with the text like a serve's.
     */
   def analyze(query: String, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
-    extractFromParsed(spark.sessionState.sqlParser.parsePlan(query), nowNs)
-
-  /** Extraction over an already-parsed plan — a pure tree-walk, so callers can
-    * amortize the (relatively expensive) SQL parse across extractions.
-    *
-    * ALL Filter nodes' conjuncts go through ONE extraction (PredicateExtraction
-    * .extract): the default last-1-hour window applies only when NO time bound
-    * exists anywhere in the statement. Extracting each Filter separately and
-    * intersecting would let a time-free OUTER filter (`WHERE rn <= 5` above a
-    * bounded subquery) inject the default window and silently empty the prune.
-    */
-  private def extractFromParsed(parsed: LogicalPlan, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
-    PredicateExtraction.extract(parsed, nowNs)
+    textOf(query, catalog.state, nowNs)._2
 
   /** Step 2: catalog prune — time index then zone maps. */
   def prune(range: TimeRange, preds: Seq[ColumnPredicate]): Seq[String] =
@@ -612,26 +578,50 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   private def relationOf(paths: Seq[String]): LogicalPlan = {
     val last = lastRelation.get()
     if (last != null && last._1 == paths) return last._2
-    val df =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          MetricSchema.default)
-      else {
-        // Catalog-held union schema → the scan skips the distributed
-        // parquet-footer inference job; mergeSchema only as fallback for
-        // chunks registered without a stored schema.
-        val metas = paths.flatMap(catalog.state.chunks.get)
-        val allKnown = metas.size == paths.size
-        val scan = graft.catalog.ChunkCatalog.mergedSchema(metas) match {
-          case Some(schema) if allKnown => spark.read.schema(schema).parquet(paths: _*)
-          case _ => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        }
-        if (allKnown && metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes) scan.coalesce(1)
-        else scan
-      }
-    val rel = df.queryExecution.analyzed
+    val metas = paths.flatMap(catalog.state.chunks.get)
+    val allKnown = metas.size == paths.size
+    val scan = readChunks(paths, if (allKnown) ChunkCatalog.mergedSchema(metas) else None)
+    val rel = (if (paths.nonEmpty && allKnown &&
+        metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes) scan.coalesce(1) else scan)
+      .queryExecution.analyzed
     lastRelation.set((paths, rel))
     rel
+  }
+
+  /** A scan of `paths`: with the catalog-held union schema the read skips
+    * the distributed parquet-footer inference job; mergeSchema (mirroring
+    * DataFusion's multi-path schema inference) only for chunks registered
+    * without a stored schema. No path ⇒ an empty frame with the default
+    * schema (engine.rs:189-205).
+    */
+  private def readChunks(paths: Seq[String], schema: Option[StructType]): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], MetricSchema.default)
+    else schema.fold(spark.read.option("mergeSchema", "true").parquet(paths: _*))(
+      spark.read.schema(_).parquet(paths: _*))
+
+  /** The last (catalog version → stand-in) pair [[standIn]] built. */
+  private val lastStandIn = new java.util.concurrent.atomic.AtomicReference[(Long, LogicalRDD)]()
+
+  /** The schema-only `metrics` that extraction binds: an empty scan with the
+    * union schema of every chunk `st` holds, so a query over any pruned set
+    * resolves against it, and no chunk is listed or read. Without a
+    * catalog-held union schema (a chunk registered without one) the columns
+    * are inferred from every chunk's footer, once per catalog version; if
+    * that fails (conflicting types) the stand-in has the default schema.
+    * One per catalog version; [[labels]] and the label endpoints read its
+    * schema too.
+    */
+  private def standIn(st: ChunkCatalog.CatalogState): LogicalRDD = {
+    val last = lastStandIn.get()
+    if (last != null && last._1 == st.version) return last._2
+    val metas = st.chunks.values.toSeq.sortBy(_.path)
+    val schema = ChunkCatalog.mergedSchema(metas).getOrElse(
+      try readChunks(metas.map(_.path), None).schema
+      catch { case scala.util.control.NonFatal(_) => MetricSchema.default })
+    val leaf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      .queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    lastStandIn.set((st.version, leaf))
+    leaf
   }
 
   /** Bind every `metrics` reference of a parsed statement — in subqueries and
@@ -655,7 +645,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * `metrics` relation over every chunk minus internal columns, plus `__name__`.
     */
   def labels(): Seq[String] = {
-    val cols = relationOf(catalog.allChunks.map(_.path)).schema.fieldNames.toSeq
+    val cols = standIn(catalog.state).schema.fieldNames.toSeq
     ("__name__" +: cols.filterNot(MetricSchema.internalColumns.contains)).distinct.sorted
   }
 
@@ -689,21 +679,23 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** The `metrics` rows in `[startNs, endNs]` (a missing side unbounded) that
     * match every matcher. Chunks come from [[prune]] over that range and the
-    * zone-map predicates the matchers' SQL conditions extract to, bound as in
-    * [[relationOf]]. The columns are the whole catalog's union schema, in its
-    * order: a label that no selected chunk carries reads as NULL, as it does
-    * over all chunks, so it gives no label values and `!~` keeps the row.
+    * zone-map predicates the matchers' SQL conditions extract to, as a
+    * Filter over the stand-in like a query's, bound as in [[relationOf]].
+    * The columns are the stand-in's union schema, in its order: a label
+    * that no selected chunk carries reads as NULL, as it does over all
+    * chunks, so it gives no label values and `!~` keeps the row.
     */
   private def matchedRows(matchers: Seq[graft.promql.LabelMatcher],
                           startNs: Option[Long], endNs: Option[Long]): DataFrame = {
     val conds = matchers.map(m =>
       spark.sessionState.sqlParser.parseExpression(graft.promql.PromQL.matcherToSql(m)))
+    val st = catalog.state
     // the range comes from startNs/endNs; extraction's own range is ignored
     val preds = conds.reduceOption(And).fold(Seq.empty[ColumnPredicate])(c =>
-      PredicateExtraction.extractFromExpression(c, 0L)._2)
+      PredicateExtraction.extract(textFor(Filter(c, standIn(st)), st).scans, 0L)._2)
     val range = TimeRange(startNs.getOrElse(Long.MinValue), endNs.getOrElse(Long.MaxValue))
-    val pruned = GraftBridge.ofRows(spark, relationOf(prune(range, preds)))
-    val all = ChunkCatalog.mergedSchema(catalog.allChunks).getOrElse(pruned.schema)
+    val pruned = GraftBridge.ofRows(spark, relationOf(pruneIn(st, range, preds)))
+    val all = standIn(st).schema
     val rows = pruned.select(all.fields.toSeq.map(f =>
       if (pruned.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)): _*)
@@ -770,16 +762,13 @@ object QueryEngine {
   final case class Served(df: DataFrame, rows: Option[Array[Row]], mode: String,
                           route: Route, paths: Seq[String])
 
-  /** One text-cache entry: the parse, and the memoized (range, preds) of a
-    * query whose parse shows literal time bounds (None when parse-only
-    * extraction fell back to the default window or the full range, where
-    * the bounds may come from now() and are found again on every call).
-    * `timeFixed` ([[QueryEngine.isTimeFixed]]) is None until the first serve
-    * of a literal-bounded text plans it.
+  /** One text-cache entry: the parse, each scan's conjuncts in the
+    * optimized stand-in plan, and whether the analyzed plan calls a clock.
+    * [[QueryEngine.isTimeFixed]] is `timeFixed`.
     */
-  private final case class Text(plan: LogicalPlan,
-                                fixed: Option[(TimeRange, Seq[ColumnPredicate])]) {
-    @volatile var timeFixed: Option[Boolean] = if (fixed.isEmpty) Some(false) else None
+  private final case class Text(plan: LogicalPlan, scans: Seq[Seq[Expression]],
+                                callsClock: Boolean) {
+    val timeFixed: Boolean = !callsClock && !PredicateExtraction.readsDefaultWindow(scans)
   }
 
   /** The one plan-cache value per key. */

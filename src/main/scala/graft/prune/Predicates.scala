@@ -105,45 +105,65 @@ final case class TimeRange(startNs: Long, endNs: Long)
 object PredicateExtraction {
 
   import org.apache.spark.sql.catalyst.{expressions => cx}
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnresolvedWith}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 
   val DefaultWindowNs: Long = 3600L * 1000000000L
 
-  /** Extract (timeRange, columnPredicates) from an analyzed Spark plan — the Spark-side
-    * equivalent of the reference's LogicalPlan walk (src/query/engine.rs:368-487 and
-    * :493-650). Time predicates on `timestamp`/`timestamp_ns`/`time` contribute bounds
-    * (ns-normalized); everything else becomes ColumnPredicates.
-    *
-    * Semantic rule kept from the reference: when no time bounds are found, default to
-    * the LAST ONE HOUR ending at `nowNs` (engine.rs:378-385).
+  /** The conjuncts that bound each scan leaf (`isScan`) of an OPTIMIZED
+    * plan, subqueries and CTE definitions included: one entry per scan, each
+    * Filter conjunct above a scan that reads only that scan's columns. The
+    * Spark-side equivalent of the reference's walk of the resolved plan
+    * (src/query/engine.rs:368-487): Catalyst's pushdown has already moved
+    * each scan's own conditions (qualified columns, join and CTE bodies,
+    * folded now() and literal arithmetic) onto it, and a condition it cannot
+    * push (above a Window, a Limit, a non-deterministic Project) still
+    * names the scan's columns by their ids, so it bounds that scan and no
+    * other. A plan with no scan left (`SELECT 1`, a Filter folded to false)
+    * reads as one unfiltered scan, like a statement with no bound.
     */
-  def extract(plan: LogicalPlan, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) = {
-    val own = filterConjuncts(plan)
-    val found = extractFromConjuncts(own, nowNs)
-    if (found._1 != TimeRange(nowNs - DefaultWindowNs, nowNs)) found
-    else extractFromConjuncts(own ++ cteBodies(plan).flatMap(filterConjuncts), nowNs)
+  def scanConjuncts(plan: LogicalPlan, isScan: LogicalPlan => Boolean): Seq[Seq[cx.Expression]] = {
+    def walk(p: LogicalPlan, above: Seq[cx.Expression]): Seq[Seq[cx.Expression]] =
+      p.subqueries.flatMap(walk(_, Nil)) ++ (p match {
+        case leaf if isScan(leaf) => Seq(above.filter(_.references.subsetOf(leaf.outputSet)))
+        case Filter(cond, child) => walk(child, above ++ splitConjuncts(cond))
+        case other => other.children.flatMap(walk(_, above))
+      })
+    Some(walk(plan, Nil)).filter(_.nonEmpty).getOrElse(Seq(Nil))
   }
 
-  private def filterConjuncts(plan: LogicalPlan): Seq[cx.Expression] =
-    plan.collect { case Filter(cond, _) => splitConjuncts(cond) }.flatten
-
-  /** A parsed plan keeps its `WITH` definitions beside the query
-    * (`UnresolvedWith.cteRelations`), not among its children, so `collect`
-    * never visits them. [[extract]] reads them only when the rest of the
-    * statement has no time bound: a CTE narrower than a bounded main scan
-    * would otherwise narrow that scan's prune too. A statement whose every
-    * scan sits in a CTE body then takes its literal window from them, the
-    * window the optimized-plan fallback would find.
+  /** True iff the range [[extract]] finds moves with `nowNs`: some scan
+    * bounds no time and references none, so it reads the default last-1-hour
+    * window ending at `nowNs` (engine.rs:378-385).
     */
-  private def cteBodies(plan: LogicalPlan): Seq[LogicalPlan] =
-    plan.collect { case w: UnresolvedWith => w.cteRelations.map(_._2) }.flatten
-      .flatMap(body => body +: cteBodies(body))
+  def readsDefaultWindow(scans: Seq[Seq[cx.Expression]]): Boolean =
+    scans.exists(scanOf(_)._1.isEmpty)
 
-  def extractFromExpression(cond: cx.Expression, nowNs: Long): (TimeRange, Seq[ColumnPredicate]) =
-    extractFromConjuncts(splitConjuncts(cond), nowNs)
+  /** (timeRange, columnPredicates) of a statement from its [[scanConjuncts]]:
+    * time predicates on `timestamp`/`timestamp_ns`/`time`/`ts` contribute
+    * bounds (ns-normalized); everything else becomes ColumnPredicates. Each
+    * scan is extracted on its own, identical scans once, and the statement
+    * selects the union of their chunk sets: one scan gives its own (range,
+    * preds); several give their hull and one `Or` of each scan's
+    * `Between(timestamp_ns, lo, hi)` AND its predicates.
+    */
+  def extract(scans: Seq[Seq[cx.Expression]], nowNs: Long): (TimeRange, Seq[ColumnPredicate]) = {
+    import ColumnPredicate._
+    val found = scans.map(scanOf).map { case (range, preds) =>
+      (range.getOrElse(TimeRange(nowNs - DefaultWindowNs, nowNs)), preds)
+    }.distinct
+    if (found.size == 1) found.head
+    else (TimeRange(found.map(_._1.startNs).min, found.map(_._1.endNs).max),
+      Seq(found.map { case (r, preds) =>
+        (Between("timestamp_ns", PValue.I(r.startNs), PValue.I(r.endNs)) +: preds).reduce(And)
+      }.reduce(Or)))
+  }
 
-  private def extractFromConjuncts(conjuncts: Seq[cx.Expression],
-                                   nowNs: Long): (TimeRange, Seq[ColumnPredicate]) = {
+  /** One scan's time range (None: the default window) and column predicates.
+    * An `IsNotNull` on a column another conjunct of the scan reads is the
+    * optimizer's inference from that conjunct, and is skipped: it is neither
+    * a bound nor a time reference.
+    */
+  private def scanOf(conjuncts: Seq[cx.Expression]): (Option[TimeRange], Seq[ColumnPredicate]) = {
     var lo: Option[Long] = None
     var hi: Option[Long] = None
     // A time-column reference we could NOT convert to a bound (opaque function,
@@ -157,7 +177,11 @@ object PredicateExtraction {
     def bumpLo(v: Long): Unit = lo = Some(lo.fold(v)(math.max(_, v)))
     def bumpHi(v: Long): Unit = hi = Some(hi.fold(v)(math.min(_, v)))
 
-    conjuncts.foreach { c =>
+    val compared = cx.AttributeSet(conjuncts.filterNot(_.isInstanceOf[cx.IsNotNull]).flatMap(_.references))
+    conjuncts.filterNot {
+      case n: cx.IsNotNull => n.references.subsetOf(compared)
+      case _ => false
+    }.foreach { c =>
       val (blo, bhi) = boundsOf(c)
       blo.foreach(bumpLo)
       bhi.foreach(bumpHi)
@@ -166,9 +190,8 @@ object PredicateExtraction {
     }
     val range = (lo, hi) match {
       case (None, None) =>
-        if (unconvertedTimeRef) TimeRange(Long.MinValue, Long.MaxValue)
-        else TimeRange(nowNs - DefaultWindowNs, nowNs)
-      case (l, h) => TimeRange(l.getOrElse(Long.MinValue), h.getOrElse(Long.MaxValue))
+        if (unconvertedTimeRef) Some(TimeRange(Long.MinValue, Long.MaxValue)) else None
+      case (l, h) => Some(TimeRange(l.getOrElse(Long.MinValue), h.getOrElse(Long.MaxValue)))
     }
     (range, preds.result())
   }
@@ -186,11 +209,6 @@ object PredicateExtraction {
       val (llo, lhi) = boundsOf(l); val (rlo, rhi) = boundsOf(r)
       (for { a <- llo; b <- rlo } yield math.min(a, b),
        for { a <- lhi; b <- rhi } yield math.max(a, b))
-    // BETWEEN survives parsing/analysis as its own node (the >=/<= split is
-    // an optimizer rewrite): closed-closed → both bounds inclusive
-    case b: cx.Between if isTime(b.input) =>
-      val rawNs = colName(b.input).contains("timestamp_ns")
-      (literalNs(b.lower, rawNs), literalNs(b.upper, rawNs))
     case other => timeBound(other) match {
       case Some((isLower, isUpper, ns)) =>
         (if (isLower) Some(ns) else None, if (isUpper) Some(ns) else None)
@@ -204,14 +222,8 @@ object PredicateExtraction {
       case _ => a.orElse(b)
     }
 
-  private def referencesTime(e: cx.Expression): Boolean = {
-    val direct = e.collectFirst {
-      case a: cx.AttributeReference if timeCols.contains(a.name.toLowerCase) => ()
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        if timeCols.contains(u.name.toLowerCase) => ()
-    }
-    direct.isDefined
-  }
+  private def referencesTime(e: cx.Expression): Boolean =
+    e.references.exists(a => timeCols.contains(a.name.toLowerCase))
 
   private def splitConjuncts(e: cx.Expression): Seq[cx.Expression] = e match {
     case cx.And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
@@ -223,8 +235,6 @@ object PredicateExtraction {
   private def colName(e: cx.Expression): Option[String] = e match {
     case a: cx.AttributeReference => Some(a.name.toLowerCase)
     case cx.Cast(child, _, _, _) => colName(child)
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-      Some(u.name.toLowerCase)
     case _ => None
   }
 
@@ -311,6 +321,9 @@ object PredicateExtraction {
           n <- colName(c); if !timeCols.contains(n)
           vs = list.flatMap(litValue); if vs.length == list.length
         } yield In(n, vs)
+      // the optimizer's form of an IN list longer than
+      // spark.sql.optimizer.inSetConversionThreshold (10 values)
+      case cx.InSet(c, set) => toPredicate(cx.In(c, set.toSeq.map(cx.Literal(_, c.dataType))))
       case cx.Not(cx.In(c, list)) =>
         for {
           n <- colName(c); if !timeCols.contains(n)

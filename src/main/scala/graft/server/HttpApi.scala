@@ -111,9 +111,10 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   //
   // Reuse by key, never by clock: only a response its key determines is
   // stored — labels, label values, series, and the query routes whose SQL
-  // the engine reports time-fixed ([[QueryEngine.isTimeFixed]]: literal time
-  // bounds, no clock call). A request whose answer moves with "now"
-  // (`/api/v1/query` without `time`, now()-relative or unbounded SQL) is
+  // the engine reports time-fixed ([[QueryEngine.isTimeFixed]]: every scan
+  // of `metrics` time-bounded, no clock call). A request whose answer moves
+  // with "now" (`/api/v1/query` without `time`, now()-relative or unbounded
+  // SQL) is
   // computed on every call, so a hit needs no age check and is served until
   // the key changes. Entries are LRU, per-entry ≤ 256 KB (dashboard
   // payloads), ≤ 256 entries. Embedded stats (elapsed_ms) are the ORIGINAL

@@ -136,6 +136,20 @@ class CatalogSpec extends AnyFunSuite {
     assert(ChunkCatalog.mergedSchema(Seq(st.chunks("a"), conflict)).isEmpty)
   }
 
+  test("mergedSchema over chunks sharing one writer's DDL: that schema; one " +
+    "missing or conflicting DDL among them still gives None") {
+    val ddl = "timestamp_ns BIGINT,metric_name STRING,host STRING"
+    val shared = (0 until 50).map(i => ChunkMeta(s"c$i", 0, 1, 1, 1, schemaDdl = Some(ddl)))
+    val merged = ChunkCatalog.mergedSchema(shared).get
+    assert(merged.fieldNames.toSeq == Seq("timestamp_ns", "metric_name", "host"))
+    assert(merged.fields.forall(_.nullable))
+    val region = ChunkMeta("r", 0, 1, 1, 1, schemaDdl = Some("timestamp_ns BIGINT,region STRING"))
+    assert(ChunkCatalog.mergedSchema(shared :+ region).get.fieldNames.last == "region")
+    assert(ChunkCatalog.mergedSchema(shared.patch(25, Seq(ChunkMeta("x", 0, 1, 1, 1)), 0)).isEmpty)
+    val conflict = ChunkMeta("y", 0, 1, 1, 1, schemaDdl = Some("host BIGINT"))
+    assert(ChunkCatalog.mergedSchema(shared.patch(25, Seq(conflict), 0)).isEmpty)
+  }
+
   test("rollup invalidation covers the [coverage, buildCutoff) gap — late backfill drops it") {
     import graft.catalog.RollupMeta
     val cat = freshCatalog()

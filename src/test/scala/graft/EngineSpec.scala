@@ -214,10 +214,10 @@ class EngineSpec extends AnyFunSuite {
 
   test("repeat of a result-cached foldable query keeps its pruned set (no InMemoryRelation poisoning)") {
     val (eng, _) = freshEngine()
-    // arithmetic bound → parse-only extraction can't memoize → RE-extracted
-    // per call through the optimizer. The repeat localizes the result; its
-    // re-extraction must still find the folded bounds or it collapses to the
-    // default window and prunes everything away.
+    // arithmetic bound → folded by the optimizer over the stand-in, never
+    // over a persisted plan. The repeat localizes the result; its pruned set
+    // must still come from the folded bounds or it collapses to the default
+    // window and prunes everything away.
     val q = s"SELECT COUNT(*) AS cnt FROM metrics " +
       s"WHERE timestamp_ns >= $t0 + $hourNs AND timestamp_ns < $t0 + 2 * $hourNs"
     val first = eng.serve(q)
@@ -265,25 +265,29 @@ class EngineSpec extends AnyFunSuite {
 
   test("time-fixed after one serve: literal bounds and no clock call; only " +
     "time-fixed texts are reused") {
-    val (eng, _) = freshEngine()
+    val (eng, cat) = freshEngine()
     val fixed = Seq(
       graft.promql.PromQL.transpileRange("sum by (host) (cpu_usage)", t0, t0 + 2 * hourNs, 600L),
       graft.promql.PromQL.transpileInstant("cpu_usage", Some(t0 + hourNs)),
       hourCounts(1),
       s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0", // lower bound only
       "SELECT COUNT(*) AS c FROM metrics WHERE timestamp >= TIMESTAMP '2024-01-01 01:00:00' " +
-        "AND timestamp < TIMESTAMP '2024-01-01 02:00:00'")
+        "AND timestamp < TIMESTAMP '2024-01-01 02:00:00'",
+      // literal arithmetic: folds to constants with no clock
+      s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0 + $hourNs " +
+        s"AND timestamp_ns < $t0 + 2 * $hourNs")
     val notFixed = Seq(
       "SELECT COUNT(*) AS c FROM metrics WHERE timestamp > now() - INTERVAL '5' MINUTE",
       "SELECT COUNT(*) AS c FROM metrics", // default window
-      graft.promql.PromQL.transpileInstant("cpu_usage"), // no `time`
-      s"SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0 + $hourNs " +
-        s"AND timestamp_ns < $t0 + 2 * $hourNs") // literal arithmetic
+      graft.promql.PromQL.transpileInstant("cpu_usage")) // no `time`
     (fixed ++ notFixed).foreach(q => assert(!eng.isTimeFixed(q), s"not served yet: $q"))
     (fixed ++ notFixed).foreach(eng.serve(_))
     fixed.foreach(q => assert(eng.isTimeFixed(q), s"must be time-fixed: $q"))
     notFixed.foreach(q => assert(!eng.isTimeFixed(q), s"must not be time-fixed: $q"))
     fixed.foreach(q => assert(eng.serve(q).mode == "l1", s"a time-fixed repeat must hit: $q"))
+    // ORDER BY time_bucket leaves hosts tied: compare the rows in any order
+    fixed.foreach(q => assert(eng.serve(q).df.collect().map(_.toSeq).toSeq.sortBy(_.toString) ==
+      SparkTestBase.referenceRows(cat, q).sortBy(_.toString), s"rows of a reused text: $q"))
     notFixed.foreach(q => assert(eng.serve(q).mode == "computed", s"must be planned again: $q"))
   }
 
@@ -310,6 +314,7 @@ class EngineSpec extends AnyFunSuite {
     "alone, rows equal a spark.read.parquet reference") {
     val (eng, cat) = freshEngine()
     val main = s"timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}"
+    val qualified = s"m.timestamp_ns >= $t0 AND m.timestamp_ns < ${t0 + 2 * hourNs}"
     val hour1 = s"timestamp_ns >= ${t0 + hourNs} AND timestamp_ns < ${t0 + 2 * hourNs}"
     // a narrower CTE window, and a CTE label filter no chunk holds (LEFT JOIN
     // keeps every main row)
@@ -322,7 +327,12 @@ class EngineSpec extends AnyFunSuite {
          |  WHERE $hour1 AND host = 'server9' GROUP BY host)
          |SELECT m.host, COUNT(*) AS cnt, MAX(odd.mx) AS mx
          |FROM metrics m LEFT JOIN odd ON m.host = odd.host
-         |WHERE $main GROUP BY m.host ORDER BY m.host""".stripMargin)
+         |WHERE $main GROUP BY m.host ORDER BY m.host""".stripMargin,
+      // the main scan's bounds on a qualified column
+      s"""WITH recent AS (SELECT host, MAX(value_f64) AS mx FROM metrics WHERE $hour1 GROUP BY host)
+         |SELECT m.host, COUNT(*) AS cnt, MAX(recent.mx) AS mx
+         |FROM metrics m JOIN recent ON m.host = recent.host
+         |WHERE $qualified GROUP BY m.host ORDER BY m.host""".stripMargin)
     narrower.foreach { q =>
       val served = eng.serve(q)
       val got = served.df.collect().map(_.toSeq).toSeq
@@ -330,6 +340,72 @@ class EngineSpec extends AnyFunSuite {
       val want = SparkTestBase.referenceRows(cat, q)
       assert(got == want && got.map(_(1)) == Seq(24L, 24L), s"$got vs $want")
     }
+  }
+
+  test("a time bound above a Window or a LIMIT bounds the scan below it; IS NOT NULL " +
+    "alone reads every hour; rows equal a spark.read.parquet reference") {
+    val (eng, cat) = freshEngine()
+    val bound = s"timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}"
+    val cases = Seq(
+      s"""SELECT * FROM (SELECT host, metric_name, timestamp_ns, value_f64 -
+         |  LAG(value_f64) OVER (PARTITION BY host, metric_name ORDER BY timestamp_ns) AS d
+         |  FROM metrics) WHERE $bound ORDER BY host, metric_name, timestamp_ns""".stripMargin -> 2,
+      s"""SELECT * FROM (SELECT host, metric_name, timestamp_ns, value_f64 FROM metrics
+         |  ORDER BY timestamp_ns, host, metric_name LIMIT 5) WHERE $bound
+         |ORDER BY timestamp_ns, host, metric_name""".stripMargin -> 2,
+      "SELECT COUNT(*) AS c FROM metrics WHERE timestamp_ns IS NOT NULL" -> 3)
+    cases.foreach { case (q, hours) =>
+      val served = eng.serve(q)
+      val got = served.df.collect().map(_.toSeq).toSeq
+      assert(served.paths.size == hours, s"$q read ${served.paths}")
+      val want = SparkTestBase.referenceRows(cat, q)
+      assert(got.nonEmpty && got == want, s"$got vs $want")
+    }
+  }
+
+  /** `click` and `view` (host h1) written in two batches of one hour: two
+    * chunks, each holding one metric.
+    */
+  private def twoMetricEngine(): (QueryEngine, ChunkCatalog) = {
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_eng_2m_"), cacheTtlMs = 0L)
+    val writer = new ChunkWriter(cat)
+    Seq("click" -> 1.0, "view" -> 4.0).foreach { case (m, v) =>
+      writer.write(Converters.pointsToDf(spark, (0 until 6).map(i =>
+        MetricPoint(t0 + i * 600L * 1000000000L, m, v, Map("host" -> "h1")))))
+    }
+    assert(cat.allChunks.size == 2)
+    (new QueryEngine(spark, cat), cat)
+  }
+
+  test("a binary expression over two metrics reads each metric's chunks, rows " +
+    "equal a spark.read.parquet reference") {
+    val (eng, cat) = twoMetricEngine()
+    val q = graft.promql.PromQL.transpileRange("sum by (host) (click) / sum by (host) (view)",
+      t0, t0 + hourNs - 1, 600L)
+    val served = eng.serve(q)
+    val got = served.df.collect().map(_.toSeq).toSeq
+    assert(served.paths.sorted == cat.allChunks.map(_.path).sorted,
+      s"each side's metric must keep its chunk: ${served.paths}")
+    val (range, preds) = eng.analyze(q, t0)
+    assert(eng.prune(range, preds) == served.paths)
+    val want = SparkTestBase.referenceRows(cat, q)
+    assert(got == want && got.nonEmpty && got.forall(_.last == 0.25), s"$got vs $want")
+  }
+
+  test("an IN list the optimizer turns into InSet prunes like its short twin") {
+    val (eng, cat) = twoMetricEngine()
+    def in(values: Seq[String]) =
+      s"SELECT host, COUNT(*) AS c FROM metrics WHERE timestamp_ns >= $t0 AND " +
+        s"timestamp_ns < ${t0 + hourNs} AND metric_name IN (${values.map(v => s"'$v'").mkString(", ")}) " +
+        "GROUP BY host ORDER BY host"
+    // the extra values sort before `click`: no chunk's zone map holds them
+    val short = in(Seq("click", "a0", "a1"))
+    val long = in("click" +: (0 until 11).map(i => s"a$i"))
+    val (s, l) = (eng.serve(short), eng.serve(long))
+    assert(s.paths.size == 1, s"premise: the 3-value list keeps the click chunk only: ${s.paths}")
+    assert(l.paths == s.paths)
+    val got = l.df.collect().map(_.toSeq).toSeq
+    assert(got == SparkTestBase.referenceRows(cat, long) && got == Seq(Seq("h1", 6L)), got.toString)
   }
 
   test("schema drift across chunks: label-set union, null-fill, NULL-keeping !~") {

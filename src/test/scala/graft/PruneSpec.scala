@@ -93,6 +93,10 @@ class PruneSpec extends AnyFunSuite {
     assert(PredicateExtraction.normalizeToNs(1704067200000000000L) == 1704067200000000000L)
   }
 
+  /** Extraction over one scan whose Filter holds the single conjunct `e`. */
+  private def extractOne(e: org.apache.spark.sql.catalyst.expressions.Expression, nowNs: Long) =
+    PredicateExtraction.extract(Seq(Seq(e)), nowNs)
+
   test("OR-nested time bounds: union of branch windows; unbounded branch disables bound") {
     import org.apache.spark.sql.catalyst.dsl.expressions._
     import org.apache.spark.sql.catalyst.expressions.{Literal, Or, And, GreaterThanOrEqual, LessThan, EqualTo}
@@ -108,19 +112,34 @@ class PruneSpec extends AnyFunSuite {
     val twoWindows = Or(
       And(GreaterThanOrEqual(ts, Literal(a)), LessThan(ts, Literal(b))),
       And(GreaterThanOrEqual(ts, Literal(c)), LessThan(ts, Literal(d))))
-    val (r1, _) = PredicateExtraction.extractFromExpression(twoWindows, now)
+    val (r1, _) = extractOne(twoWindows, now)
     assert(r1.startNs == a && r1.endNs == d - 1)
 
     // ts bound OR non-time predicate → NO time bound may be assumed: the row with
     // host='x' can live at ANY time. Must NOT fall back to the default 1h window.
     val mixed = Or(GreaterThanOrEqual(ts, Literal(a)), EqualTo(host, Literal("x")))
-    val (r2, _) = PredicateExtraction.extractFromExpression(mixed, now)
+    val (r2, _) = extractOne(mixed, now)
     assert(r2.startNs == Long.MinValue && r2.endNs == Long.MaxValue)
 
     // AND of an OR-window with a plain upper bound still intersects
     val mixedAnd = And(twoWindows, LessThan(ts, Literal(c)))
-    val (r3, _) = PredicateExtraction.extractFromExpression(mixedAnd, now)
+    val (r3, _) = extractOne(mixedAnd, now)
     assert(r3.startNs == a && r3.endNs == c - 1)
+  }
+
+  test("IsNotNull: alone on the time column a time reference (full range); beside a " +
+    "comparison on its column, the optimizer's inference (skipped)") {
+    import org.apache.spark.sql.catalyst.dsl.expressions._
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, GreaterThanOrEqual, IsNotNull, Literal}
+    val ts = Symbol("timestamp_ns").long
+    val host = Symbol("host").string
+    val a = 1704067200000000000L
+    val now = a + 10 * 3600L * 1000000000L
+    val alone = PredicateExtraction.extract(Seq(Seq(IsNotNull(ts))), now)
+    assert(alone == (graft.prune.TimeRange(Long.MinValue, Long.MaxValue), Nil))
+    val inferred = PredicateExtraction.extract(Seq(Seq(IsNotNull(ts), GreaterThanOrEqual(ts, Literal(a)),
+      IsNotNull(host), EqualTo(host, Literal("x")))), now)
+    assert(inferred == (graft.prune.TimeRange(a, Long.MaxValue), Seq(Eq("host", PValue.S("x")))))
   }
 
   test("timestamp_ns literals are raw ns (no magnitude rescale); timestamp keeps heuristic") {
@@ -129,13 +148,11 @@ class PruneSpec extends AnyFunSuite {
     val now = 1704067200000000000L
     // a legitimately small raw-ns epoch against timestamp_ns must NOT be ×1e9
     val tsNs = Symbol("timestamp_ns").long
-    val (r, _) = PredicateExtraction.extractFromExpression(
-      GreaterThanOrEqual(tsNs, Literal(1000000000L)), now)
+    val (r, _) = extractOne(GreaterThanOrEqual(tsNs, Literal(1000000000L)), now)
     assert(r.startNs == 1000000000L)
     // the µs `timestamp` column keeps the s/ms/µs magnitude heuristic
     val tsUs = Symbol("timestamp").long
-    val (r2, _) = PredicateExtraction.extractFromExpression(
-      GreaterThanOrEqual(tsUs, Literal(1704067200L)), now)
+    val (r2, _) = extractOne(GreaterThanOrEqual(tsUs, Literal(1704067200L)), now)
     assert(r2.startNs == 1704067200000000000L)
   }
 
