@@ -961,6 +961,21 @@ object ChunkCatalog {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** The one reader of a chunk set. With the catalog-held union schema
+    * ([[mergedSchema]]) the read skips the distributed parquet-footer
+    * inference job; mergeSchema (mirroring DataFusion's multi-path schema
+    * inference) only for chunks registered without a stored schema. No chunk
+    * ⇒ an empty frame with the default schema (engine.rs:189-205).
+    */
+  def readChunks(spark: org.apache.spark.sql.SparkSession,
+                 chunks: Seq[ChunkMeta]): org.apache.spark.sql.DataFrame = {
+    val paths = chunks.map(_.path)
+    if (paths.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], graft.schema.MetricSchema.default)
+    else mergedSchema(chunks).fold(spark.read.option("mergeSchema", "true").parquet(paths: _*))(
+      spark.read.schema(_).parquet(paths: _*))
+  }
+
   private def addToIndex(idx: scala.collection.immutable.TreeMap[Long, List[String]],
                          c: ChunkMeta): scala.collection.immutable.TreeMap[Long, List[String]] = {
     // A chunk spanning multiple hours is indexed under every bucket it touches,

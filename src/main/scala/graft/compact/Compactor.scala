@@ -12,15 +12,16 @@ import java.util.UUID
   *    with ≥ `l0FileThreshold` files (s3.rs:1188-1217; threshold 15 at mod.rs:84).
   *  - Leveled candidates: level-N chunks sorted by minTimestamp, greedily grouped up
   *    to the level's target size (s3.rs:1219-1263; targets mod.rs:84-97).
-  *  - Merge = read group → sort by timestamp (single-column sort, faithful to
-  *    merge.rs:56-74 — the "and metric name" comment there is aspirational) →
-  *    write one chunk → atomic catalog swap with level = max(source levels)+1
-  *    (s3.rs:1277-1332).
+  *  - Merge = read group → sort by timestamp, then metric name (merge.rs:56-74)
+  *    → write one chunk → atomic catalog swap with level = max(source levels)+1
+  *    (s3.rs:1277-1332). Every sweep, one group or many, clustered or not, is
+  *    one partitioned write job; zone maps come from the written footers
+  *    (ChunkStats.fromFooters), as they do for ingest.
   *  - Retention: drop chunks wholly older than the cutoff (mod.rs:921-947).
   *
-  * Scale posture: candidate groups are independent — at 100 TB each group compacts as
-  * its own job in parallel; no group ever needs more than the level's target size in
-  * one task tree, and the sort is a shuffle-free within-chunk-set range sort.
+  * Scale posture: candidate groups are independent — a sweep hashes each group
+  * (or z-bucket cell) to its own reducer, so no group ever needs more than the
+  * level's target size in one task, and the sort is a within-partition sort.
   */
 final class Compactor(
     spark: SparkSession,
@@ -116,107 +117,25 @@ final class Compactor(
       }
   }
 
-  /** Merge one candidate group into a single sorted chunk and swap it into the
-    * catalog atomically. Returns the new chunk.
-    */
-  def compactGroup(group: Seq[ChunkMeta]): ChunkMeta = {
-    require(group.nonEmpty, "empty compaction group")
-    val newLevel = group.map(_.level).max + 1
-    val target = catalog.root.resolve(
-      s"${tenantOfGroup(group)}/data/compacted/level=$newLevel/chunk_${UUID.randomUUID()}")
-    // Catalog-held schema skips the distributed footer-inference job; falls
-    // back to mergeSchema only for chunks registered without one.
-    val df = ChunkCatalog.mergedSchema(group) match {
-      case Some(schema) => spark.read.schema(schema).parquet(group.map(_.path): _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(group.map(_.path): _*)
-    }
-    // Zone-map stats are collected INSIDE the merge-write job via observe
-    // (CollectMetrics) — one read of the group instead of two, one job per
-    // group instead of two. Same single-pass shape the reference's writer
-    // uses (stats accumulated while encoding, parquet_writer.rs:16-89).
-    val fields = ChunkStats.statFields(df.schema, Set.empty)
-    val aggs = ChunkStats.statAggs(fields)
-    val obs = org.apache.spark.sql.Observation(s"compact_${UUID.randomUUID()}")
-    // repartition(1) + sortWithinPartitions, NOT sort().coalesce(1): a global
-    // sort runs a RangePartitioner sampling pass that would execute the
-    // observe subtree twice (double-counting stats); the output is one chunk
-    // file either way, so the single-task sort costs nothing extra.
-    df.observe(obs, aggs.head, aggs.tail: _*)
-      .repartition(1)
-      // metric_name secondary key: still timestamp-sorted, better dictionary
-      // runs (same measured ~6 % as the ingest writer)
-      .sortWithinPartitions("timestamp_ns", "metric_name")
-      .write.option("compression", "zstd")
-      .parquet(target.toString)
-    val meta = ChunkStats.metaFromMetrics(obs.get, fields, target.toString, newLevel)
-      .copy(schemaDdl = Some(df.schema.toDDL),
-        sourcePaths = Compactor.l0Provenance(group))
-    catalog.replaceChunks(group.map(_.path), Seq(meta))
-    // Old files go through grace-period GC rather than immediate delete
-    // (reference 5-min grace, mod.rs:816-918).
-    catalog.deferDelete(group.map(_.path), System.currentTimeMillis())
-    meta
-  }
-
-  /** Compact MANY candidate groups in ONE Spark job pair (union scan tagged by
-    * group → hash-repartition on the group id → partitionBy write, then one
-    * grouped stats agg) + a single atomic catalog swap.
+  /** Compact candidate groups: one sweep per tenant, each ONE Spark write job
+    * (union scan tagged by group → hash-repartition on (group, z-bucket) →
+    * partitionBy write) whose zone maps come from the written footers, then
+    * a single atomic catalog swap.
     *
     * Why: per-group jobs make a sweep O(#groups) in driver job-scheduling — at
     * 100 TB a backlogged L0 can hold hundreds of ripe hour-groups, and the
     * per-job overhead (not the I/O) becomes the bottleneck. Batched, the sweep
-    * is 2 jobs regardless of group count; every group's rows hash to one
-    * reducer, so each group still becomes exactly one sorted chunk file, same
-    * as compactGroup. Failure granularity is the sweep, not the group — the
-    * catalog swap is all-or-nothing either way.
+    * reads every source once in one job regardless of group count; a group's
+    * rows hash to one reducer per cell, so an unclustered group becomes
+    * exactly one sorted chunk file. Failure granularity is the sweep, not the
+    * group — the catalog swap is all-or-nothing either way.
     */
   def compactGroups(groups: Seq[Seq[ChunkMeta]]): Seq[ChunkMeta] = {
-    if (groups.isEmpty) return Nil
-    // one batched sweep PER TENANT: the sweep dir (and so every output chunk
-    // path) carries the owning tenant — a single mixed sweep would stamp all
+    require(groups.forall(_.nonEmpty), "empty compaction group")
+    // one sweep PER TENANT: the sweep dir (and so every output chunk path)
+    // carries the owning tenant — a single mixed sweep would stamp all
     // outputs "default" and break path-based tenant scoping
-    val byTenant = groups.groupBy(tenantOfGroup)
-    if (byTenant.size > 1)
-      return byTenant.toSeq.sortBy(_._1).flatMap { case (_, gs) => compactGroups(gs) }
-    if (clusterBy.nonEmpty && groups.exists(clusterEligible))
-      return compactGroupsClustered(groups)
-    if (groups.size == 1) return Seq(compactGroup(groups.head))
-    import org.apache.spark.sql.functions.{col, lit}
-    val batchDir = catalog.root.resolve(
-      s"${tenantOfGroup(groups.head)}/data/compacted/sweep=${UUID.randomUUID()}")
-    val tagged = groups.zipWithIndex.map { case (g, i) =>
-      val df = ChunkCatalog.mergedSchema(g) match {
-        case Some(schema) => spark.read.schema(schema).parquet(g.map(_.path): _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(g.map(_.path): _*)
-      }
-      df.withColumn("__grp", lit(i))
-    }
-    val union = tagged.reduce(_.unionByName(_, allowMissingColumns = true))
-    union
-      .repartition(col("__grp"))
-      .sortWithinPartitions(col("__grp"), col("timestamp_ns"), col("metric_name"))
-      .write
-      .partitionBy("__grp")
-      .option("compression", "zstd")
-      .parquet(batchDir.toString)
-    // one grouped agg over the same union → one zone-map row per group
-    val statsMetas = ChunkStats.computePartitionedFromDf(union, batchDir.toString, Seq("__grp"))
-      .map(m => m.path -> m).toMap
-    val newMetas = groups.zipWithIndex.map { case (g, i) =>
-      val path = s"$batchDir/__grp=$i"
-      val m = statsMetas.getOrElse(path,
-        throw new IllegalStateException(s"missing sweep stats for group $i"))
-      m.copy(
-        level = g.map(_.level).max + 1,
-        sourcePaths = Compactor.l0Provenance(g),
-        sizeBytes = ChunkStats.dirSize(java.nio.file.Paths.get(path)),
-        schemaDdl = Some(org.apache.spark.sql.types.StructType(
-          union.schema.fields.filterNot(_.name == "__grp")).toDDL))
-    }
-    val oldPaths = groups.flatten.map(_.path)
-    catalog.replaceChunks(oldPaths, newMetas)
-    catalog.deferDelete(oldPaths, System.currentTimeMillis())
-    newMetas
+    groups.groupBy(tenantOfGroup).toSeq.sortBy(_._1).flatMap { case (_, gs) => sweep(gs) }
   }
 
   /** A group's merge output lands at level >= clusterMinLevel — cold data
@@ -261,32 +180,26 @@ final class Compactor(
     }
   }
 
-  /** Clustered variant of the batched sweep: eligible groups sort by the
-    * Z-order key of `clusterBy` and range-split (by z-prefix bucket) into
-    * ~clusterTargetBytes chunks; ineligible groups in the same sweep keep the
-    * plain single-chunk timestamp sort. Still 2 Spark jobs for the whole sweep
-    * and one atomic catalog swap — the clustering adds a shuffle column and a
-    * different sort key, not extra passes (code norms come from catalog
-    * stats). Each (group, z-bucket) cell becomes one chunk whose zone maps are
-    * a tight rectangle in every clustered column, so equality/range predicates
-    * on those columns prune at the CATALOG level, and the z-sort inside each
-    * chunk tightens parquet row-group stats the same way.
+  /** One tenant's sweep. Groups eligible for clustering ([[clusterBy]] set,
+    * output at level >= clusterMinLevel) sort by the Z-order key of
+    * `clusterBy` and range-split (by z-prefix bucket) into
+    * ~clusterTargetBytes chunks; every other group keeps the plain
+    * single-chunk timestamp sort (z-bucket 0). Code norms come from catalog
+    * stats, so clustering adds a shuffle column and a different sort key, not
+    * extra passes. Each (group, z-bucket) cell becomes one chunk whose zone
+    * maps are a tight rectangle in every clustered column, so equality/range
+    * predicates on those columns prune at the CATALOG level, and the z-sort
+    * inside each chunk tightens parquet row-group stats the same way.
     */
-  private def compactGroupsClustered(groups: Seq[Seq[ChunkMeta]]): Seq[ChunkMeta] = {
+  private def sweep(groups: Seq[Seq[ChunkMeta]]): Seq[ChunkMeta] = {
     import org.apache.spark.sql.functions.{col, lit, when, shiftrightunsigned}
     import org.apache.spark.sql.GraftBridge
-    // callers (compactGroups) have already split by tenant
     val batchDir = catalog.root.resolve(
       s"${tenantOfGroup(groups.head)}/data/compacted/sweep=${UUID.randomUUID()}")
-    val tagged = groups.zipWithIndex.map { case (g, i) =>
-      val df = ChunkCatalog.mergedSchema(g) match {
-        case Some(schema) => spark.read.schema(schema).parquet(g.map(_.path): _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(g.map(_.path): _*)
-      }
-      df.withColumn("__grp", lit(i))
-    }
-    val union = tagged.reduce(_.unionByName(_, allowMissingColumns = true))
-    val haveCols = clusterBy.forall(c => union.schema.fieldNames.contains(c))
+    val union = groups.zipWithIndex
+      .map { case (g, i) => ChunkCatalog.readChunks(spark, g).withColumn("__grp", lit(i)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val haveCols = clusterBy.nonEmpty && clusterBy.forall(union.schema.fieldNames.contains)
     val eligible = groups.zipWithIndex.collect {
       case (g, i) if haveCols && clusterEligible(g) => i
     }.toSet
@@ -297,61 +210,49 @@ final class Compactor(
         val n = math.max(1L, g.map(_.sizeBytes).sum / clusterTargetBytes)
         i -> math.min(6, 64 - java.lang.Long.numberOfLeadingZeros(n - 1) max 0)
     }.toMap
-    val zCol =
-      if (eligible.isEmpty) lit(0L)
-      else GraftBridge.column(graft.functions.ZOrderExpressions.ZOrder64(
-        clusterBy.map(c => GraftBridge.expression(col(c))),
-        zNorms(eligible.toSeq.sorted.map(groups), union.schema)))
-    // bucket = top b bits of the UNSIGNED curve position (the key is
-    // sign-flipped for signed ORDER BY semantics — undo that first)
-    val zUnsigned = zCol.bitwiseXOR(lit(Long.MinValue))
-    val zbCol = bucketBits.foldLeft(lit(0L)) { case (acc, (i, b)) =>
-      if (b == 0) acc
-      else when(col("__grp") === i, shiftrightunsigned(zUnsigned, 64 - b)).otherwise(acc)
-    }
     // clustered groups sort by z (then time); plain groups keep time order
-    val zSort =
-      if (eligible.isEmpty) col("timestamp_ns")
+    val (zbCol, zSort) =
+      if (eligible.isEmpty) (lit(0L), Nil)
       else {
-        val isEligible = eligible.foldLeft(lit(false)) {
-          (acc, i) => acc || (col("__grp") === i)
+        val zCol = GraftBridge.column(graft.functions.ZOrderExpressions.ZOrder64(
+          clusterBy.map(c => GraftBridge.expression(col(c))),
+          zNorms(eligible.toSeq.sorted.map(groups), union.schema)))
+        // bucket = top b bits of the UNSIGNED curve position (the key is
+        // sign-flipped for signed ORDER BY semantics — undo that first)
+        val zUnsigned = zCol.bitwiseXOR(lit(Long.MinValue))
+        val zb = bucketBits.foldLeft(lit(0L)) { case (acc, (i, b)) =>
+          if (b == 0) acc
+          else when(col("__grp") === i, shiftrightunsigned(zUnsigned, 64 - b)).otherwise(acc)
         }
-        when(isEligible, zCol).otherwise(col("timestamp_ns"))
+        val isEligible = eligible.foldLeft(lit(false))((acc, i) => acc || (col("__grp") === i))
+        (zb, Seq(when(isEligible, zCol).otherwise(col("timestamp_ns"))))
       }
-    val withZb = union.withColumn("__zb", zbCol)
-    withZb
+    union.withColumn("__zb", zbCol)
       .repartition(col("__grp"), col("__zb"))
-      .sortWithinPartitions(col("__grp"), col("__zb"), zSort,
-        col("timestamp_ns"), col("metric_name"))
+      .sortWithinPartitions(Seq(col("__grp"), col("__zb")) ++ zSort ++
+        Seq(col("timestamp_ns"), col("metric_name")): _*)
       .write
       .partitionBy("__grp", "__zb")
       .option("compression", "zstd")
       .parquet(batchDir.toString)
-    val statsMetas = ChunkStats.computePartitionedFromDf(
-      withZb, batchDir.toString, Seq("__grp", "__zb"))
-    val byGrp = statsMetas.groupBy { m =>
-      // path …/__grp=<i>/__zb=<j>
-      m.path.split("/__grp=")(1).split("/")(0).toInt
-    }
+    // path …/__grp=<i>/__zb=<j>
+    val cells = ChunkStats.fromFooters(batchDir,
+        org.apache.spark.sql.types.StructType(union.schema.fields.filterNot(_.name == "__grp")))
+      .groupBy(_.path.split("/__grp=")(1).split("/")(0).toInt)
     val newMetas = groups.zipWithIndex.flatMap { case (g, i) =>
-      val cells = byGrp.getOrElse(i,
-        throw new IllegalStateException(s"missing sweep stats for group $i"))
-      cells.map(m => m.copy(
-        level = g.map(_.level).max + 1,
-        sourcePaths = Compactor.l0Provenance(g),
-        sizeBytes = ChunkStats.dirSize(java.nio.file.Paths.get(m.path)),
-        schemaDdl = Some(org.apache.spark.sql.types.StructType(
-          union.schema.fields.filterNot(f =>
-            f.name == "__grp" || f.name == "__zb")).toDDL)))
+      cells.getOrElse(i, throw new IllegalStateException(s"missing sweep output for group $i"))
+        .map(_.copy(level = g.map(_.level).max + 1, sourcePaths = Compactor.l0Provenance(g)))
     }
     val oldPaths = groups.flatten.map(_.path)
     catalog.replaceChunks(oldPaths, newMetas)
+    // Old files go through grace-period GC rather than immediate delete
+    // (reference 5-min grace, mod.rs:816-918).
     catalog.deferDelete(oldPaths, System.currentTimeMillis())
     newMetas
   }
 
   /** One compaction sweep: all ripe L0 groups, then each populated level. Each
-    * level's groups compact as ONE batched job pair (see compactGroups) — the
+    * level's groups compact as ONE batched write job (see compactGroups) — the
     * reference instead caps at 4 concurrent per-group merges (mod.rs:174); the
     * batched sweep subsumes that concurrency inside a single Spark job.
     */

@@ -15,7 +15,7 @@ import java.util.UUID
   *  Preparation                 → mark split active in the catalog (queries begin
   *                                first-wins dedup, mirroring DualWrite-visibility)
   *  DualWrite + Backfill        → rewrite each chunk overlapping the split point
-  *                                into a < and a ≥ half (two filtered writes —
+  *                                into a < and a ≥ half (one partitioned write —
   *                                `split_batch_by_key`, ingester/mod.rs:357-500)
   *  Cutover (generation CAS)    → single atomic catalog swap (rename-commit)
   *  Cleanup                     → grace-period GC of source chunks
@@ -33,41 +33,28 @@ final class ShardSplitter(spark: SparkSession, catalog: ChunkCatalog) {
     try {
       val affected = catalog.allChunks.filter(c =>
         c.minTimestampNs < splitTsNs && c.maxTimestampNs >= splitTsNs)
-      val results = affected.flatMap { c =>
-        val df = spark.read.parquet(c.path)
-        // One job per half: stats collected via observe during the filtered
-        // write (no isEmpty pre-pass, no re-read of the written file). An
-        // empty half writes an empty dir, which is removed again.
-        val fields = ChunkStats.statFields(df.schema, Set.empty)
-        val aggs = ChunkStats.statAggs(fields)
-        def half(cond: org.apache.spark.sql.Column, shard: String): Option[ChunkMeta] = {
-          val target = catalog.root.resolve(
-            s"${graft.catalog.ChunkCatalog.tenantOf(catalog.root, c.path)}" +
-              s"/data/shard=$shard/chunk_${UUID.randomUUID()}")
-          val obs = org.apache.spark.sql.Observation(s"split_${UUID.randomUUID()}")
-          // repartition(1)+sortWithinPartitions: a global sort's range-sampling
-          // pass would run the observe subtree twice (doubled stats)
-          df.filter(cond).observe(obs, aggs.head, aggs.tail: _*)
-            .repartition(1)
-            .sortWithinPartitions(MetricSchema.TimestampNsCol,
-              MetricSchema.MetricNameCol)
-            .write.option("compression", "zstd").parquet(target.toString)
-          val meta = ChunkStats.metaFromMetrics(obs.get, fields, target.toString, c.level)
-            .copy(shardId = Some(shard), schemaDdl = Some(df.schema.toDDL),
-              // rewrite provenance: a live tail must not re-deliver a half
-              // whose source flush it already served (ChunkMeta.sourcePaths)
-              sourcePaths = Compactor.l0Provenance(Seq(c)))
-          if (meta.rowCount == 0L) { ChunkStats.deleteDir(target); None }
-          else Some(meta)
-        }
-        val lo = half(col(MetricSchema.TimestampNsCol) < splitTsNs, shardA)
-        val hi = half(col(MetricSchema.TimestampNsCol) >= splitTsNs, shardB)
-        val halves = Seq(lo, hi).flatten
+      affected.flatMap { c =>
+        val target = catalog.root.resolve(
+          s"${ChunkCatalog.tenantOf(catalog.root, c.path)}/data/split=${UUID.randomUUID()}")
+        // ONE read and ONE partitioned write for both halves: `__hi=false`
+        // (< split) and `__hi=true` (≥ split), each hashed to one reducer, so
+        // each half is one time-sorted file. An empty half writes no directory.
+        val df = ChunkCatalog.readChunks(spark, Seq(c))
+        df.withColumn("__hi", col(MetricSchema.TimestampNsCol) >= splitTsNs)
+          .repartition(col("__hi"))
+          .sortWithinPartitions(col("__hi"), col(MetricSchema.TimestampNsCol),
+            col(MetricSchema.MetricNameCol))
+          .write.partitionBy("__hi").option("compression", "zstd").parquet(target.toString)
+        val halves = ChunkStats.fromFooters(target, df.schema).map(m => m.copy(
+          level = c.level,
+          shardId = Some(if (m.path.endsWith("__hi=true")) shardB else shardA),
+          // rewrite provenance: a live tail must not re-deliver a half whose
+          // source flush it already served (ChunkMeta.sourcePaths)
+          sourcePaths = Compactor.l0Provenance(Seq(c))))
         catalog.replaceChunks(Seq(c.path), halves) // cutover per chunk, atomic
         catalog.deferDelete(Seq(c.path), System.currentTimeMillis())
         halves
       }
-      results
     } finally {
       catalog.setActiveSplits(Nil) // cleanup: split no longer active
     }
@@ -81,24 +68,17 @@ final class ShardSplitter(spark: SparkSession, catalog: ChunkCatalog) {
 final class ColumnPromoter(spark: SparkSession, catalog: ChunkCatalog) {
 
   def promote(columnName: String, fromExpr: String): Seq[ChunkMeta] =
-    catalog.allChunks.map { c =>
-      val df = spark.read.parquet(c.path)
+    catalog.allChunks.flatMap { c =>
+      val df = ChunkCatalog.readChunks(spark, Seq(c))
         .withColumn(columnName, org.apache.spark.sql.functions.expr(fromExpr))
       val target = catalog.root.resolve(
-        s"${graft.catalog.ChunkCatalog.tenantOf(catalog.root, c.path)}" +
-          s"/data/promoted/chunk_${UUID.randomUUID()}")
-      // stats fused into the rewrite via observe — one pass per chunk
-      val fields = ChunkStats.statFields(df.schema, Set.empty)
-      val aggs = ChunkStats.statAggs(fields)
-      val obs = org.apache.spark.sql.Observation(s"promote_${UUID.randomUUID()}")
-      df.observe(obs, aggs.head, aggs.tail: _*)
-        .write.option("compression", "zstd").parquet(target.toString)
-      val meta = ChunkStats.metaFromMetrics(obs.get, fields, target.toString, c.level)
-        .copy(schemaDdl = Some(df.schema.toDDL),
-          sourcePaths = Compactor.l0Provenance(Seq(c)))
-      catalog.replaceChunks(Seq(c.path), Seq(meta))
+        s"${ChunkCatalog.tenantOf(catalog.root, c.path)}/data/promoted/chunk_${UUID.randomUUID()}")
+      df.write.option("compression", "zstd").parquet(target.toString)
+      val metas = ChunkStats.fromFooters(target, df.schema).map(_.copy(
+        level = c.level, sourcePaths = Compactor.l0Provenance(Seq(c))))
+      catalog.replaceChunks(Seq(c.path), metas)
       catalog.deferDelete(Seq(c.path), System.currentTimeMillis())
-      meta
+      metas
     }
 }
 
@@ -174,6 +154,17 @@ object Downsampler {
       .withColumn("avg_value", col("sum_value") / col("value_count"))
   }
 
+  /** Write a rollup table under the warehouse root; its path and row count,
+    * read from the footers of what was written.
+    */
+  private def writeRollup(catalog: ChunkCatalog, resolutionSeconds: Long,
+                          rollup: DataFrame): (String, Long) = {
+    val target = catalog.root.resolve(
+      s"default/rollup/res${resolutionSeconds}s_${UUID.randomUUID()}")
+    rollup.write.option("compression", "zstd").parquet(target.toString)
+    (target.toString, ChunkStats.fromFooters(target, rollup.schema).map(_.rowCount).sum)
+  }
+
   /** Build the mergeable rollup over the catalog's CURRENT raw chunks, write it
     * as one parquet table under the warehouse root, and register it for
     * engine-side query routing (see [[graft.plans.RollupRouting]]). Coverage is
@@ -189,28 +180,18 @@ object Downsampler {
                         labelCols: Seq[String]): graft.catalog.RollupMeta = {
     val chunks = catalog.allChunks
     require(chunks.nonEmpty, "cannot materialize a rollup over an empty warehouse")
-    val raw = ChunkCatalog.mergedSchema(chunks) match {
-      case Some(schema) => spark.read.schema(schema).parquet(chunks.map(_.path): _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(chunks.map(_.path): _*)
-    }
-    val target = catalog.root.resolve(
-      s"default/rollup/res${resolutionSeconds}s_${UUID.randomUUID()}")
-    val obs = org.apache.spark.sql.Observation(s"rollup_${UUID.randomUUID()}")
-    downsampleMergeable(raw, resolutionSeconds, labelCols)
-      .observe(obs, min(col("time_bucket")).as("min_b"),
-        max(col("time_bucket")).as("max_b"), count(lit(1)).as("n"))
-      .write.option("compression", "zstd").parquet(target.toString)
-    val m = obs.get
+    val (path, rows) = writeRollup(catalog, resolutionSeconds,
+      downsampleMergeable(ChunkCatalog.readChunks(spark, chunks), resolutionSeconds, labelCols))
     // Built over the ENTIRE warehouse: coverage is the full time axis — a
     // bucket with no rollup row has no raw row either, so any bounded query
     // routes; and any subsequently registered chunk invalidates (as it must).
     val meta = graft.catalog.RollupMeta(
-      path = target.toString,
+      path = path,
       resolutionSeconds = resolutionSeconds,
       labelCols = labelCols,
       minBucketNs = Long.MinValue,
       maxCoveredNsExclusive = Long.MaxValue,
-      rowCount = m("n").asInstanceOf[Long])
+      rowCount = rows)
     catalog.registerRollup(meta)
     meta
   }
@@ -245,23 +226,15 @@ object Downsampler {
     val chunks = catalog.allChunks
     val aged = chunks.filter(_.maxTimestampNs < cutoffNs)
     agedCoverageEnd(chunks, cutoffNs, resolutionSeconds).map { covEnd =>
-      val raw = ChunkCatalog.mergedSchema(aged) match {
-        case Some(schema) => spark.read.schema(schema).parquet(aged.map(_.path): _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(aged.map(_.path): _*)
-      }
-      val target = catalog.root.resolve(
-        s"default/rollup/res${resolutionSeconds}s_${UUID.randomUUID()}")
-      val obs = org.apache.spark.sql.Observation(s"rollup_${UUID.randomUUID()}")
-      downsampleMergeable(raw, resolutionSeconds, labelCols)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.option("compression", "zstd").parquet(target.toString)
+      val (path, rows) = writeRollup(catalog, resolutionSeconds,
+        downsampleMergeable(ChunkCatalog.readChunks(spark, aged), resolutionSeconds, labelCols))
       val meta = graft.catalog.RollupMeta(
-        path = target.toString,
+        path = path,
         resolutionSeconds = resolutionSeconds,
         labelCols = labelCols,
         minBucketNs = Long.MinValue,
         maxCoveredNsExclusive = covEnd,
-        rowCount = obs.get("n").asInstanceOf[Long],
+        rowCount = rows,
         buildCutoffNs = cutoffNs)
       catalog.registerRollup(meta)
       meta
@@ -305,34 +278,25 @@ object Downsampler {
           catalog.registerRollup(meta) // same path: replaces in place
           Some(meta)
         } else {
-          val fresh = ChunkCatalog.mergedSchema(newlyAged) match {
-            case Some(schema) =>
-              spark.read.schema(schema).parquet(newlyAged.map(_.path): _*)
-            case None =>
-              spark.read.option("mergeSchema", "true").parquet(newlyAged.map(_.path): _*)
-          }
-          val target = catalog.root.resolve(
-            s"default/rollup/res${prior.resolutionSeconds}s_${UUID.randomUUID()}")
-          val obs = org.apache.spark.sql.Observation(s"rollup_${UUID.randomUUID()}")
           val keyCols = "time_bucket" +: MetricSchema.MetricNameCol +: prior.labelCols
-          spark.read.parquet(prior.path)
-            .unionByName(downsampleMergeable(fresh, prior.resolutionSeconds, prior.labelCols))
-            .groupBy(keyCols.map(col): _*)
-            .agg(
-              sum("sum_value").as("sum_value"),
-              min("min_value").as("min_value"),
-              max("max_value").as("max_value"),
-              sum("sample_count").as("sample_count"),
-              sum("value_count").as("value_count"))
-            .observe(obs, count(lit(1)).as("n"))
-            .write.option("compression", "zstd").parquet(target.toString)
+          val fresh = downsampleMergeable(ChunkCatalog.readChunks(spark, newlyAged),
+            prior.resolutionSeconds, prior.labelCols)
+          val (path, rows) = writeRollup(catalog, prior.resolutionSeconds,
+            spark.read.parquet(prior.path).unionByName(fresh)
+              .groupBy(keyCols.map(col): _*)
+              .agg(
+                sum("sum_value").as("sum_value"),
+                min("min_value").as("min_value"),
+                max("max_value").as("max_value"),
+                sum("sample_count").as("sample_count"),
+                sum("value_count").as("value_count")))
           val meta = graft.catalog.RollupMeta(
-            path = target.toString,
+            path = path,
             resolutionSeconds = prior.resolutionSeconds,
             labelCols = prior.labelCols,
             minBucketNs = Long.MinValue,
             maxCoveredNsExclusive = covEnd,
-            rowCount = obs.get("n").asInstanceOf[Long],
+            rowCount = rows,
             buildCutoffNs = cutoffNs)
           catalog.registerRollup(meta)
           Some(meta)

@@ -409,7 +409,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     if (reuse) promoteFromL2(key).foreach(l => return served(l.df, "l2", rows = Some(l.rows)))
     // Reuse the cached PARSED tree — the ANTLR parse is paid once per text —
     // bound to THIS query's path set; ofRows analyzes it eagerly.
-    val raw = GraftBridge.ofRows(spark, withMetrics(text.plan, relationOf(paths)))
+    val raw = GraftBridge.ofRows(spark, withMetrics(text.plan, relationOf(st, paths)))
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
     // aggregate the registered rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
@@ -560,12 +560,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   private val lastRelation =
     new java.util.concurrent.atomic.AtomicReference[(Seq[String], LogicalPlan)]()
 
-  /** Step 3: the `metrics` relation over exactly the pruned chunk set, as an
-    * analyzed plan a query binds on its own ([[withMetrics]]); the last one
+  /** Step 3: the `metrics` relation over exactly the pruned chunk set (paths
+    * of `st`, read through [[ChunkCatalog.readChunks]]), as an analyzed plan a query binds on its own ([[withMetrics]]); the last one
     * built is reused while the path set repeats (engine.rs:133-187).
     *
-    * One-task rule: when every path has catalog metadata and their summed
-    * `sizeBytes` is at most [[oneTaskMaxBytes]], the relation is the scan
+    * One-task rule: when the chunks' summed `sizeBytes` is at most [[oneTaskMaxBytes]], the relation is the scan
     * coalesced to one partition. The plan then reports SinglePartition, so
     * neither an aggregate nor an ORDER BY needs an exchange: a dashboard-sized
     * read is one job, one stage, one task instead of a shuffle stage, a
@@ -575,29 +574,17 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * measured cut-off ([[QueryEngine.OneTaskMaxBytes]]) one task decoding
     * the whole set is slower than the exchanges it saves.
     */
-  private def relationOf(paths: Seq[String]): LogicalPlan = {
+  private def relationOf(st: ChunkCatalog.CatalogState, paths: Seq[String]): LogicalPlan = {
     val last = lastRelation.get()
     if (last != null && last._1 == paths) return last._2
-    val metas = paths.flatMap(catalog.state.chunks.get)
-    val allKnown = metas.size == paths.size
-    val scan = readChunks(paths, if (allKnown) ChunkCatalog.mergedSchema(metas) else None)
-    val rel = (if (paths.nonEmpty && allKnown &&
-        metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes) scan.coalesce(1) else scan)
+    val metas = paths.map(st.chunks)
+    val scan = ChunkCatalog.readChunks(spark, metas)
+    val rel = (if (paths.nonEmpty && metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes)
+        scan.coalesce(1) else scan)
       .queryExecution.analyzed
     lastRelation.set((paths, rel))
     rel
   }
-
-  /** A scan of `paths`: with the catalog-held union schema the read skips
-    * the distributed parquet-footer inference job; mergeSchema (mirroring
-    * DataFusion's multi-path schema inference) only for chunks registered
-    * without a stored schema. No path ⇒ an empty frame with the default
-    * schema (engine.rs:189-205).
-    */
-  private def readChunks(paths: Seq[String], schema: Option[StructType]): DataFrame =
-    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], MetricSchema.default)
-    else schema.fold(spark.read.option("mergeSchema", "true").parquet(paths: _*))(
-      spark.read.schema(_).parquet(paths: _*))
 
   /** The last (catalog version → stand-in) pair [[standIn]] built. */
   private val lastStandIn = new java.util.concurrent.atomic.AtomicReference[(Long, LogicalRDD)]()
@@ -615,9 +602,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val last = lastStandIn.get()
     if (last != null && last._1 == st.version) return last._2
     val metas = st.chunks.values.toSeq.sortBy(_.path)
-    val schema = ChunkCatalog.mergedSchema(metas).getOrElse(
-      try readChunks(metas.map(_.path), None).schema
-      catch { case scala.util.control.NonFatal(_) => MetricSchema.default })
+    val schema =
+      try ChunkCatalog.readChunks(spark, metas).schema
+      catch { case scala.util.control.NonFatal(_) => MetricSchema.default }
     val leaf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       .queryExecution.analyzed.asInstanceOf[LogicalRDD]
     lastStandIn.set((st.version, leaf))
@@ -694,7 +681,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val preds = conds.reduceOption(And).fold(Seq.empty[ColumnPredicate])(c =>
       PredicateExtraction.extract(textFor(Filter(c, standIn(st)), st).scans, 0L)._2)
     val range = TimeRange(startNs.getOrElse(Long.MinValue), endNs.getOrElse(Long.MaxValue))
-    val pruned = GraftBridge.ofRows(spark, relationOf(pruneIn(st, range, preds)))
+    val pruned = GraftBridge.ofRows(spark, relationOf(st, pruneIn(st, range, preds)))
     val all = standIn(st).schema
     val rows = pruned.select(all.fields.toSeq.map(f =>
       if (pruned.columns.contains(f.name)) col(f.name)

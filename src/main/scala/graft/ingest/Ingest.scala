@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.MetricSchema
 import graft.catalog.{ChunkCatalog, ChunkMeta, ColumnStats}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.UUID
 
 /** Ingest-side staging type — the union of what OTLP / Prometheus remote-write points
@@ -111,9 +111,10 @@ object Converters {
   * src/ingester/mod.rs:632-714, src/ingester/parquet_writer.rs:16-89).
   *
   * One flush = ONE partitioned write job (every hour-chunk written in parallel, rows
-  * time-sorted within each file) + ONE distributed stats agg grouped by hour (no
-  * per-hour driver loop, no collect of data rows) — this is what keeps a 100 TB
-  * backfill a two-job pipeline instead of thousands of sequential jobs.
+  * time-sorted within each file) after a min/max-timestamp agg; zone maps come from
+  * the written footers (ChunkStats.fromFooters), so no per-hour driver loop and no
+  * stats pass — this is what keeps a 100 TB backfill a two-job pipeline instead of
+  * thousands of sequential jobs.
   *
   * Layout divergence from the reference: partition values are unpadded ints
   * (`year=2024/month=1/...`) — Hive-style either way; Spark partition-type inference
@@ -187,228 +188,135 @@ final class ChunkWriter(catalog: ChunkCatalog, tenant: String = "default") {
       .option("compression", "zstd")
       .parquet(batchDir.toString)
 
-    // Zone maps, row counts and null flags come from the footers the encoder
-    // just wrote (driver-side metadata reads, no data scan); patch in file
-    // sizes and the file schema (partition columns live in dir names, not
-    // files) so later reads skip parquet-footer schema inference.
-    val fileSchema = org.apache.spark.sql.types.StructType(
-      stamped.schema.fields.filterNot(f => partCols.contains(f.name)))
-    val ddl = fileSchema.toDDL
-    val fields = ChunkStats.statFields(fileSchema, Set.empty)
-    val metas = ChunkStats.fromFooters(batchDir, fields)
-    val sized = metas.map(m => m.copy(
-      sizeBytes = ChunkStats.dirSize(Paths.get(m.path)), schemaDdl = Some(ddl)))
-    catalog.registerAll(sized)
-    graft.engine.Telemetry.ingestRows.add(sized.map(_.rowCount).sum)
-    graft.engine.Telemetry.ingestBytes.add(sized.map(_.sizeBytes).sum)
-    graft.engine.Telemetry.ingestChunks.add(sized.size.toLong)
-    sized
+    // Zone maps, row counts, null flags, sizes and the file schema (partition
+    // columns live in dir names, not files) come from what the write just
+    // produced: driver-side footer reads, no data scan.
+    val metas = ChunkStats.fromFooters(batchDir,
+      StructType(stamped.schema.fields.filterNot(f => partCols.contains(f.name))))
+    catalog.registerAll(metas)
+    graft.engine.Telemetry.ingestRows.add(metas.map(_.rowCount).sum)
+    graft.engine.Telemetry.ingestBytes.add(metas.map(_.sizeBytes).sum)
+    graft.engine.Telemetry.ingestChunks.add(metas.size.toLong)
+    metas
   }
 }
 
 object ChunkStats {
 
-  def statFields(schema: StructType, exclude: Set[String]): Array[StructField] =
-    schema.fields.filter { f =>
-      !exclude.contains(f.name) &&
-        (f.dataType == StringType || f.dataType == DoubleType || f.dataType == LongType)
-    }
-
-  def statAggs(fields: Array[StructField]): Seq[org.apache.spark.sql.Column] =
-    Seq(count(lit(1)).as("__rows")) ++ fields.flatMap { f =>
-      Seq(min(col(f.name)).as(s"__min_${f.name}"),
-          max(col(f.name)).as(s"__max_${f.name}"),
-          sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-    }
-
-  private def rowToStats(r: Row, fields: Array[StructField]): (Long, Map[String, ColumnStats]) =
-    statsFrom(name => r.getAs[Any](name), fields)
-
-  /** Shared decode for a stats row, whether it came from an agg Row or an
-    * Observation's metric map (the observe path fuses stats collection into the
-    * write job — one read instead of two).
-    */
-  private def statsFrom(get: String => Any,
-                        fields: Array[StructField]): (Long, Map[String, ColumnStats]) = {
-    val rows = get("__rows").asInstanceOf[Long]
-    val stats = fields.flatMap { f =>
-      val mn = get(s"__min_${f.name}")
-      val mx = get(s"__max_${f.name}")
-      val nulls = get(s"__nulls_${f.name}").asInstanceOf[Long] > 0
-      (mn, mx) match {
-        case (null, _) | (_, null) => None
-        case (a: String, b: String) => Some(f.name -> ColumnStats.ofString(a, b, nulls))
-        case (a: Long, b: Long) => Some(f.name -> ColumnStats.ofLong(a, b, nulls))
-        case (a: Double, b: Double) => Some(f.name -> ColumnStats.ofDouble(a, b, nulls))
-        case _ => None
-      }
-    }.toMap
-    (rows, stats)
-  }
-
-  private def toMeta(path: String, rows: Long, stats: Map[String, ColumnStats],
-                     level: Int): ChunkMeta = {
-    val tsStats = stats.getOrElse(MetricSchema.TimestampNsCol, ColumnStats.ofLong(0L, 0L))
-    ChunkMeta(
-      path = path,
-      minTimestampNs = tsStats.minLong.getOrElse(0L),
-      maxTimestampNs = tsStats.maxLong.getOrElse(0L),
-      rowCount = rows,
-      sizeBytes = dirSize(Paths.get(path)),
-      level = level,
-      columnStats = stats)
-  }
-
-  /** One agg pass over a written chunk: min/max timestamp_ns, row count, per-label and
-    * metric_name min/max + null flags (reference registers these as column_stats,
-    * src/metadata/s3.rs:84-127, computed at flush src/ingester/mod.rs:632-714).
-    */
-  def compute(spark: SparkSession, path: String, schema: StructType): ChunkMeta =
-    computeFromDf(spark.read.parquet(path), path)
-
-  /** Stats agg over an arbitrary (deterministic) DataFrame, attributed to `path`. */
-  def computeFromDf(df: org.apache.spark.sql.DataFrame, path: String): ChunkMeta = {
-    val fields = statFields(df.schema, Set.empty)
-    val aggs = statAggs(fields)
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val (rows, stats) = rowToStats(r, fields)
-    toMeta(path, rows, stats, level = 0)
-  }
-
-  /** Decode an `Observation` metric row (collected inside another job via
-    * `df.observe`) into a ChunkMeta — the zero-extra-pass stats path.
-    */
-  def metaFromMetrics(metrics: Map[String, Any], fields: Array[StructField],
-                      path: String, level: Int): ChunkMeta = {
-    val (rows, stats) = statsFrom(metrics.getOrElse(_, null), fields)
-    toMeta(path, rows, stats, level)
-  }
-
-  /** Grouped variant: ONE distributed agg over a whole hour-partitioned batch dir —
-    * one output row (and one ChunkMeta) per hour partition.
-    */
-  def computePartitioned(spark: SparkSession, batchDir: String,
-                         partCols: Seq[String]): Seq[ChunkMeta] =
-    computePartitionedFromDf(spark.read.parquet(batchDir), batchDir, partCols)
-
-  /** Same, but over an arbitrary (deterministic) DataFrame carrying the partition
-    * columns — lets the writer agg the in-memory batch instead of re-reading what
-    * it just compressed.
-    */
-  def computePartitionedFromDf(df: org.apache.spark.sql.DataFrame, batchDir: String,
-                               partCols: Seq[String]): Seq[ChunkMeta] = {
-    val fields = statFields(df.schema, partCols.toSet)
-    val aggs = statAggs(fields)
-    val grouped = df.groupBy(partCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    grouped.toSeq.map { r =>
-      val path = batchDir + "/" + partCols.map(c => s"$c=${r.getAs[Any](c)}").mkString("/")
-      val (rows, stats) = rowToStats(r, fields)
-      toMeta(path, rows, stats, level = 0)
-    }
-  }
-
-  /** Per-hour-dir chunk stats read from the PARQUET FOOTERS the write itself
-    * produced — ZERO extra data passes: the encoder already computed row-group
-    * min/max/null-count while writing (exactly how the reference's
-    * parquet_writer.rs records stats during encode, src/ingester/parquet_writer
-    * .rs:24-52, rather than re-reading the chunk). Soundness notes:
+  /** The one way a written directory becomes catalog metadata: one ChunkMeta
+    * per leaf directory under `dir` that holds parquet files, read from the
+    * FOOTERS the write itself produced — no data pass. The encoder computed
+    * row-group min/max/null-count while writing, exactly how the reference
+    * records stats during encode (src/ingester/parquet_writer.rs:24-52) and
+    * prunes on them (src/metadata/s3.rs:84-127). `fileSchema` is what the
+    * files were written with (partition columns live in directory names, not
+    * files); its DDL is stored so later reads skip footer schema inference.
+    * Zone maps cover the string, long and double columns:
     *
+    *  - merging across row groups / files is min-of-mins / max-of-maxes;
     *  - parquet-mr may TRUNCATE long binary (string) stats, but truncation
     *    preserves bounds (min rounded down, max rounded up), so zone-map
     *    pruning stays conservative;
-    *  - a column with no usable footer stats is omitted — `keepChunk` keeps
-    *    chunks with missing stats, again conservative;
-    *  - merging across row groups / files is min-of-mins / max-of-maxes.
+    *  - a column gets NO range when any row group lacks null counts or holds
+    *    non-null values without a min/max — parquet-mr keeps none for a
+    *    double block holding NaN (a Prometheus staleness marker), which Spark
+    *    orders above every number; `keepChunk` keeps chunks with missing
+    *    stats, again conservative.
+    *
+    * Level 0, no provenance: a rewriter copies in its own.
     */
-  def fromFooters(batchDir: Path, fields: Array[StructField]): Seq[ChunkMeta] = {
+  def fromFooters(dir: Path, fileSchema: StructType): Seq[ChunkMeta] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    if (!Files.exists(batchDir)) return Nil
-    val byType = fields.map(f => f.name -> f.dataType).toMap
+    if (!Files.exists(dir)) return Nil
+    val zoned = fileSchema.fields.collect {
+      case f if f.dataType == StringType || f.dataType == DoubleType || f.dataType == LongType =>
+        f.name -> f.dataType
+    }.toMap
+    val ddl = Some(fileSchema.toDDL)
     val conf = new org.apache.hadoop.conf.Configuration()
-    val all = {
-      val s = Files.walk(batchDir)
-      try s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-        .toVector
+    val files = {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toVector
       finally s.close()
     }
-    all.groupBy(_.getParent).toSeq.sortBy(_._1.toString).map { case (dir, files) =>
-      var rows = 0L
-      val minS = scala.collection.mutable.HashMap.empty[String, String]
-      val maxS = scala.collection.mutable.HashMap.empty[String, String]
-      val minL = scala.collection.mutable.HashMap.empty[String, Long]
-      val maxL = scala.collection.mutable.HashMap.empty[String, Long]
-      val minD = scala.collection.mutable.HashMap.empty[String, Double]
-      val maxD = scala.collection.mutable.HashMap.empty[String, Double]
-      val nulls = scala.collection.mutable.HashMap.empty[String, Boolean]
-      val unusable = scala.collection.mutable.HashSet.empty[String]
-      files.foreach { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
-        try reader.getFooter.getBlocks.asScala.foreach { block =>
-          rows += block.getRowCount
-          block.getColumns.asScala.foreach { cc =>
-            val name = cc.getPath.toDotString
-            if (byType.contains(name) && !unusable(name)) {
-              val st = cc.getStatistics
-              if (st == null || st.isEmpty) unusable += name // no stats → omit, sound
-              else {
-                if (st.getNumNulls > 0) nulls(name) = true
-                if (st.hasNonNullValue) ((byType(name), st) match {
-                  case (StringType, s: org.apache.parquet.column.statistics.BinaryStatistics) =>
-                    val mn = s.genericGetMin.toStringUsingUTF8
-                    val mx = s.genericGetMax.toStringUsingUTF8
-                    minS(name) = minS.get(name).filter(_ <= mn).getOrElse(mn)
-                    maxS(name) = maxS.get(name).filter(_ >= mx).getOrElse(mx)
-                  case (LongType, s: org.apache.parquet.column.statistics.LongStatistics) =>
-                    minL(name) = math.min(minL.getOrElse(name, Long.MaxValue), s.getMin)
-                    maxL(name) = math.max(maxL.getOrElse(name, Long.MinValue), s.getMax)
-                  case (DoubleType, s: org.apache.parquet.column.statistics.DoubleStatistics) =>
-                    minD(name) = math.min(minD.getOrElse(name, Double.MaxValue), s.getMin)
-                    maxD(name) = math.max(maxD.getOrElse(name, Double.MinValue), s.getMax)
-                  case _ => unusable += name // unexpected physical type → omit
-                })
+    files.groupBy(_.getParent).toSeq.sortBy(_._1.toString).flatMap { case (leaf, inLeaf) =>
+      val parquet = inLeaf.filter(_.getFileName.toString.endsWith(".parquet"))
+      if (parquet.isEmpty) None
+      else {
+        var rows = 0L
+        val ranges = scala.collection.mutable.HashMap.empty[String, ColumnStats]
+        val nulls = scala.collection.mutable.HashSet.empty[String]
+        val noRange = scala.collection.mutable.HashSet.empty[String]
+        parquet.foreach { f =>
+          val reader = ParquetFileReader.open(
+            HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+          try reader.getFooter.getBlocks.asScala.foreach { block =>
+            rows += block.getRowCount
+            block.getColumns.asScala.foreach { cc =>
+              val name = cc.getPath.toDotString
+              zoned.get(name).foreach { t =>
+                val st = cc.getStatistics
+                if (st == null || !st.isNumNullsSet) noRange += name
+                else {
+                  if (st.getNumNulls > 0) nulls += name
+                  if (st.hasNonNullValue) rangeOf(t, st) match {
+                    case Some(r) => ranges(name) = ranges.get(name).fold(r)(widen(_, r))
+                    case None => noRange += name
+                  } else if (cc.getValueCount > st.getNumNulls) noRange += name
+                }
               }
             }
-          }
-        } finally reader.close()
-      }
-      val stats = fields.flatMap { f =>
-        val n = f.name
-        if (unusable(n)) None
-        else f.dataType match {
-          case StringType => minS.get(n).map(mn =>
-            n -> ColumnStats.ofString(mn, maxS(n), nulls.getOrElse(n, false)))
-          case LongType => minL.get(n).map(mn =>
-            n -> ColumnStats.ofLong(mn, maxL(n), nulls.getOrElse(n, false)))
-          case DoubleType => minD.get(n).map(mn =>
-            n -> ColumnStats.ofDouble(mn, maxD(n), nulls.getOrElse(n, false)))
-          case _ => None
+          } finally reader.close()
         }
-      }.toMap
-      toMeta(dir.toString, rows, stats, level = 0)
+        val stats = ranges.iterator.collect {
+          case (n, r) if !noRange(n) => n -> r.copy(hasNulls = nulls(n))
+        }.toMap
+        val ts = stats.get(MetricSchema.TimestampNsCol)
+        Some(ChunkMeta(
+          path = leaf.toString,
+          minTimestampNs = ts.flatMap(_.minLong).getOrElse(0L),
+          maxTimestampNs = ts.flatMap(_.maxLong).getOrElse(0L),
+          rowCount = rows,
+          sizeBytes = inLeaf.map(Files.size(_)).sum,
+          columnStats = stats,
+          schemaDdl = ddl))
+      }
     }
   }
 
-  /** Recursively delete a written-then-discarded chunk dir (empty split half). */
+  /** One row group's [min, max] of a column; None for a physical type the
+    * zone map does not read.
+    */
+  private def rangeOf(t: DataType,
+                      st: org.apache.parquet.column.statistics.Statistics[_]): Option[ColumnStats] =
+    (t, st) match {
+      case (StringType, s: org.apache.parquet.column.statistics.BinaryStatistics) =>
+        Some(ColumnStats.ofString(s.genericGetMin.toStringUsingUTF8, s.genericGetMax.toStringUsingUTF8))
+      case (LongType, s: org.apache.parquet.column.statistics.LongStatistics) =>
+        Some(ColumnStats.ofLong(s.getMin, s.getMax))
+      case (DoubleType, s: org.apache.parquet.column.statistics.DoubleStatistics) =>
+        Some(ColumnStats.ofDouble(s.getMin, s.getMax))
+      case _ => None
+    }
+
+  private def widen(a: ColumnStats, b: ColumnStats): ColumnStats = {
+    def lo[T](x: Option[T], y: Option[T])(implicit o: Ordering[T]) = (x ++ y).minOption(o)
+    def hi[T](x: Option[T], y: Option[T])(implicit o: Ordering[T]) = (x ++ y).maxOption(o)
+    ColumnStats(
+      minString = lo(a.minString, b.minString), maxString = hi(a.maxString, b.maxString),
+      minLong = lo(a.minLong, b.minLong), maxLong = hi(a.maxLong, b.maxLong),
+      minDouble = lo(a.minDouble, b.minDouble)(Ordering.Double.TotalOrdering),
+      maxDouble = hi(a.maxDouble, b.maxDouble)(Ordering.Double.TotalOrdering))
+  }
+
+  /** Recursively delete a directory: a stale partial write from a crashed attempt. */
   def deleteDir(p: Path): Unit = {
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-  }
-
-  def dirSize(p: Path): Long = {
-    if (!Files.exists(p)) 0L
-    else {
-      val s = Files.walk(p)
-      try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
       finally s.close()
     }
   }

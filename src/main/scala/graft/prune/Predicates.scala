@@ -246,14 +246,23 @@ object PredicateExtraction {
     * would prune every chunk.
     */
   def normalizeToNs(v: Long): Long =
-    if (v < 100000000000L) v * 1000000000L // seconds (pre-5138 CE)
-    else if (v < 100000000000000L) v * 1000000L // milliseconds
-    else if (v < 100000000000000000L) v * 1000L // microseconds
+    if (v < 100000000000L) scaled(v, 1000000000L) // seconds (pre-5138 CE)
+    else if (v < 100000000000000L) scaled(v, 1000000L) // milliseconds
+    else if (v < 100000000000000000L) scaled(v, 1000L) // microseconds
     else v // nanoseconds
+
+  /** `v * unit`, saturated at Long.MinValue / Long.MaxValue: a bound past
+    * 2262-04-11 (or before 1677-09-21) is beyond every chunk's ns range, not
+    * an overflowed value on the other side of it.
+    */
+  private def scaled(v: Long, unit: Long): Long =
+    if (v > Long.MaxValue / unit) Long.MaxValue
+    else if (v < Long.MinValue / unit) Long.MinValue
+    else v * unit
 
   private def literalNs(e: cx.Expression, rawNsCol: Boolean): Option[Long] = e match {
     case cx.Literal(v: Long, t) => t match {
-      case org.apache.spark.sql.types.TimestampType => Some(v * 1000L) // µs → ns
+      case org.apache.spark.sql.types.TimestampType => Some(scaled(v, 1000L)) // µs → ns
       case _ => Some(if (rawNsCol) v else normalizeToNs(v))
     }
     case cx.Literal(v: Int, _) => Some(if (rawNsCol) v.toLong else normalizeToNs(v.toLong))

@@ -55,9 +55,9 @@ class CompactorSpec extends AnyFunSuite {
   test("merger error paths: empty group and nonexistent chunk fail loudly (ref coverage_gap_tests.rs:551-583)") {
     val cat = new ChunkCatalog(ShmDirs.tempDir("graft_cmp_err_"), cacheTtlMs = 0L)
     val comp = new Compactor(spark, cat)
-    intercept[IllegalArgumentException] { comp.compactGroup(Nil) }
+    intercept[IllegalArgumentException] { comp.compactGroups(Seq(Nil)) }
     intercept[Exception] {
-      comp.compactGroup(Seq(ChunkMeta("/nonexistent/chunk.parquet", 0L, 1L, 1L, 1L)))
+      comp.compactGroups(Seq(Seq(ChunkMeta("/nonexistent/chunk.parquet", 0L, 1L, 1L, 1L))))
     }
     // and the catalog is untouched by either failure
     assert(cat.allChunks.isEmpty)
@@ -250,7 +250,7 @@ class CompactorSpec extends AnyFunSuite {
     val rolledChunk = chunks.find(_.maxTimestampNs < t0 + 3 * hourNs).get
     val recentChunk = chunks.find(_.minTimestampNs >= t0 + 48 * hourNs).get
     val comp = new Compactor(spark, cat)
-    comp.compactGroup(Seq(rolledChunk, recentChunk))
+    comp.compactGroups(Seq(Seq(rolledChunk, recentChunk)))
     cat.invalidateCache()
     assert(cat.rollups.head.staleForExtension,
       "boundary-straddling merge must poison incremental extension")

@@ -156,6 +156,34 @@ class PruneSpec extends AnyFunSuite {
     assert(r2.startNs == 1704067200000000000L)
   }
 
+  // A literal whose ns value is past Long.MaxValue (2262-04-11) saturates: one
+  // case per arm of the magnitude heuristic, each 634 years after 1970.
+  Seq("seconds" -> 20000000000L, "milliseconds" -> 20000000000000L,
+      "microseconds" -> 20000000000000000L).foreach { case (arm, v) =>
+    test(s"a time literal in $arm past 2262 saturates instead of overflowing") {
+      import org.apache.spark.sql.catalyst.dsl.expressions._
+      import org.apache.spark.sql.catalyst.expressions.{And, GreaterThanOrEqual, LessThan, Literal}
+      val ts = Symbol("timestamp").long
+      val now = 1704067200000000000L
+      val (r, _) = extractOne(
+        And(GreaterThanOrEqual(ts, Literal(1704067200L)), LessThan(ts, Literal(v))), now)
+      assert(r == graft.prune.TimeRange(1704067200000000000L, Long.MaxValue - 1))
+      if (arm == "seconds") assert(PredicateExtraction.normalizeToNs(-v) == Long.MinValue)
+    }
+  }
+
+  test("a TIMESTAMP literal past 2262 saturates: the bounded query reads its chunk") {
+    import graft.ingest.{ChunkWriter, Converters, MetricPoint}
+    val spark = SparkTestBase.spark
+    val cat = new graft.catalog.ChunkCatalog(
+      graft.util.ShmDirs.tempDir("graft_prune_sat_"), cacheTtlMs = 0L)
+    new ChunkWriter(cat).write(Converters.pointsToDf(spark, (0 until 6).map(i =>
+      MetricPoint(1704067200000000000L + i * 60000000000L, "cpu", i.toDouble))))
+    val q = "SELECT COUNT(*) FROM metrics WHERE timestamp >= TIMESTAMP '2023-01-01 00:00:00' " +
+      "AND timestamp < TIMESTAMP '3000-01-01 00:00:00'"
+    assert(new graft.engine.QueryEngine(spark, cat).sqlRows(q)(0).getLong(0) == 6L)
+  }
+
   test("chunk keep via ChunkMeta") {
     val chunk = ChunkMeta("p", 0, 0, 0, 0, columnStats =
       Map("host" -> ColumnStats.ofString("server-01", "server-10", hasNulls = true)))
