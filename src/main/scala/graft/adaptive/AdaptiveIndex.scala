@@ -12,7 +12,8 @@ object AdaptiveIndex {
 
   /** Per-column query-pattern stats over a sliding window (reference
     * stats_collector.rs:86-202): WHERE-usage counters, observed selectivities,
-    * GROUP BY counters.
+    * GROUP BY counters. Concurrent queries record into one collector, so every
+    * record, evict and read holds the collector's lock.
     */
   final class StatsCollector(windowMs: Long = 48L * 3600 * 1000) {
     private case class Obs(atMs: Long, selectivity: Double)
@@ -20,23 +21,23 @@ object AdaptiveIndex {
     private val groupByCounts = mutable.Map.empty[String, mutable.ArrayBuffer[Long]]
 
     def recordFilter(column: String, selectivity: Double,
-                     nowMs: Long = System.currentTimeMillis()): Unit = {
-      val buf = filterObs.getOrElseUpdate(column, mutable.ArrayBuffer.empty)
-      buf += Obs(nowMs, selectivity)
+                     nowMs: Long = System.currentTimeMillis()): Unit = synchronized {
+      filterObs.getOrElseUpdate(column, mutable.ArrayBuffer.empty) += Obs(nowMs, selectivity)
       evict(nowMs)
     }
 
-    def recordGroupBy(column: String, nowMs: Long = System.currentTimeMillis()): Unit = {
-      groupByCounts.getOrElseUpdate(column, mutable.ArrayBuffer.empty) += nowMs
-      evict(nowMs)
-    }
+    def recordGroupBy(column: String, nowMs: Long = System.currentTimeMillis()): Unit =
+      synchronized {
+        groupByCounts.getOrElseUpdate(column, mutable.ArrayBuffer.empty) += nowMs
+        evict(nowMs)
+      }
 
     /** Record from an analyzed Spark plan: every attribute referenced by a Filter
       * counts as a WHERE column; Aggregate grouping attrs count as GROUP BY columns
       * (the Spark analogue of the reference's query hook, engine.rs:259-300).
       */
     def recordFromPlan(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                       nowMs: Long = System.currentTimeMillis()): Unit = {
+                       nowMs: Long = System.currentTimeMillis()): Unit = synchronized {
       import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
       plan.foreach {
         case Filter(cond, _) =>
@@ -48,24 +49,28 @@ object AdaptiveIndex {
       }
     }
 
-    private def evict(nowMs: Long): Unit = {
+    private def evict(nowMs: Long): Unit = synchronized {
       filterObs.values.foreach(b => b.filterInPlace(_.atMs > nowMs - windowMs))
       groupByCounts.values.foreach(b => b.filterInPlace(_ > nowMs - windowMs))
     }
 
-    def filterCount(column: String): Long = filterObs.get(column).map(_.size.toLong).getOrElse(0L)
-    def groupByCount(column: String): Long = groupByCounts.get(column).map(_.size.toLong).getOrElse(0L)
+    def filterCount(column: String): Long =
+      synchronized(filterObs.get(column).map(_.size.toLong).getOrElse(0L))
+    def groupByCount(column: String): Long =
+      synchronized(groupByCounts.get(column).map(_.size.toLong).getOrElse(0L))
 
     /** Sample-sorted percentile of observed selectivity (reference
       * stats_collector.rs:150-170).
       */
-    def selectivityPercentile(column: String, p: Double): Option[Double] =
+    def selectivityPercentile(column: String, p: Double): Option[Double] = synchronized {
       filterObs.get(column).filter(_.nonEmpty).map { obs =>
         val sorted = obs.map(_.selectivity).toArray.sorted
         sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
       }
+    }
 
-    def trackedColumns: Seq[String] = (filterObs.keySet ++ groupByCounts.keySet).toSeq.sorted
+    def trackedColumns: Seq[String] =
+      synchronized((filterObs.keySet ++ groupByCounts.keySet).toSeq.sorted)
   }
 
   sealed trait IndexType

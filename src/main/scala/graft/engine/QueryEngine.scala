@@ -6,19 +6,21 @@ import org.apache.spark.sql.catalyst.expressions.{And, CurrentDate, CurrentTime,
   CurrentTimestampLike, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias,
   UnresolvedWith}
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 import graft.catalog.ChunkCatalog
+import graft.plans.MetricsScan
 import graft.prune.{ColumnPredicate, PredicateExtraction, TimeRange}
 import graft.schema.MetricSchema
 
 /** The query pipeline of the reference (src/query/mod.rs:158-241), Spark-first:
   *
-  *  1. PARSE/ANALYZE — parse the SQL, bind every `metrics` reference to a
-  *     schema-only stand-in (an empty scan with the catalog's union schema),
-  *     analyze + optimize, and extract each scan's time range (default: last
+  *  1. PARSE/ANALYZE — parse the SQL, bind every `metrics` reference (CTE
+  *     bodies and subqueries included) to one [[graft.plans.MetricsScan]]
+  *     leaf with the catalog's union schema and no chunks, analyze once per
+  *     text, optimize, and extract each scan's time range (default: last
   *     1 hour) + column predicates from the Filters Catalyst pushed onto it
   *     (engine.rs:368-487, 493-650; the reference walks its resolved plan
   *     the same way). The statement selects the union of its scans' chunks.
@@ -27,20 +29,17 @@ import graft.schema.MetricSchema
   *     It is the engine's only chunk selection: [[serve]] (under `sql`,
   *     `sqlRows` and `execute`) and the label-values and series endpoints all
   *     read through it.
-  *  3. BIND — the pruned chunk set becomes this query's own `metrics`
-  *     relation: every `metrics` reference in the parsed statement, CTE
-  *     bodies and subqueries included, is bound to a scan of exactly those
-  *     paths (mergeSchema=true mirrors DataFusion's multi-path schema
-  *     inference); empty store ⇒ empty DataFrame with the default schema
-  *     (engine.rs:97-101,189-205). Unlike the reference's re-registration
-  *     (engine.rs:127-187) nothing session-global is replaced, so concurrent
-  *     queries plan without a lock and results cached over other path sets
-  *     stay cached. A set whose catalog sizes sum to ≤ `oneTaskMaxBytes`
-  *     (1 MiB by default) is read coalesced to one partition (see
-  *     [[relationOf]]).
-  *  4. EXECUTE — spark.sql: Catalyst does analyze/optimize/physical; the vectorized
+  *  3. SCAN — the pruned chunks are copied into every leaf of the text's
+  *     analyzed plan, which is not bound again; [[graft.plans.MetricsScan.Planner]]
+  *     reads exactly those chunks with the union schema (the reference infers
+  *     it from the pruned files); empty store ⇒ empty DataFrame with the
+  *     default schema (engine.rs:97-101,189-205). Unlike the reference's
+  *     re-registration (engine.rs:127-187) nothing session-global is replaced,
+  *     so concurrent queries plan without a lock. A small set is read as one
+  *     partition ([[scanOf]]).
+  *  4. EXECUTE — Catalyst optimizes and plans; the vectorized
   *     Parquet reader re-prunes row groups from footer stats (two-tier pruning like
-  *     the reference: metadata prune then Parquet prune). Over a coalesced relation
+  *     the reference: metadata prune then Parquet prune). Over a one-task scan
   *     the whole query (aggregate, ORDER BY) is one job of one task with no
   *     exchange — the reference's small-scan shape; larger sets run partitioned.
   *  5. DEDUP — when a shard split is active, first-wins dedup on
@@ -54,6 +53,8 @@ import graft.schema.MetricSchema
 final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
                         val limits: QueryEngine.QueryLimits = QueryEngine.QueryLimits()) {
   import QueryEngine._
+
+  MetricsScan.install(spark)
 
   /** Fair semaphore = the reference's 100-permit query gate
     * (src/query/mod.rs:50-60); excess queries queue FIFO.
@@ -100,7 +101,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     }
   }
 
-  /** Plan cache: (query, pruned path set, split-active) → one [[QueryEngine.Entry]].
+  /** Plan cache: [[QueryEngine.Key]] → one [[QueryEngine.Entry]].
     * Re-running a repeated dashboard query skips Catalyst analysis/optimization —
     * the dominant cost of a warm pruned query (~100 ms). Size mirrors the
     * reference's 100-concurrent-queries default (src/query/mod.rs:50-60).
@@ -264,11 +265,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   @volatile var resultCacheEnabled: Boolean =
     spark.conf.get("spark.graft.resultCache.enabled", "true").toBoolean
 
-  /** Cut-off of the one-task rule ([[relationOf]]): a pruned chunk set whose
+  /** Cut-off of the one-task rule ([[scanOf]]): a pruned chunk set whose
     * catalog sizes sum to at most this many bytes is read as one partition.
     * Not a serving option: tests and `graft.OneTaskProbe` move it to put a
-    * small set on either side. Read when a path set's relation is built, so
-    * a change applies from the next new path set; 0 turns the rule off.
+    * small set on either side. Read on every serve that plans; 0 turns the
+    * rule off.
     */
   @volatile private[graft] var oneTaskMaxBytes: Long = QueryEngine.OneTaskMaxBytes
 
@@ -277,14 +278,12 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     */
   val adaptiveStats = new graft.adaptive.AdaptiveIndex.StatsCollector()
 
-  /** One entry per query TEXT, access-ordered, at most 256: its ANTLR parse,
-    * shared by predicate extraction and execution (each call binds and
-    * analyzes its own copy, so reusing the unresolved tree across path sets
-    * is safe), and its scans' conjuncts from the optimized stand-in plan.
-    * A warm repeat skips Catalyst entirely: hash probe → extraction from the
-    * memoized conjuncts → catalog prune → plan cache hit. A text that calls
-    * a clock is optimized again on every call, since the optimizer folds the
-    * clock's value into its bounds.
+  /** One entry per query TEXT, access-ordered, at most 256 ([[QueryEngine.Text]]),
+    * analyzed again when the union schema changes. A warm repeat skips
+    * Catalyst entirely: hash probe → extraction from the memoized conjuncts →
+    * catalog prune → plan cache hit. A text that calls a clock is optimized
+    * again on every call, since the optimizer folds the clock's value into
+    * its bounds.
     */
   private val textCache = new java.util.LinkedHashMap[String, Text](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, Text]): Boolean =
@@ -302,31 +301,29 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     textCache.synchronized(Option(textCache.get(query)).exists(_.timeFixed))
 
   /** `query`'s text entry and its (range, preds) at `nowNs`, extracted from
-    * the plan bound to `st`'s stand-in. A first sighting parses ONCE.
+    * the plan bound to `st`'s stand-in. A first sighting parses and analyzes
+    * ONCE.
     */
   private def textOf(query: String, st: ChunkCatalog.CatalogState,
                      nowNs: Long): (Text, (TimeRange, Seq[ColumnPredicate])) = {
-    val seen = textCache.synchronized(textCache.get(query))
-    val text =
-      if (seen != null && !seen.callsClock) seen
-      else {
-        val plan = if (seen != null) seen.plan else spark.sessionState.sqlParser.parsePlan(query)
-        val fresh = textFor(plan, st)
+    val leaf = standIn(st)
+    val text = Option(textCache.synchronized(textCache.get(query)))
+      .filter(_.schema == leaf.schema).getOrElse {
+        val analyzed = analyzedOf(withMetrics(spark.sessionState.sqlParser.parsePlan(query), leaf))
+        val fresh = Text(analyzed, scansOf(analyzed), callsClock(analyzed), leaf.schema)
         textCache.synchronized(textCache.put(query, fresh))
         fresh
       }
-    (text, PredicateExtraction.extract(text.scans, nowNs))
+    val scans = if (text.callsClock) scansOf(text.analyzed) else text.scans
+    (text, PredicateExtraction.extract(scans, nowNs))
   }
 
-  /** The text entry of `parsed`: bound to `st`'s stand-in, analyzed and
-    * optimized, each scan's conjuncts and whether it calls a clock.
-    */
-  private def textFor(parsed: LogicalPlan, st: ChunkCatalog.CatalogState): Text = {
-    val leaf = standIn(st)
-    val analyzed = GraftBridge.ofRows(spark, withMetrics(parsed, leaf)).queryExecution.analyzed
-    Text(parsed, PredicateExtraction.scanConjuncts(spark.sessionState.optimizer.execute(analyzed),
-      { case r: LogicalRDD => r.rdd eq leaf.rdd; case _ => false }), callsClock(analyzed))
-  }
+  private def analyzedOf(plan: LogicalPlan): LogicalPlan =
+    GraftBridge.ofRows(spark, plan).queryExecution.analyzed
+
+  /** Each `metrics` scan's conjuncts in the optimized `analyzed` plan. */
+  private def scansOf(analyzed: LogicalPlan): Seq[Seq[Expression]] =
+    PredicateExtraction.scanConjuncts(spark.sessionState.optimizer.execute(analyzed))
 
   /** True iff an analyzed plan, subqueries included, calls a clock function:
     * one of the expressions Spark's `ComputeCurrentTime` fixes when a plan is
@@ -380,7 +377,9 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     // rollup identity is part of the cache key: (de)registering a rollup must
     // never serve a stale cached plan built against the other source
     val rollups = if (!split && tenant.isEmpty && asOf.isEmpty) catalog.rollups else Nil
-    val key = (query, paths ++ rollups.map("rollup:" + _.path), split)
+    // the text's schema too: an ingest can add a label to the union schema
+    // without changing this query's path set
+    val key = (query, paths ++ rollups.map("rollup:" + _.path), split, text.schema)
     def served(df: DataFrame, mode: String, route: Route = Raw,
                rows: Option[Array[Row]] = None) = Served(df, rows, mode, route, paths)
     val reuse = text.timeFixed
@@ -407,9 +406,10 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     // L1 miss → probe the L2 disk tier before recomputing (only localized raw
     // results ever demote)
     if (reuse) promoteFromL2(key).foreach(l => return served(l.df, "l2", rows = Some(l.rows)))
-    // Reuse the cached PARSED tree — the ANTLR parse is paid once per text —
-    // bound to THIS query's path set; ofRows analyzes it eagerly.
-    val raw = GraftBridge.ofRows(spark, withMetrics(text.plan, relationOf(st, paths)))
+    // The text's analyzed plan, its leaves now over THIS query's chunks
+    val scan = scanOf(st, paths)
+    val raw = GraftBridge.ofRows(spark,
+      text.analyzed.transformWithSubqueries { case m: MetricsScan => scan(m) })
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
     // aggregate the registered rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
@@ -417,19 +417,18 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val rollupPlan: Option[DataFrame] =
       if (rollups.isEmpty) None
       else
-        try graft.plans.RollupRouting.route(spark, rollups,
-          raw.queryExecution.analyzed, paths)
+        try graft.plans.RollupRouting.route(spark, rollups, raw.queryExecution.analyzed)
         catch { case scala.util.control.NonFatal(_) => None }
     rollupPlan.foreach(_ => Telemetry.rollupRouted.increment())
     // Two-phase top-k rewrite (graft.plans.TopKRouting): the naive
-    // row_number-filter window shape over the bound `metrics` scan re-plans as
+    // row_number-filter window shape over the engine's `metrics` scan re-plans as
     // Operators.topKPerGroup — same rows, parallelism no longer bounded by
     // the group count. Skipped during an active split (the raw path applies
     // split dedup); a failed match routes to raw.
     val routed: Option[(DataFrame, Route)] = rollupPlan.map(r => (r, Rollup)).orElse {
       if (split) None
       else
-        try graft.plans.TopKRouting.route(spark, raw.queryExecution.analyzed, paths)
+        try graft.plans.TopKRouting.route(spark, raw.queryExecution.analyzed)
           .map(r => (r, TopK))
         catch { case scala.util.control.NonFatal(_) => None }
     }
@@ -556,74 +555,54 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       .filter(c => preds.forall(_.keepChunk(c)))
       .map(_.path)
 
-  /** The last (path set → relation) pair [[relationOf]] built. */
-  private val lastRelation =
-    new java.util.concurrent.atomic.AtomicReference[(Seq[String], LogicalPlan)]()
-
-  /** Step 3: the `metrics` relation over exactly the pruned chunk set (paths
-    * of `st`, read through [[ChunkCatalog.readChunks]]), as an analyzed plan a query binds on its own ([[withMetrics]]); the last one
-    * built is reused while the path set repeats (engine.rs:133-187).
-    *
-    * One-task rule: when the chunks' summed `sizeBytes` is at most [[oneTaskMaxBytes]], the relation is the scan
-    * coalesced to one partition. The plan then reports SinglePartition, so
-    * neither an aggregate nor an ORDER BY needs an exchange: a dashboard-sized
-    * read is one job, one stage, one task instead of a shuffle stage, a
-    * range-sampling job, a range shuffle and a result stage. Filters and
-    * column pruning still reach the Parquet scan (Repartition is
-    * push-through). Larger pruned sets keep the partitioned scan: past the
-    * measured cut-off ([[QueryEngine.OneTaskMaxBytes]]) one task decoding
-    * the whole set is slower than the exchanges it saves.
+  /** Step 3: a leaf's copy over exactly the pruned chunks (paths of `st`),
+    * read as one partition when their summed `sizeBytes` is at most
+    * [[oneTaskMaxBytes]]: a dashboard-sized read is then one job of one task
+    * instead of a shuffle stage, a range-sampling job, a range shuffle and a
+    * result stage. Past the measured cut-off ([[QueryEngine.OneTaskMaxBytes]])
+    * one task decoding the whole set is slower than the exchanges it saves.
     */
-  private def relationOf(st: ChunkCatalog.CatalogState, paths: Seq[String]): LogicalPlan = {
-    val last = lastRelation.get()
-    if (last != null && last._1 == paths) return last._2
-    val metas = paths.map(st.chunks)
-    val scan = ChunkCatalog.readChunks(spark, metas)
-    val rel = (if (paths.nonEmpty && metas.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes)
-        scan.coalesce(1) else scan)
-      .queryExecution.analyzed
-    lastRelation.set((paths, rel))
-    rel
+  private def scanOf(st: ChunkCatalog.CatalogState,
+                     paths: Seq[String]): MetricsScan => MetricsScan = {
+    val chunks = paths.map(st.chunks)
+    val oneTask = chunks.nonEmpty && chunks.iterator.map(_.sizeBytes).sum <= oneTaskMaxBytes
+    _.copy(chunks = chunks, oneTask = oneTask)
   }
 
   /** The last (catalog version → stand-in) pair [[standIn]] built. */
-  private val lastStandIn = new java.util.concurrent.atomic.AtomicReference[(Long, LogicalRDD)]()
+  private val lastStandIn = new java.util.concurrent.atomic.AtomicReference[(Long, MetricsScan)]()
 
-  /** The schema-only `metrics` that extraction binds: an empty scan with the
-    * union schema of every chunk `st` holds, so a query over any pruned set
-    * resolves against it, and no chunk is listed or read. Without a
-    * catalog-held union schema (a chunk registered without one) the columns
-    * are inferred from every chunk's footer, once per catalog version; if
-    * that fails (conflicting types) the stand-in has the default schema.
-    * One per catalog version; [[labels]] and the label endpoints read its
-    * schema too.
+  /** The `metrics` leaf every text binds, one per catalog version, with no
+    * chunks and the union schema of every chunk `st` holds ([[labels]] reads
+    * it too). Without a catalog-held union schema (a chunk registered without
+    * one) the columns are inferred from every chunk's footer; if that fails
+    * (conflicting types) the leaf has the default schema.
     */
-  private def standIn(st: ChunkCatalog.CatalogState): LogicalRDD = {
+  private def standIn(st: ChunkCatalog.CatalogState): MetricsScan = {
     val last = lastStandIn.get()
     if (last != null && last._1 == st.version) return last._2
     val metas = st.chunks.values.toSeq.sortBy(_.path)
     val schema =
-      try ChunkCatalog.readChunks(spark, metas).schema
+      try ChunkCatalog.mergedSchema(metas).getOrElse(ChunkCatalog.readChunks(spark, metas).schema)
       catch { case scala.util.control.NonFatal(_) => MetricSchema.default }
-    val leaf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      .queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val leaf = MetricsScan(DataTypeUtils.toAttributes(schema), Nil, oneTask = false)
     lastStandIn.set((st.version, leaf))
     leaf
   }
 
   /** Bind every `metrics` reference of a parsed statement — in subqueries and
-    * in the CTE bodies of a WITH too, which PromQL emits — to `rel`. Each
-    * query resolves against its own relation, so no lock orders planning and
-    * a `metrics` view other code registers on the session is never read.
+    * in the CTE bodies of a WITH too, which PromQL emits — to `leaf`, once
+    * per text. A `metrics` view other code registers on the session is never
+    * read.
     */
-  private def withMetrics(plan: LogicalPlan, rel: LogicalPlan): LogicalPlan =
+  private def withMetrics(plan: LogicalPlan, leaf: MetricsScan): LogicalPlan =
     plan.transformUpWithSubqueries {
       case u: UnresolvedRelation if u.multipartIdentifier.size == 1 &&
           u.multipartIdentifier.head.equalsIgnoreCase("metrics") =>
-        SubqueryAlias("metrics", rel)
+        SubqueryAlias("metrics", leaf)
       case w: UnresolvedWith =>
         w.copy(cteRelations = w.cteRelations.map { r =>
-          r.copy(_2 = r._2.copy(child = withMetrics(r._2.child, rel)))
+          r.copy(_2 = r._2.copy(child = withMetrics(r._2.child, leaf)))
         })
     }
 
@@ -667,25 +646,20 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** The `metrics` rows in `[startNs, endNs]` (a missing side unbounded) that
     * match every matcher. Chunks come from [[prune]] over that range and the
     * zone-map predicates the matchers' SQL conditions extract to, as a
-    * Filter over the stand-in like a query's, bound as in [[relationOf]].
-    * The columns are the stand-in's union schema, in its order: a label
-    * that no selected chunk carries reads as NULL, as it does over all
-    * chunks, so it gives no label values and `!~` keeps the row.
+    * Filter over the stand-in like a query's, read as in [[scanOf]]. A label
+    * no selected chunk carries reads as NULL: no label values, `!~` keeps it.
     */
   private def matchedRows(matchers: Seq[graft.promql.LabelMatcher],
                           startNs: Option[Long], endNs: Option[Long]): DataFrame = {
     val conds = matchers.map(m =>
       spark.sessionState.sqlParser.parseExpression(graft.promql.PromQL.matcherToSql(m)))
     val st = catalog.state
+    val leaf = standIn(st)
     // the range comes from startNs/endNs; extraction's own range is ignored
     val preds = conds.reduceOption(And).fold(Seq.empty[ColumnPredicate])(c =>
-      PredicateExtraction.extract(textFor(Filter(c, standIn(st)), st).scans, 0L)._2)
+      PredicateExtraction.extract(scansOf(analyzedOf(Filter(c, leaf))), 0L)._2)
     val range = TimeRange(startNs.getOrElse(Long.MinValue), endNs.getOrElse(Long.MaxValue))
-    val pruned = GraftBridge.ofRows(spark, relationOf(st, pruneIn(st, range, preds)))
-    val all = standIn(st).schema
-    val rows = pruned.select(all.fields.toSeq.map(f =>
-      if (pruned.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)): _*)
+    val rows = GraftBridge.ofRows(spark, scanOf(st, pruneIn(st, range, preds))(leaf))
     val ts = col(MetricSchema.TimestampNsCol)
     (startNs.map(ts >= _) ++ endNs.map(ts <= _) ++ conds.map(GraftBridge.column))
       .foldLeft(rows)(_ where _)
@@ -721,8 +695,10 @@ object QueryEngine {
                                l2CacheDir: Option[String] = None,
                                maxL2CacheBytes: Long = 256L << 20)
 
-  /** Plan-cache key: (query text, pruned paths + rollup ids, split active). */
-  private type Key = (String, Seq[String], Boolean)
+  /** Plan-cache key: (query text, pruned paths + rollup ids, split active,
+    * the union schema the text was analyzed with).
+    */
+  private type Key = (String, Seq[String], Boolean, StructType)
 
   /** Which plan answers a query: the raw chunks, a registered rollup
     * (graft.plans.RollupRouting) or the two-phase top-k rewrite
@@ -749,12 +725,13 @@ object QueryEngine {
   final case class Served(df: DataFrame, rows: Option[Array[Row]], mode: String,
                           route: Route, paths: Seq[String])
 
-  /** One text-cache entry: the parse, each scan's conjuncts in the
-    * optimized stand-in plan, and whether the analyzed plan calls a clock.
+  /** One text-cache entry: the plan analyzed over the stand-in leaf (each
+    * call copies its own chunks into it), each scan's conjuncts in its
+    * optimized form, whether it calls a clock, and the leaf's schema.
     * [[QueryEngine.isTimeFixed]] is `timeFixed`.
     */
-  private final case class Text(plan: LogicalPlan, scans: Seq[Seq[Expression]],
-                                callsClock: Boolean) {
+  private final case class Text(analyzed: LogicalPlan, scans: Seq[Seq[Expression]],
+                                callsClock: Boolean, schema: StructType) {
     val timeFixed: Boolean = !callsClock && !PredicateExtraction.readsDefaultWindow(scans)
   }
 

@@ -21,8 +21,8 @@ import graft.schema.MetricSchema
   * avg derives last as Σsum/Σvalue_count).
   *
   * The match runs on the ANALYZED plan of the user's SQL over the engine's
-  * `metrics` relation, so routing is transparent: same SQL text answers from raw
-  * chunks when no rollup qualifies. Anything the matcher does not fully
+  * `metrics` leaf ([[MetricsScan]]), so routing is transparent: same SQL
+  * text answers from raw chunks when no rollup qualifies. Anything the matcher does not fully
   * understand routes to raw — the rewrite is never allowed to be lossy.
   *
   * Supported plan surface (the transpiler's and the SQL dialect's bucketed
@@ -36,23 +36,15 @@ import graft.schema.MetricSchema
 object RollupRouting {
 
   /** Try every registered rollup, coarsest resolution first (fewest rows read).
-    *
-    * `registeredChunkPaths` is the engine's OWN metrics relation identity: the
-    * rewrite fires only when the plan's leaf scans exactly those files.
-    * Without the check, any user SQL over an unrelated table that happens to
+    * The rewrite fires only over the engine's OWN `metrics` leaf
+    * ([[MetricsScan]]): any user SQL over an unrelated table that happens to
     * carry the metrics column names (a staging import, another tenant's view)
-    * would silently be answered from THIS warehouse's rollup.
+    * would otherwise be answered from THIS warehouse's rollup.
     */
   def route(spark: SparkSession, rollups: Seq[RollupMeta],
-            analyzed: LogicalPlan,
-            registeredChunkPaths: Seq[String]): Option[DataFrame] = {
-    val candidates = rollups.sortBy(-_.resolutionSeconds)
-    val expected = registeredChunkPaths.map(normalizePath).toSet
-    candidates.view.flatMap(r => routeOne(spark, r, analyzed, expected)).headOption
-  }
-
-  private def normalizePath(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
+            analyzed: LogicalPlan): Option[DataFrame] =
+    rollups.sortBy(-_.resolutionSeconds).view
+      .flatMap(r => routeOne(spark, r, analyzed)).headOption
 
   // ---- plan matching -------------------------------------------------------
 
@@ -74,8 +66,7 @@ object RollupRouting {
   }
 
   private def routeOne(spark: SparkSession, rollup: RollupMeta,
-                       analyzed: LogicalPlan,
-                       expectedPaths: Set[String]): Option[DataFrame] = {
+                       analyzed: LogicalPlan): Option[DataFrame] = {
     val resNs = rollup.resolutionSeconds * 1000000000L
 
     // [Sort] on top (re-applied after the rewrite, by output-column name)
@@ -88,8 +79,7 @@ object RollupRouting {
       case _ => return None
     }
     // [Filter] → metrics leaf (through view/alias wrappers)
-    val (conjuncts, leafOk) = stripToRelation(agg.child, expectedPaths)
-    if (!leafOk) return None
+    val conjuncts = stripToRelation(agg.child).getOrElse(return None)
 
     val groupable = Set(MetricSchema.MetricNameCol) ++ rollup.labelCols
 
@@ -212,35 +202,18 @@ object RollupRouting {
     Some(sorted)
   }
 
-  /** Descend through view/alias wrappers, collecting Filter conjuncts; true
-    * iff the leaf IS the engine's `metrics` scan — a file relation over
-    * exactly the engine's pruned chunk paths. A file
-    * relation over anything else (a user's own parquet table with the same
-    * column names) must NOT be rewritten. The only accepted non-file leaf is
-    * the engine's empty-warehouse placeholder, and only when the engine has
-    * no registered paths at all.
+  /** Descend through view/alias wrappers, collecting Filter conjuncts, when
+    * the leaf IS the engine's `metrics` scan with chunks to read. Any other
+    * leaf (a user's own table with the same column names) must NOT be
+    * rewritten, and over no chunks routing could only restate an empty answer.
     */
-  private def stripToRelation(plan: LogicalPlan,
-                              expectedPaths: Set[String]): (Seq[Expression], Boolean) =
+  private def stripToRelation(plan: LogicalPlan): Option[Seq[Expression]] =
     plan match {
-      case Filter(cond, child) =>
-        val (cs, ok) = stripToRelation(child, expectedPaths)
-        (splitConjuncts(cond) ++ cs, ok)
-      case SubqueryAlias(_, child) => stripToRelation(child, expectedPaths)
-      case v: View => stripToRelation(v.child, expectedPaths)
-      // the engine's one-task scan of a small chunk set (QueryEngine.relationOf)
-      case Repartition(1, false, child) => stripToRelation(child, expectedPaths)
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val roots = fs.location.rootPaths.map(p => p.toUri.getPath).toSet
-            (Nil, roots.nonEmpty && roots == expectedPaths)
-          case _ => (Nil, false)
-        }
-      // No other leaf qualifies — a LocalRelation/LogicalRDD with metrics-
-      // shaped columns could be a USER's table (and with an empty pruned
-      // path set, routing could only restate an empty answer anyway).
-      case _ => (Nil, false)
+      case Filter(cond, child) => stripToRelation(child).map(splitConjuncts(cond) ++ _)
+      case SubqueryAlias(_, child) => stripToRelation(child)
+      case v: View => stripToRelation(v.child)
+      case m: MetricsScan if m.chunks.nonEmpty => Some(Nil)
+      case _ => None
     }
 
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * → [Project]* → Window([rn = row_number()]) → child, where the window's
   * partition/order keys are plain attributes (the analyzer extracts ordering
   * EXPRESSIONS into `_w0...` aliases in the window's child projection, so this
-  * covers expression ordering too) and the child's leaves are exactly the
-  * engine's registered chunk scan — same identity discipline as RollupRouting:
+  * covers expression ordering too) and the child's leaves are all the
+  * engine's [[MetricsScan]] — same identity discipline as RollupRouting:
   * a user's own table is never rewritten. Any shape the matcher does not fully
   * understand routes to the raw plan.
   *
@@ -35,12 +35,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   */
 object TopKRouting {
 
-  def route(spark: SparkSession, analyzed: LogicalPlan,
-            registeredChunkPaths: Seq[String]): Option[DataFrame] = {
-    val expected = registeredChunkPaths
-      .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
-    if (expected.isEmpty) return None
-
+  def route(spark: SparkSession, analyzed: LogicalPlan): Option[DataFrame] = {
     // [Sort] on top — reapplied by output-column name after the rewrite
     val (sortOrders, p0) = analyzed match {
       case Sort(orders, true, child, _) => (orders, child)
@@ -88,21 +83,12 @@ object TopKRouting {
     val childNames = window.child.output.map(_.name)
     if ((childNames :+ rnName).distinct.size != childNames.size + 1) return None
 
-    // identity guard: the subtree below the window must scan exactly the
-    // engine's registered chunk set (reused wholesale, filters included)
-    val leavesOk = {
-      val leaves = window.child.collectLeaves()
-      leaves.nonEmpty && leaves.forall {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toUri.getPath).toSet == expected
-            case _ => false
-          }
+    // identity guard: the subtree below the window (reused wholesale, filters
+    // included) reads nothing but the engine's own `metrics` leaf, over chunks
+    if (!window.child.collectLeaves().forall {
+        case m: MetricsScan => m.chunks.nonEmpty
         case _ => false
-      }
-    }
-    if (!leavesOk) return None
+      }) return None
 
     // ---- rebuild: two-phase top-k over the SAME child subtree --------------
     val childDf = org.apache.spark.sql.GraftBridge.ofRows(spark, window.child)

@@ -109,10 +109,10 @@ object PredicateExtraction {
 
   val DefaultWindowNs: Long = 3600L * 1000000000L
 
-  /** The conjuncts that bound each scan leaf (`isScan`) of an OPTIMIZED
-    * plan, subqueries and CTE definitions included: one entry per scan, each
-    * Filter conjunct above a scan that reads only that scan's columns. The
-    * Spark-side equivalent of the reference's walk of the resolved plan
+  /** The conjuncts that bound each `metrics` leaf ([[graft.plans.MetricsScan]])
+    * of an OPTIMIZED plan, subqueries and CTE definitions included: one entry
+    * per scan, each Filter conjunct above a scan that reads only that scan's
+    * columns. The Spark-side equivalent of the reference's walk of the resolved plan
     * (src/query/engine.rs:368-487): Catalyst's pushdown has already moved
     * each scan's own conditions (qualified columns, join and CTE bodies,
     * folded now() and literal arithmetic) onto it, and a condition it cannot
@@ -121,10 +121,11 @@ object PredicateExtraction {
     * other. A plan with no scan left (`SELECT 1`, a Filter folded to false)
     * reads as one unfiltered scan, like a statement with no bound.
     */
-  def scanConjuncts(plan: LogicalPlan, isScan: LogicalPlan => Boolean): Seq[Seq[cx.Expression]] = {
+  def scanConjuncts(plan: LogicalPlan): Seq[Seq[cx.Expression]] = {
     def walk(p: LogicalPlan, above: Seq[cx.Expression]): Seq[Seq[cx.Expression]] =
       p.subqueries.flatMap(walk(_, Nil)) ++ (p match {
-        case leaf if isScan(leaf) => Seq(above.filter(_.references.subsetOf(leaf.outputSet)))
+        case leaf: graft.plans.MetricsScan =>
+          Seq(above.filter(_.references.subsetOf(leaf.outputSet)))
         case Filter(cond, child) => walk(child, above ++ splitConjuncts(cond))
         case other => other.children.flatMap(walk(_, above))
       })

@@ -12,11 +12,6 @@ object CardinalityClass {
   case object Low extends CardinalityClass { val maxCardinality = 1000L }
   case object Medium extends CardinalityClass { val maxCardinality = 100000L }
   case object High extends CardinalityClass { val maxCardinality = Long.MaxValue }
-
-  def forCardinality(n: Long): CardinalityClass =
-    if (n <= Low.maxCardinality) Low
-    else if (n <= Medium.maxCardinality) Medium
-    else High
 }
 
 /** Metric type → primary value column routing (reference src/schema/metrics.rs:19-41). */
@@ -86,8 +81,4 @@ object MetricSchema {
     * src/query/engine.rs:97-101,189-205).
     */
   val default: StructType = build()
-
-  /** Label columns of a schema = everything that's not internal. */
-  def labelColumns(schema: StructType): Seq[String] =
-    schema.fieldNames.toSeq.filterNot(internalColumns.contains)
 }

@@ -58,16 +58,8 @@ object MetricSources {
     base
   }
 
-  def fromParquet(spark: SparkSession, path: String, ts: Column, metricName: Column,
-                  value: Column, labels: Map[String, Column] = Map.empty): DataFrame =
-    toMetrics(spark.read.parquet(path), ts, metricName, value, labels)
-
   def fromCsv(spark: SparkSession, path: String, ts: Column, metricName: Column,
               value: Column, labels: Map[String, Column] = Map.empty): DataFrame =
     toMetrics(spark.read.option("header", "true").option("inferSchema", "true").csv(path),
       ts, metricName, value, labels)
-
-  def fromJson(spark: SparkSession, path: String, ts: Column, metricName: Column,
-               value: Column, labels: Map[String, Column] = Map.empty): DataFrame =
-    toMetrics(spark.read.json(path), ts, metricName, value, labels)
 }

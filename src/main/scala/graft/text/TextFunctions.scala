@@ -30,16 +30,6 @@ object TextFunctions {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword proxy count: word-boundary pieces (letter runs, digit runs,
-    * punctuation singletons). A deterministic regex stand-in for a real tokenizer —
-    * counts matches of `[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]`.
-    */
-  def subwordCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")) +
-        size(split(text, "[0-9]")) - lit(1) +
-        size(split(text, "[^A-Za-z0-9\\s]")) - lit(1))
-
   /** GPT-2-style pre-tokenization pieces: the regex split BPE tokenizers apply
     * BEFORE byte-pair merging — space-prefixed letter runs, digit runs, and
     * punctuation runs (` ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+`). The real
@@ -62,8 +52,6 @@ object TextFunctions {
   def alphaRatio(text: Column): Column = classRatio(text, "[A-Za-z]")
   def digitRatio(text: Column): Column = classRatio(text, "[0-9]")
   def punctRatio(text: Column): Column = classRatio(text, "[^A-Za-z0-9\\s]")
-  def whitespaceRatio(text: Column): Column = classRatio(text, "\\s")
-  def upperRatio(text: Column): Column = classRatio(text, "[A-Z]")
 
   private def classRatio(text: Column, cls: String): Column =
     when(length(text) === 0, lit(0.0))
@@ -186,8 +174,10 @@ object TextFunctions {
   /** Normalized whitespace tokens — the shared tokenization of the repetition /
     * vocabulary operators (identical to DuckDB's
     * `regexp_split_to_array(lower(trim(text)), '\s+')` for oracle parity).
+    * The separator is RE2's `\s`, `[\t\n\f\r ]`: Java's `\s` also matches
+    * U+000B, which DuckDB keeps inside a word.
     */
-  def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
+  def tokens(text: Column): Column = split(lower(trim(text)), "[\\t\\n\\f\\r ]+")
 
   /** Intra-document repetition stats: total tokens, distinct tokens, and the
     * repeated-token ratio 1 − distinct/total — the standard C4/Gopher-style

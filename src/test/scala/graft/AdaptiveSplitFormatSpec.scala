@@ -29,6 +29,23 @@ class AdaptiveSplitFormatSpec extends AnyFunSuite {
     assert(sc.filterCount("host") == 1)
   }
 
+  test("stats collector: concurrent records are all counted") {
+    val sc = new AdaptiveIndex.StatsCollector()
+    val (threads, perThread) = (4, 3000)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (0 until threads).map(_ => pool.submit(new Runnable {
+        override def run(): Unit = (0 until perThread).foreach { _ =>
+          sc.recordFilter("host", 0.1, nowMs = 0L)
+          sc.recordGroupBy("service", nowMs = 0L)
+        }
+      }))
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    assert(sc.filterCount("host") == threads * perThread)
+    assert(sc.groupByCount("service") == threads * perThread)
+  }
+
   test("stats collector: records from analyzed Spark plans") {
     import spark.implicits._
     val df = Seq(("cpu", 1.0)).toDF("metric_name", "v")

@@ -19,6 +19,19 @@ class EngineSpec extends AnyFunSuite {
   private val hourNs = 3600L * 1000000000L
   private val t0 = 1704067200L * 1000000000L // 2024-01-01T00:00:00Z
 
+  /** The Parquet scans of an executed plan. An exchange makes AQE wrap the
+    * plan and hide the scan inside query stages; descend through both
+    * wrapper kinds.
+    */
+  private def allScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      allScans(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
+    case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
+    case other => other.children.flatMap(allScans)
+  }
+
   /** 3 hours × 2 metrics × 2 hosts, 1 point/10min → 36 points/hour-chunk. */
   private def freshEngine(): (QueryEngine, ChunkCatalog) = {
     val cat = new ChunkCatalog(ShmDirs.tempDir("graft_eng_"), cacheTtlMs = 0L)
@@ -148,16 +161,6 @@ class EngineSpec extends AnyFunSuite {
     new ChunkWriter(cat).write(Converters.pointsToDf(spark, points))
     val eng = new QueryEngine(spark, cat)
 
-    // distinct adds an exchange → AQE wraps the plan and hides the scan
-    // inside query stages; descend through both wrapper kinds
-    def allScans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        allScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(allScans)
-    }
     // values and files scanned, both from the frame's FIRST action: a re-run
     // reports no files
     def scan(df: org.apache.spark.sql.DataFrame): (Seq[String], Long) = {
@@ -767,5 +770,102 @@ class EngineSpec extends AnyFunSuite {
       jobsAndTasks(eng.execute(twoHourAgg)(_.collect().map(_.toSeq).toSeq))
     assert(tasks > 1, s"a set above the cut-off must stay partitioned: $jobs jobs / $tasks tasks")
     assert(rows == referenceRows(cat))
+  }
+
+  test("one bind per call: a served frame reads metrics only through MetricsScan " +
+    "leaves over its Served.paths, CTE bodies and subqueries included") {
+    import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode}
+    val (eng, _) = freshEngine()
+    def text(hours: Int) = {
+      val range = s"timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hours * hourNs}"
+      s"""WITH peak AS (SELECT host, MAX(value_f64) AS mx FROM metrics WHERE $range GROUP BY host)
+         |SELECT m.host, COUNT(*) AS cnt, MAX(peak.mx) AS mx
+         |FROM metrics m JOIN peak ON m.host = peak.host
+         |WHERE m.timestamp_ns >= $t0 AND m.timestamp_ns < ${t0 + hours * hourNs}
+         |  AND m.metric_name IN (SELECT metric_name FROM metrics WHERE $range)
+         |GROUP BY m.host""".stripMargin
+    }
+    for (hours <- Seq(1, 2, 3)) {
+      val served = eng.serve(text(hours))
+      assert(served.paths.size == hours, s"premise: $hours of 3 chunks: ${served.paths}")
+      val leaves = served.df.queryExecution.analyzed.collectWithSubqueries {
+        case l: LeafNode if !l.isInstanceOf[CTERelationRef] => l
+      }
+      assert(leaves.size == 3 && leaves.forall {
+        case m: graft.plans.MetricsScan => m.chunks.map(_.path) == served.paths
+        case _ => false
+      }, s"every metrics read must be a leaf over ${served.paths}: $leaves")
+    }
+  }
+
+  /** Batch 1 has {host} in hour 0, batch 2 has {zone} in hour 1. */
+  private def driftEngine(): (QueryEngine, ChunkWriter) = {
+    val cat = new ChunkCatalog(ShmDirs.tempDir("graft_union_"), cacheTtlMs = 0L)
+    val writer = new ChunkWriter(cat)
+    writer.write(Converters.pointsToDf(spark, Seq(
+      MetricPoint(t0, "cpu", 1.0, Map("host" -> "a")))))
+    writer.write(Converters.pointsToDf(spark, Seq(
+      MetricPoint(t0 + hourNs, "cpu", 2.0, Map("zone" -> "z1")))))
+    (new QueryEngine(spark, cat), writer)
+  }
+
+  test("union schema: a label only non-selected chunks carry reads as NULL") {
+    val (eng, _) = driftEngine()
+    val served = eng.serve(s"SELECT host, zone, value_f64 FROM metrics " +
+      s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}")
+    assert(served.paths.size == 1, s"premise: only the host chunk is selected: ${served.paths}")
+    val rows = served.df.collect()
+    assert(rows.length == 1 && rows(0).getString(0) == "a" && rows(0).isNullAt(1) &&
+      rows(0).getDouble(2) == 1.0, rows.toSeq.toString)
+  }
+
+  test("a new label reaches a cached SELECT * text after an ingest adds it") {
+    val (eng, writer) = driftEngine()
+    val q = s"SELECT * FROM metrics WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 3 * hourNs}"
+    val before = eng.serve(q).df
+    assert(before.columns.contains("zone") && !before.columns.contains("pod"))
+    assert(eng.isTimeFixed(q), "premise: the text is cached and reused")
+    writer.write(Converters.pointsToDf(spark, Seq(
+      MetricPoint(t0 + 2 * hourNs, "cpu", 3.0, Map("pod" -> "p1")))))
+    val after = eng.serve(q)
+    assert(after.mode == "computed" && after.paths.size == 3)
+    val pods = after.df.select("pod").collect().map(r => Option(r.getString(0))).toSet
+    assert(pods == Set(None, Some("p1")), pods.toString)
+  }
+
+  test("a label ingested outside a cached text's window changes its columns, " +
+    "not a cache hit of the old ones") {
+    val (eng, writer) = driftEngine()
+    val q = s"SELECT * FROM metrics WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}"
+    eng.serve(q)
+    assert(eng.serve(q).mode == "l1", "premise: the repeat is a cache hit")
+    writer.write(Converters.pointsToDf(spark, Seq(
+      MetricPoint(t0 + 2 * hourNs, "cpu", 3.0, Map("pod" -> "p1")))))
+    val after = eng.serve(q)
+    assert(after.paths.size == 1, s"premise: the window's chunk set is unchanged: ${after.paths}")
+    assert(after.mode == "computed" && after.df.columns.contains("pod"), after.df.columns.toSeq)
+    assert(after.df.select("pod").collect().forall(_.isNullAt(0)))
+  }
+
+  test("filters and column pruning reach the Parquet scan under the leaf, " +
+    "one-task and partitioned alike") {
+    val (_, cat) = freshEngine()
+    val unionWidth = spark.read.parquet(cat.allChunks.map(_.path): _*).schema.size
+    val q = s"""SELECT metric_name, COUNT(*) AS cnt FROM metrics
+               |WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}
+               |AND host = 'server1' GROUP BY metric_name ORDER BY metric_name""".stripMargin
+    for (cutOff <- Seq(QueryEngine.OneTaskMaxBytes, 0L)) {
+      val eng = new QueryEngine(spark, cat)
+      eng.oneTaskMaxBytes = cutOff
+      val df = eng.sql(q)
+      assert(df.collect().map(_.toSeq).toSeq == SparkTestBase.referenceRows(cat, q))
+      val scans = allScans(df.queryExecution.executedPlan)
+      assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+      val scan = scans.head
+      assert(scan.dataFilters.exists(_.references.exists(_.name == "host")) &&
+        scan.metadata("PushedFilters").contains("host"), scan.metadata.toString)
+      assert(scan.requiredSchema.size < unionWidth,
+        s"ReadSchema ${scan.requiredSchema.simpleString} must be narrower than $unionWidth columns")
+    }
   }
 }

@@ -1,58 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sharding.{HotShardConfig, RollingAverage, ShardAction, ShardMonitor}
 import graft.catalog.{ChunkCatalog, ChunkMeta}
 import graft.compact.Compactor
 import graft.engine.QueryEngine
 import graft.util.ShmDirs
 
-/** Operational control surfaces ported from the reference: hot-shard detection
-  * (src/sharding/monitor.rs), compaction backpressure (src/compactor/mod.rs:
-  * 203-221), query concurrency + timeout (src/query/mod.rs:50-60).
+/** Operational control surfaces ported from the reference: compaction
+  * backpressure (src/compactor/mod.rs:203-221), query concurrency + timeout
+  * (src/query/mod.rs:50-60).
   */
 class OpsControlSpec extends AnyFunSuite {
-
-  test("rolling average: eviction, avg, rate") {
-    val r = new RollingAverage(windowMs = 1000L)
-    r.addSample(10.0, nowMs = 0L)
-    r.addSample(20.0, nowMs = 500L)
-    assert(r.avg == 15.0)
-    r.addSample(30.0, nowMs = 1600L) // evicts both older samples
-    assert(r.avg == 30.0)
-    // rate: 3 samples over 1 second span
-    val q = new RollingAverage(windowMs = 60000L)
-    q.addSample(1.0, 0L); q.addSample(1.0, 500L); q.addSample(1.0, 1000L)
-    assert(q.ratePerSecond == 3.0)
-  }
-
-  test("hot shard: split only after sustained hotness over the detection window") {
-    val mon = new ShardMonitor(HotShardConfig(
-      detectionWindowMs = 60000L, writeQpsThreshold = 10.0))
-    // 100 writes in 1 s → 100 QPS >> 10 → hot, but not yet sustained
-    (0 until 100).foreach(i => mon.recordWrite("s1", 100L, 1.0, nowMs = i * 10L))
-    assert(mon.evaluateShards(nowMs = 1000L).isEmpty) // just became hot
-    // keep it hot past the window → Split recommended
-    (0 until 100).foreach(i => mon.recordWrite("s1", 100L, 1.0, nowMs = 61000L + i * 10L))
-    assert(mon.evaluateShards(nowMs = 62000L) == Seq(ShardAction.Split("s1")))
-  }
-
-  test("hot shard: each threshold axis triggers; cooling resets the clock") {
-    val cfg = HotShardConfig(detectionWindowMs = 1000L)
-    val mon = new ShardMonitor(cfg)
-    // CPU axis
-    mon.recordCpu("c", 0.9, nowMs = 0L)
-    assert(mon.evaluateShards(0L).isEmpty) // hot, not sustained
-    mon.recordCpu("c", 0.9, nowMs = 1500L)
-    assert(mon.evaluateShards(1500L) == Seq(ShardAction.Split("c")))
-    // latency axis
-    mon.recordWrite("l", 1L, latencyMs = 500.0, nowMs = 0L)
-    // cooling: samples age out → hot_since cleared, then re-hot restarts the clock
-    mon.recordCpu("c", 0.1, nowMs = 5000L) // old hot samples evicted
-    assert(!mon.evaluateShards(5000L).contains(ShardAction.Split("c")))
-    mon.recordCpu("c", 0.9, nowMs = 6000L)
-    assert(!mon.evaluateShards(6000L).contains(ShardAction.Split("c"))) // clock restarted
-  }
 
   test("compaction backpressure: 0 / 50 / 100 ms bands at 3x and 6x the L0 threshold") {
     val cat = new ChunkCatalog(ShmDirs.tempDir("graft_bp_"), cacheTtlMs = 0L)

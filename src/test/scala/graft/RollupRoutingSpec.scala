@@ -52,10 +52,10 @@ class RollupRoutingSpec extends AnyFunSuite {
     val rawDf = rawServed.df
     val raw = rawDf.collect().map(_.toSeq).toSeq
     assert(!routed(rawServed) && raw.size == 8) // 2 buckets × 2 metrics × 2 hosts
-    // premise: this chunk set is small, so the engine bound its one-task
-    // relation — routing below must see through the Repartition(1) wrapper
+    // premise: this chunk set is small, so the engine's leaf reads it as
+    // one task — routing below must route that leaf too
     assert(rawDf.queryExecution.analyzed.collectFirst {
-      case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
+      case m: graft.plans.MetricsScan if m.oneTask => ()
     }.isDefined)
     Downsampler.materializeRollup(spark, cat, resolutionSeconds = 3600L,
       labelCols = Seq("host"))

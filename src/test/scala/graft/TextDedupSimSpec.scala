@@ -22,6 +22,12 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(df.orderBy("doc_id").collect().map(_.getInt(1)).toSeq == Seq(3, 1, 0, 0))
   }
 
+  test("tokens split on RE2 whitespace only: a vertical tab stays inside a word") {
+    val df = spark.sql("SELECT 'a' || chr(11) || 'b c' AS text")
+      .select(TextFunctions.tokens(col("text")).as("t"))
+    assert(df.collect()(0).getSeq[String](0) == Seq("a\u000bb", "c"))
+  }
+
   test("character-class ratios") {
     val df = docs((1L, "ab12!?"))
       .select(

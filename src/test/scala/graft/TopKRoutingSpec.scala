@@ -118,7 +118,7 @@ class TopKRoutingSpec extends AnyFunSuite {
     val cat = freshCatalog()
     def coalesced(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.analyzed.collectFirst {
-        case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false, _) => ()
+        case m: graft.plans.MetricsScan if m.oneTask => ()
       }.isDefined
     val small = new QueryEngine(spark, cat)
     val smallServed = small.serve(naiveSql)
