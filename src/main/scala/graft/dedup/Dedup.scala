@@ -60,37 +60,6 @@ object Dedup {
       .drop("__fp", "__rn")
   }
 
-  /** Persist the corpus-side MinHash artifacts (id, shingles, signature) that
-    * [[incrementalNearDup]] otherwise recomputes per call — the "dedup index"
-    * a daily pipeline maintains next to the corpus. Append new survivors after
-    * each ingest (`mode=append`); band keys are cheap to derive from the
-    * signature, so only (id, sh, sig) is stored.
-    */
-  def writeNearDupIndex(corpus: DataFrame, indexPath: String,
-                        textCol: String = "text", idCol: String = "doc_id",
-                        k: Int = 3, numHashes: Int = 64,
-                        mode: String = "overwrite"): Unit =
-    corpus.select(col(idCol), col(textCol))
-      .withColumn("__sh", shingles(col(textCol), k))
-      .withColumn("__sig", minhashSignature(col("__sh"), numHashes))
-      .select(col(idCol), col("__sh"), col("__sig"))
-      .write.mode(mode).parquet(indexPath)
-
-  /** [[incrementalNearDup]] against a persisted index written by
-    * [[writeNearDupIndex]] — the corpus text is never touched.
-    */
-  def incrementalNearDupAgainstIndex(newBatch: DataFrame, indexPath: String,
-                                     textCol: String = "text", idCol: String = "doc_id",
-                                     k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                                     threshold: Double = 0.7,
-                                     maxBucket: Int = 1000): DataFrame = {
-    val spark = newBatch.sparkSession
-    val c = spark.read.parquet(indexPath)
-    incrementalNearDupPrepped(
-      prepMinHash(newBatch, textCol, idCol, k, numHashes), c,
-      idCol, numHashes, bands, threshold, maxBucket)
-  }
-
   /** [[incrementalExactDedup]] with a Bloom prefilter — IDENTICAL output,
     * cheaper probe. The corpus's distinct fingerprints are folded into a
     * Spark-sketch BloomFilter over `xxhash64(fp)`; batch rows the filter
@@ -153,67 +122,6 @@ object Dedup {
       .filter(col("__rn") === 1)
       .drop("__fp", "__rn")
   }
-
-  private def prepMinHash(df: DataFrame, textCol: String, idCol: String,
-                          k: Int, numHashes: Int): DataFrame =
-    df.select(col(idCol), col(textCol))
-      .withColumn("__sh", shingles(col(textCol), k))
-      .withColumn("__sig", minhashSignature(col("__sh"), numHashes))
-      // r13 (guide §5): the raw text column is dead after the shingle pass —
-      // keeping it doubled the checkpoint block size every downstream stage
-      // re-reads (localCheckpoint blocks are whole rows, not pruned columns)
-      .select(col(idCol), col("__sh"), col("__sig"))
-      .cutLineage(true)
-
-  /** Shared core of the incremental near-dup paths: both sides already carry
-    * (idCol, __sh, __sig).
-    */
-  private def incrementalNearDupPrepped(b: DataFrame, c: DataFrame, idCol: String,
-                                        numHashes: Int, bands: Int,
-                                        threshold: Double, maxBucket: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val bBuckets = lshBuckets(b, idCol, "__sig", bands, rowsPerBand)
-    val cBuckets = lshBuckets(c, idCol, "__sig", bands, rowsPerBand)
-    val oversized = cBuckets.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > maxBucket)
-      .select("band", "band_hash")
-    val candidates = bBuckets
-      .join(broadcast(oversized), Seq("band", "band_hash"), "left_anti")
-      .select(col("band"), col("band_hash"), col(idCol))
-      .join(cBuckets.select(col("band"), col("band_hash"), col(idCol).as("corpus_match_id")),
-        Seq("band", "band_hash"))
-      .select(col(idCol), col("corpus_match_id")).distinct()
-    val w = Window.partitionBy(idCol)
-      .orderBy(col("jaccard").desc, col("corpus_match_id"))
-    candidates
-      .join(b.select(col(idCol), col("__sh").as("__sh_b")), idCol :: Nil)
-      .join(c.select(col(idCol).as("corpus_match_id"), col("__sh").as("__sh_c")),
-        "corpus_match_id" :: Nil)
-      .withColumn("jaccard", round(jaccard(col("__sh_b"), col("__sh_c")), 6))
-      .filter(col("jaccard") >= threshold)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col("corpus_match_id"), col("jaccard"))
-  }
-
-  /** INCREMENTAL near-dup: MinHash-LSH candidates of a new batch against the
-    * corpus (batch×corpus only — batch-internal pairs go through
-    * [[minhashNearDupPairs]] on the batch alone). Returns batch rows having at
-    * least one corpus near-duplicate at `threshold`, as
-    * (idCol, corpus_match_id, jaccard) keeping the best-matching corpus doc.
-    *
-    * Scale shape: the corpus contributes band keys only (in production,
-    * persisted from previous runs — recomputed here); the join is
-    * collision-proportional, and the exact-verify join touches candidates only.
-    */
-  def incrementalNearDup(newBatch: DataFrame, corpus: DataFrame,
-                         textCol: String = "text", idCol: String = "doc_id",
-                         k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                         threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
-    incrementalNearDupPrepped(
-      prepMinHash(newBatch, textCol, idCol, k, numHashes),
-      prepMinHash(corpus, textCol, idCol, k, numHashes),
-      idCol, numHashes, bands, threshold, maxBucket)
 
   // ---- shingling + MinHash -------------------------------------------------
 

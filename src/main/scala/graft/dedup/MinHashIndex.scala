@@ -13,13 +13,11 @@ import org.apache.spark.sql.types._
   * (The reference's dedup surface is one-shot only; incremental probing is a
   * flagged extension, like `IvfIndex` is for ANN.)
   *
-  * Relation to [[Dedup.writeNearDupIndex]]: that is the flat artifact cache —
-  * (id, shingles, sig) stored verbatim, every probe re-derives band keys and
-  * scans the WHOLE index. Right when the corpus is small or probes are rare.
-  * This index is the 100 TB successor: band keys are materialized into a
-  * partition-pruned layout so probe I/O is proportional to the batch, and
-  * shingle arrays (≈ text-sized) are NOT stored — verification re-reads only
-  * candidate docs from the corpus table.
+  * This is the system's one incremental near-dup path (the
+  * `q_doc_minhash_index_probe` query, `StreamingDedup` and the soak run it):
+  * band keys are materialized into a partition-pruned layout so probe I/O is
+  * proportional to the batch, and shingle arrays (≈ text-sized) are NOT
+  * stored — verification re-reads only candidate docs from the corpus table.
   *
   * Layout under `indexRoot`:
   *  - `params/`  one row: (k, num_hashes, bands, n_parts, max_bucket) — probes
@@ -247,10 +245,9 @@ object MinHashIndex {
             textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val p = readParams(spark, indexRoot)
 
-    // LAZY checkpoints (r12, the unigramTrainCore job-fusion pattern): the parts
-    // collect below materializes the batch's shingles+signatures AND its band
-    // buckets in ONE job instead of two eager materialization jobs + the
-    // collect.
+    // LAZY checkpoints (r12 job fusion): the parts collect below
+    // materializes the batch's shingles+signatures AND its band buckets in
+    // ONE job instead of two eager materialization jobs + the collect.
     val withSig = graft.util.Parallelism.spreadNarrowScan(
         batch.select(col(idCol).as("batch_id"), col(textCol).as("__text")))
       .withColumn("__sh", Dedup.shingles(col("__text"), p.k))

@@ -1,7 +1,8 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -182,27 +183,76 @@ object TextNativeExpressions {
       copy(child = c)
   }
 
-  /** TextFunctions.bpeEncode's per-document pass: the non-empty words of a
-    * `tokens(text)` array, each split into code points and merged with
-    * TextFunctions.applyMerges under the learned `merges`, give one
-    * `(n_tokens, bpe_text)` row — or none when the document has no
-    * non-empty word (a NULL or whitespace-only text), as the oracle's join
-    * against the word vocabulary yields none.
+  /** `lower` one code point at a time, by `Character.toLowerCase(int)` —
+    * the simple case mapping DuckDB's `lower` applies. Spark's `lower`
+    * applies the full, context-sensitive mapping: a word-final Σ becomes ς
+    * (DuckDB: σ) and İ becomes two chars, i + U+0307 (DuckDB: i). All-ASCII
+    * text takes UTF8String's byte-wise path.
     */
-  case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression with Generator with CodegenFallback {
+  case class LowerCodePoints(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = StringType
+    def compute(u: UTF8String): UTF8String =
+      if (u.isFullAscii) u.toLowerCaseAscii
+      else {
+        val s = u.toString
+        val b = new java.lang.StringBuilder(s.length)
+        s.codePoints().forEach(cp => b.appendCodePoint(Character.toLowerCase(cp)))
+        UTF8String.fromString(b.toString)
+      }
+    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c => {
+        val ref = ctx.addReferenceObj("lowerCodePoints", this, getClass.getName)
+        s"${ev.value} = $ref.compute($c);"
+      })
+    override protected def withNewChildInternal(c: Expression): LowerCodePoints =
+      copy(child = c)
+  }
+
+  /** A tokenizer's per-document pass over a `tokens(text)` array: its
+    * non-empty words, each split into `pieces`, give one
+    * `(n_tokens, <textField>)` row — or none when the document has no
+    * non-empty word (a NULL or whitespace-only text), as the oracles' joins
+    * against the word vocabulary yield none.
+    */
+  sealed trait WordPieces extends UnaryExpression with Generator with CodegenFallback {
+    protected def textField: String
+    protected def pieces(word: String): Seq[String]
     override def elementSchema: StructType = new StructType()
       .add("n_tokens", LongType, nullable = false)
-      .add("bpe_text", StringType, nullable = false)
+      .add(textField, StringType, nullable = false)
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val words = child.eval(input).asInstanceOf[ArrayData]
       val toks = if (words == null) Array.empty[String]
-        else words.toArray[UTF8String](StringType).filter(_.numBytes > 0).flatMap(w =>
-          graft.text.TextFunctions.applyMerges(graft.text.TextFunctions.bpeSymbols(w.toString), merges))
+        else words.toArray[UTF8String](StringType).filter(_.numBytes > 0)
+          .flatMap(w => pieces(w.toString))
       if (toks.isEmpty) Nil
       else Seq(InternalRow(toks.length.toLong, UTF8String.fromString(toks.mkString(" "))))
     }
+  }
+
+  /** TextFunctions.bpeEncode's pass: a word's code points merged with
+    * TextFunctions.applyMerges under the learned `merges`.
+    */
+  case class BpeEncode(child: Expression, merges: Seq[(String, String)]) extends WordPieces {
+    override protected def textField: String = "bpe_text"
+    override protected def pieces(word: String): Seq[String] =
+      graft.text.TextFunctions.applyMerges(graft.text.TextFunctions.bpeSymbols(word), merges).toSeq
     override protected def withNewChildInternal(c: Expression): BpeEncode =
+      copy(child = c)
+  }
+
+  /** TextFunctions.unigramEncode's pass: a word's TextFunctions.viterbi
+    * segmentation under the broadcast piece `scores`; a word longer than
+    * `maxWordLen` code points never trained and is one piece.
+    */
+  case class UnigramEncode(child: Expression, scores: Broadcast[Map[String, Long]],
+                           maxPieceLen: Int, maxWordLen: Int) extends WordPieces {
+    override protected def textField: String = "uni_text"
+    override protected def pieces(word: String): Seq[String] =
+      if (word.codePointCount(0, word.length) > maxWordLen) Seq(word)
+      else graft.text.TextFunctions.viterbi(word, scores.value, maxPieceLen)
+    override protected def withNewChildInternal(c: Expression): UnigramEncode =
       copy(child = c)
   }
 
@@ -210,6 +260,10 @@ object TextNativeExpressions {
   def token_count(text: Column): Column = GraftBridge.column(TokenCount(ex(text)))
   def gopher_keep(text: Column): Column = GraftBridge.column(GopherKeep(ex(text)))
   def lang_id(text: Column): Column = GraftBridge.column(LangIdNative(ex(text)))
+  def lower_code_points(text: Column): Column = GraftBridge.column(LowerCodePoints(ex(text)))
   def bpe_encode(words: Column, merges: Seq[(String, String)]): Column =
     GraftBridge.column(BpeEncode(ex(words), merges))
+  def unigram_encode(words: Column, scores: Broadcast[Map[String, Long]],
+                     maxPieceLen: Int, maxWordLen: Int): Column =
+    GraftBridge.column(UnigramEncode(ex(words), scores, maxPieceLen, maxWordLen))
 }

@@ -19,6 +19,25 @@ final case class MetricsScan(output: Seq[AttributeReference], chunks: Seq[ChunkM
 
   override def newInstance(): MetricsScan = copy(output = output.map(_.newInstance()))
 
+  /** The chunks' Parquet relation, read with this leaf's schema. Built at
+    * most once per leaf and shared with its clones (each planning optimizes
+    * a clone of the analyzed plan), so every planning of a served frame (the
+    * localizing collect, a router's replan) reuses one file index instead of
+    * listing the chunks again.
+    */
+  @transient private var parquet = new MetricsScan.Once(
+    SparkSession.active.read.schema(schema).parquet(chunks.map(_.path): _*)
+      .queryExecution.analyzed.asInstanceOf[LogicalRelation])
+
+  /** [[parquet]] carrying this leaf's attributes. */
+  def relation: LogicalRelation = parquet.value.copy(output = output)
+
+  override def clone(): LogicalPlan = {
+    val c = super.clone().asInstanceOf[MetricsScan]
+    c.parquet = parquet
+    c
+  }
+
   /** The chunks' catalog sizes, the bytes a Parquet relation over them reports. */
   override def computeStats(): Statistics =
     Statistics(sizeInBytes = BigInt(chunks.iterator.map(_.sizeBytes).sum))
@@ -29,6 +48,8 @@ final case class MetricsScan(output: Seq[AttributeReference], chunks: Seq[ChunkM
 }
 
 object MetricsScan {
+
+  private final class Once[T](build: => T) { lazy val value: T = build }
 
   /** Plans a [[MetricsScan]] and the projections and filters above it as the
     * same `Project`/`Filter` over a Parquet relation of its chunks, read with
@@ -43,10 +64,8 @@ object MetricsScan {
       case PhysicalOperation(projects, filters, m: MetricsScan) =>
         if (m.chunks.isEmpty) planLater(LocalRelation(projects.map(_.toAttribute))) :: Nil
         else {
-          val read = SparkSession.active.read.schema(m.schema).parquet(m.chunks.map(_.path): _*)
-            .queryExecution.analyzed.asInstanceOf[LogicalRelation].copy(output = m.output)
-          val scan =
-            Project(projects, filters.reduceOption(And).fold[LogicalPlan](read)(Filter(_, read)))
+          val scan = Project(projects,
+            filters.reduceOption(And).fold[LogicalPlan](m.relation)(Filter(_, m.relation)))
           planLater(if (m.oneTask) Repartition(1, shuffle = false, scan) else scan) :: Nil
         }
       case _ => Nil

@@ -1,8 +1,8 @@
 package graft.text
 
-import graft.util.Checkpoints.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines, built entirely
   * from codegen'd `org.apache.spark.sql.functions` (no UDFs in the hot path — every
@@ -175,9 +175,12 @@ object TextFunctions {
     * vocabulary operators (identical to DuckDB's
     * `regexp_split_to_array(lower(trim(text)), '\s+')` for oracle parity).
     * The separator is RE2's `\s`, `[\t\n\f\r ]`: Java's `\s` also matches
-    * U+000B, which DuckDB keeps inside a word.
+    * U+000B, which DuckDB keeps inside a word. Lowercasing maps one code
+    * point at a time, as DuckDB's `lower` does (see
+    * `TextNativeExpressions.LowerCodePoints`).
     */
-  def tokens(text: Column): Column = split(lower(trim(text)), "[\\t\\n\\f\\r ]+")
+  def tokens(text: Column): Column =
+    split(graft.functions.TextNativeExpressions.lower_code_points(trim(text)), "[\\t\\n\\f\\r ]+")
 
   /** Intra-document repetition stats: total tokens, distinct tokens, and the
     * repeated-token ratio 1 − distinct/total — the standard C4/Gopher-style
@@ -269,10 +272,7 @@ object TextFunctions {
   private def bpeTrainCore(docs: DataFrame, numMerges: Int, textCol: String)
       : Seq[(Int, String, String, Long)] = {
     require(numMerges >= 1 && numMerges <= 64, s"numMerges $numMerges out of [1,64]")
-    val table = docs.select(explode(tokens(col(textCol))).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .collect().map(r => (bpeSymbols(r.getString(0)), r.getLong(1))).toSeq
+    val table = wordTable(docs, textCol).map { case (w, freq) => (bpeSymbols(w), freq) }
     @annotation.tailrec
     def learn(words: Seq[(Array[String], Long)], merges: Vector[(Int, String, String, Long)])
         : Vector[(Int, String, String, Long)] =
@@ -284,7 +284,7 @@ object TextFunctions {
         if (counts.isEmpty) merges
         else {
           val ((l, r), cnt) = counts.minBy { case ((l, r), cnt) =>
-            (-cnt, org.apache.spark.unsafe.types.UTF8String.fromString(s"$l $r"))
+            (-cnt, UTF8String.fromString(s"$l $r"))
           }
           learn(words.map { case (syms, freq) => (applyMerges(syms, Seq(l -> r)), freq) },
             merges :+ ((merges.length + 1, l, r, cnt)))
@@ -571,223 +571,146 @@ object TextFunctions {
     * seed a piece vocabulary from substring frequencies, then iterate
     * hard-EM rounds — score every piece by its add-one-smoothed unigram
     * log-probability, Viterbi-segment every DISTINCT word under those
-    * scores, re-estimate piece counts from the segmentations. Returns the
-    * top-`k` pieces with their final Viterbi counts (cnt DESC, piece ASC).
+    * scores ([[viterbi]]), re-estimate piece counts from the segmentations.
+    * Returns the top-`k` pieces with their final Viterbi counts (cnt DESC,
+    * then the piece's UTF-8 bytes ASC — the order of Spark's `orderBy` and
+    * of DuckDB).
     *
     * Deliberate divergences from full SentencePiece, documented because the
     * gate depends on them: (a) HARD EM (Viterbi counts), not soft EM over
     * the lattice — the deterministic variant; (b) no per-round vocabulary
     * pruning — the seed vocab stays scoreable throughout (add-one smoothing)
     * and the final top-k IS the vocabulary cut; (c) words longer than
-    * `maxWordLen` are excluded from training (the max_sentencepiece_length
-    * analog, and what bounds the oracle's unrolled DP).
+    * `maxWordLen` code points are excluded from training (the
+    * max_sentencepiece_length analog, and what bounds the oracle's unrolled
+    * DP).
     *
     * Determinism: counts are exact integer sums at every step; the only
     * floats are the per-piece scores lp = floor(log10((c+1)/(C+V))·1e6+0.5)
-    * as BIGINT — the q_doc_lm_logprob micro-quantization recipe — and every
-    * Viterbi argmax breaks ties deterministically on those exact integers
-    * (total score DESC, then longer final piece).
+    * — the q_doc_lm_logprob micro-quantization recipe, with `StrictMath` as
+    * Spark's `log10` uses — and every Viterbi argmax breaks ties on those
+    * exact integers (total score DESC, then longer final piece).
     *
-    * Scale shape: one pass builds the distinct-word table; each round is a
-    * candidate explode (≤ maxWordLen·maxPieceLen rows per DISTINCT word), a
-    * BROADCAST join of the (piece → lp) score table — bounded by the
-    * distinct substrings of length ≤ maxPieceLen, i.e. O(alphabet^L),
-    * broadcastable at any corpus size — and a per-word codegen'd `aggregate`
-    * fold for the DP (no UDF, no window over the corpus, no cross join).
-    * Document count only enters through the initial word count.
+    * Scale shape: the [[bpeTrain]] shape — one Spark job collects the
+    * distinct-word table, and seeding and every EM round run on the driver
+    * over it, so the job count does not grow with `iters`. The driver holds
+    * one row per distinct word plus the score table (the distinct substrings
+    * of ≤ `maxPieceLen` code points); the collect is bounded by
+    * `spark.driver.maxResultSize` and fails loudly past it.
     */
   def unigramTrain(docs: DataFrame, iters: Int = 2, maxPieceLen: Int = 4,
                    maxWordLen: Int = 16, k: Int = 40,
                    textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
-    val (counts, segs) = unigramTrainCore(docs, iters, maxPieceLen, maxWordLen, textCol)
-    // k rows — materialize so every checkpoint can be released eagerly
-    val rows = counts.orderBy(col("cnt").desc, col("piece").asc).limit(k)
-      .select(col("piece"), col("cnt").cast("long").as("cnt")).collect()
-    Seq(counts, segs).foreach(_.unpersist(blocking = false))
     import spark.implicits._
-    rows.map(r => (r.getString(0), r.getLong(1))).toSeq.toDF("piece", "cnt")
+    val (words, lp) = unigramScores(docs, iters, maxPieceLen, maxWordLen, textCol)
+    pieceCounts(words, lp, maxPieceLen).toSeq
+      .sortBy { case (piece, cnt) => (-cnt, UTF8String.fromString(piece)) }
+      .take(k).toDF("piece", "cnt")
   }
 
-  /** The training loop itself: returns (final counts, final per-word
-    * segmentation (word, freq, pieces)) — the segmentation IS the encoding of
-    * every trained corpus word under the learned model, which is what
-    * [[unigramEncode]] serves per document.
-    * Both returned frames are localCheckpoint'd; callers unpersist.
+  /** The training loop itself: the trained word table and the piece scores
+    * of the final EM round — the model [[unigramEncode]] segments under, and
+    * whose Viterbi counts [[unigramTrain]] reports. Round 1 scores the seed
+    * counts (every substring occurrence, weighted by word freq); each further
+    * round scores the previous round's Viterbi counts.
     */
-  private def unigramTrainCore(docs: DataFrame, iters: Int, maxPieceLen: Int,
-                               maxWordLen: Int, textCol: String,
-                               needFinalCounts: Boolean = true)
-      : (DataFrame, DataFrame) = {
+  private def unigramScores(docs: DataFrame, iters: Int, maxPieceLen: Int,
+                            maxWordLen: Int, textCol: String)
+      : (Seq[(String, Long)], Map[String, Long]) = {
     require(iters >= 1 && iters <= 8, s"iters $iters out of [1,8]")
     require(maxPieceLen >= 1 && maxWordLen >= maxPieceLen,
       s"need 1 <= maxPieceLen <= maxWordLen: $maxPieceLen/$maxWordLen")
-    // r12 job-fusion (guide §1.2): `words` is a
-    // LAZY checkpoint materialized by `cand`'s job; scalar totals
-    // (vocabSize, per-round cTotal) ride the materializing jobs as
-    // Observations instead of separate agg actions; each round's Viterbi
-    // segmentation is a lazy checkpoint materialized by the next counts job.
-    // Per-round: ONE job instead of three. Arithmetic untouched.
-    val words = docs.filter(length(trim(col(textCol))) > 0)
-      .select(explode(tokens(col(textCol))).as("word"))
-      .filter(col("word") =!= "" && length(col("word")) <= maxWordLen)
+    val words = wordTable(docs, textCol).filter { case (w, _) =>
+      w.codePointCount(0, w.length) <= maxWordLen }
+    val seed = tally(words.iterator.flatMap { case (w, freq) =>
+      val cps = w.codePoints().toArray
+      for (j <- cps.indices.iterator; l <- 1 to math.min(maxPieceLen, cps.length - j))
+        yield (new String(cps, j, l), freq)
+    })
+    def scores(counts: Map[String, Long]): Map[String, Long] = {
+      val denom = (counts.values.sum + seed.size).toDouble
+      seed.map { case (piece, _) => piece ->
+        math.floor(StrictMath.log10((counts.getOrElse(piece, 0L) + 1).toDouble / denom)
+          * 1e6 + 0.5).toLong }
+    }
+    val lp = Iterator.iterate(scores(seed))(lp => scores(pieceCounts(words, lp, maxPieceLen)))
+      .drop(iters - 1).next()
+    (words, lp)
+  }
+
+  /** The corpus's distinct non-empty `tokens` with their counts — the word
+    * table both tokenizer trainers learn from, in one Spark job.
+    */
+  private def wordTable(docs: DataFrame, textCol: String): Seq[(String, Long)] =
+    docs.select(explode(tokens(col(textCol))).as("word"))
+      .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .cutLineage(false)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
-    // every substring of length 1..maxPieceLen tagged with its END position —
-    // reused by the seed count and every EM round
-    val cand = words
-      .select(col("word"), col("freq"),
-        explode(sequence(lit(1), length(col("word")))).as("j"))
-      .select(col("word"), col("freq"), col("j"),
-        explode(sequence(lit(1), least(lit(maxPieceLen),
-          length(col("word")) - col("j") + 1))).as("l"))
-      .select(col("word"), col("freq"), col("l"),
-        (col("j") + col("l") - 1).as("e"),
-        col("word").substr(col("j"), col("l")).as("piece"))
-      .cutLineage(true)
+  /** Each piece's Viterbi count: the sum of `freq` over its occurrences in
+    * the words' segmentations under `lp`.
+    */
+  private def pieceCounts(words: Seq[(String, Long)], lp: Map[String, Long],
+                          maxPieceLen: Int): Map[String, Long] =
+    tally(words.iterator.flatMap { case (w, freq) =>
+      viterbi(w, lp, maxPieceLen).iterator.map(_ -> freq) })
 
-    val vocabObs = new org.apache.spark.sql.Observation()
-    val vocab = cand.select("piece").distinct()
-      .observe(vocabObs, count(lit(1)).as("n"))
-      .cutLineage(true)
-    val vocabSize = Option(vocabObs.get.getOrElse("n", null))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (vocabSize == 0L) {
-      // degenerate corpus: every word exceeds maxWordLen (e.g. unsegmented
-      // CJK) — empty model, empty segmentation; encode's UNK fallback then
-      // passes every word through whole instead of the loop NPE-ing on a
-      // NULL sum over the empty counts
-      val emptySegs = words
-        .select(col("word"), col("freq"),
-          array().cast("array<string>").as("pieces"))
-        .cutLineage(true)
-      // release vocab too: the returned counts frame must not be derived from
-      // it, or the caller's unpersist on the derived frame is a no-op and the
-      // empty checkpoint outlives the call (r10 ADVICE)
-      val spark = docs.sparkSession
-      cand.unpersist(blocking = false); words.unpersist(blocking = false)
-      vocab.unpersist(blocking = false)
-      import spark.implicits._
-      return (Seq.empty[(String, Long)].toDF("piece", "cnt"), emptySegs)
-    }
+  private def tally(pieces: Iterator[(String, Long)]): Map[String, Long] = {
+    val acc = scala.collection.mutable.HashMap.empty[String, Long]
+    pieces.foreach { case (piece, n) => acc.update(piece, acc.getOrElse(piece, 0L) + n) }
+    acc.toMap
+  }
 
-    def observedCheckpoint(df: DataFrame): (DataFrame, Long) = {
-      val obs = new org.apache.spark.sql.Observation()
-      val cp = df.observe(obs, sum("cnt").as("t")).cutLineage(true)
-      (cp, Option(obs.get.getOrElse("t", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L))
-    }
-    var (counts, cTotalCur) =
-      observedCheckpoint(cand.groupBy("piece").agg(sum("freq").as("cnt")))
-    var lastSegs: Option[DataFrame] = None
-    var prevSegs: Option[DataFrame] = None
-    var it = 0
-    while (it < iters) {
-      val cTotal = cTotalCur
-      val denom = (cTotal + vocabSize).toDouble
-      val lp = vocab.join(counts, Seq("piece"), "left")
-        .select(col("piece"),
-          floor(log10((coalesce(col("cnt"), lit(0L)) + 1).cast("double")
-            / lit(denom)) * 1e6 + 0.5).cast("long").as("lp"))
-      val withCands = cand
-        .join(broadcast(lp), "piece")
-        .groupBy("word", "freq")
-        .agg(collect_list(struct(col("e"), col("l"), col("lp"))).as("cands"))
-      val n = length(col("word"))
-      // dp[i+1] = best (score, lastPieceLen) for word prefix of length i;
-      // array_max on struct(lp, l) = score DESC then longer piece — matching
-      // the oracle's ORDER BY lp DESC, l DESC. Single-char pieces are always
-      // in vocab, so every position is reachable and array_max never sees an
-      // empty candidate list.
-      val dp = aggregate(
-        sequence(lit(1), n),
-        array(struct(lit(0L).as("lp"), lit(0).as("l"))),
-        (acc, i) => concat(acc, array(array_max(transform(
-          filter(col("cands"), c => c.getField("e") === i),
-          c => struct(
-            (element_at(acc, i - c.getField("l") + 1).getField("lp")
-              + c.getField("lp")).as("lp"),
-            c.getField("l").as("l")))))))
-      // backtrack: n steps suffice (every piece is >= 1 char)
-      val seg = aggregate(
-        sequence(lit(1), n),
-        struct(n.as("pos"), array().cast("array<string>").as("pieces")),
-        (st, _) => {
-          val pos = st.getField("pos")
-          val pl = element_at(col("__dp"), pos + 1).getField("l")
-          when(pos > lit(0),
-            struct((pos - pl).as("pos"),
-              concat(array(col("word").substr(pos - pl + 1, pl)),
-                st.getField("pieces")).as("pieces")))
-            .otherwise(st)
-        })
-      // LAZY checkpoint: the next counts job computes the Viterbi pass,
-      // persists it and aggregates piece counts in one go
-      val segmented = withCands
-        .withColumn("__dp", dp)
-        .withColumn("pieces", seg.getField("pieces"))
-        .select("word", "freq", "pieces")
-        .cutLineage(false)
-      lastSegs = Some(segmented)
-      if (it < iters - 1 || needFinalCounts) {
-        val (next, t) = observedCheckpoint(segmented
-          .select(col("freq"), explode(col("pieces")).as("piece"))
-          .groupBy("piece").agg(sum("freq").as("cnt")))
-        counts.unpersist(blocking = false)
-        counts = next; cTotalCur = t
-      } else {
-        // encode-only caller: materialize the final segmentation directly —
-        // the piece-count aggregate on top would be thrown away
-        segmented.count()
+  /** The segmentation of `word` into pieces of ≤ `maxPieceLen` code points
+    * with the highest total score under `lp`, on a tie the one whose last
+    * piece is longer (the oracle's `ORDER BY lp DESC, l DESC` at every DP
+    * level). A word some prefix of which no scored piece can end (one the
+    * model never saw) is one piece, as an untrained word is in the oracle.
+    */
+  private[graft] def viterbi(word: String, lp: Map[String, Long], maxPieceLen: Int): List[String] = {
+    val cps = word.codePoints().toArray
+    val n = cps.length
+    // best(i), last(i): the top score of the prefix of i code points and its
+    // last piece's length; last(i) == 0 while no piece ends there
+    val best = new Array[Long](n + 1)
+    val last = new Array[Int](n + 1)
+    for (i <- 1 to n; l <- 1 to math.min(maxPieceLen, i) if i == l || last(i - l) > 0)
+      lp.get(new String(cps, i - l, l)).foreach { score =>
+        val total = best(i - l) + score
+        if (last(i) == 0 || total > best(i) || (total == best(i) && l > last(i))) {
+          best(i) = total; last(i) = l
+        }
       }
-      // the previous round's segmentation blocks are only droppable once the
-      // new one is materialized (a lazy checkpoint cannot recompute)
-      prevSegs.foreach(_.unpersist(blocking = false))
-      prevSegs = lastSegs
-      it += 1
-    }
-    Seq(words, cand, vocab).foreach(_.unpersist(blocking = false))
-    (counts, lastSegs.get)
+    if (last(n) == 0) List(word)
+    else Iterator.iterate(n)(i => i - last(i)).takeWhile(_ > 0)
+      .foldLeft(List.empty[String])((pieces, i) => new String(cps, i - last(i), last(i)) :: pieces)
   }
 
   /** Unigram-LM ENCODING: Viterbi-segment every document under the model
     * [[unigramTrain]] learns — train and encode in one call, the
     * [[bpeEncode]] shape. Returns `(idCol, n_tokens, uni_text)` with
-    * `uni_text` the space-joined piece sequence.
+    * `uni_text` the space-joined piece sequence, one row per document
+    * (`idCol` is a key); a document without a non-empty word yields no row.
     *
-    * Words longer than `maxWordLen` never trained, so they carry no
-    * segmentation; they pass through as a SINGLE piece (the UNK-word
-    * fallback, mirrored in the oracle's COALESCE).
+    * Words longer than `maxWordLen` code points never trained, so they pass
+    * through as a SINGLE piece (the UNK-word fallback, mirrored in the
+    * oracle's COALESCE).
     *
-    * Scale shape: segmentation is computed once per DISTINCT word (the
-    * training loop's final Viterbi state), then documents join that map
-    * BROADCAST on the exploded words and re-assemble per doc — one
-    * corpus-sized shuffle keyed on the doc id.
+    * Scale shape: after training's collect, the final round's score table is
+    * broadcast to the native `UnigramEncode` generator, which runs
+    * [[viterbi]] on each document's words map-side — no join, no
+    * per-document shuffle; the only exchange is the final `orderBy`.
     */
   def unigramEncode(docs: DataFrame, iters: Int = 2, maxPieceLen: Int = 4,
                     maxWordLen: Int = 16, textCol: String = "text",
                     idCol: String = "doc_id"): DataFrame = {
-    val (counts, segs) = unigramTrainCore(docs, iters, maxPieceLen, maxWordLen,
-      textCol, needFinalCounts = false)
-    val docWords = graft.util.Parallelism.spreadNarrowScan(docs.filter(length(trim(col(textCol))) > 0))
-      .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "word")))
-      .filter(col("word") =!= "")
-    val out = docWords
-      .join(broadcast(segs.select(col("word"), col("pieces"))), Seq("word"), "left")
-      .withColumn("pieces", coalesce(col("pieces"), array(col("word"))))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("pos"), col("pieces")))).as("ps"))
-      .select(col(idCol),
-        size(flatten(transform(col("ps"), x => x.getField("pieces"))))
-          .cast("long").as("n_tokens"),
-        array_join(flatten(transform(col("ps"), x => x.getField("pieces"))), " ")
-          .as("uni_text"))
+    val (_, lp) = unigramScores(docs, iters, maxPieceLen, maxWordLen, textCol)
+    val scores = docs.sparkSession.sparkContext.broadcast(lp)
+    graft.util.Parallelism.spreadNarrowScan(docs)
+      .select(col(idCol), graft.functions.TextNativeExpressions.unigram_encode(
+        tokens(col(textCol)), scores, maxPieceLen, maxWordLen))
       .orderBy(col(idCol))
-    counts.unpersist(blocking = false)
-    // segs feeds the (lazy) result through the broadcast join — the caller's
-    // collection drives it, so it stays checkpointed
-    out
   }
 
   /** DuckDB oracle for [[unigramEncode]]: the [[unigramTrainOracleSql]] CTE

@@ -705,6 +705,17 @@ class EngineSpec extends AnyFunSuite {
     assert(got == want && got.size == 2, s"$got vs $want")
   }
 
+  test("every planning of a served frame reuses its leaf's one Parquet relation") {
+    val (eng, _) = freshEngine()
+    val served = eng.serve(s"SELECT host, value_f64 FROM metrics " +
+      s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 2 * hourNs}")
+    def relations(df: org.apache.spark.sql.DataFrame) =
+      allScans(df.queryExecution.executedPlan).map(_.relation)
+    val (full, limited) = (relations(served.df), relations(served.df.limit(1)))
+    assert(full.size == 1 && limited.size == 1, s"premise: one scan each: $full, $limited")
+    assert(full.head eq limited.head, "the limited plan listed the chunks again")
+  }
+
   test("a foreign `metrics` temp view on the engine's session leaves engine answers unchanged") {
     val (_, cat) = freshEngine()
     val eng = QueryEngine.interactive(spark, cat)

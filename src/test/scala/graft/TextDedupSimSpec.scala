@@ -28,6 +28,14 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(df.collect()(0).getSeq[String](0) == Seq("a\u000bb", "c"))
   }
 
+  test("tokens lowercase one code point at a time: a final sigma stays σ, İ is one i") {
+    // Spark's lower maps the final Σ of a word to ς and İ to i + U+0307;
+    // DuckDB's lower (the oracles' tokenization) gives σ and one i
+    val df = docs((0L, "ΟΔΟΣ ΣΑ"), (1L, "\u0130"))
+      .select(TextFunctions.tokens(col("text")).as("t"))
+    assert(df.collect().map(_.getSeq[String](0)).toSeq == Seq(Seq("οδοσ", "σα"), Seq("i")))
+  }
+
   test("character-class ratios") {
     val df = docs((1L, "ab12!?"))
       .select(
@@ -153,25 +161,6 @@ class TextDedupSimSpec extends AnyFunSuite {
     val bloom = fps.stat.bloomFilter("__h", 400, 0.01)
     val misses = fps.collect().map(_.getLong(0)).count(h => !bloom.mightContainLong(h))
     assert(misses == 0)
-  }
-
-  test("incrementalNearDup: batch docs matching corpus near-dups, best match kept") {
-    val base = "one two three four five six seven eight nine ten " * 3
-    val corpus = docs((1L, base), (2L, "totally different words entirely here"))
-    val batch = docs(
-      (10L, base + "eleven"), // near-dup of corpus 1
-      (11L, "unrelated fresh content nothing shared with anything"))
-    val out = Dedup.incrementalNearDup(batch, corpus, threshold = 0.5,
-        numHashes = 32, bands = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.toSeq == Seq((10L, 1L)))
-    // persisted-index path: same result without touching corpus text again
-    val idx = ShmDirs.tempDir("neardup_idx_").toString
-    Dedup.writeNearDupIndex(corpus, idx, numHashes = 32)
-    val viaIdx = Dedup.incrementalNearDupAgainstIndex(batch, idx,
-        threshold = 0.5, numHashes = 32, bands = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(viaIdx.toSeq == out.toSeq)
   }
 
   test("shingles: k-word windows and short-doc fallback") {
@@ -1092,6 +1081,12 @@ class TextDedupSimSpec extends AnyFunSuite {
         Seq("ab ba").toDF("text"), iters = 2)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(ties == Seq(("ab", 1L), ("ba", 1L)), s"got $ties")
+    // ... in UTF-8 byte order (Spark's orderBy, DuckDB): U+FF41 ranks before
+    // U+1F600, where String.compareTo's UTF-16 order would put the emoji first
+    val utf8Ties = graft.text.TextFunctions.unigramTrain(
+        Seq("\uFF41 \uD83D\uDE00").toDF("text"), iters = 1)
+      .collect().map(_.getString(0)).toSeq
+    assert(utf8Ties == Seq("\uFF41", "\uD83D\uDE00"), s"got $utf8Ties")
     // maxWordLen cap: over-long words are excluded from training entirely
     val capped = graft.text.TextFunctions.unigramTrain(
         Seq("abcdef xy").toDF("text"), iters = 1, maxWordLen = 4)
@@ -1104,8 +1099,8 @@ class TextDedupSimSpec extends AnyFunSuite {
         iters = 2, maxWordLen = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
     assert(enc == Seq((0L, 5L, "xy xy xy xy z"), (1L, 2L, "abcdef xy")), s"got $enc")
-    // degenerate corpus: EVERY word over the cap -> empty model (no NPE on
-    // the empty-counts sum), encode passes everything through whole
+    // degenerate corpus: EVERY word over the cap -> empty model, encode
+    // passes everything through whole
     val deg = Seq((0L, "abcdefgh stuvwxyz")).toDF("doc_id", "text")
     assert(graft.text.TextFunctions.unigramTrain(deg, iters = 1, maxWordLen = 4)
       .collect().isEmpty)
@@ -1209,6 +1204,32 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(train(0) == train(1), s"bpeTrain jobs for 1 vs 8 merges: $train")
     val encode = Seq(1, 8).map(n => jobs(TextFunctions.bpeEncode(corpus, numMerges = n).collect()))
     assert(encode(0) == encode(1), s"bpeEncode jobs for 1 vs 8 merges: $encode")
+  }
+
+  test("unigramTrain and unigramEncode run no Spark job per EM round") {
+    def jobs(thunk: => Unit): Int = SparkTestBase.jobsAndTasks(thunk)._2
+    val corpus = docs((0L, "abcdefghij abcdefghij"), (1L, "abcdefghij ab cd"), (2L, "efgh ab"))
+    val train = Seq(1, 8).map(n => jobs(TextFunctions.unigramTrain(corpus, iters = n).collect()))
+    assert(train(0) == train(1), s"unigramTrain jobs for 1 vs 8 rounds: $train")
+    val encode = Seq(1, 8).map(n => jobs(TextFunctions.unigramEncode(corpus, iters = n).collect()))
+    assert(encode(0) == encode(1), s"unigramEncode jobs for 1 vs 8 rounds: $encode")
+  }
+
+  test("unigramTrain/unigramEncode measure and slice words by code points") {
+    // five U+1F600 are 10 UTF-16 units: a word of at most 6 code points that
+    // trains and segments into 2 + 3 emoji; a UTF-16 measure would drop it
+    val e = "\uD83D\uDE00"
+    val corpus = docs((0L, s"${e * 5} ${e * 2}a ab"), (1L, s"${e * 5} ${e * 3}"), (2L, s"${e}b ${e * 5}"))
+    val train = TextFunctions.unigramTrain(corpus, iters = 2, maxWordLen = 6)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(train == Seq((e * 3, 4L), (e * 2, 3L), ("ab", 1L), (s"${e}b", 1L), (s"${e * 2}a", 1L)),
+      s"got $train")
+    val enc = TextFunctions.unigramEncode(corpus, iters = 2, maxWordLen = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    assert(enc == Seq(
+      (0L, 4L, s"${e * 2} ${e * 3} ${e * 2}a ab"),
+      (1L, 3L, s"${e * 2} ${e * 3} ${e * 3}"),
+      (2L, 3L, s"${e}b ${e * 2} ${e * 3}")), s"got $enc")
   }
 
   test("kmeansTrain: two obvious directions separate; assignments are hand-checkable") {
