@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session the contract mains (Verify, Bench, BenchX10, JobProfile,
-  * QueryTimer) run the `SparkEntry` queries in. */
+  * QueryTimer) run the `SparkEntry` queries in; ScaleGen and OneTaskProbe
+  * build theirs here too. Soak keeps its own (FAIR scheduling and the
+  * streaming-progress history it reads). */
 object Harness {
 
   /** `cpus` sets the shuffle width; `localDir` moves shuffle and spill files

@@ -97,12 +97,8 @@ object OneTaskProbe {
     val reps = args.lift(1).map(_.toInt).getOrElse(10)
     val dir = java.nio.file.Files.createTempDirectory("graft_onetask_")
     val cpus = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", dir.resolve("spark-local").toString)
-      .getOrCreate()
+    val spark = Harness.session(s"local[$cpus]", cpus.toString,
+      Some(dir.resolve("spark-local").toString))
     spark.sparkContext.setLogLevel("ERROR")
     println(f"[onetask] cpus=$cpus cal_sha256_mb_per_s=${calibrate()}%.0f")
     def pct(xs: Seq[Double], p: Double): Double = {

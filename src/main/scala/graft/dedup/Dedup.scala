@@ -125,9 +125,9 @@ object Dedup {
 
   // ---- shingling + MinHash -------------------------------------------------
 
-  /** Word k-shingles of normalized text, as an array column. Documents shorter than
-    * k tokens contribute their whole text as one shingle. Custom expression — one
-    * imperative pass per row.
+  /** Word k-shingles of `TextFunctions.tokens(text)`, as an array column.
+    * Documents shorter than k tokens contribute their whole text as one
+    * shingle. Custom expression — one imperative pass per row.
     */
   def shingles(text: Column, k: Int = 3): Column =
     graft.functions.HashExpressions.word_shingles(text, k)
@@ -567,7 +567,8 @@ object Dedup {
                                windowTokens: Int = 13,
                                textCol: String = "text",
                                idCol: String = "doc_id"): DataFrame = {
-    val toks = docs.select(col(idCol), split(trim(col(textCol)), "\\s+").as("__toks"))
+    val toks = docs.select(col(idCol),
+      graft.text.TextFunctions.words(col(textCol)).as("__toks"))
     // window instances at each start position (lowercased content key);
     // struct (doc_id, start) is the first-occurrence order key — true
     // lexicographic order at ANY doc length (the old doc_id·10⁶+start
@@ -665,10 +666,8 @@ object Dedup {
     * Σ_tokens (bit b of xxhash64(token) ? +1 : -1) > 0. Custom expression — one
     * imperative pass per row (map-side, no shuffle).
     */
-  def simhash(text: Column): Column = {
-    val tokens = split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-    graft.functions.HashExpressions.simhash64(tokens)
-  }
+  def simhash(text: Column): Column =
+    graft.functions.HashExpressions.simhash64(graft.text.TextFunctions.tokens(text))
 
   /** Hamming distance between two 64-bit signatures (bit_count of xor). */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -677,10 +676,8 @@ object Dedup {
     * signature is computable in DuckDB SQL, which is what lets the near-dup
     * query below be oracle hash-gated.
     */
-  def simhashMd5(text: Column): Column = {
-    val tokens = split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-    graft.functions.HashExpressions.simhash_md5(tokens)
-  }
+  def simhashMd5(text: Column): Column =
+    graft.functions.HashExpressions.simhash_md5(graft.text.TextFunctions.tokens(text))
 
   /** EXACT SimHash near-dup pairs over the portable 60-bit signature: banded
     * into `nBlocks` sub-blocks with nBlocks > maxHamming, so by pigeonhole any
@@ -738,8 +735,8 @@ object Dedup {
     *
     * evaluated ENTIRELY in integers (`lev·simDen ≤ (simDen−simNum)·maxLen`),
     * so the verified pair set is bit-identical across engines/partitionings.
-    * Texts are compared in the same `lower(trim(...))` form the signature
-    * hashes, so the sketch and the verify stage see one normalization.
+    * Texts are compared trimmed and lowercased by `TextFunctions.lowerCase`,
+    * the case fold of the tokens the signature hashes.
     *
     * Scale shape: the candidate set is collision-proportional (never O(n²));
     * a necessary-condition length prefilter (`lev ≥ |lenA−lenB|`) drops
@@ -759,7 +756,8 @@ object Dedup {
       s"similarity threshold must be a fraction in [0,1]: $simNum/$simDen")
     val candidates = simhashNearDupPairsExact(docs, textCol, idCol, maxHamming)
       .select("id_a", "id_b")
-    val norm = docs.select(col(idCol), lower(trim(col(textCol))).as("__t"))
+    val norm = docs.select(col(idCol),
+      graft.text.TextFunctions.lowerCase(trim(col(textCol))).as("__t"))
     val ta = norm.select(col(idCol).as("id_a"), col("__t").as("__ta"),
       length(col("__t")).cast("long").as("len_a"))
     val tb = norm.select(col(idCol).as("id_b"), col("__t").as("__tb"),

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -70,8 +70,9 @@ object GraftExtensions {
         "graft_word_shingles(text, k) - normalized word k-shingles of text."),
       (args: Seq[Expression]) => {
         arity("graft_word_shingles", args, 2)
-        HashExpressions.WordShingles(args.head,
-          intLit(args(1), "graft_word_shingles", "k"))
+        val k = intLit(args(1), "graft_word_shingles", "k")
+        GraftBridge.convertedExpression(
+          HashExpressions.word_shingles(GraftBridge.column(args.head), k))
       }),
     ("graft_simhash64",
       info("graft_simhash64",

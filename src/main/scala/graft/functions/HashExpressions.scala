@@ -82,43 +82,25 @@ object HashExpressions {
     override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
   }
 
-  /** Word k-shingles of normalized (lowercased, whitespace-collapsed) text — one
-    * imperative pass; the compositional transform/slice/concat_ws form evaluates
-    * interpreted lambdas per shingle. Shorter-than-k docs yield one whole-text
-    * shingle (matches Dedup.shingles contract).
+  /** Word k-shingles of a `TextFunctions.tokens` array — one imperative pass;
+    * the compositional transform/slice/concat_ws form evaluates interpreted
+    * lambdas per shingle. Shorter-than-k docs yield one whole-text shingle
+    * (matches Dedup.shingles contract).
     */
   case class WordShingles(child: Expression, k: Int)
       extends UnaryExpression with UnarySketchCodegen {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override protected def refName: String = "wordShingles"
-    def compute(input: UTF8String): ArrayData = {
-      val text = input.toString
-      val tokens = text.trim.toLowerCase.split("\\s+")
-      val out: Array[Any] =
-        if (tokens.length < k) Array[Any](UTF8String.fromString(tokens.mkString(" ")))
-        else {
-          val n = tokens.length - k + 1
-          val arr = new Array[Any](n)
-          val sb = new java.lang.StringBuilder(64)
-          var i = 0
-          while (i < n) {
-            sb.setLength(0)
-            var j = 0
-            while (j < k) {
-              if (j > 0) sb.append(' ')
-              sb.append(tokens(i + j))
-              j += 1
-            }
-            arr(i) = UTF8String.fromString(sb.toString)
-            i += 1
-          }
-          arr
-        }
-      new GenericArrayData(out)
+    def compute(tokens: ArrayData): ArrayData = {
+      val words = tokens.toArray[UTF8String](StringType)
+      val n = math.max(words.length - k + 1, 1)
+      new GenericArrayData(Array.tabulate[Any](n)(i =>
+        UTF8String.concatWs(Space, words.slice(i, i + k): _*)))
     }
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[UTF8String])
+    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
     override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
   }
+  private val Space = UTF8String.fromString(" ")
 
   /** LSH band hashes of a MinHash signature (r13): out[b] = xxhash64 of the
     * UTF-8 string "s₁|s₂|…" over band b's signature values rendered as
@@ -830,8 +812,9 @@ object HashExpressions {
 
   def minhash_sig(shingles: Column, numHashes: Int): Column =
     GraftBridge.column(MinHashSig(ex(shingles), numHashes))
+  /** Word k-shingles of `text`'s `TextFunctions.tokens`. */
   def word_shingles(text: Column, k: Int): Column =
-    GraftBridge.column(WordShingles(ex(text), k))
+    GraftBridge.column(WordShingles(ex(graft.text.TextFunctions.tokens(text)), k))
   def simhash64(tokens: Column): Column = GraftBridge.column(SimHash64(ex(tokens)))
   def simhash_md5(tokens: Column): Column = GraftBridge.column(SimHashMd5(ex(tokens)))
   def hyperplane_sig(vec: Column, numPlanes: Int, seed: Int): Column =

@@ -19,15 +19,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * pipeline query spends most of its runtime re-walking the same text
   * (measured: the Gopher `keep` evaluation alone was 5.8 s over 50 k salted
   * docs — ~70 % of it regex engine time). These expressions compute the
-  * SAME results in one code-point walk with zero allocation.
+  * SAME results in code-point walks with zero allocation.
   *
   * Exactness contract (spec-enforced by equivalence properties in
-  * TextDedupSimSpec against the compositional forms):
-  *  - character classes are the compositional forms' JAVA REGEX classes:
-  *    alpha `[A-Za-z]`, digit `[0-9]`, whitespace `\s` = the six ASCII chars
-  *    { \t \n \x0B \f \r SPACE } (unicode letters deliberately land in the
-  *    `[^A-Za-z0-9\s]` symbol class, exactly as the regex does);
-  *  - token count replicates `size(split(trim(text), "\\s+"))` INCLUDING its
+  * TextDedupSimSpec against the compositional forms, which the DuckDB
+  * oracles mirror):
+  *  - whitespace is `TextFunctions.Whitespace`, RE2's `\s` = { \t \n \f
+  *    \r SPACE } — U+000B is a symbol, as in DuckDB; alpha is `[A-Za-z]`,
+  *    digit `[0-9]` (unicode letters land in the `[^A-Za-z0-9\s]` symbol
+  *    class, exactly as the regex does);
+  *  - token count replicates `size(TextFunctions.words(text))` INCLUDING its
   *    quirks: `trim` strips 0x20 only, a leading non-space whitespace run
   *    yields a phantom empty piece, and Spark's limit=-1 split keeps the
   *    trailing empty piece — i.e. pieces = (maximal ws runs) + 1, 0 for the
@@ -35,19 +36,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - mean token length and its [3,10] bounds use the identical IEEE double
   *    sequence (div, ×1e6, +0.5, floor);
   *  - stopword hits replicate the padded non-overlapping ` word ` scan of
-  *    `size(split(concat(" ", lower(text), " "), " w ")) − 1` via an
-  *    indexOf/advance loop over the UTF8String-lowercased text.
+  *    `size(split(concat(" ", lowerCase(text), " "), " w ")) − 1` via an
+  *    indexOf/advance loop over the text lowercased by
+  *    [[LowerCodePoints.compute]], the fold `TextFunctions.lowerCase` runs.
   */
 object TextNativeExpressions {
 
-  private val WsMax = 32 // all class-\s code points are <= 0x20
-  @inline private def isWs(cp: Int): Boolean =
-    cp == 32 || (cp >= 9 && cp <= 13)
+  private val WsBits: Long =
+    graft.text.TextFunctions.Whitespace.foldLeft(0L)((bits, c) => bits | 1L << c)
+  @inline private def isWs(cp: Int): Boolean = cp <= ' ' && (WsBits >>> cp & 1L) != 0
   @inline private def isAlpha(cp: Int): Boolean =
     (cp >= 'A' && cp <= 'Z') || (cp >= 'a' && cp <= 'z')
   @inline private def isDigit(cp: Int): Boolean = cp >= '0' && cp <= '9'
 
-  /** size(split(trim(text), "\\s+")) with the empty-string guard — one
+  /** size(TextFunctions.words(text)) with the empty-string guard — one
     * counting walk, no token array.
     */
   private[functions] def tokenCountOf(raw: String): Int = {
@@ -79,9 +81,9 @@ object TextNativeExpressions {
   }
 
   /** The Gopher-rule `keep` conjunction (Rae et al. 2021 subset — see
-    * TextFunctions.gopherFlags) as one boolean pass: the four counting rules
-    * come from a single code-point walk; the stopword rule short-circuits
-    * after 2 hits and runs only if the cheap rules all passed.
+    * TextFunctions.gopherFlags) as one boolean pass: the token count walk,
+    * then one code-point walk for the class counts; the stopword rule
+    * short-circuits after 2 hits and runs only if the cheap rules all passed.
     */
   case class GopherKeep(child: Expression)
       extends UnaryExpression with CodegenFallback {
@@ -89,38 +91,28 @@ object TextNativeExpressions {
     override def nullSafeEval(input: Any): Any = {
       val u = input.asInstanceOf[UTF8String]
       val raw = u.toString
-      // one walk: code-point length + class counts over the RAW text,
-      // token pieces over the space-trimmed view
+      val nTok = tokenCountOf(raw).toLong
+      if (nTok < 50 || nTok > 100000) return false
+      // code-point length + class counts over the RAW text
       var len = 0; var alpha = 0; var punct = 0; var nonWs = 0
-      var from = 0
-      var to = raw.length
-      while (from < to && raw.charAt(from) == ' ') from += 1
-      while (to > from && raw.charAt(to - 1) == ' ') to -= 1
-      var pieces = if (from == to) 0 else 1
-      var inRun = false
       var i = 0
       while (i < raw.length) {
         val cp = raw.codePointAt(i)
         len += 1
-        if (isWs(cp)) {
-          if (i >= from && i < to) { if (!inRun) { pieces += 1; inRun = true } }
-        } else {
-          inRun = false
+        if (!isWs(cp)) {
           nonWs += 1
           if (isAlpha(cp)) alpha += 1
           else if (!isDigit(cp)) punct += 1
         }
         i += Character.charCount(cp)
       }
-      val nTok = pieces.toLong
-      if (nTok < 50 || nTok > 100000) return false
       val meanTokLen =
         math.floor(nonWs.toDouble / nTok.toDouble * 1000000.0 + 0.5) / 1000000.0
       if (meanTokLen < 3.0 || meanTokLen > 10.0) return false
       if (len > 0 && punct.toDouble / len.toDouble > 0.1) return false
       if (len == 0 || alpha.toDouble / len.toDouble < 0.6) return false
       // stopword rule last: >= 2 non-overlapping padded ` word ` hits
-      val padded = " " + u.toLowerCase.toString + " "
+      val padded = " " + LowerCodePoints.compute(u).toString + " "
       var hits = 0
       val words = graft.text.TextFunctions.EnglishStopwords
       var w = 0
@@ -157,7 +149,7 @@ object TextNativeExpressions {
         (lang, ws.map(w => " " + w + " ").toArray)
       }.toArray
     override def nullSafeEval(input: Any): Any = {
-      val padded = " " + input.asInstanceOf[UTF8String].toLowerCase.toString + " "
+      val padded = " " + LowerCodePoints.compute(input.asInstanceOf[UTF8String]).toString + " "
       var bestLang: String = null
       var bestScore = Int.MinValue
       var m = 0
@@ -191,6 +183,19 @@ object TextNativeExpressions {
     */
   case class LowerCodePoints(child: Expression) extends UnaryExpression {
     override def dataType: DataType = StringType
+    override def nullSafeEval(input: Any): Any = LowerCodePoints.compute(input.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c => {
+        val ref = ctx.addReferenceObj("lowerCodePoints", LowerCodePoints,
+          LowerCodePoints.getClass.getName)
+        s"${ev.value} = $ref.compute($c);"
+      })
+    override protected def withNewChildInternal(c: Expression): LowerCodePoints =
+      copy(child = c)
+  }
+
+  /** The case fold every native text expression shares. */
+  object LowerCodePoints {
     def compute(u: UTF8String): UTF8String =
       if (u.isFullAscii) u.toLowerCaseAscii
       else {
@@ -199,14 +204,6 @@ object TextNativeExpressions {
         s.codePoints().forEach(cp => b.appendCodePoint(Character.toLowerCase(cp)))
         UTF8String.fromString(b.toString)
       }
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val ref = ctx.addReferenceObj("lowerCodePoints", this, getClass.getName)
-        s"${ev.value} = $ref.compute($c);"
-      })
-    override protected def withNewChildInternal(c: Expression): LowerCodePoints =
-      copy(child = c)
   }
 
   /** A tokenizer's per-document pass over a `tokens(text)` array: its

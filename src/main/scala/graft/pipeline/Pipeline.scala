@@ -135,9 +135,8 @@ object Pipeline {
     */
   def chunkTokens(df: DataFrame, idCol: String, textCol: String,
                   chunkTokens: Int = 32): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), "\\s+")
     df.filter(length(trim(col(textCol))) > 0) // split("") is [""], not []
-      .withColumn("__toks", toks)
+      .withColumn("__toks", graft.text.TextFunctions.tokens(col(textCol)))
       .select(col(idCol),
         posexplode(sequence(lit(0),
           expr(s"(size(__toks) - 1) div $chunkTokens").cast("int")))

@@ -14,7 +14,26 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextFunctions {
 
-  /** Whitespace token count. `split` on \s+ after trim; empty string → 0 tokens.
+  /** The one text normalization of every text operator, the DuckDB oracles'
+    * `regexp_split_to_array(lower(trim(text)), '\s+')`: case folds one code
+    * point at a time ([[lowerCase]]), and words are separated by runs of
+    * [[Whitespace]], RE2's `\s` (U+000B stays inside a word). `trim` strips
+    * U+0020 only, so a leading tab leaves an empty first word.
+    */
+  val Whitespace: String = "\t\n\f\r "
+  val WordSeparator: String = s"[$Whitespace]+"
+
+  /** DuckDB's `lower` (`TextNativeExpressions.LowerCodePoints`). */
+  def lowerCase(text: Column): Column =
+    graft.functions.TextNativeExpressions.lower_code_points(text)
+
+  /** `text`'s words in their original case, at [[tokens]]' positions. */
+  def words(text: Column): Column = split(trim(text), WordSeparator)
+
+  /** Lowercased words: the tokenization of every word-level operator. */
+  def tokens(text: Column): Column = words(lowerCase(text))
+
+  /** Whitespace token count: [[words]] counted, 0 for a space-only text.
     * Native single-pass counter; [[tokenCountSql]] is the SQL-expressible
     * definition it replicates bit-for-bit (equivalence spec-enforced) and the
     * form the DuckDB oracles use.
@@ -22,13 +41,11 @@ object TextFunctions {
   def tokenCount(text: Column): Column =
     graft.functions.TextNativeExpressions.token_count(text)
 
-  /** The compositional `size(split(trim(text), "\\s+"))` definition of
-    * [[tokenCount]] — kept as the oracle-shaped reference for the
-    * equivalence spec.
+  /** The compositional definition of [[tokenCount]] — kept as the
+    * oracle-shaped reference for the equivalence spec.
     */
   def tokenCountSql(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
+    when(length(trim(text)) === 0, lit(0)).otherwise(size(words(text)))
 
   /** GPT-2-style pre-tokenization pieces: the regex split BPE tokenizers apply
     * BEFORE byte-pair merging — space-prefixed letter runs, digit runs, and
@@ -40,7 +57,7 @@ object TextFunctions {
     *
     * One codegen'd regexp_extract_all per row — map-side, zero shuffle.
     */
-  val BpePiecePattern: String = " ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+"
+  val BpePiecePattern: String = s" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9$Whitespace]+"
 
   def bpePieces(text: Column): Column =
     regexp_extract_all(text, lit(s"($BpePiecePattern)"), lit(0))
@@ -51,7 +68,7 @@ object TextFunctions {
   /** Character-class ratios used for quality scoring. */
   def alphaRatio(text: Column): Column = classRatio(text, "[A-Za-z]")
   def digitRatio(text: Column): Column = classRatio(text, "[0-9]")
-  def punctRatio(text: Column): Column = classRatio(text, "[^A-Za-z0-9\\s]")
+  def punctRatio(text: Column): Column = classRatio(text, s"[^A-Za-z0-9$Whitespace]")
 
   private def classRatio(text: Column, cls: String): Column =
     when(length(text) === 0, lit(0.0))
@@ -62,7 +79,7 @@ object TextFunctions {
     * padded text, so boundary words count too).
     */
   def stopwordHits(text: Column, stopwords: Seq[String]): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
+    val padded = concat(lit(" "), lowerCase(text), lit(" "))
     stopwords.map { w =>
       size(split(padded, s" $w ")) - lit(1)
     }.reduce(_ + _)
@@ -106,7 +123,7 @@ object TextFunctions {
     */
   def gopherFlags(text: Column): Seq[Column] = {
     val nTok = tokenCount(text).cast("long")
-    val nonWs = length(regexp_replace(trim(text), "\\s+", "")).cast("double")
+    val nonWs = length(regexp_replace(trim(text), WordSeparator, "")).cast("double")
     val meanTokLen = when(nTok === 0, lit(0.0))
       .otherwise(floor(nonWs / nTok.cast("double") * lit(1000000.0) + lit(0.5))
         / lit(1000000.0))
@@ -169,18 +186,7 @@ object TextFunctions {
     * exact-dedup key; stable across engines (md5 hex is identical in Spark & DuckDB).
     */
   def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Normalized whitespace tokens — the shared tokenization of the repetition /
-    * vocabulary operators (identical to DuckDB's
-    * `regexp_split_to_array(lower(trim(text)), '\s+')` for oracle parity).
-    * The separator is RE2's `\s`, `[\t\n\f\r ]`: Java's `\s` also matches
-    * U+000B, which DuckDB keeps inside a word. Lowercasing maps one code
-    * point at a time, as DuckDB's `lower` does (see
-    * `TextNativeExpressions.LowerCodePoints`).
-    */
-  def tokens(text: Column): Column =
-    split(graft.functions.TextNativeExpressions.lower_code_points(trim(text)), "[\\t\\n\\f\\r ]+")
+    md5(regexp_replace(lowerCase(trim(text)), WordSeparator, " "))
 
   /** Intra-document repetition stats: total tokens, distinct tokens, and the
     * repeated-token ratio 1 − distinct/total — the standard C4/Gopher-style
@@ -468,7 +474,8 @@ object TextFunctions {
     val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("token"))
     val dlen = toks.groupBy(idCol).agg(count(lit(1)).as("dl"))
     val corpus = dlen.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
-    val terms = queryTerms.map(_.toLowerCase).distinct
+    val terms = queryTerms.map(t => graft.functions.TextNativeExpressions.LowerCodePoints
+      .compute(UTF8String.fromString(t)).toString).distinct
     val tf = toks.filter(col("token").isin(terms: _*))
       .groupBy(idCol, "token").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))

@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncating checkpoints for operator internals, behind a
@@ -19,8 +20,9 @@ import org.apache.spark.sql.DataFrame
   * the call rather than quietly meaning local.
   *
   * Production notes for the reliable mode: set `spark.graft.checkpoint.dir`
-  * to durable shared storage (the lazy default below is a LOCAL temp dir —
-  * correct on one host, not on a cluster), and enable
+  * to durable shared storage (a non-local master fails without it; a local
+  * one falls back to a temp dir). A call whose dir differs from the one the
+  * SparkContext latched fails rather than writing to the first. Enable
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so checkpoint
   * files are reclaimed when their RDDs are GC'd (operators here `unpersist`
   * their intermediates, which releases local blocks but not reliable files).
@@ -38,12 +40,29 @@ object Checkpoints {
     if (!reliable) df.localCheckpoint(eager)
     else {
       val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(
-        spark.conf.getOption(DirKey).getOrElse(
-          java.nio.file.Files.createTempDirectory("graft_reliable_ckpt_").toString))
+      val dir = spark.conf.getOption(DirKey).map(new Path(_))
+        .map(p => p.getFileSystem(sc.hadoopConfiguration).makeQualified(p))
+      // setCheckpointDir latches a fresh subdirectory of the directory given
+      dirToLatch(sc.isLocal, sc.getCheckpointDir.map(new Path(_).getParent), dir)
+        .foreach(sc.setCheckpointDir)
       df.checkpoint(eager)
     }
   }
+
+  /** The dir `cut` latches, given the context's latched one and the
+    * qualified conf `dir`; None when the latched one serves. */
+  private[graft] def dirToLatch(isLocal: Boolean, latched: Option[Path],
+                                dir: Option[Path]): Option[String] =
+    (latched, dir) match {
+      case (Some(l), Some(d)) if l != d => throw new IllegalStateException(
+        s"$DirKey is $d, but the SparkContext already checkpoints under $l")
+      case (Some(_), _) => None
+      case (None, Some(d)) => Some(d.toString)
+      case (None, None) if isLocal =>
+        Some(java.nio.file.Files.createTempDirectory("graft_reliable_ckpt_").toString)
+      case (None, None) => throw new IllegalArgumentException(
+        s"$ReliableKey is true on a non-local master: set $DirKey to shared storage")
+    }
 
   /** Drop-in for `df.localCheckpoint(eager)` at operator call sites. */
   implicit class CheckpointOps(private val df: DataFrame) extends AnyVal {

@@ -11,6 +11,11 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `c` as a plain Catalyst tree, for a SQL function builder: [[expression]]
+    * leaves built-in functions for Dataset creation to convert. */
+  def convertedExpression(c: Column): Expression =
+    classic.ColumnNodeToExpressionConverter(c.node)
+
   /** Analyze an already-PARSED logical plan into a DataFrame (Dataset.ofRows is
     * private[sql] in Spark 4) — lets the query engine parse a statement once
     * and reuse the tree for both predicate extraction and execution instead of

@@ -69,8 +69,10 @@ class HashExprCodegenSpec extends AnyFunSuite {
     val fromCodegen = collectCodegen(df, colExpr)
       .map(_.asInstanceOf[scala.collection.Seq[Long]].toSeq)
     val fromEval = texts.filter(_ != null).map { t =>
+      // the texts are lowercase words joined by single spaces, so this
+      // split is their TextFunctions.tokens
       val sh = WordShingles(GraftBridge.expression(lit(t)), 3)
-        .compute(UTF8String.fromString(t))
+        .compute(utf8Arr(t.split(" ", -1).toSeq))
       MinHashSig(GraftBridge.expression(lit(t)), 16).compute(sh)
         .toLongArray().toSeq
     }

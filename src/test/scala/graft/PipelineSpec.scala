@@ -363,7 +363,39 @@ class PipelineSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset(graft.util.Checkpoints.ReliableKey)
       spark.conf.unset(graft.util.Checkpoints.DirKey)
+      spark.sparkContext.setCheckpointDir(null) // release the latched dir
       scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile))
     }
+  }
+
+  test("reliable-checkpoint mode fails on a second, different checkpoint dir") {
+    import graft.util.Checkpoints._
+    val (first, second) = (ShmDirs.tempDir("graft_test_rckpt_"), ShmDirs.tempDir("graft_test_rckpt_"))
+    spark.conf.set(ReliableKey, "true")
+    try {
+      spark.conf.set(DirKey, first.toString)
+      spark.range(3).toDF().cutLineage()
+      spark.conf.set(DirKey, second.toString)
+      val e = intercept[IllegalStateException](spark.range(3).toDF().cutLineage())
+      assert(e.getMessage.contains(first.toString) && e.getMessage.contains(second.toString),
+        e.getMessage)
+    } finally {
+      spark.conf.unset(ReliableKey)
+      spark.conf.unset(DirKey)
+      spark.sparkContext.setCheckpointDir(null)
+      Seq(first, second).foreach(d =>
+        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)))
+    }
+  }
+
+  test("reliable-checkpoint mode fails on a non-local master without a checkpoint dir") {
+    import graft.util.Checkpoints._
+    val e = intercept[IllegalArgumentException](
+      dirToLatch(isLocal = false, latched = None, dir = None))
+    assert(e.getMessage.contains(DirKey), e.getMessage)
+    // a local master falls back to a temp dir; a set dir is latched as given
+    val dir = new org.apache.hadoop.fs.Path("file:/shared/ckpt")
+    assert(dirToLatch(isLocal = false, latched = None, dir = Some(dir)) == Some(dir.toString))
+    assert(dirToLatch(isLocal = false, latched = Some(dir), dir = Some(dir)).isEmpty)
   }
 }

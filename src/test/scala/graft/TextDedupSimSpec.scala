@@ -36,6 +36,49 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(df.collect().map(_.getSeq[String](0)).toSeq == Seq(Seq("οδοσ", "σα"), Seq("i")))
   }
 
+  test("every text operator normalizes an adversarial table as the DuckDB oracles do") {
+    // texts and expected values: the output of scripts/text_norm_oracle.py,
+    // which evaluates each operator's oracle expression on DuckDB 1.0.0
+    val texts = Seq("a\u000bb c", "Ab\u000cc D", "\u0009The Cat and THE dog", "the end of it\u000a",
+      "\u039f\u0394\u039f\u03a3 \u03a3\u0391", "\u0130T \u0130S THE END")
+    val df = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
+    val r = df.orderBy("doc_id").select(
+      TextFunctions.fingerprint(col("text")),
+      TextFunctions.tokenCount(col("text")),
+      round(TextFunctions.punctRatio(col("text")), 6),
+      Dedup.shingles(col("text"), 3),
+      Dedup.simhashMd5(col("text")),
+      TextFunctions.stopwordHits(col("text"), TextFunctions.EnglishStopwords),
+      TextFunctions.langId(col("text")),
+      TextFunctions.gopherFlags(col("text"))(1), // mean_tok_len
+      TextFunctions.bpePieces(col("text"))).collect()
+    def column[T](i: Int): Seq[T] = r.toSeq.map(_.getAs[T](i))
+    assert(column[String](0) == Seq("b6057d14b34a0fff5953d4b197437fe4",
+      "c5a61045707929ec0ee96901923d90a5", "4e602800ee52d143ce988e874163c68a",
+      "6d97f431e0a474cb70da976ff7bffaa0", "86702f381bfb879ae770661e789265bb",
+      "096738403c0dc520570f0064ad23f431"))
+    assert(column[Int](1) == Seq(2, 3, 6, 5, 2, 4))
+    assert(column[Double](2) == Seq(0.2, 0.0, 0.0, 0.0, 0.857143, 0.153846))
+    assert(column[scala.collection.Seq[String]](3).map(_.distinct.sorted) == Seq(
+      Seq("a\u000bb c"), Seq("ab c d"),
+      Seq(" the cat", "and the dog", "cat and the", "the cat and"),
+      Seq("end of it", "of it ", "the end of"),
+      Seq("\u03bf\u03b4\u03bf\u03c3 \u03c3\u03b1"), Seq("is the end", "it is the")))
+    assert(column[Long](4) == Seq(297378862789177907L, 47268060994959641L,
+      604960945674950248L, 644376235270182433L, 1153147331428872L, 67626013568894056L))
+    assert(column[Int](5) == Seq(0, 0, 2, 2, 0, 3))
+    assert(column[String](6) == Seq("und", "und", "en", "en", "und", "en"))
+    assert(column[Double](7) == Seq(2.0, 1.333333, 2.5, 2.0, 3.0, 2.5))
+    assert(column[scala.collection.Seq[String]](8) == Seq(Seq("a", "\u000b", "b", " c"),
+      Seq("Ab", "c", " D"), Seq("The", " Cat", " and", " THE", " dog"),
+      Seq("the", " end", " of", " it"), Seq("\u039f\u0394\u039f\u03a3", " \u03a3\u0391"),
+      Seq("\u0130", "T", " \u0130", "S", " THE", " END")))
+    val chunks = graft.pipeline.Pipeline.chunkTokens(df, "doc_id", "text", 32)
+      .orderBy("doc_id").select("chunk_hash").collect().map(_.getString(0)).toSeq
+    assert(chunks == Seq("b6057d14b34a0fff", "c5a61045707929ec", "4e602800ee52d143",
+      "6d97f431e0a474cb", "86702f381bfb879a", "096738403c0dc520"))
+  }
+
   test("character-class ratios") {
     val df = docs((1L, "ab12!?"))
       .select(
@@ -663,6 +706,17 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(r(5L)._3 == 0L)
   }
 
+  test("removeDuplicatedPassages: a leading tab shifts the windows and the kept words alike") {
+    // the windows come from Dedup.shingles and the kept words from
+    // TextFunctions.words: both keep the empty first word a leading tab
+    // leaves, so the second copy of the passage goes and x3 stays (the
+    // expected row is scripts/text_norm_oracle.py's passage line)
+    val passage = (1 to 13).map(i => s"w$i").mkString(" ")
+    val r = graft.dedup.Dedup.removeDuplicatedPassages(
+      docs((0L, s"\t$passage x1 x2 x3 $passage")), 13).collect()(0)
+    assert((r.getString(1), r.getLong(2), r.getLong(3)) == (s" $passage x1 x2 x3", 17L, 13L))
+  }
+
   test("exactSubstrSpans: maximal extents — longer-than-L runs merge, intra-doc " +
     "repeats both reported, short/unique docs empty") {
     val passage = (1 to 13).map(i => s"p$i").mkString(" ") // exactly one window
@@ -978,14 +1032,14 @@ class TextDedupSimSpec extends AnyFunSuite {
     val token = Gen.frequency(
       6 -> Gen.alphaNumStr.map(_.take(8)),
       3 -> Gen.oneOf(TextFunctions.EnglishStopwords),
-      1 -> Gen.oneOf("!?.", "café", "élève", "1234", "...", "😀"))
-    val sep = Gen.oneOf(" ", "  ", "\t", "\n", " \t ", "\r\n")
+      1 -> Gen.oneOf("!?.", "café", "élève", "1234", "...", "😀", "ΟΔΟΣ", "\u0130"))
+    val sep = Gen.oneOf(" ", "  ", "\t", "\n", " \t ", "\r\n", "\u000b", "\f")
     val textGen = for {
       n <- Gen.chooseNum(0, 120)
       toks <- Gen.listOfN(n, token)
       seps <- Gen.listOfN(math.max(n - 1, 0), sep)
-      lead <- Gen.oneOf("", " ", "  ", "\t", " \t")
-      trail <- Gen.oneOf("", " ", "\t ", "\n")
+      lead <- Gen.oneOf("", " ", "  ", "\t", " \t", "\u000b", "\f ")
+      trail <- Gen.oneOf("", " ", "\t ", "\n", "\u000b")
     } yield lead + (if (toks.isEmpty) "" else
       toks.head + seps.zip(toks.tail).map { case (s, t) => s + t }.mkString) + trail
     val prop = Prop.forAll(Gen.listOfN(40, textGen)) { texts =>
@@ -1017,7 +1071,8 @@ class TextDedupSimSpec extends AnyFunSuite {
     val token = Gen.frequency(
       5 -> marker,
       3 -> Gen.alphaNumStr.map(_.take(8)),
-      1 -> Gen.oneOf("the the", "LE", "Der", "y es el", "café", "", "  "))
+      1 -> Gen.oneOf("the the", "LE", "Der", "y es el", "café", "", "  ", "\u000b", "\f",
+        "ΟΔΟΣ", "\u0130S"))
     val textGen = for {
       n <- Gen.chooseNum(0, 60)
       toks <- Gen.listOfN(n, token)
